@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{BulkOps, Tables}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The PERSISTED MinHash signature index — write-then-serve for the
@@ -70,8 +70,9 @@ object DedupIndexOps {
   /** The stored dial row: (numPerms, bandSize, bucketParts, minsParts). */
   final case class IndexMeta(numPerms: Int, bandSize: Int, bucketParts: Int, minsParts: Int)
 
-  private[operators] def bandedWithPb(wide: DataFrame, meta: IndexMeta): DataFrame =
-    DedupOps.bandedFromWide(wide, meta.numPerms, meta.bandSize)
+  private[operators] def bandedWithPb(wide: DataFrame, meta: IndexMeta,
+      carry: Seq[String] = Nil): DataFrame =
+    DedupOps.bandedFromWide(wide, meta.numPerms, meta.bandSize, carry)
       .withColumn("pb", pmod(crc32(col("sig")), lit(meta.bucketParts.toLong)))
 
   private def slimFromWide(wide: DataFrame, numPerms: Int): DataFrame = {
@@ -196,20 +197,22 @@ object DedupIndexOps {
       knownIds: Option[Seq[Long]] = None): Unit = {
     val meta = graft.tools.Prof("dedup-append:meta")(readMetaFresh(spark, dir))
     // one batch signature pass feeds both table writes (each filtered
-    // to the protocol's fresh-id frame); spread=false — bounded batch
-    val wide = graft.Caching.maybeCache(
-      DedupOps.minhashWide(DedupOps.shinglePostings(newDocs, spread = false), meta.numPerms))
-    appendWide(spark, dir, knownIds.toLeft(newDocs.select("doc_id")), wide, meta)
+    // to the protocol's fresh-id frame)
+    val wide = graft.Caching.maybeCache(DedupOps.batchMinhashWide(newDocs, meta.numPerms))
+    appendWide(spark, dir, knownIds.toLeft(newDocs.select("doc_id")), meta, fresh =>
+      wide.join(broadcast(fresh), Seq("doc_id"), "left_semi")
+        // one file per segment (a bounded batch's rows — the shuffle
+        // partitioning would write 32 shards of a few KB)
+        .repartition(1))
   }
 
-  /** The table-write half of [[appendToIndex]]: `wide` must be the
-    * batch's signature frame at `meta`'s dials and may cover a SUPERSET
-    * of `batchIds` — [[gateAndIngest]] passes its full-batch frame
-    * (already materialized for the serve), so the survivor append reads
-    * the shared cache instead of re-shingling the survivors. */
+  /** The table-write half of [[appendToIndex]] and [[gateAndIngest]]:
+    * `freshWide` maps the protocol's fresh-id frame to those ids'
+    * signature rows at `meta`'s dials, in ONE partition (one file per
+    * delta segment). */
   private def appendWide(spark: SparkSession, dir: String,
-      batchIds: Either[Seq[Long], DataFrame],
-      wide: DataFrame, meta: IndexMeta): Unit = {
+      batchIds: Either[Seq[Long], DataFrame], meta: IndexMeta,
+      freshWide: DataFrame => DataFrame): Unit = {
     // appends land as DELTA SEGMENTS (one small file set per batch into
     // `<table>_delta`), NOT as a per-batch fan-out into the partitioned
     // tree: writing one tiny file per touched mb/pb directory measured
@@ -219,21 +222,11 @@ object DedupIndexOps {
     // delta with the same predicates; compaction folds segments in.
     val tables = Seq(
       IndexLifecycle.GuardedTable("mins", col("k") === 0, fresh =>
-        BulkOps.writePath(
-            slimWithMb(wide, meta)
-              .join(broadcast(fresh), Seq("doc_id"), "left_semi")
-              // one file per segment (a bounded batch's rows — the
-              // shuffle partitioning would write 32 shards of a few KB)
-              .repartition(1),
-            SaveMode.Append)
+        BulkOps.writePath(slimWithMb(freshWide(fresh), meta), SaveMode.Append)
           .save(s"$dir/mins_delta"),
         mutates = Seq("mins_delta")),
       IndexLifecycle.GuardedTable("sigs", col("band") === 0, fresh =>
-        BulkOps.writePath(
-            bandedWithPb(wide, meta)
-              .join(broadcast(fresh), Seq("doc_id"), "left_semi")
-              .repartition(1),
-            SaveMode.Append)
+        BulkOps.writePath(bandedWithPb(freshWide(fresh), meta), SaveMode.Append)
           .save(s"$dir/sigs_delta"),
         mutates = Seq("sigs_delta")))
     batchIds match {
@@ -242,12 +235,32 @@ object DedupIndexOps {
     }
   }
 
+  /** `rows`, collected from `df`, as a LOCAL frame: a driver-resident
+    * relation that later plans read without recomputing `df`, holding no
+    * CacheManager entry and no executor blocks (so an executor loss can
+    * never fail a read of it). For bounded frames only. */
+  private def localFrame(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+
+  private def collectLocal(df: DataFrame): DataFrame = localFrame(df, df.collect())
+
   /** Dedup an arriving batch against the STORED index: returns
     * (doc_id, dup_of, est_e4) — batch docs whose estimated Jaccard
     * against some indexed doc reaches `thresholdE4`, with the stored
     * doc they collide with. Batch-internal duplicates are NOT reported
     * (the [[DedupOps.incrNearDup]] contract: the index is the dedup
     * authority, the batch dedups against it).
+    *
+    * BOUNDED-BATCH CONTRACT: `batch` is app input of ingest size. Its
+    * pb set and its candidate list are materialized once per serve; the
+    * candidate list is bounded by bucketCap × batch bands pairs, each
+    * carrying the batch doc's K minima. `cacheBatch = true` caches the
+    * batch signatures (read by the probe and the agreement join) and
+    * pins the candidate list with [[graft.Caching.pinForConsistency]].
+    * `cacheBatch = false` (the streaming posture) registers no cache
+    * entry: the candidate list is collected into a local frame on the
+    * driver (≈ pairs × (K+2) × 8 B), a local snapshot that an executor
+    * loss cannot take away — tasks over it re-run instead of failing.
     *
     * Read shape at 100 TB — BOTH index reads are partition-pruned by
     * bounded app materializations (plan-gated):
@@ -257,8 +270,8 @@ object DedupIndexOps {
     *     real fraction of the sized dial for an ingest-sized batch.
     *   - `mins`: the CANDIDATE doc set (bounded by bucketCap × batch
     *     bands — the cap guard, not an optimizer estimate) yields a
-    *     bounded distinct `mb` set, pushed the same way; a broadcast
-    *     semi-join prunes rows inside the read directories. The
+    *     bounded distinct `mb` set, pushed the same way; the broadcast
+    *     candidate list prunes rows inside the read directories. The
     *     agreement stage therefore reads candidate-doc signatures, not
     *     the corpus's.
     * The corpus is never re-shingled, its text never read.
@@ -272,191 +285,182 @@ object DedupIndexOps {
       thresholdE4: Long = 5000L, bucketCap: Long = DedupOps.MaxBandBucket,
       cacheBatch: Boolean = true): DataFrame = {
     val meta = readMeta(spark, dir)
-    // cached: the batch minima feed the banded probe AND the agreement
-    // join (streaming callers pass cacheBatch=false — a per-micro-batch
-    // cache entry would accumulate forever, the servedTopK convention)
-    val wideB0 = DedupOps.minhashWide(DedupOps.shinglePostings(batch, spread = false), meta.numPerms)
-    val wideB = if (cacheBatch) graft.Caching.maybeCache(wideB0) else wideB0
-    val bBanded = bandedWithPb(wideB, meta)
-    val bSlim = slimFromWide(wideB, meta.numPerms)
+    val wide0 = DedupOps.batchMinhashWide(batch, meta.numPerms)
+    if (cacheBatch)
+      serveCore(spark, dir, meta, graft.Caching.maybeCache(wide0), thresholdE4, bucketCap,
+        graft.Caching.pinForConsistency)
+    else serveCore(spark, dir, meta, wide0, thresholdE4, bucketCap, collectLocal)
+  }
+
+  /** The serve shared by [[servedDupes]] and [[gateAndIngest]]: `wideB`
+    * is the batch's signature frame (doc_id, mh0..mh{K-1}) at `meta`'s
+    * dials; `pin` materializes the bounded candidate pair list exactly
+    * once, because the agreement stage reads it twice (the mb partition
+    * probe and the broadcast join) and each recompute would re-run the
+    * pruned sigs scan underneath it. Returns
+    * the lazy agreement plan (doc_id, dup_of, est_e4). */
+  private def serveCore(spark: SparkSession, dir: String, meta: IndexMeta,
+      wideB: DataFrame, thresholdE4: Long, bucketCap: Long,
+      pin: DataFrame => DataFrame): DataFrame = {
+    // each banded batch row carries its doc's minima, so the candidate
+    // pairs bring them to the agreement stage
+    val bBanded = bandedWithPb(
+      wideB.withColumn("mh_new", array((0 until meta.numPerms).map(k => col(s"mh$k")): _*)),
+      meta, carry = Seq("mh_new"))
 
     // STATIC partition pruning, guaranteed by construction: the batch's
-    // distinct pb set is a bounded app materialization — pushed as an In
-    // filter on the RAW partition column (before any cast, so it reaches
-    // the scan's PartitionFilters; plan-gated), rather than left to the
-    // optimizer's DPP cost heuristic. An empty batch prunes everything.
-    val pbs = bBanded.select("pb").distinct().collect().map(_.getLong(0).toInt).toSeq
-    // the partition column comes back discovery-inferred — normalized to
-    // the written LONG so the probe join is type-identical (the
-    // AnnIndexOps.readIndex convention). Base ∪ delta: appended batches
-    // live in `sigs_delta` segments until compaction folds them; the
-    // same pb filter prunes the base's directories and the delta's row
-    // groups (pb is a data column there)
+    // pb set is a bounded app materialization (deduplicated on the
+    // driver — no aggregation job) — pushed as an In filter on the RAW
+    // partition column (before any cast, so it reaches the scan's
+    // PartitionFilters; plan-gated), rather than left to the optimizer's
+    // DPP cost heuristic. An empty batch prunes everything.
+    val pbs = bBanded.select("pb").collect().map(_.getLong(0).toInt).distinct.toSeq
+    // Base ∪ delta: appended batches live in `sigs_delta` segments until
+    // compaction folds them; the same pb filter prunes the base's
+    // directories and the delta's row groups (pb is a data column there)
     val stored0 = IndexLifecycle.tableWithDelta(spark, dir, "sigs")(df =>
-      df.filter(col("pb").isin(pbs: _*))
-        .withColumn("pb", col("pb").cast("long")))
+      df.filter(col("pb").isin(pbs: _*)).select("band", "sig", "doc_id"))
     val storedMasked = tombstonesOpt(spark, dir)
       .fold(stored0)(t => stored0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    val stored = storedMasked.select(
-      col("pb"), col("band"), col("sig"), col("doc_id").as("dup_of"))
+    val stored = storedMasked.select(col("band"), col("sig"), col("doc_id").as("dup_of"))
 
-    // probe: distinct batch bucket keys, broadcast — inner join against
-    // distinct keys is the semi-join that DPP prunes the scan with
-    val keys = bBanded.select("pb", "band", "sig").distinct()
-    val pruned = stored.join(broadcast(keys), Seq("pb", "band", "sig"))
+    // probe: the batch bucket keys, broadcast into a SEMI-join — a key
+    // shared by several batch docs must not multiply the stored rows
+    // the cap recount below counts. Keyed on (band, sig) alone: pb is a
+    // function of sig, and keeping it out of the key keeps the pushed
+    // pb filter off the broadcast side, so the join the optimizer pushes
+    // into each union branch reuses ONE broadcast
+    val pruned = stored.join(broadcast(bBanded.select("band", "sig")),
+      Seq("band", "sig"), "left_semi")
     // serve-side bucket recount over exactly the pruned read: pb is a
     // function of sig, so every (band, sig) group present is WHOLE and
     // its count equals the full-index count — the cap is exact
     val capped = DedupOps.capBuckets(pruned, Seq("band", "sig"), bucketCap)
-    // materialized ONCE whatever the posture: the agreement stage reads
-    // the bounded pair list three times (the mb partition probe, the
-    // mins semi-prune, the main join), and each uncached recompute would
-    // re-run the pruned sigs scan underneath it — at 100× that tripled
-    // the serve's index I/O. pinForConsistency caches when the session
-    // allows (cross-pass reuse) and eagerly localCheckpoints under the
-    // no-cache posture; streaming (cacheBatch=false) always checkpoints
-    // (eager, GC-released — no CacheManager entry to accumulate per
-    // trigger)
-    val cand0 = capped
-      .join(broadcast(bBanded.select(col("pb"), col("band"), col("sig"), col("doc_id"))),
-        Seq("pb", "band", "sig"))
+    val cand = pin(capped
+      .join(broadcast(bBanded.select("band", "sig", "doc_id", "mh_new")), Seq("band", "sig"))
       // never match a doc to itself: in the incremental contract batch
       // and index are id-disjoint, but a crash-rerun batch (whose
       // survivors the previous attempt already appended) must not report
       // every doc as its own duplicate
       .filter(col("doc_id") =!= col("dup_of"))
-      .select(col("doc_id"), col("dup_of"))
-      .distinct()
-    val cand = if (cacheBatch) graft.Caching.pinForConsistency(cand0)
-      else cand0.localCheckpoint(true)
+      .select(col("doc_id"), col("dup_of"), col("mh_new"))
+      .distinct())
 
     // agreement estimate from the stored slim signatures: K rows per
-    // candidate pair. The candidate docs' distinct mb set (bounded by
-    // the capped candidate count) prunes the mins read to their
-    // directories; the broadcast semi-join prunes rows within them.
-    val candDups = cand.select("dup_of").distinct()
-    val mbs = candDups
-      .select(pmod(col("dup_of"), lit(meta.minsParts.toLong)).as("mb"))
-      .distinct().collect().map(_.getLong(0).toInt).toSeq
-    val mOld = IndexLifecycle.tableWithDelta(spark, dir, "mins")(df =>
+    // candidate doc. The candidate docs' mb set (bounded by the capped
+    // candidate count) prunes the mins read to their directories; the
+    // broadcast candidate list prunes rows within them.
+    val mbs = cand.select(pmod(col("dup_of"), lit(meta.minsParts.toLong)))
+      .collect().map(_.getLong(0).toInt).distinct.toSeq
+    IndexLifecycle.tableWithDelta(spark, dir, "mins")(df =>
       df.filter(col("mb").isin(mbs: _*))
         .select(col("doc_id").as("dup_of"), col("k"), col("mh").as("mh_old")))
-      .join(broadcast(candDups), Seq("dup_of"), "left_semi")
-    cand
-      .join(mOld, Seq("dup_of"))
-      .join(broadcast(bSlim.select(col("doc_id"), col("k"), col("mh").as("mh_new"))),
-        Seq("doc_id", "k"))
+      .join(broadcast(cand), Seq("dup_of"))
       .groupBy("doc_id", "dup_of")
-      .agg(sum(when(col("mh_old") === col("mh_new"), 1L).otherwise(0L)).as("agree"))
+      .agg(sum(when(col("mh_old") === element_at(col("mh_new"), col("k").cast("int") + 1), 1L)
+        .otherwise(0L)).as("agree"))
       .withColumn("est_e4", expr(s"agree * 10000 DIV ${meta.numPerms}"))
       .filter(col("est_e4") >= thresholdE4)
       .select(col("doc_id"), col("dup_of"), col("est_e4"))
   }
 
-  /** Within-batch duplicate pairs under the SAME signature semantics as
-    * the stored-index serve: banded collision (bucket-capped over the
-    * batch), agreement estimate ≥ threshold, oriented larger-id →
-    * smaller-id. Batch-sized everywhere. */
-  private def batchDupes(wide: DataFrame, numPerms: Int, bandSize: Int,
-      thresholdE4: Long, bucketCap: Long): DataFrame = {
-    val sigs = DedupOps.capBuckets(
-      DedupOps.bandedFromWide(wide, numPerms, bandSize), Seq("band", "sig"), bucketCap)
-    val cand = sigs.as("a")
-      .join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") > col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("dup_of"))
-      .distinct()
-    val slim = slimFromWide(wide, numPerms)
-    cand
-      .join(slim.select(col("doc_id").as("dup_of"), col("k"), col("mh").as("mh_old")),
-        Seq("dup_of"))
-      .join(slim.select(col("doc_id"), col("k"), col("mh").as("mh_new")),
-        Seq("doc_id", "k"))
-      .groupBy("doc_id", "dup_of")
-      .agg(sum(when(col("mh_old") === col("mh_new"), 1L).otherwise(0L)).as("agree"))
-      .withColumn("est_e4", expr(s"agree * 10000 DIV $numPerms"))
-      .filter(col("est_e4") >= thresholdE4)
-      .select(col("doc_id"), col("dup_of"), col("est_e4"))
+  /** Within-batch duplicate pairs (doc_id, dup_of, est_e4) under the SAME
+    * signature semantics as the stored-index serve, computed on the
+    * driver from the batch's collected minima: banded collision (a
+    * bucket is a band and its minima — the equality the stored `sig`
+    * string encodes), buckets over `bucketCap` members dropped,
+    * agreement estimate ≥ threshold, oriented larger id → smaller id. */
+  private def batchDupes(sigs: Seq[(Long, Array[Long])], bandSize: Int,
+      thresholdE4: Long, bucketCap: Long): Seq[(Long, Long, Long)] = {
+    val byId = sigs.toMap
+    val pairs = sigs
+      .flatMap { case (id, mh) =>
+        mh.grouped(bandSize).zipWithIndex.map { case (s, b) => ((b, s.toSeq), id) } }
+      .groupMap(_._1)(_._2).values
+      .filter(_.size <= bucketCap)
+      .flatMap(ids => for (a <- ids; b <- ids if a > b) yield (a, b))
+      .toSet
+    pairs.toSeq.map { case (a, b) =>
+      val (x, y) = (byId(a), byId(b))
+      (a, b, x.indices.count(k => x(k) == y(k)) * 10000L / x.length)
+    }.filter(_._3 >= thresholdE4)
   }
+
+  /** Each doc's best match among (doc_id, dup_of, est_e4) pairs: highest
+    * est, then smallest dup_of. */
+  private def bestMatch(pairs: Seq[(Long, Long, Long)]): Map[Long, (Long, Long)] =
+    pairs.groupBy(_._1).map { case (d, ps) =>
+      d -> ps.map(p => (p._2, p._3)).minBy { case (dup, est) => (-est, dup) } }
+
+  private val ReportSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT NOT NULL, verdict STRING NOT NULL, dup_of BIGINT, est_e4 BIGINT")
 
   /** The GATE-AND-INGEST composition — what a continuous ingest pipeline
     * actually runs per batch: every arriving doc is deduped against the
-    * STORED index ([[servedDupes]]) and against its own batch-mates
-    * (same signature semantics, oriented toward the smaller id), the
-    * survivors are APPENDED to the index, and a complete per-doc report
-    * returns: `(doc_id, verdict, dup_of, est_e4)` with verdict ∈
-    * {dup_index, dup_batch, ingested} — index dups win over batch dups;
-    * within a class the best match is (highest est, then smallest
-    * dup_of). The batch rule is greedy pairwise: a doc with ANY
-    * smaller-id batch dup is dropped, even when that smaller doc was
-    * itself dropped as an index dup (the documented keep-first rule —
-    * cluster-exact keep is [[GraphOps.dedupKeep]]'s job, offline).
+    * STORED index (the [[servedDupes]] serve) and against its own
+    * batch-mates (same signature semantics, oriented toward the smaller
+    * id), the survivors are APPENDED to the index, and a complete
+    * per-doc report returns: `(doc_id, verdict, dup_of, est_e4)` with
+    * verdict ∈ {dup_index, dup_batch, unsignable, ingested} — index
+    * dups win over batch dups; within a class the best match is
+    * (highest est, then smallest dup_of). The batch rule is greedy
+    * pairwise: a doc with ANY smaller-id batch dup is dropped, even when
+    * that smaller doc was itself dropped as an index dup (the documented
+    * keep-first rule — cluster-exact keep is [[GraphOps.dedupKeep]]'s
+    * job, offline).
     *
-    * The report is LOCAL-CHECKPOINTED (eagerly) before the append: its
-    * lineage must be truncated BEFORE the index mutates, or a lazy
-    * re-read would re-serve against an index that now contains the
-    * batch. Crash-rerun safe end-to-end: [[appendToIndex]] skips
-    * already-committed ids, and [[servedDupes]] never matches a doc to
-    * itself. */
+    * BOUNDED-BATCH CONTRACT: the batch side is computed ONCE and kept on
+    * the driver. One Spark pass derives the batch's signature frame
+    * (doc_id, mh0..mh{K-1}) and collects it — driver memory ≈ rows ×
+    * (K+1) × 8 B — and every batch-side consumer reads that local frame:
+    * the serve's probe keys and agreement minima, the within-batch
+    * dups, the signable mask and the survivor append's two table
+    * writes. The candidate pairs, the index dups and the report are
+    * collected too, so the gate registers NO cache entry and takes no
+    * `localCheckpoint`: its intermediate frames are local snapshots on
+    * the driver, and an executor loss re-runs the affected tasks from
+    * them instead of failing the read.
+    *
+    * The report is complete BEFORE the append: a local frame has no
+    * lineage into the index, so nothing can re-serve it against an
+    * index that now contains the batch. Crash-rerun safe end-to-end:
+    * the append skips already-committed ids, and the serve never
+    * matches a doc to itself. */
   def gateAndIngest(spark: SparkSession, dir: String, batch: DataFrame,
-      thresholdE4: Long = 5000L, bucketCap: Long = DedupOps.MaxBandBucket,
-      cacheBatch: Boolean = true): DataFrame = {
+      thresholdE4: Long = 5000L, bucketCap: Long = DedupOps.MaxBandBucket): DataFrame = {
     val meta = readMeta(spark, dir)
-    // cacheBatch: the fixture reuses one batch plan per call (entries
-    // converge); streaming passes false — per-trigger plans are distinct
-    // and a cache entry per trigger would accumulate forever, so the
-    // bounded batch frame is EAGERLY localCheckpointed instead: its
-    // three-plus consumers (intra-batch dupes, the signable mask, the
-    // survivor append's two table writes) read one materialization and
-    // the blocks GC-release with the frame — no recompute per consumer,
-    // no CacheManager entry per trigger
-    val wide0 = DedupOps.minhashWide(DedupOps.shinglePostings(batch, spread = false), meta.numPerms)
-    val wide = if (cacheBatch) graft.Caching.maybeCache(wide0)
-      else wide0.localCheckpoint(true)
-    def best(pairs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy(col("est_e4").desc, col("dup_of"))
-      pairs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("doc_id"), col("dup_of"), col("est_e4"))
-    }
-    val idx0 = graft.tools.Prof("gate:served-plan")(
-      best(servedDupes(spark, dir, batch, thresholdE4, bucketCap, cacheBatch))
-        .withColumnRenamed("dup_of", "i_dup").withColumnRenamed("est_e4", "i_est"))
-    val intra0 = best(batchDupes(wide, meta.numPerms, meta.bandSize, thresholdE4, bucketCap))
-      .withColumnRenamed("dup_of", "b_dup").withColumnRenamed("est_e4", "b_est")
-    // the index-dup and batch-dup pipelines are INDEPENDENT (both read
-    // the materialized `wide`; only the report joins them) — overlap
-    // their materializations (§2.6) instead of letting the report's one
-    // localCheckpoint walk both serially; the report then assembles from
-    // two bounded checkpointed frames, not a second deep plan
-    val Seq(idx, intra) = graft.tools.Prof("gate:dup-pipelines")(
-      Par.materializeConcurrently(Seq(idx0, intra0), maxInFlight = 2))
+    val docs = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val ids = docs.select("doc_id").collect().map(_.getLong(0))
+    val wide0 = DedupOps.batchMinhashWide(docs, meta.numPerms)
+    val wideRows = graft.tools.Prof("gate:signatures")(wide0.collect())
+    val wide = localFrame(wide0, wideRows)
+    val idx = graft.tools.Prof("gate:serve")(bestMatch(
+      serveCore(spark, dir, meta, wide, thresholdE4, bucketCap, collectLocal)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq))
+    val intra = bestMatch(batchDupes(
+      wideRows.map(r => r.getLong(0) -> Array.tabulate(meta.numPerms)(k => r.getLong(k + 1))).toSeq,
+      meta.bandSize, thresholdE4, bucketCap))
     // a doc below shingle width has NO signature: it cannot match, and
     // the append cannot index it — its verdict says so honestly instead
     // of claiming "ingested" for a doc the index will never hold
-    val signable = wide.select(col("doc_id"), lit(true).as("__sig"))
-    val report0 = batch.select(col("doc_id"))
-      .join(idx, Seq("doc_id"), "left")
-      .join(intra, Seq("doc_id"), "left")
-      .join(signable, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        when(col("i_dup").isNotNull, lit("dup_index"))
-          .when(col("b_dup").isNotNull, lit("dup_batch"))
-          .when(col("__sig").isNull, lit("unsignable"))
-          .otherwise(lit("ingested")).as("verdict"),
-        coalesce(col("i_dup"), col("b_dup")).as("dup_of"),
-        coalesce(col("i_est"), col("b_est")).as("est_e4"))
-    val report = graft.tools.Prof("gate:report-materialize")(report0.localCheckpoint(true))
-    // survivor append from the gate's OWN signature frame: `wide` is
-    // already materialized for the serve and covers the whole batch —
-    // appendWide's per-table writes filter it to the protocol's fresh
-    // ids, so the append re-reads the shared cache instead of
-    // re-shingling the survivors (which cost a second corpus-free
-    // signature pass per gate call)
+    val signable = wideRows.map(_.getLong(0)).toSet
+    val verdicts = ids.map { id =>
+      idx.get(id).map(m => ("dup_index", Some(m)))
+        .orElse(intra.get(id).map(m => ("dup_batch", Some(m))))
+        .getOrElse((if (signable(id)) "ingested" else "unsignable", None))
+    }
+    val report = spark.createDataFrame(java.util.Arrays.asList(ids.zip(verdicts).map {
+      case (id, (verdict, m)) => Row(id, verdict,
+        m.map(x => java.lang.Long.valueOf(x._1)).orNull,
+        m.map(x => java.lang.Long.valueOf(x._2)).orNull)
+    }: _*), ReportSchema)
+    // survivor append from the gate's OWN signature rows, filtered on the
+    // driver to the protocol's fresh ids (a local frame — no re-shingling,
+    // no broadcast join)
     appendWide(spark, dir,
-      Right(report.filter(col("verdict") === "ingested").select("doc_id")), wide, meta)
+      Left(ids.zip(verdicts).collect { case (id, ("ingested", _)) => id }.toSeq), meta,
+      fresh => wide.filter(col("doc_id").isInCollection(fresh.collect().map(_.getLong(0))))
+        .coalesce(1))
     report
   }
 

@@ -161,10 +161,9 @@ object DedupOps {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     // Par.spread: the tokenize+explode otherwise runs at the scan's
     // parallelism (ONE task on the single-row-group fixtures). Gated off
-    // on per-batch paths (`spread = false` from the stored-index
-    // serve/append/gate callers): a bounded ingest batch pays a
-    // round-robin exchange plus a planning probe per call that its
-    // few-hundred-doc tokenize never earns back.
+    // on per-batch paths ([[batchMinhashWide]]): a bounded ingest batch
+    // pays a round-robin exchange plus a planning probe per call that
+    // its few-hundred-doc tokenize never earns back.
     (if (spread) Par.spread(docs) else docs)
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
       .withColumn("t1", lead("tok", 1).over(w))
@@ -175,7 +174,7 @@ object DedupOps {
       .distinct()
   }
 
-  private[operators] def shinglePostings(docs: DataFrame, spread: Boolean = true): DataFrame =
+  private[operators] def shinglePostings(docs: DataFrame): DataFrame =
     // Materialize once, share everywhere: the dedup/curation family
     // references the postings 5+ times per query (signatures, the df²
     // self-join, sizes, candidate restriction) and Spark re-derives the
@@ -185,7 +184,7 @@ object DedupOps {
     // shared entry; MEMORY_AND_DISK spills instead of OOMing at scale —
     // the classic "build the posting list once" pattern. Lifecycle and
     // staleness controls live in graft.Caching (opt-out conf + release).
-    graft.Caching.maybeCache(postingsPlan(docs, spread))
+    graft.Caching.maybeCache(postingsPlan(docs, spread = true))
 
   private def shingleSizes(postings: DataFrame): DataFrame =
     postings.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
@@ -386,10 +385,19 @@ object DedupOps {
     postings.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
+  /** [[minhashWide]] of a BOUNDED batch (the stored-index serve, append
+    * and gate paths): no [[Par.spread]] and no postings cache. The
+    * postings have exactly one consumer here (the minima aggregation),
+    * so a cache entry would buy nothing and would accumulate once per
+    * streaming trigger. */
+  private[operators] def batchMinhashWide(batch: DataFrame, numPerms: Int): DataFrame =
+    minhashWide(postingsPlan(batch, spread = false), numPerms)
+
   /** (doc_id, band, sig) rows from the wide minima — a cheap per-doc
-    * explode of an inline array. */
+    * explode of an inline array; `carry` columns of `wide` ride along
+    * on every band row. */
   private[operators] def bandedFromWide(
-      wide: DataFrame, numPerms: Int, bandSize: Int): DataFrame = {
+      wide: DataFrame, numPerms: Int, bandSize: Int, carry: Seq[String] = Nil): DataFrame = {
     val bandStructs = (0 until numPerms / bandSize).map { b =>
       struct(
         lit(b.toLong).as("band"),
@@ -397,8 +405,9 @@ object DedupOps {
           (0 until bandSize).map(i => col(s"mh${b * bandSize + i}").cast("string")): _*).as("sig"))
     }
     wide
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+      .select((col("doc_id") +: carry.map(col)) :+ explode(array(bandStructs: _*)).as("bs"): _*)
+      .select((col("doc_id") +: col("bs.band").as("band") +: col("bs.sig").as("sig") +:
+        carry.map(col)): _*)
   }
 
   /** MinHash+LSH dedup: shingles → K=12 minhashes → 4 bands of 3 →

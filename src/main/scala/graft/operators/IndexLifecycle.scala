@@ -3,6 +3,7 @@ package graft.operators
 import graft.sources.BulkOps
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The ONE stored-index lifecycle shared by all three persisted indexes
   * ([[DedupIndexOps]] MinHash signatures, [[AnnIndexOps]] IVFADC
@@ -126,8 +127,11 @@ object IndexLifecycle {
   // meta-dial discipline, regression-tested in IndexLifecycleSpec).
   private val idsMetaMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
+  private val IdsMetaSchema = StructType.fromDDL("id_parts BIGINT")
+
   private def readIdParts(spark: SparkSession, dir: String): Int = {
-    val n = BulkOps.readPath(spark, s"$dir/ids_meta").select("id_parts").head().getLong(0).toInt
+    val n = BulkOps.readPath(spark, s"$dir/ids_meta", Some(IdsMetaSchema))
+      .select("id_parts").head().getLong(0).toInt
     idsMetaMemo.put(dir, n)
     n
   }
@@ -139,6 +143,7 @@ object IndexLifecycle {
     idsMetaMemo.clear()
     idsListingMemo.clear()
     handles.clear()
+    handleSchemas.clear()
   }
 
   // ---- sidecar file-listing memo (the flat append-path probe) ----------
@@ -329,8 +334,18 @@ object IndexLifecycle {
     * DEPLOY.md multi-process note). */
   private val handles = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
+  // the schema each handle was first opened with: an append adds files,
+  // never columns, so a delta handle re-opened after an append skips
+  // schema inference (one Spark job per open). Dropped with the handles
+  // by every rewrite ([[invalidateHandles]], [[clearIdsMemo]]).
+  private val handleSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   def servingHandle(spark: SparkSession, dir: String, table: String): DataFrame =
-    handles.computeIfAbsent(s"$dir/$table", p => BulkOps.readPath(spark, p))
+    handles.computeIfAbsent(s"$dir/$table", p => {
+      val df = BulkOps.readPath(spark, p, Option(handleSchemas.get(p)))
+      handleSchemas.putIfAbsent(p, df.schema)
+      df
+    })
 
   /** Base ∪ delta view of a stored table for SERVES: appends land as
     * small unpartitioned segments under `<table>_delta` (one directory
@@ -367,6 +382,7 @@ object IndexLifecycle {
     * refreshed inventory AFTER this drop on the success path. */
   def invalidateHandles(dir: String): Unit = {
     handles.keySet.removeIf(k => k.startsWith(dir + "/") || k == dir)
+    handleSchemas.keySet.removeIf(k => k.startsWith(dir + "/") || k == dir)
     idsListingMemo.remove(dir)
   }
 
@@ -701,9 +717,13 @@ object IndexLifecycle {
         val keep = tomb.fold(full)(tb => full.join(broadcast(tb), Seq(idCol), "left_anti"))
         require(!keep.isEmpty,
           s"compaction would empty $dir/$t — drop the index instead")
-        val w = BulkOps.writePath(keep, SaveMode.Overwrite)
-        (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
-          .save(s"$dir/${t}_compact")
+        // clustered by the partition columns first (the writeIndex /
+        // writeIds discipline): one file per directory, so the file
+        // count tracks the directory count instead of growing by one
+        // read task's worth per directory every fold
+        if (partCols.isEmpty) BulkOps.writePath(keep, SaveMode.Overwrite).save(s"$dir/${t}_compact")
+        else BulkOps.writePath(keep.repartition(partCols.map(col): _*), SaveMode.Overwrite)
+          .partitionBy(partCols: _*).save(s"$dir/${t}_compact")
       }
       // the fold journal — the point of no return: from here, recovery
       // COMPLETES every remaining file deletion and swap; before it,
@@ -807,6 +827,7 @@ object IndexLifecycle {
     * cannot silently no-op against an existing destination. */
   private[operators] def recoverSwap(spark: SparkSession, table: String): Unit = {
     handles.remove(table)
+    handleSchemas.remove(table)
     // a recovered ids swap changed the sidecar's files outside
     // appendGuarded's refresh path — drop its inventory
     if (table.endsWith("/ids"))

@@ -54,6 +54,16 @@ object Par {
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
 
+  /** One shared pool of DAEMON threads for [[materializeConcurrently]]:
+    * no pool built and torn down per call, and it can never keep a JVM
+    * alive. Cached (unbounded): each call bounds its own in-flight count. */
+  private lazy val pool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-par")
+      t.setDaemon(true)
+      t
+    }
+
   /** Materialize INDEPENDENT frames concurrently (guide §2.6 "overlap
     * independent jobs"): actions are only sequential because driver code
     * calls them sequentially — submitting the eval harness's five
@@ -65,17 +75,42 @@ object Par {
     * scheduling (the default) gives exactly the back-fill behaviour.
     * Results are unchanged — the same deterministic frames, computed on
     * overlapping wall-clock. Shared cached subtrees are safe: block-level
-    * locking makes the second reader wait for the first writer. */
+    * locking makes the second reader wait for the first writer.
+    *
+    * Each worker runs with the caller's local properties (job group,
+    * scheduler pool, description). On the FIRST failure every job still
+    * in flight for this call is cancelled (its tasks interrupted), frames
+    * not yet started are skipped, and the failure's own exception is
+    * rethrown — never an `ExecutionException` wrapper. */
   def materializeConcurrently(frames: Seq[DataFrame], maxInFlight: Int = 3): Seq[DataFrame] = {
     if (frames.size <= 1) return frames.map(_.localCheckpoint(true))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxInFlight, frames.size))
-    try {
-      val futs = frames.map(f =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = f.localCheckpoint(true)
-        }))
-      futs.map(_.get())
-    } finally pool.shutdown()
+    val spark = frames.head.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sc = spark.sparkContext
+    // every job of this call carries one tag, so a failure cancels
+    // exactly this call's jobs
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+    val slots = new java.util.concurrent.Semaphore(maxInFlight)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val futs = frames.map { f =>
+      org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(spark, pool) {
+        slots.acquire()
+        try {
+          if (failure.get != null)
+            throw new java.util.concurrent.CancellationException("a sibling frame failed")
+          sc.addJobTag(tag)
+          sc.setInterruptOnCancel(true)
+          try f.localCheckpoint(true) finally sc.removeJobTag(tag)
+        } catch {
+          case e: Throwable =>
+            if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag, "a sibling frame failed")
+            throw e
+        } finally slots.release()
+      }
+    }
+    // wait for every worker (cancelled ones end promptly), then report
+    // the first failure itself
+    futs.foreach(f => scala.util.Try(f.join()))
+    Option(failure.get).foreach(e => throw e)
+    futs.map(_.join())
   }
 }

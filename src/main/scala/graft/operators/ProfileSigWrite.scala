@@ -36,7 +36,7 @@ object ProfileSigWrite {
     for (round <- 1 to 2) {
       println(s"[profsig] -- round $round (batch ${rows.size} docs, " +
         s"bucket_parts ${meta.bucketParts}, mins_parts ${meta.minsParts})")
-      val wide = DedupOps.minhashWide(DedupOps.shinglePostings(batch, spread = false), meta.numPerms)
+      val wide = DedupOps.batchMinhashWide(batch, meta.numPerms)
       t("wide.count")(wide.count())
       val banded = DedupIndexOps.bandedWithPb(wide, meta)
       t("banded.count")(banded.count())

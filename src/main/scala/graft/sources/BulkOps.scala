@@ -31,10 +31,14 @@ object BulkOps {
         "BulkOps is path-addressed (backups, retention, existence checks); " +
           s"unset ${Tables.NameAddressedKey} or use the connector's own bulk admin surface")
 
-  private[graft] def readPath(spark: SparkSession, path: String): DataFrame = {
+  /** `schema`, when known, skips schema inference (a Spark job per
+    * open for parquet). */
+  private[graft] def readPath(spark: SparkSession, path: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     requirePathAddressed(spark)
     readAudit.get.foreach(_ += path)
-    spark.read.format(Tables.sourceFormat(spark)).options(Tables.sourceOptions(spark)).load(path)
+    val r = spark.read.format(Tables.sourceFormat(spark)).options(Tables.sourceOptions(spark))
+    schema.fold(r)(r.schema).load(path)
   }
 
   // test seam: record every path [[readPath]] touches while `f` runs —

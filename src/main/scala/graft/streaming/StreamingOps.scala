@@ -700,8 +700,16 @@ object StreamingOps {
     * Order-DEPENDENT by design — that is what an ingest gate is: batch
     * boundaries decide dup_batch vs dup_index, never whether a
     * duplicate escapes (the StreamingSpec invariant). Crash-rerun safe
-    * end-to-end: the report is checkpointed before the index mutates
-    * and the append skips already-indexed ids. */
+    * end-to-end: the report is complete before the index mutates and
+    * the append skips already-indexed ids.
+    *
+    * Each trigger is a BOUNDED batch whose batch side lives on the
+    * driver (the gateAndIngest contract): its signature frame is
+    * collected once — driver memory ≈ rows × (K+1) × 8 B for K
+    * permutations — and its intermediate frames are local snapshots, so
+    * a trigger registers no cache entry and takes no `localCheckpoint`;
+    * an executor loss re-runs tasks from the driver-held rows instead of
+    * failing the trigger. */
   def dedupIngestGateStream(
       docs: DataFrame, indexDir: String, checkpoint: String,
       emit: (DataFrame, Long) => Unit,
@@ -711,8 +719,7 @@ object StreamingOps {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         emit(graft.operators.DedupIndexOps.gateAndIngest(
-          batch.sparkSession, indexDir, batch.toDF(), thresholdE4,
-          cacheBatch = false), batchId)
+          batch.sparkSession, indexDir, batch.toDF(), thresholdE4), batchId)
       }
       .start()
 

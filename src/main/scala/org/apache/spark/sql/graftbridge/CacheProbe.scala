@@ -10,4 +10,8 @@ object CacheProbe {
     val classic = castToImpl(ds)
     classic.sparkSession.sharedState.cacheManager.lookupCachedData(classic).isDefined
   }
+
+  /** How many plans the session's CacheManager holds. */
+  def entries(spark: org.apache.spark.sql.SparkSession): Int =
+    castToImpl(spark).sharedState.cacheManager.numCachedEntries
 }

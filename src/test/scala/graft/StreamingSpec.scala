@@ -240,6 +240,67 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("gate stream: ≤ 20 jobs a trigger, no cache entry or persisted RDD left over " +
+      "five triggers, verdicts equal the batch gate") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    import graft.operators.DedupIndexOps
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val corpus = docs.filter(col("doc_id") >= 100)
+    val arriving = docs.filter(col("doc_id") < 100).select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    val batches = arriving.grouped((arriving.size + 4) / 5).toSeq
+    assert(batches.size == 5)
+    val streamDir = java.nio.file.Files.createTempDirectory("graft_gate_guard_s").toString
+    val batchDir = java.nio.file.Files.createTempDirectory("graft_gate_guard_b").toString
+    DedupIndexOps.writeIndex(corpus, streamDir)
+    DedupIndexOps.writeIndex(corpus, batchDir)
+    def report(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3)))).toSet
+    val expected = batches.map(b => report(DedupIndexOps.gateAndIngest(spark, batchDir, b.toDF("doc_id", "text"))))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // listener delivery is asynchronous: read the count once it settles
+    def settledJobs(): Int = {
+      var last = -1
+      var now = jobs.get()
+      while (now != last) { Thread.sleep(500); last = now; now = jobs.get() }
+      now
+    }
+    val input = MemoryStream[(Long, String)]
+    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, String, Option[Any], Option[Any])]]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_gate_guard_ck").toString
+    val q = StreamingOps.dedupIngestGateStream(input.toDF().toDF("doc_id", "text"), streamDir, ckpt,
+      (rep, bid) => got.synchronized { got(bid) = report(rep) })
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
+      val perTrigger = batches.map { b =>
+        val j0 = settledJobs()
+        input.addData(b: _*)
+        q.processAllAvailable()
+        settledJobs() - j0
+      }
+      info(s"jobs per trigger: $perTrigger")
+      assert(perTrigger.forall(_ <= 20), s"jobs per trigger: $perTrigger")
+      assert(org.apache.spark.sql.graftbridge.CacheProbe.entries(spark) == entriesBefore,
+        "a gate trigger must register no CacheManager entry")
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rddsBefore),
+        "a gate trigger must leave no persisted RDD behind")
+      assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == expected,
+        "streamed verdicts must equal the batch gate over the same batches")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      q.stop()
+    }
+  }
+
   test("gate stream trigger replay: a mid-append crash replays to an exactly-once effect") {
     val s = spark
     import s.implicits._

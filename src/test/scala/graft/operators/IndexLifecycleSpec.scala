@@ -298,6 +298,27 @@ class IndexLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("compaction writes one file per partition directory, fold after fold") {
+    val s = spark
+    import s.implicits._
+    def doc(i: Long) = (i, s"alpha$i beta$i gamma$i delta$i epsilon$i")
+    val dir = Files.createTempDirectory("graft_fold_files").toString
+    DedupIndexOps.writeIndex((0L until 200L).map(doc).toDF("doc_id", "text"), dir)
+    (1 to 3).foreach { cycle =>
+      val base = 1000L * cycle
+      DedupIndexOps.appendToIndex(spark, dir, (base until base + 50L).map(doc).toDF("doc_id", "text"))
+      DedupIndexOps.deleteFromIndex(spark, dir, Seq(cycle.toLong, base).toDF("doc_id"))
+      assert(DedupIndexOps.compactIndex(spark, dir), s"fold $cycle must run")
+    }
+    Seq("mins" -> "mb=", "sigs" -> "pb=", "ids" -> "ib=").foreach { case (table, prefix) =>
+      val parts = new java.io.File(s"$dir/$table").listFiles().filter(_.getName.startsWith(prefix))
+      assert(parts.nonEmpty, s"$table must be partitioned by $prefix")
+      val counts = parts.map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-")))
+      assert(counts.forall(_._2 == 1),
+        s"every $table directory must hold exactly one data file: ${counts.filter(_._2 != 1).toSeq}")
+    }
+  }
+
   test("writeIds refuses an empty id set loudly") {
     val s = spark
     import s.implicits._
