@@ -183,6 +183,6 @@ object GraftCatalog {
     // bm25_served) — every view in this catalog registers LAZILY (a plan,
     // no jobs), while a served chain eagerly builds and writes its index
     // at call time. SQL users register those ad hoc:
-    //   DedupIndexOps.dedupServed(spark, dir).createOrReplaceTempView(...)
+    //   IndexFixtures.served(IndexFixtures.Dedup, spark, dir).createOrReplaceTempView(...)
   }
 }

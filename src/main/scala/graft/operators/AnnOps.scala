@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.contract.IndexFixtures
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -910,16 +911,15 @@ object AnnPack extends QueryPack {
     "ivf_assign" -> ((s, dir) => AnnOps.ivfAssignIncremental(e(s, dir))),
     // write-then-serve: the same answer as ivfpq_res_t, produced from the
     // STORED index tables (equality with the fresh chain IS the claim)
-    "ann_served" -> ((s, dir) => AnnIndexOps.annServed(s, dir)),
-    "ann_serve_only" -> ((s, dir) => AnnIndexOps.annServeOnly(s, dir)),
+    "ann_served" -> ((s, dir) => IndexFixtures.served(IndexFixtures.Ann, s, dir)),
+    "ann_serve_only" -> ((s, dir) => IndexFixtures.serveOnly(IndexFixtures.Ann, s, dir)),
     // index maintenance faces: append-then-serve (quantizer fixed at the
     // initial fit), tombstone-masked serve, and the drift health census
-    "ann_ingest" -> ((s, dir) => AnnIndexOps.annIngestServed(s, dir)),
-    "ann_append_only" -> ((s, dir) => AnnIndexOps.annAppendOnly(s, dir)),
-    "ann_serve_stream" -> ((s, dir) =>
-      graft.streaming.StreamingOps.annServeStreamOnly(s, dir)),
-    "ann_deleted" -> ((s, dir) => AnnIndexOps.annDeleted(s, dir)),
-    "ann_drift" -> ((s, dir) => AnnIndexOps.annDrift(s, dir)),
+    "ann_ingest" -> ((s, dir) => IndexFixtures.ingest(IndexFixtures.Ann, s, dir)),
+    "ann_append_only" -> ((s, dir) => IndexFixtures.appendOnly(IndexFixtures.Ann, s, dir)),
+    "ann_serve_stream" -> ((s, dir) => IndexFixtures.annServeStream(s, dir)),
+    "ann_deleted" -> ((s, dir) => IndexFixtures.deleted(IndexFixtures.Ann, s, dir)),
+    "ann_drift" -> ((s, dir) => IndexFixtures.annDrift(s, dir)),
     "ann_filtered" -> ((s, dir) => AnnOps.filteredTopK(e(s, dir))),
     "hard_negs" -> ((s, dir) => AnnOps.hardNegatives(e(s, dir))),
     "ann_trunc" -> ((s, dir) => AnnOps.truncTopK(e(s, dir))),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{BulkOps, Tables}
+import graft.sources.BulkOps
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,7 +70,7 @@ object DedupIndexOps {
   /** The stored dial row: (numPerms, bandSize, bucketParts, minsParts). */
   final case class IndexMeta(numPerms: Int, bandSize: Int, bucketParts: Int, minsParts: Int)
 
-  private[operators] def bandedWithPb(wide: DataFrame, meta: IndexMeta,
+  private def bandedWithPb(wide: DataFrame, meta: IndexMeta,
       carry: Seq[String] = Nil): DataFrame =
     DedupOps.bandedFromWide(wide, meta.numPerms, meta.bandSize, carry)
       .withColumn("pb", pmod(crc32(col("sig")), lit(meta.bucketParts.toLong)))
@@ -83,7 +83,7 @@ object DedupIndexOps {
       .select(col("doc_id"), col("km.k").as("k"), col("km.mh").as("mh"))
   }
 
-  private[operators] def slimWithMb(wide: DataFrame, meta: IndexMeta): DataFrame =
+  private def slimWithMb(wide: DataFrame, meta: IndexMeta): DataFrame =
     slimFromWide(wide, meta.numPerms)
       .withColumn("mb", pmod(col("doc_id"), lit(meta.minsParts.toLong)))
 
@@ -150,8 +150,9 @@ object DedupIndexOps {
   // paths ([[appendToIndex]], [[compactIndex]]) re-read the stored row
   // and re-prime, so a stale memo can never corrupt the index — it can
   // only mis-probe a serve in a multi-process deployment that rewrites
-  // dirs out-of-band (call [[clearIndexMemo]] there; see DEPLOY.md).
-  private val metaMemo = new java.util.concurrent.ConcurrentHashMap[String, IndexMeta]()
+  // dirs out-of-band (call [[IndexLifecycle.clearMemos]] there; see
+  // DEPLOY.md).
+  private[operators] val metaMemo = new java.util.concurrent.ConcurrentHashMap[String, IndexMeta]()
 
   private def loadMeta(spark: SparkSession, dir: String): IndexMeta = {
     val r = BulkOps.readPath(spark, s"$dir/meta")
@@ -160,7 +161,7 @@ object DedupIndexOps {
       r.getLong(2).toInt, r.getLong(3).toInt)
   }
 
-  private[operators] def readMetaFresh(spark: SparkSession, dir: String): IndexMeta = {
+  private def readMetaFresh(spark: SparkSession, dir: String): IndexMeta = {
     val m = loadMeta(spark, dir)
     metaMemo.put(dir, m)
     m
@@ -195,7 +196,7 @@ object DedupIndexOps {
     * requires compacting first. */
   def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
       knownIds: Option[Seq[Long]] = None): Unit = {
-    val meta = graft.tools.Prof("dedup-append:meta")(readMetaFresh(spark, dir))
+    val meta = readMetaFresh(spark, dir)
     // one batch signature pass feeds both table writes (each filtered
     // to the protocol's fresh-id frame)
     val wide = graft.Caching.maybeCache(DedupOps.batchMinhashWide(newDocs, meta.numPerms))
@@ -432,11 +433,11 @@ object DedupIndexOps {
     val docs = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
     val wide0 = DedupOps.batchMinhashWide(docs, meta.numPerms)
-    val wideRows = graft.tools.Prof("gate:signatures")(wide0.collect())
+    val wideRows = wide0.collect()
     val wide = localFrame(wide0, wideRows)
-    val idx = graft.tools.Prof("gate:serve")(bestMatch(
+    val idx = bestMatch(
       serveCore(spark, dir, meta, wide, thresholdE4, bucketCap, collectLocal)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     val intra = bestMatch(batchDupes(
       wideRows.map(r => r.getLong(0) -> Array.tabulate(meta.numPerms)(k => r.getLong(k + 1))).toSeq,
       meta.bandSize, thresholdE4, bucketCap))
@@ -489,208 +490,5 @@ object DedupIndexOps {
     IndexLifecycle.compactTables(spark, dir, "doc_id", Seq(
       ("mins", Seq("mb"), df => df.withColumn("mb", col("mb").cast("long"))),
       ("sigs", Seq("pb"), df => df.withColumn("pb", col("pb").cast("long")))))
-  }
-
-  // ---- fixture chains (driver-contract queries) --------------------
-
-  /** Fixture split: ~90% of docs are "the indexed corpus", the stable
-    * md5 10% bucket is "the arriving batch" — the
-    * [[RetrievalOps.bm25IngestTopK]] production shape (large stored
-    * corpus, small batch), on the [[CurationOps.splitAssign]] hash. */
-  private[graft] val ServeBucketPct = 10L
-
-  private[graft] def batchPred = graft.functions.TextFunctions.stableHash60(
-    col("doc_id").cast("string")) % 100L < ServeBucketPct
-
-  /** Drop the per-JVM stored-index memos (fixture dirs — the shared
-    * [[graft.tools.IndexScratch.memoizedDir]] lifecycle — AND the
-    * per-dir dial rows). */
-  def clearIndexMemo(): Unit = {
-    graft.tools.IndexScratch.clearMemo("graft_dedupidx")
-    metaMemo.clear()
-    IndexLifecycle.clearIdsMemo()
-  }
-
-  private def memoizedDir(spark: SparkSession, prefix: String, sfDir: String)
-      (build: String => Unit): String =
-    graft.tools.IndexScratch.memoizedDir(spark, prefix, sfDir)(build)
-
-  /** The `dedup_served` fixture chain: index the 90% corpus once into a
-    * temp dir (memoized under the cache lifecycle), then dedup the 10%
-    * batch against the stored signatures. */
-  def dedupServed(spark: SparkSession, sfDir: String,
-      thresholdE4: Long = 5000L): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = memoizedDir(spark, "graft_dedupidx", sfDir)(d =>
-      writeIndex(docs.filter(!batchPred), d))
-    servedDupes(spark, dir, docs.filter(batchPred), thresholdE4)
-  }
-
-  /** The serve-only batch is CAPPED to a fixed id range: the scaling
-    * claim is "a fixed-size ingest batch against a GROWING index", so
-    * the batch must not grow with the corpus the way [[batchPred]]'s
-    * 10% bucket does (a corpus-proportional batch would re-measure the
-    * batch's own signature cost, the `dedup_served` family's job). The
-    * cap yields ~200 docs — a streaming-trigger-sized micro-batch whose
-    * ~800 band-signatures probe a real MINORITY of the (≤4096) bucket
-    * directories; a 2000-doc batch already hashes into ~86% of them,
-    * at which point the read is honestly the batch's working set. */
-  private[graft] val ServeOnlyIdCap = 2000L
-
-  /** The SERVE-ONLY twin of [[dedupServed]]: same serve semantics (the
-    * oracle is the served chain over the capped batch), but the index
-    * builds through [[graft.tools.IndexScratch.prebuiltDir]] — memoized
-    * even in the no-cache ScaleBench posture — and the batch is the
-    * FIXED-SIZE id-capped slice of the 10% bucket, so a min-of-passes
-    * measurement times what an ingest pipeline actually pays per batch
-    * at 100 TB: one bounded batch signatured + the candidate-pruned
-    * index reads, with the index 100× larger and the batch unchanged.
-    * The `dedup_served` family keeps measuring the full
-    * build-write-serve cycle with the corpus-proportional batch. */
-  def dedupServeOnly(spark: SparkSession, sfDir: String,
-      thresholdE4: Long = 5000L): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = graft.tools.IndexScratch.prebuiltDir(spark, "graft_dedupidx_so", sfDir)(d =>
-      writeIndex(docs.filter(!batchPred), d))
-    // the batch arrives as BOUNDED APP INPUT, the production contract —
-    // an ingest pipeline hands the engine its batch, it does not filter
-    // the corpus per serve. The fixture therefore extracts its ≤~200-doc
-    // micro-batch ONCE per corpus (a deliberate driver materialization,
-    // the AnnIndexOps.fixtureQueries convention) instead of re-scanning
-    // the text table inside every timed serve.
-    val rows = serveOnlyBatch(spark, sfDir)
-    import spark.implicits._
-    servedDupes(spark, dir, rows.toDF("doc_id", "text"), thresholdE4)
-  }
-
-  private val serveOnlyBatchMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String)]]()
-
-  /** The `dedup_served_ing` fixture chain — the APPEND path end-to-end:
-    * index half the corpus, append the other half through
-    * [[appendToIndex]], serve the batch. Per-doc signatures are
-    * row-independent, so the result must equal [[dedupServed]]'s
-    * exactly — same DuckDB oracle BY DESIGN (the bm25_ingest
-    * convention). */
-  def dedupIngestServed(spark: SparkSession, sfDir: String,
-      thresholdE4: Long = 5000L): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = docs.filter(!batchPred)
-    val half = graft.functions.TextFunctions.stableHash60(
-      concat(lit("ing|"), col("doc_id").cast("string"))) % 100L < 50L
-    val dir = memoizedDir(spark, "graft_dedupidx_ing", sfDir) { d =>
-      writeIndex(corpus.filter(half), d)
-      appendToIndex(spark, d, corpus.filter(!half))
-      // a HALF-CORPUS append leaves a half-corpus delta segment; the
-      // production cadence after a bulk append is a fold (serve results
-      // identical before and after — this chain's oracle pins that),
-      // which returns the serve to fully-pruned partitioned reads
-      compactIndex(spark, d)
-    }
-    servedDupes(spark, dir, docs.filter(batchPred), thresholdE4)
-  }
-
-  /** The `dedup_gate` fixture chain — [[gateAndIngest]] end-to-end.
-    * Deterministic per call WITHOUT a per-call rebuild: the gate mutates
-    * its index (that is its job), so a memoized dir would hand call 2 an
-    * index already containing call 1's survivors. Instead the PRISTINE
-    * corpus index builds once under the memo lifecycle and each call
-    * file-copies it into the working dir
-    * ([[graft.tools.IndexScratch.resetFromPristine]]) — call N always
-    * gates against exactly the corpus index, at file-copy cost. With
-    * caching off (ScaleBench) the pristine build itself reruns per call,
-    * so scale runs keep measuring the full build-gate-append cycle. */
-  def dedupGateReport(spark: SparkSession, sfDir: String,
-      thresholdE4: Long = 5000L): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val pristine = memoizedDir(spark, "graft_dedupidx_gatep", sfDir)(d =>
-      writeIndex(docs.filter(!batchPred), d))
-    val work = graft.tools.IndexScratch.scratchFor("graft_dedupidx_gatew", sfDir)
-    graft.tools.Prof("gate:reset-copy")(
-      graft.tools.IndexScratch.resetFromPristine(spark, pristine, work))
-    gateAndIngest(spark, work, docs.filter(batchPred), thresholdE4)
-  }
-
-  /** The APPEND-ONLY twin of [[dedupIngestServed]]: the index is
-    * prebuilt once ([[graft.tools.IndexScratch.prebuiltDir]] — outside
-    * every timer, even in the no-cache ScaleBench posture) and each call
-    * appends the FIXED capped batch under fresh ids (pass-offset by
-    * [[graft.tools.IndexScratch.AppendIdBase]]), so a min-of-passes
-    * measurement times exactly what a 100-TB ingest cadence pays per
-    * batch: one bounded batch signatured + the guarded-append protocol
-    * (inventory-pruned sidecar probe, marker, two table appends, sidecar
-    * commit, in-place inventory refresh) against a 100×-larger index.
-    * The returned frame is the VERIFICATION read-back — the batch's ids
-    * probed back out of the sidecar ([[IndexLifecycle.committedProbe]]),
-    * mapped to their original ids; an append that lost ids shrinks it. */
-  def dedupAppendOnly(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = graft.tools.Prof("dedup_ao:prebuilt")(
-      graft.tools.IndexScratch.prebuiltDir(spark, "graft_dedupidx_ao", sfDir)(d =>
-        writeIndex(docs.filter(!batchPred), d)))
-    val base = graft.tools.IndexScratch.AppendIdBase
-    val pass = graft.tools.IndexScratch.passNumber(s"dedup_ao|$sfDir")
-    val rows = graft.tools.Prof("dedup_ao:batch")(serveOnlyBatch(spark, sfDir))
-    import spark.implicits._
-    val batch = rows.map { case (id, text) => (id + base * pass, text) }
-      .toDF("doc_id", "text")
-    graft.tools.Prof("dedup_ao:append")(appendToIndex(spark, dir, batch,
-      knownIds = Some(rows.map(_._1 + base * pass))))
-    graft.tools.Prof("dedup_ao:probe-plan")(
-      IndexLifecycle.committedProbe(spark, dir, "doc_id", batch.select("doc_id"))
-        .select((col("doc_id") % base).as("doc_id")))
-  }
-
-  /** The MARGINAL-COST twin of [[dedupGateReport]] (which deliberately
-    * rebuilds + file-copies a pristine index per call, so its ScaleBench
-    * family measures the full build-gate-append cycle): here the corpus
-    * index is prebuilt ONCE and each call gates a fixed-size batch whose
-    * ids are pass-offset AND whose tokens are pass-suffixed — fresh ids,
-    * content disjoint from the corpus and from every earlier pass's
-    * survivors, with the batch's own internal duplicate structure
-    * preserved (a shared suffix cannot create or destroy within-batch
-    * shingle equality). A min-of-passes measurement therefore times
-    * gate + survivor-append alone — the steady-state ingest cadence —
-    * against an index that never needs resetting. */
-  def dedupGateOnly(spark: SparkSession, sfDir: String,
-      thresholdE4: Long = 5000L): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = graft.tools.IndexScratch.prebuiltDir(spark, "graft_dedupidx_go", sfDir)(d =>
-      writeIndex(docs.filter(!batchPred), d))
-    val base = graft.tools.IndexScratch.AppendIdBase
-    val pass = graft.tools.IndexScratch.passNumber(s"dedup_go|$sfDir")
-    val rows = serveOnlyBatch(spark, sfDir)
-    import spark.implicits._
-    val batch = rows.map { case (id, text) => (id + base * pass, text) }
-      .toDF("doc_id", "text")
-      .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1g" + pass))
-    gateAndIngest(spark, dir, batch, thresholdE4)
-  }
-
-  /** The shared fixed-size batch of the serve-only / append-only /
-    * gate-only fixtures (and their streaming twins): the capped slice of
-    * the 10% bucket, extracted ONCE per corpus (bounded app input — see
-    * [[dedupServeOnly]]). */
-  private[graft] def serveOnlyBatch(spark: SparkSession, sfDir: String): Seq[(Long, String)] =
-    serveOnlyBatchMemo.computeIfAbsent(sfDir, _ =>
-      Tables.documents(spark, sfDir)
-        .filter(batchPred && col("doc_id") < ServeOnlyIdCap)
-        .select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq)
-
-  /** The `dedup_served_del` fixture chain — the DELETE path end-to-end:
-    * full corpus index, tombstone every (doc_id % 10 == 3) indexed doc,
-    * serve the batch through the mask. The oracle is the served chain
-    * over the SURVIVOR corpus — tombstoned docs must neither match nor
-    * count toward any bucket cap. */
-  def dedupDeleted(spark: SparkSession, sfDir: String,
-      thresholdE4: Long = 5000L): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = memoizedDir(spark, "graft_dedupidx_del", sfDir) { d =>
-      writeIndex(docs.filter(!batchPred), d)
-      deleteFromIndex(spark, d,
-        docs.filter(!batchPred).filter(col("doc_id") % 10 === 3).select("doc_id"))
-    }
-    servedDupes(spark, dir, docs.filter(batchPred), thresholdE4)
   }
 }

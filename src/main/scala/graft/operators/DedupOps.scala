@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.contract.IndexFixtures
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -144,7 +145,7 @@ object DedupOps {
     dec.unionByName(pre)
   }
 
-  /** Dev-tool hook (ProfileMinhash). */
+  /** Test hook: the postings plan `PlanQualitySpec` inspects. */
   private[graft] def postingsForProfile(docs: DataFrame): DataFrame = shinglePostings(docs)
 
   /** Dev-tool hook (TimeSeq cache probe): the postings plan WITHOUT the
@@ -841,15 +842,14 @@ object DedupPack extends QueryPack {
     "dedup_simhash" -> ((s, dir) => DedupOps.simhashDedup(d(s, dir), s)),
     "longest_span" -> ((s, dir) => DedupOps.pairLongestSpan(d(s, dir))),
     "incr_dedup" -> ((s, dir) => DedupOps.incrDedup(d(s, dir), 25L)),
-    "dedup_served" -> ((s, dir) => DedupIndexOps.dedupServed(s, dir)),
-    "dedup_serve_only" -> ((s, dir) => DedupIndexOps.dedupServeOnly(s, dir)),
-    "dedup_append_only" -> ((s, dir) => DedupIndexOps.dedupAppendOnly(s, dir)),
-    "dedup_gate_only" -> ((s, dir) => DedupIndexOps.dedupGateOnly(s, dir)),
-    "dedup_gate_stream" -> ((s, dir) =>
-      graft.streaming.StreamingOps.dedupGateStreamOnly(s, dir)),
-    "dedup_served_ing" -> ((s, dir) => DedupIndexOps.dedupIngestServed(s, dir)),
-    "dedup_served_del" -> ((s, dir) => DedupIndexOps.dedupDeleted(s, dir)),
-    "dedup_gate" -> ((s, dir) => DedupIndexOps.dedupGateReport(s, dir)),
+    "dedup_served" -> ((s, dir) => IndexFixtures.served(IndexFixtures.Dedup, s, dir)),
+    "dedup_serve_only" -> ((s, dir) => IndexFixtures.serveOnly(IndexFixtures.Dedup, s, dir)),
+    "dedup_append_only" -> ((s, dir) => IndexFixtures.appendOnly(IndexFixtures.Dedup, s, dir)),
+    "dedup_gate_only" -> ((s, dir) => IndexFixtures.dedupGateOnly(s, dir)),
+    "dedup_gate_stream" -> ((s, dir) => IndexFixtures.dedupGateStream(s, dir)),
+    "dedup_served_ing" -> ((s, dir) => IndexFixtures.ingest(IndexFixtures.Dedup, s, dir)),
+    "dedup_served_del" -> ((s, dir) => IndexFixtures.deleted(IndexFixtures.Dedup, s, dir)),
+    "dedup_gate" -> ((s, dir) => IndexFixtures.dedupGate(s, dir)),
     "incr_neardup" -> ((s, dir) => DedupOps.incrNearDup(d(s, dir), s, IncrNearDupWatermark)),
     "neardup_recall" -> ((s, dir) =>
       DedupOps.blockerPairRecall(d(s, dir), Tables.embeddings(s, dir), s)),
@@ -1008,7 +1008,7 @@ object DedupPack extends QueryPack {
 
   /** The stored-batch split of the served-index fixtures, in SQL: the
     * stable md5 10% bucket is "the arriving batch", the rest "the
-    * indexed corpus" ([[DedupIndexOps.batchPred]]'s mirror). */
+    * indexed corpus" ([[IndexFixtures.batchPred]]'s mirror). */
   private val servedBatchSqlPred =
     "CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 18, 15)) AS UBIGINT) AS BIGINT) % 100 < 10"
 
@@ -1026,7 +1026,7 @@ object DedupPack extends QueryPack {
 
   /** [[servedIdxSql]] with an independent BATCH predicate — the
     * serve-only twin caps its batch to a fixed id range (see
-    * [[DedupIndexOps.ServeOnlyIdCap]]). */
+    * [[IndexFixtures.ServeOnlyIdCap]]). */
   private def servedIdxSqlB(corpusPred: String, batchPred: String): String =
     s"""WITH $postingsSql,
        |$minhashSigSql,
@@ -1140,9 +1140,9 @@ object DedupPack extends QueryPack {
 
   /** The gate-only oracle: the corpus plus the pass-1 batch — the capped
     * 10%-bucket slice with ids offset by
-    * [[graft.tools.IndexScratch.AppendIdBase]] and every token suffixed
+    * [[IndexFixtures.AppendIdBase]] and every token suffixed
     * `g1` — as one relation, gated by id range. Mirrors
-    * [[DedupIndexOps.dedupGateOnly]]'s first call in a JVM exactly (the
+    * [[IndexFixtures.dedupGateOnly]]'s first call in a JVM exactly (the
     * only call the Verify harness makes; later bench passes suffix g2,
     * g3, … and are timing-only). */
   private def gateOnlySql: String = gateOnlySqlFor("g1")
@@ -1151,7 +1151,7 @@ object DedupPack extends QueryPack {
     * STREAMING twin suffixes `s1` so its batch content is disjoint from
     * the batch twin's (each family mutates its own prebuilt index). */
   private def gateOnlySqlFor(suffix: String): String = {
-    val base = graft.tools.IndexScratch.AppendIdBase
+    val base = IndexFixtures.AppendIdBase
     val prelude =
       s"""docs2 AS (
          |  SELECT doc_id, text FROM documents WHERE NOT ($servedBatchSqlPred)
@@ -1159,7 +1159,7 @@ object DedupPack extends QueryPack {
          |  SELECT doc_id + $base AS doc_id,
          |         regexp_replace(text, '(\\S+)', '\\1$suffix', 'g') AS text
          |  FROM documents
-         |  WHERE ($servedBatchSqlPred) AND doc_id < ${DedupIndexOps.ServeOnlyIdCap}
+         |  WHERE ($servedBatchSqlPred) AND doc_id < ${IndexFixtures.ServeOnlyIdCap}
          |),
          |""".stripMargin
     gateSqlFor(prelude, "docs2", s"doc_id < $base", s"doc_id >= $base")
@@ -1172,12 +1172,12 @@ object DedupPack extends QueryPack {
     // outside the timer, batch capped to a FIXED id range so the scale
     // family measures a constant batch against a growing index
     "dedup_serve_only" -> servedIdxSqlB(s"NOT ($servedBatchSqlPred)",
-      s"($servedBatchSqlPred) AND doc_id < ${DedupIndexOps.ServeOnlyIdCap}"),
+      s"($servedBatchSqlPred) AND doc_id < ${IndexFixtures.ServeOnlyIdCap}"),
     // append-only: the returned frame is the sidecar read-back of the
     // appended batch — every id of the capped batch, exactly once
     "dedup_append_only" ->
       s"""SELECT doc_id FROM documents
-         |WHERE ($servedBatchSqlPred) AND doc_id < ${DedupIndexOps.ServeOnlyIdCap}""".stripMargin,
+         |WHERE ($servedBatchSqlPred) AND doc_id < ${IndexFixtures.ServeOnlyIdCap}""".stripMargin,
     "dedup_gate_only" -> gateOnlySql,
     // the streaming twin's trigger runs the same gate over the same
     // batch (suffix s1 instead of g1) — same oracle shape BY DESIGN

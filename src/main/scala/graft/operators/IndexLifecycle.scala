@@ -91,7 +91,7 @@ import org.apache.spark.sql.types.StructType
   * No lifecycle operation may rewrite a parquet data file IN PLACE:
   * appends create NEW segment files, compaction and rebuild write aside
   * and RENAME, deletes unlink. This is load-bearing beyond tidiness —
-  * [[graft.tools.IndexScratch.resetFromPristine]] HARDLINKS parquet
+  * [[graft.contract.IndexFixtures.resetFromPristine]] HARDLINKS parquet
   * files on local filesystems (a pristine fixture copy shares inodes
   * with the working dir), so an in-place rewrite through one link would
   * silently corrupt every other tree sharing the inode. The one
@@ -136,10 +136,13 @@ object IndexLifecycle {
     n
   }
 
-  /** Drop the per-JVM sidecar-dial memos (multi-process deployments that
-    * rebuild an index dir out-of-band call this before serving from it
-    * again — see DEPLOY.md). */
-  def clearIdsMemo(): Unit = {
+  /** Drop every per-JVM per-dir memo of the stored indexes: the dedup
+    * `meta` dials, the sidecar `ids_meta` dials, the sidecar file
+    * listings and the serving handles. A long-lived process whose index
+    * dirs another process rewrote out-of-band calls this before serving
+    * from them again (DEPLOY.md). */
+  def clearMemos(): Unit = {
+    DedupIndexOps.metaMemo.clear()
     idsMetaMemo.clear()
     idsListingMemo.clear()
     handles.clear()
@@ -330,14 +333,14 @@ object IndexLifecycle {
     * invalidate on every mutation THIS JVM performs (fresh build,
     * guarded append, compaction swap, rebuild swap, fixture
     * pristine-copy); an out-of-band mutation by another process
-    * requires [[clearIdsMemo]] (which drops the handles too — the
+    * requires [[clearMemos]] (which drops the handles too — the
     * DEPLOY.md multi-process note). */
   private val handles = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   // the schema each handle was first opened with: an append adds files,
   // never columns, so a delta handle re-opened after an append skips
   // schema inference (one Spark job per open). Dropped with the handles
-  // by every rewrite ([[invalidateHandles]], [[clearIdsMemo]]).
+  // by every rewrite ([[invalidateHandles]], [[clearMemos]]).
   private val handleSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def servingHandle(spark: SparkSession, dir: String, table: String): DataFrame =
@@ -512,9 +515,8 @@ object IndexLifecycle {
     // deterministic across its many reads with no checkpoint, and each
     // protocol step costs exactly one Spark job
     appendGuardedSeq(spark, dir, idCol,
-      graft.tools.Prof("append:batch-collect")(
-        batchIds0.select(col(idCol).cast("long").as(idCol))
-          .distinct().collect().map(_.getLong(0)).toIndexedSeq),
+      batchIds0.select(col(idCol).cast("long").as(idCol))
+        .distinct().collect().map(_.getLong(0)).toIndexedSeq,
       tables)
 
   /** [[appendGuarded]] for callers whose batch ids are ALREADY
@@ -560,8 +562,7 @@ object IndexLifecycle {
     val suspectPool: Set[Long] = unresolved.flatMap(_._2).toSet
 
     // step 2: classify — committed ids skip everything
-    val toCommitSeq = graft.tools.Prof("append:classify")(
-      batchSeq.filterNot(committedOf(spark, dir, idCol, batchSeq, parts)))
+    val toCommitSeq = batchSeq.filterNot(committedOf(spark, dir, idCol, batchSeq, parts))
     if (toCommitSeq.isEmpty) return
     val toCommit = toCommitSeq.toDF(idCol)
     val suspects: Option[Set[Long]] =
@@ -603,7 +604,7 @@ object IndexLifecycle {
               .collect().map(_.getLong(0)).toSet
             toCommitSeq.filterNot(present).toDF(idCol)
         }
-        graft.tools.Prof(s"append:write-${t.name}")(t.write(fresh))
+        t.write(fresh)
         maybeCrash(t.name)
       }
 
@@ -612,18 +613,15 @@ object IndexLifecycle {
       // tiny file per touched ib directory — measured ~11 ms per
       // directory at local[32], and the small-files explosion at 100 TB;
       // compaction folds segments into the ib-partitioned base)
-      graft.tools.Prof("append:write-ids")(
-        if (!BulkOps.writeIdsDirect(spark, s"$dir/ids_delta", idCol, toCommitSeq))
-          BulkOps.writePath(toCommit.repartition(1), SaveMode.Append)
-            .save(s"$dir/ids_delta"))
+      if (!BulkOps.writeIdsDirect(spark, s"$dir/ids_delta", idCol, toCommitSeq))
+        BulkOps.writePath(toCommit.repartition(1), SaveMode.Append)
+          .save(s"$dir/ids_delta")
       maybeCrash("ids")
       // refresh the file inventory IN PLACE: only the one-directory
       // delta gained a segment — the steady-state append cadence never
       // re-walks the partitioned directory tree
-      graft.tools.Prof("append:refresh-inventory") {
-        refreshed = Some(idsListing(spark, dir, parts)
-          .copy(delta = listFlatDir(spark, s"$dir/ids_delta")))
-      }
+      refreshed = Some(idsListing(spark, dir, parts)
+        .copy(delta = listFlatDir(spark, s"$dir/ids_delta")))
 
       // step 6: this append's marker is done, and so is any older marker
       // whose open ids this append just committed — a single redelivery

@@ -35,15 +35,7 @@ object Par {
     * min(rows, leafNodeDefaultParallelism) slices, so the repartition
     * could never fire and the probe is pure planning overhead on paths
     * called once per ingest batch. */
-  /** Dev A/B knob (the SPARK_GRAFT_AQE convention): SPARK_GRAFT_SPREAD=false
-    * turns every spread site into a pass-through, so a cold-cache window
-    * can measure the fan-out's true cold-build value site-family by
-    * site-family without patching call sites. Default on. */
-  private val enabled: Boolean =
-    sys.env.get("SPARK_GRAFT_SPREAD").forall(_.toBoolean)
-
   def spread(df: DataFrame): DataFrame = {
-    if (!enabled) return df
     val leaves = df.queryExecution.analyzed.collectLeaves()
     val allLocal = leaves.nonEmpty && leaves.forall {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.contract.IndexFixtures
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -284,21 +285,6 @@ object RetrievalOps {
     }
   }
 
-  /** The `bm25_ing_served` fixture chain — the stored-index APPEND path
-    * end-to-end: index the stable md5 half, append the rest through
-    * [[bm25AppendDocs]], serve the default query. Postings and lengths
-    * are disjoint-union additive, so the result equals [[bm25Served]]'s
-    * exactly — same oracle BY DESIGN. */
-  def bm25IngestServed(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val half = stableHash60(concat(lit("bing|"), col("doc_id").cast("string"))) % 100L < 50L
-    val dir = graft.tools.IndexScratch.memoizedDir(spark, "graft_bm25idx_ing", sfDir) { d =>
-      bm25WriteIndex(docs.filter(half), d)
-      bm25AppendDocs(spark, d, docs.filter(!half))
-    }
-    bm25ServedTopK(spark, dir)
-  }
-
   /** Delete documents from the stored BM25 index — the same
     * tombstone-then-compact lifecycle as
     * [[AnnIndexOps.deleteFromIndex]]: O(|ids|) append, serve-time mask,
@@ -322,78 +308,6 @@ object RetrievalOps {
   def bm25CompactIndex(spark: SparkSession, dir: String): Boolean =
     IndexLifecycle.compactTables(spark, dir, "doc_id",
       Seq(("postings", Nil, (df: DataFrame) => df), ("lens", Nil, (df: DataFrame) => df)))
-
-  /** Drop the per-JVM stored-index memo. */
-  def clearIndexMemo(): Unit = {
-    graft.tools.IndexScratch.clearMemo("graft_bm25idx")
-    IndexLifecycle.clearIdsMemo()
-  }
-
-  /** The `bm25_served` fixture chain: index the corpus once into a fresh
-    * temp dir (memoized per corpus dir under the shared
-    * [[graft.tools.IndexScratch.memoizedDir]] lifecycle), then serve the
-    * default query from the stored tables. */
-  def bm25Served(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.tools.IndexScratch.memoizedDir(spark, "graft_bm25idx", sfDir)(
-      d => bm25WriteIndex(Tables.documents(spark, sfDir), d))
-    bm25ServedTopK(spark, dir)
-  }
-
-  /** The SERVE-ONLY twin of [[bm25Served]]: identical semantics (same
-    * oracle BY DESIGN), but the index builds through
-    * [[graft.tools.IndexScratch.prebuiltDir]] — memoized even in the
-    * no-cache ScaleBench posture — so a min-of-passes measurement times
-    * the term-pruned serve path alone against prebuilt stored tables;
-    * `bm25_served` keeps measuring the full build-write-serve cycle. */
-  def bm25ServeOnly(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.tools.IndexScratch.prebuiltDir(spark, "graft_bm25idx_so", sfDir)(
-      d => bm25WriteIndex(Tables.documents(spark, sfDir), d))
-    bm25ServedTopK(spark, dir)
-  }
-
-  /** The APPEND-ONLY twin of [[bm25IngestServed]]: index prebuilt once
-    * ([[graft.tools.IndexScratch.prebuiltDir]], outside every timer),
-    * each call appends a FIXED ~200-doc batch under fresh pass-offset
-    * ids, so a min-of-passes measurement times the ingest cadence alone:
-    * batch tokenize + the guarded-append protocol (lens before postings)
-    * against a growing index. Returns the sidecar read-back of the
-    * batch's ids ([[graft.operators.IndexLifecycle.committedProbe]])
-    * mapped to original ids — an append that lost ids shrinks it. */
-  def bm25AppendOnly(spark: SparkSession, sfDir: String, nBatch: Int = 200): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val dir = graft.tools.IndexScratch.prebuiltDir(spark, "graft_bm25idx_ao", sfDir)(
-      d => bm25WriteIndex(docs, d))
-    val base = graft.tools.IndexScratch.AppendIdBase
-    val pass = graft.tools.IndexScratch.passNumber(s"bm25_ao|$sfDir")
-    val rows = bm25AoBatchMemo.computeIfAbsent(sfDir, _ =>
-      docs.filter(col("doc_id") < nBatch)
-        .select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq)
-    import spark.implicits._
-    val batch = rows.map { case (id, text) => (id + base * pass, text) }
-      .toDF("doc_id", "text")
-    bm25AppendDocs(spark, dir, batch, knownIds = Some(rows.map(_._1 + base * pass)))
-    IndexLifecycle.committedProbe(spark, dir, "doc_id", batch.select("doc_id"))
-      .select((col("doc_id") % base).as("doc_id"))
-  }
-
-  private val bm25AoBatchMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String)]]()
-
-  /** The `bm25_deleted` fixture chain — text-side deletion end-to-end:
-    * full stored index, tombstone every (doc_id % 10 == 3) document,
-    * serve the default query through the mask. The oracle is the batch
-    * BM25 chain over the SURVIVOR corpus — df and the corpus scalars
-    * must reflect the deletions exactly, not serve stale. */
-  def bm25Deleted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = graft.tools.IndexScratch.memoizedDir(spark, "graft_bm25idx_del", sfDir) { d =>
-      bm25WriteIndex(Tables.documents(spark, sfDir), d)
-      bm25DeleteDocs(spark, d,
-        Tables.documents(spark, sfDir)
-          .filter(col("doc_id") % 10 === 3).select("doc_id"))
-    }
-    bm25ServedTopK(spark, dir)
-  }
 
   /** Query-table-driven BM25 — the decontamination-probe shape: a
     * benchmark's THOUSANDS of queries arrive as a (query_id, term) TABLE
@@ -523,11 +437,11 @@ object RetrievalPack extends QueryPack {
         graft.Caching.maybeCache(RetrievalOps.benchmarkQueries(docs)))
     }),
     "bm25_ingest" -> ((s, d) => RetrievalOps.bm25IngestTopK(Tables.documents(s, d))),
-    "bm25_served" -> ((s, d) => RetrievalOps.bm25Served(s, d)),
-    "bm25_serve_only" -> ((s, d) => RetrievalOps.bm25ServeOnly(s, d)),
-    "bm25_ing_served" -> ((s, d) => RetrievalOps.bm25IngestServed(s, d)),
-    "bm25_append_only" -> ((s, d) => RetrievalOps.bm25AppendOnly(s, d)),
-    "bm25_deleted" -> ((s, d) => RetrievalOps.bm25Deleted(s, d)),
+    "bm25_served" -> ((s, d) => IndexFixtures.served(IndexFixtures.Bm25, s, d)),
+    "bm25_serve_only" -> ((s, d) => IndexFixtures.serveOnly(IndexFixtures.Bm25, s, d)),
+    "bm25_ing_served" -> ((s, d) => IndexFixtures.ingest(IndexFixtures.Bm25, s, d)),
+    "bm25_append_only" -> ((s, d) => IndexFixtures.appendOnly(IndexFixtures.Bm25, s, d)),
+    "bm25_deleted" -> ((s, d) => IndexFixtures.deleted(IndexFixtures.Bm25, s, d)),
     "phrase_hits" -> ((s, d) => RetrievalOps.phraseHits(Tables.documents(s, d))),
     "rrf_fusion" -> ((s, d) =>
       RetrievalOps.rrfFusion(Tables.documents(s, d), Tables.embeddings(s, d)))

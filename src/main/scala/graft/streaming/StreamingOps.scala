@@ -769,80 +769,6 @@ object StreamingOps {
       }
       .start()
 
-  // ---- serve-only STREAM fixtures (round 13) --------------------------
-  //
-  // The batch serve-only/append-only families pin the per-batch cost of
-  // the stored-index cadence; these pin the PER-TRIGGER cost of the same
-  // paths through the real Structured Streaming machinery (MemoryStream
-  // → foreachBatch → the same operators), against a PREBUILT index, so
-  // the streaming cadence claim is measured rather than inherited from
-  // the batch twins. One trigger per call; min-of-passes isolates the
-  // trigger from the pass-1 index build.
-
-  /** Run one MemoryStream trigger through `start`, collecting every
-    * emitted report into one local frame (bounded: reports are
-    * per-batch-doc / per-query rows). A FRESH checkpoint per call — a
-    * reused one would replay-skip the batch as already committed. */
-  private def oneTrigger[T: org.apache.spark.sql.Encoder](
-      spark: org.apache.spark.sql.SparkSession, data: Seq[T], cols: Seq[String])(
-      start: (DataFrame, String, (DataFrame, Long) => Unit) =>
-        org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val ckpt = graft.tools.IndexScratch.allocate("graft_stream_ck")
-    val q = start(input.toDF().toDF(cols: _*), ckpt, (rep, _) => {
-      val rows = rep.collect()
-      buf.synchronized { schema = rep.schema; buf ++= rows }
-    })
-    try { input.addData(data); q.processAllAvailable() } finally q.stop()
-    require(schema != null, "the trigger must have emitted a report")
-    spark.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(
-        buf.toSeq).asJava), schema)
-  }
-
-  /** The STREAMING twin of
-    * [[graft.operators.DedupIndexOps.dedupGateOnly]]: one trigger of
-    * [[dedupIngestGateStream]] (gate against the prebuilt stored index +
-    * batch self-join + survivor append) over the fixed capped batch,
-    * pass-offset ids and pass-suffixed tokens per call (`s<pass>` — the
-    * batch twin suffixes `g<pass>`, so the two families' appends stay
-    * content-disjoint in their own index dirs). */
-  def dedupGateStreamOnly(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, thresholdE4: Long = 5000L): DataFrame = {
-    import graft.operators.DedupIndexOps
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    val dir = graft.tools.IndexScratch.prebuiltDir(spark, "graft_dedupidx_gso", sfDir)(d =>
-      DedupIndexOps.writeIndex(docs.filter(!DedupIndexOps.batchPred), d))
-    val base = graft.tools.IndexScratch.AppendIdBase
-    val pass = graft.tools.IndexScratch.passNumber(s"dedup_gso|$sfDir")
-    val batch = DedupIndexOps.serveOnlyBatch(spark, sfDir).map { case (id, text) =>
-      (id + base * pass, text.replaceAll("(\\S+)", "$1s" + pass))
-    }
-    import spark.implicits._
-    oneTrigger(spark, batch, Seq("doc_id", "text"))(
-      (df, ckpt, emit) => dedupIngestGateStream(df, dir, ckpt, emit, thresholdE4))
-  }
-
-  /** The STREAMING twin of
-    * [[graft.operators.AnnIndexOps.annServeOnly]]: one trigger of
-    * [[annServeStream]] over the standard bounded query set against the
-    * prebuilt stored index — the serve is stateless, so the trigger's
-    * answer equals the batch serve exactly (the oracle claim). */
-  def annServeStreamOnly(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, nQueries: Int = 10, k: Int = 5, nprobe: Int = 2): DataFrame = {
-    import graft.operators.AnnIndexOps
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val dir = graft.tools.IndexScratch.prebuiltDir(spark, "graft_annidx_sso", sfDir)(d =>
-      AnnIndexOps.writeIndex(emb, d))
-    val queries = AnnIndexOps.fixtureQueryRows(spark, emb, nQueries)
-    import spark.implicits._
-    oneTrigger(spark, queries, Seq("vec_id", "embedding"))(
-      (df, ckpt, emit) => annServeStream(df, dir, ckpt, emit, k, nprobe))
-  }
-
   def cmsFreqStream(docs: DataFrame,
       depth: Int = graft.operators.SketchOps.CmsDepth,
       width: Int = graft.operators.SketchOps.CmsWidth): Dataset[CmsCell] = {

@@ -86,7 +86,7 @@ object ScaleBench {
     "pps_sample_src",
     // round-12 tail: the SERVE-ONLY stored-index families — the index is
     // prebuilt once per (prefix, dir) even with caching off
-    // (IndexScratch.prebuiltDir), so pass 1 pays build+serve, pass 2
+    // (IndexFixtures prebuilt shapes), so pass 1 pays build+serve, pass 2
     // serves alone, and the min-of-passes convention isolates the serve
     // path: near-flat is the claim for the pruned/DPP/term-pruned reads
     "dedup_serve_only", "ann_serve_only", "bm25_serve_only",

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.cluster.GraftCatalog
+import graft.contract.IndexFixtures
 
 /** Dev probe: where does SqlSurfaceSpec's operator-views test spend its
   * time? Replays the suite's session shape (local[4], 4 shuffle
@@ -132,12 +133,12 @@ object SqlSurfaceProbe {
       "SELECT COUNT(*) FROM diversity_census WHERE n_types > n_tokens" +
         " OR ttr_e6 <= 0 OR ttr_e6 > 1000000" +
         " OR n_bigram_types > n_bigrams OR n_bigrams >= n_tokens").collect())
-    t("dedup_served build")(graft.operators.DedupIndexOps.dedupServed(spark, sf)
+    t("dedup_served build")(IndexFixtures.served(IndexFixtures.Dedup, spark, sf)
       .createOrReplaceTempView("dedup_served"))
     t("dedup_served 1")(spark.sql(
       "SELECT COUNT(*) FROM dedup_served WHERE est_e4 < 5000 OR est_e4 > 10000").collect())
     t("dedup_served 2")(spark.sql("SELECT * FROM dedup_served").count())
-    t("dedup_served scala")(graft.operators.DedupIndexOps.dedupServed(spark, sf).count())
+    t("dedup_served scala")(IndexFixtures.served(IndexFixtures.Dedup, spark, sf).count())
     t("pps_sample 1")(spark.sql(
       "SELECT COUNT(*) FROM pps_sample WHERE n_hits < 1 OR cum < w").collect())
     t("pps_sample 2")(spark.sql("SELECT * FROM pps_sample").count())

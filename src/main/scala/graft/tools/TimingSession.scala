@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Shared session factory for the timing harnesses (Bench, TimeOne,
-  * TimeSeq, ProfileMinhash) and the Verify dump: GraftSession's single
+  * TimeSeq, ScaleBench) and the Verify dump: GraftSession's single
   * config source (AQE, UTC, /dev/shm shuffle, host-stall hardening) PLUS
   * WITHOUT the session extensions: the contract queries use the Column
   * API (native expressions bind directly), and injecting the extension
@@ -26,34 +26,6 @@ object TimingSession {
     // bounded serve/report queries vs its shuffle wins on the heavies)
     sys.env.get("SPARK_GRAFT_AQE")
       .foreach(v => spark.conf.set("spark.sql.adaptive.enabled", v))
-    // SPARK_GRAFT_COALESCE_PF=false → AQE coalesces small shuffle
-    // partitions by advisory SIZE instead of parallelism-first (dev A/B
-    // knob for the r13 scaling-block finding that 8 cores beat 32 on
-    // half the fixture surface: with parallelism-first, a 5000-row
-    // shuffle still fans to 32 tiny tasks). Default keeps Spark's
-    // parallelism-first behavior — the bench contract is unchanged.
-    sys.env.get("SPARK_GRAFT_COALESCE_PF")
-      .foreach(v => spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", v))
-    // GRAFT_PROF=1: per-job wall times to stderr (the UI is disabled in
-    // these harnesses, so this is the job-level attribution channel —
-    // which of a query's many small jobs the seconds actually go to)
-    if (Prof.enabled) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-      spark.sparkContext.addSparkListener(new SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val d = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-          starts.put(js.jobId, (System.nanoTime(), d))
-        }
-        override def onJobEnd(je: SparkListenerJobEnd): Unit =
-          Option(starts.remove(je.jobId)).foreach { case (t0, d) =>
-            System.err.println(
-              f"[prof-job] job=${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.2fs  $d")
-          }
-      })
-    }
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -415,8 +415,7 @@ class PlanQualitySpec extends SparkSpec {
 
   test("tombstone-masked serves keep their scan shapes: probe-pruned postings, no corpus scan") {
     spark.catalog.clearCache()
-    graft.operators.AnnIndexOps.clearIndexMemo()
-    graft.operators.RetrievalOps.clearIndexMemo()
+    graft.contract.IndexFixtures.clear()
     val annDel = SparkEntry.queries("ann_deleted")(spark, sf)
     val annPlan = annDel.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.contract.IndexFixtures
 import graft.operators.{DataLayoutOps, RetrievalOps}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -263,7 +264,7 @@ class RetrievalLayoutSpec extends SparkSpec {
 
   test("served BM25 through a written index equals the text-fed chain row-for-row") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    val got = graft.operators.RetrievalOps.bm25Served(spark, sf)
+    val got = IndexFixtures.served(IndexFixtures.Bm25, spark, sf)
     val fresh = graft.operators.RetrievalOps.bm25TopK(docs)
     assert(got.exceptAll(fresh).count() == 0 && fresh.exceptAll(got).count() == 0,
       "stored-index BM25 must be bit-identical to the text-fed build")
@@ -367,7 +368,7 @@ class RetrievalLayoutSpec extends SparkSpec {
     // a 12/3 index into the same path.
     val other = java.nio.file.Files.createTempDirectory("graft_dedupidx_dial2").toString
     DedupIndexOps.writeIndex(corpus, other, numPerms = 12, bandSize = 3)
-    graft.tools.IndexScratch.resetFromPristine(spark, other, dir)
+    graft.contract.IndexFixtures.resetFromPristine(spark, other, dir)
     // a MUTATION must read the stored meta fresh: the append signatures
     // at 12/3 (the rewritten index's truth), never the memoized 24/3
     DedupIndexOps.appendToIndex(spark, dir,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.cluster.GraftCatalog
+import graft.contract.IndexFixtures
 
 class SqlSurfaceSpec extends SparkSpec {
 
@@ -202,13 +203,13 @@ class SqlSurfaceSpec extends SparkSpec {
     // served dedup index: registered AD HOC (the catalog itself stays
     // lazy — a served chain builds its index eagerly); estimates
     // bounded, and the view matches the Scala chain
-    graft.operators.DedupIndexOps.dedupServed(spark, sf)
+    IndexFixtures.served(IndexFixtures.Dedup, spark, sf)
       .createOrReplaceTempView("dedup_served")
     assert(spark.sql(
       "SELECT COUNT(*) FROM dedup_served WHERE est_e4 < 5000 OR est_e4 > 10000")
       .collect()(0).getLong(0) == 0)
     assert(spark.sql("SELECT * FROM dedup_served").count() ==
-      graft.operators.DedupIndexOps.dedupServed(spark, sf).count())
+      IndexFixtures.served(IndexFixtures.Dedup, spark, sf).count())
     // PPS sample: every selected doc carries ≥1 pin, cum strictly grows
     // with doc order, and the view matches the Scala chain
     assert(spark.sql(

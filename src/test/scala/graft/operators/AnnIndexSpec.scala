@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.contract.IndexFixtures
 import graft.sources.Tables
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
 class AnnIndexSpec extends SparkSpec {
 
   test("served search through a WRITTEN index equals the fresh ivfpq_res_t chain row-for-row") {
-    val got = AnnIndexOps.annServed(spark, sf)
+    val got = IndexFixtures.served(IndexFixtures.Ann, spark, sf)
     val fresh = PqOps.ivfPqResidualTrainedTopK(Tables.embeddings(spark, sf))
     assert(got.exceptAll(fresh).count() == 0 && fresh.exceptAll(got).count() == 0,
       "stored-index serve must be bit-identical to the session build")

@@ -262,7 +262,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val pristine = Files.createTempDirectory("graft_pristine").toString
     DedupIndexOps.writeIndex(docs, pristine)
     val work = Files.createTempDirectory("graft_work").toString
-    graft.tools.IndexScratch.resetFromPristine(spark, pristine, work)
+    graft.contract.IndexFixtures.resetFromPristine(spark, pristine, work)
     def parquetFiles(root: java.nio.file.Path): Seq[java.nio.file.Path] = {
       val walk = Files.walk(root)
       try {
