@@ -36,12 +36,19 @@ object Bench {
       spark.sparkContext.getRDDStorageInfo
         .map(s => s.id -> (s.memSize + s.diskSize)).toMap
     val cacheBuiltBytes = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    // a query that throws in any pass has no timing: the line names it in
+    // `failed` and keeps it out of every total
+    val failed = scala.collection.mutable.Set.empty[String]
     val pass1Sec = scala.collection.mutable.Map.empty[String, Double]
     def onePass(pass: Int): Map[String, Double] =
       headline.map { case (name, fn) =>
         val before = storageSnap()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench-trace] pass$pass $name failed: $e")
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         val built = storageSnap().map { case (id, sz) =>
           math.max(0L, sz - before.getOrElse(id, 0L)) }.sum
@@ -67,11 +74,11 @@ object Bench {
     System.gc()
     val p2 = onePass(2)
     sampleCache()
-    val min2 = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    val min2 = (p1 -- failed).map { case (k, v) => k -> math.min(v, p2(k)) }
     // the host stalls CPU in multi-minute bursts; when the two passes
     // disagree badly, one of them ran through a burst — a third pass makes
     // the per-query min robust to a single burst window
-    val disagreement = p1.keys.map(k => math.abs(p1(k) - p2(k))).sum
+    val disagreement = min2.keys.map(k => math.abs(p1(k) - p2(k))).sum
     var ranPass3 = false
     val results =
       if (disagreement <= 0.25 * math.max(min2.values.sum, 1e-9)) min2
@@ -84,6 +91,7 @@ object Bench {
         sampleCache()
         m
       }
+    val timed = results -- failed
     val probeAfter = cpuProbe()
     // max across the pass-boundary samples (140+ queries × 60+
     // maybeCache frames share one CacheManager) — the number BASELINE.md
@@ -95,7 +103,7 @@ object Bench {
     // the line that turns "query X regressed" into "query X built the
     // postings cache this round". Top builders only; full trace above.
     val attr = cacheBuiltBytes.toSeq.sortBy(-_._2).take(12).map { case (n, b) =>
-      val over = math.max(0.0, pass1Sec.getOrElse(n, 0.0) - results.getOrElse(n, 0.0))
+      val over = math.max(0.0, pass1Sec.getOrElse(n, 0.0) - timed.getOrElse(n, 0.0))
       f"$n=${b / 1e6}%.1fMB/+${over}%.1fs"
     }
     System.err.println(attr.mkString("[bench-cache-attr] ", ",", ""))
@@ -105,7 +113,7 @@ object Bench {
     // (tested at 120+ queries). Full 3-decimal per-query values go to
     // stderr for local analysis.
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val sorted = results.toSeq.sortBy(_._1)
+    val sorted = timed.toSeq.sortBy(_._1)
     System.err.println(sorted.map { case (k, v) => s"$k=${f3(v)}" }.mkString("[bench-full] ", ",", ""))
     val sfName = sfDir.split('/').last
     System.err.println(s"[bench-probe] cpu_probe_sec=[${f3(probeBefore)},${f3(probeAfter)}]")
@@ -116,7 +124,7 @@ object Bench {
       probeBefore, probeAfter, ranPass3,
       cacheBuiltBytes.toSeq.sortBy(-_._2).take(graft.tools.BenchLine.AttrTop)
         .map { case (n, b) => n -> b / 1e6 })
-    println(graft.tools.BenchLine(results, sfName, Some(meta)))
+    println(graft.tools.BenchLine(timed, sfName, Some(meta), failed = failed.toSeq))
     spark.stop()
   }
 }

@@ -28,7 +28,32 @@ object Caching {
   /** `df.cache()` unless disabled by [[EnabledKey]] — MEMORY_AND_DISK, so
     * at scale hot frames spill instead of OOMing. */
   def maybeCache(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(EnabledKey, "true").toBoolean) df.cache() else df
+    if (enabled(df)) df.cache() else df
+
+  /** Register a small cluster-state view (region metrics, region info,
+    * topology, servers) as ONE cached partition when the optimizer's size
+    * estimate for it is within the session's
+    * `spark.sql.autoBroadcastJoinThreshold` — the session's own rule for
+    * "small enough to ship whole to one task", which also caps the serial
+    * work a one-partition view can cause. A single partition satisfies
+    * every clustered distribution, so the windows, aggregates and joins
+    * of the admin tools over it run inside the scan's stage with no
+    * shuffle. Otherwise (threshold -1, estimate above it, or caching
+    * disabled) the view gets `otherwise`: [[maybeCache]] by default.
+    *
+    * The estimate is read off the ANALYZED plan: a cache substitution
+    * never appears there, so the same view is sized the same way before
+    * and after its cache entry materializes, and every caller of one view
+    * builds the same plan and reaches the same CacheManager entry. */
+  def cacheSmallView(df: DataFrame, otherwise: DataFrame => DataFrame = maybeCache): DataFrame = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    lazy val size = df.queryExecution.analyzed.stats.sizeInBytes
+    if (enabled(df) && threshold >= 0 && size <= threshold) df.repartition(1).cache()
+    else otherwise(df)
+  }
+
+  private def enabled(df: DataFrame): Boolean =
+    df.sparkSession.conf.get(EnabledKey, "true").toBoolean
 
   /** Drop every cached plan in the session — the bulk lifecycle hook for
     * pipeline boundaries and in-place input rewrites. */
@@ -52,6 +77,6 @@ object Caching {
     * materializes afresh. What can never happen is a silent partial
     * re-sample of boundaries mid-plan. */
   def pinForConsistency(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(EnabledKey, "true").toBoolean) df.cache()
+    if (enabled(df)) df.cache()
     else df.localCheckpoint(true)
 }

@@ -24,16 +24,21 @@ import org.apache.spark.sql.types.DecimalType
   *   - derived doubles are built from the same literal expression tree on
   *     both engines (IEEE ops are deterministic given identical structure)
   *
-  * Scale note: every view is a single shuffle-free projection or a single
-  * hash aggregate over the base scan; nothing here collects to the driver,
-  * so the same code runs on 100 TB with partial (map-side) aggregation.
+  * Scale note: D1 is one hash aggregate over its base scan (partial,
+  * map-side aggregation), D2 and D3 are shuffle-free projections, and
+  * `servers` is a 24-row local relation; nothing here collects to the
+  * driver, so the same code runs on 100 TB.
   *
-  * Each view registers with the cache manager (Caching.maybeCache): these
-  * are the same "cluster state" the reporter framework snapshots once and
-  * every analysis query re-reads — a region-metrics aggregate is
+  * Each view registers with the cache manager (Caching.cacheSmallView):
+  * these are the same "cluster state" the reporter framework snapshots
+  * once and every analysis query re-reads — a region-metrics aggregate is
   * O(#regions), orders of magnitude smaller than the scan it derives
   * from, so materializing it once beats re-aggregating the base table in
-  * each of the ~20 consumer queries. Lifecycle and opt-out as everywhere:
+  * each of the ~20 consumer queries. While a view's size estimate is at
+  * or under `spark.sql.autoBroadcastJoinThreshold` it is held as ONE
+  * cached partition, so the per-server windows, aggregates and joins of
+  * its consumers run in the scan's stage without a shuffle; above it the
+  * view is cached distributed. Lifecycle and opt-out as everywhere:
   * `graft.cache.enabled=false` / Caching.release.
   */
 object ClusterViews {
@@ -62,7 +67,7 @@ object ClusterViews {
         (col("qty_max") * 10).cast("long").as("max_file_mb"),
         col("qty_min").cast("long").as("mem_store_mb"),
         ((col("region_id") * 37) % 101).cast("double").divide(lit(100.0)).as("locality"))
-      .transform(graft.Caching.maybeCache)
+      .transform(graft.Caching.cacheSmallView(_))
 
   /** D2 region_info — one row per region from "meta": key ranges, namespace,
     * liveness (reference `api/meta/MetaTableInfoService.java:20-72`).
@@ -79,7 +84,7 @@ object ClusterViews {
         ((col("p_partkey") + 1) * 1000).as("end_key"),
         concat(lit("s"), ((col("p_partkey") * col("p_partkey") + col("p_partkey") * 5) % 24).cast("string")).as("server"),
         (col("p_partkey") % 97 === 0).as("offline"))
-      .transform(graft.Caching.maybeCache)
+      .transform(graft.Caching.cacheSmallView(_))
 
   /** D3 cluster_topology — timestamped region→server snapshots
     * (reference `api/meta/TechnicalMeta.java:130-158`: qualifiers
@@ -96,7 +101,7 @@ object ClusterViews {
         col("o_orderdate").cast("timestamp").as("snapshot_ts"),
         concat(lit("s"), ((col("o_orderkey") * 11 + col("o_custkey")) % 24).cast("string")).as("server"),
         col("o_orderkey").as("obs_id"))
-      .transform(graft.Caching.maybeCache)
+      .transform(graft.Caching.cacheSmallView(_))
 
   /** Typed views (model case classes mirror the column names). */
   def regionMetricsDs(spark: SparkSession, sfDir: String): Dataset[graft.model.RegionMetric] = {
@@ -118,7 +123,7 @@ object ClusterViews {
     * (reference zero-fills empty servers at `api/rstask/RSTaskControllerHelper.java:155-176`). */
   def servers(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    (0 until 24).map(i => s"s$i").toDF("server")
+    graft.Caching.cacheSmallView((0 until 24).map(i => s"s$i").toDF("server"), identity)
   }
 }
 

@@ -8,8 +8,11 @@ import org.apache.spark.sql.functions._
 
 /** Cluster-state facade: the cached inputs every reporter shares —
   * the Spark analogue of `MetaTableHolder` + `ClusterMetrics` memoization
-  * (reference `api/meta/MetaTableHolder.java:14-114`). Callers cache()
-  * these exactly where the reference memoizes. */
+  * (reference `api/meta/MetaTableHolder.java:14-114`). `metrics`,
+  * `regionInfo` and `servers` come from [[ClusterViews]], which registers
+  * them with the CacheManager already (one cached partition while small);
+  * `snapshots` and `transitions` are plain reads, each read once per
+  * sweep, so caching them would only add a build. */
 case class ClusterState(
     metrics: DataFrame,
     regionInfo: DataFrame,
@@ -17,9 +20,9 @@ case class ClusterState(
     snapshots: DataFrame,
     transitions: DataFrame,
     serverFeed: DataFrame) {
-  def cached(): ClusterState = {
-    metrics.cache(); regionInfo.cache(); servers.cache(); this
-  }
+  /** Drop the cache entries of `metrics`, `regionInfo` and `servers`
+    * (the views [[ClusterViews]] registered); [[graft.Caching.release]]
+    * drops every entry of the session instead. */
   def uncache(): Unit = { metrics.unpersist(); regionInfo.unpersist(); servers.unpersist() }
 }
 

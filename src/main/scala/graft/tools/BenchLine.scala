@@ -35,6 +35,10 @@ case class BenchMeta(
   *      per-query, and total still reconciles: value = sum(queries) +
   *      fast_sum up to rendering precision
   *
+  * `failed` names every query that threw: it has no timing, so the
+  * caller keeps it out of `results` and the total. The list is always
+  * rendered (empty on a clean run) and never degraded.
+  *
   * The [[BenchMeta]] evidence fields are rendered FIRST and never
   * degraded — the fold ladder drops fast-query detail to pay for them
   * (~70 chars buys "was this window clean" being answerable from the
@@ -102,9 +106,11 @@ object BenchLine {
       results: Map[String, Double],
       sfName: String,
       meta: Option[BenchMeta] = None,
-      maxLen: Int = MaxLen): String = {
+      maxLen: Int = MaxLen,
+      failed: Seq[String] = Nil): String = {
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val metaStr = metaJson(meta)
+    val failedStr = failed.sorted.map(n => "\"" + esc(n) + "\"").mkString(""","failed":[""", ",", "]")
+    val metaStr = metaJson(meta) + failedStr
     // name-sorted for stable diffs between rounds
     val sorted = results.toSeq.sortBy(_._1)
     val fine = render(sorted, Nil, total, sfName, coarse = false, metaStr)
@@ -128,6 +134,6 @@ object BenchLine {
     // still push a fully-folded line past maxLen — drop it last (probes
     // and pass3 are the window evidence and always stay)
     render(Nil, byTime, total, sfName, coarse = true,
-      metaJson(meta, withAttr = false))
+      metaJson(meta, withAttr = false) + failedStr)
   }
 }

@@ -114,6 +114,22 @@ class BenchLineSpec extends AnyFunSuite {
     assert(!clean.get("pass3").asBoolean() && !clean.has("attr"))
   }
 
+  test("failed queries are named, never timed, and survive the deepest fold") {
+    val failed = Seq("weight_stats", "dedup_gate", "a\"quoted")
+    for (n <- Seq(10, SparkEntry.queries.size, 250)) {
+      val r = results(n) -- failed
+      val node = parse(BenchLine(r, "sf0.1", failed = failed))
+      val names = (0 until node.get("failed").size()).map(node.get("failed").get(_).asText())
+      assert(names == failed.sorted)
+      failed.foreach(k => assert(!node.get("queries").has(k), s"failed query $k has a timing"))
+      val fastN = if (node.has("fast_n")) node.get("fast_n").asInt() else 0
+      assert(node.get("queries").size() + fastN == r.size)
+      assert(math.abs(node.get("value").asDouble() - r.values.sum) <= 0.01)
+    }
+    // a clean run says so explicitly
+    assert(parse(BenchLine(Map("q" -> 1.0), "sf0.1")).get("failed").size() == 0)
+  }
+
   test("empty and single-query edge cases") {
     val empty = parse(BenchLine(Map.empty, "sf0.1"))
     assert(empty.get("value").asDouble() == 0.0 && empty.get("queries").size() == 0)

@@ -16,7 +16,7 @@ class SinksAndSourcesSpec extends SparkSpec {
 
   test("reporter registry: all 9 reporters produce typed findings over shared state") {
     assert(Reporters.all.size == 9) // parity with ReportRunner.java:42-50
-    val state = ClusterState.fromSf(spark, sf).cached()
+    val state = ClusterState.fromSf(spark, sf)
     try {
       val findings = Reporters.runAll(state).cache()
       assert(findings.count() > 0)
