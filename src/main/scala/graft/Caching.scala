@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.CacheProbe
+import org.apache.spark.sql.types.StructType
 
 /** Library-level cache lifecycle.
   *
@@ -26,9 +28,38 @@ object Caching {
   val EnabledKey = "graft.cache.enabled"
 
   /** `df.cache()` unless disabled by [[EnabledKey]] — MEMORY_AND_DISK, so
-    * at scale hot frames spill instead of OOMing. */
+    * at scale hot frames spill instead of OOMing. A plan that already has
+    * an entry is returned as is (its reads hit that entry anyway). */
   def maybeCache(df: DataFrame): DataFrame =
-    if (enabled(df)) df.cache() else df
+    if (enabled(df)) cacheOnce(df) else df
+
+  private def cacheOnce(df: DataFrame): DataFrame =
+    if (CacheProbe.isCached(df)) df else df.cache()
+
+  /** `body` over `df` registered with [[maybeCache]], for a frame whose
+    * readers all run inside `body` (a bounded batch feeding an append's
+    * table writes): the entry `body` registered is dropped when it
+    * returns or throws, and an entry that existed before the call is left
+    * alone. */
+  def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val owned = enabled(df) && !CacheProbe.isCached(df)
+    val cached = maybeCache(df)
+    try body(cached) finally if (owned) cached.unpersist()
+  }
+
+  /** `df` collected ONCE and held on the driver as a local frame (a
+    * `LocalRelation`): later plans read the rows without recomputing
+    * `df`, and the frame holds no CacheManager entry and no executor
+    * blocks, so it needs no release and an executor loss can never fail
+    * a read of it (tasks over it re-run from the driver's rows). For
+    * bounded frames only: the driver holds every row. */
+  def localFrame(df: DataFrame): DataFrame =
+    localFrame(df.sparkSession, df.collect().toSeq, df.schema)
+
+  /** Driver rows as a local frame, the [[localFrame]] of rows already on
+    * the driver. */
+  def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Register a small cluster-state view (region metrics, region info,
     * topology, servers) as ONE cached partition when the optimizer's size
@@ -48,7 +79,7 @@ object Caching {
   def cacheSmallView(df: DataFrame, otherwise: DataFrame => DataFrame = maybeCache): DataFrame = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     lazy val size = df.queryExecution.analyzed.stats.sizeInBytes
-    if (enabled(df) && threshold >= 0 && size <= threshold) df.repartition(1).cache()
+    if (enabled(df) && threshold >= 0 && size <= threshold) cacheOnce(df.repartition(1))
     else otherwise(df)
   }
 
@@ -77,6 +108,6 @@ object Caching {
     * materializes afresh. What can never happen is a silent partial
     * re-sample of boundaries mid-plan. */
   def pinForConsistency(df: DataFrame): DataFrame =
-    if (enabled(df)) df.cache()
+    if (enabled(df)) cacheOnce(df)
     else df.localCheckpoint(true)
 }

@@ -5,7 +5,7 @@ import graft.sources.Tables
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The stored-index fixture cycle behind the contract queries: the
@@ -78,7 +78,7 @@ object IndexFixtures {
     * @param fold      the compaction the ingest shape runs after its bulk
     *                  append; None: it serves the appended delta as is
     */
-  final class Family[P](
+  final class Family(
       val name: String,
       val id: String,
       val payload: String,
@@ -93,12 +93,11 @@ object IndexFixtures {
       val append: (SparkSession, String, DataFrame, Option[Seq[Long]]) => Unit,
       val delete: (SparkSession, String, DataFrame) => Unit,
       val fold: Option[(SparkSession, String) => Boolean],
-      val serve: (SparkSession, String, DataFrame) => DataFrame)(
-      implicit val rowEncoder: Encoder[(Long, P)]) {
+      val serve: (SparkSession, String, DataFrame) => DataFrame) {
     def corpusOf(t: DataFrame): DataFrame = corpus.fold(t)(c => t.filter(c))
   }
 
-  val Dedup = new Family[String]("dedup", "doc_id", "text", Tables.documents,
+  val Dedup = new Family("dedup", "doc_id", "text", Tables.documents,
     corpus = Some(!batchPred),
     probe = Some(batchPred),
     queries = Some(batchPred && col("doc_id") < ServeOnlyIdCap),
@@ -109,12 +108,11 @@ object IndexFixtures {
     append = (s, dir, docs, ids) => DedupIndexOps.appendToIndex(s, dir, docs, ids),
     delete = DedupIndexOps.deleteFromIndex,
     fold = Some(DedupIndexOps.compactIndex),
-    serve = (s, dir, batch) => DedupIndexOps.servedDupes(s, dir, batch))(
-    Encoders.product[(Long, String)])
+    serve = (s, dir, batch) => DedupIndexOps.servedDupes(s, dir, batch))
 
   /** The served query set is the first 10 vectors; the tombstones spare
     * it, so every query keeps its own row. */
-  val Ann = new Family[Seq[Float]]("ann", "vec_id", "embedding", Tables.embeddings,
+  val Ann = new Family("ann", "vec_id", "embedding", Tables.embeddings,
     corpus = None,
     probe = None,
     queries = Some(col("vec_id") < 10),
@@ -125,10 +123,9 @@ object IndexFixtures {
     append = AnnIndexOps.appendToIndex,
     delete = AnnIndexOps.deleteFromIndex,
     fold = None,
-    serve = (s, dir, queries) => AnnIndexOps.servedTopK(s, dir, queries))(
-    Encoders.product[(Long, Seq[Float])])
+    serve = (s, dir, queries) => AnnIndexOps.servedTopK(s, dir, queries))
 
-  val Bm25 = new Family[String]("bm25", "doc_id", "text", Tables.documents,
+  val Bm25 = new Family("bm25", "doc_id", "text", Tables.documents,
     corpus = None,
     probe = None,
     queries = None,
@@ -139,13 +136,12 @@ object IndexFixtures {
     append = RetrievalOps.bm25AppendDocs,
     delete = RetrievalOps.bm25DeleteDocs,
     fold = None,
-    serve = (s, dir, _) => RetrievalOps.bm25ServedTopK(s, dir))(
-    Encoders.product[(Long, String)])
+    serve = (s, dir, _) => RetrievalOps.bm25ServedTopK(s, dir))
 
   // ---- the shared shapes ----------------------------------------------
 
   /** Build the corpus index, serve the family's probe from it. */
-  def served(f: Family[_], spark: SparkSession, sfDir: String): DataFrame = {
+  def served(f: Family, spark: SparkSession, sfDir: String): DataFrame = {
     val t = f.table(spark, sfDir)
     val fx = fixture(spark, s"${f.name}_served", sfDir, t)(d => f.write(f.corpusOf(t), d))
     f.serve(spark, fx.dir, probe(f, spark, t, fx))
@@ -153,7 +149,7 @@ object IndexFixtures {
 
   /** [[served]] against an index prebuilt once, probed with the bounded
     * queries: the per-query serve cost alone. */
-  def serveOnly(f: Family[_], spark: SparkSession, sfDir: String): DataFrame = {
+  def serveOnly(f: Family, spark: SparkSession, sfDir: String): DataFrame = {
     val t = f.table(spark, sfDir)
     val fx = fixture(spark, s"${f.name}_serve_only", sfDir, t, prebuilt = true)(d =>
       f.write(f.corpusOf(t), d))
@@ -163,7 +159,7 @@ object IndexFixtures {
   /** The append path end to end: build on the stable md5 half of the
     * corpus, append the other half, serve. Equals [[served]] for every
     * family (the same oracle by design). */
-  def ingest(f: Family[_], spark: SparkSession, sfDir: String): DataFrame = {
+  def ingest(f: Family, spark: SparkSession, sfDir: String): DataFrame = {
     val t = f.table(spark, sfDir)
     val corpus = f.corpusOf(t)
     val fx = fixture(spark, s"${f.name}_ingest", sfDir, t) { d =>
@@ -178,7 +174,7 @@ object IndexFixtures {
 
   /** The delete path end to end: build, tombstone the family's deleted
     * rows, serve through the mask. The oracle is the survivor corpus. */
-  def deleted(f: Family[_], spark: SparkSession, sfDir: String): DataFrame = {
+  def deleted(f: Family, spark: SparkSession, sfDir: String): DataFrame = {
     val t = f.table(spark, sfDir)
     val corpus = f.corpusOf(t)
     val fx = fixture(spark, s"${f.name}_deleted", sfDir, t) { d =>
@@ -192,20 +188,19 @@ object IndexFixtures {
     * prebuilt once, and return the batch's ids read back out of the
     * sidecar ([[IndexLifecycle.committedProbe]]) mapped to the original
     * ids — an append that lost ids shrinks it. */
-  def appendOnly[P](f: Family[P], spark: SparkSession, sfDir: String): DataFrame = {
+  def appendOnly(f: Family, spark: SparkSession, sfDir: String): DataFrame = {
     val t = f.table(spark, sfDir)
     val fx = fixture(spark, s"${f.name}_append_only", sfDir, t, prebuilt = true)(d =>
       f.write(f.corpusOf(t), d))
     val offset = AppendIdBase * fx.passes.incrementAndGet()
-    val rows = fx.rows(t, f.batch, f)
-    val batch = frame(f, spark, rows.map { case (id, p) => (id + offset, p) })
-    f.append(spark, fx.dir, batch, Some(rows.map(_._1 + offset)))
+    val batch = fx.local(t, f.batch, f).withColumn(f.id, col(f.id) + offset)
+    f.append(spark, fx.dir, batch, Some(batch.select(f.id).collect().map(_.getLong(0)).toSeq))
     IndexLifecycle.committedProbe(spark, fx.dir, f.id, batch.select(f.id))
       .select((col(f.id) % AppendIdBase).as(f.id))
   }
 
   /** The stable md5 half of the family's ids, salted by `halfSalt`. */
-  private def half(f: Family[_]): Column = {
+  private def half(f: Family): Column = {
     val key = col(f.id).cast("string")
     graft.functions.TextFunctions.stableHash60(
       f.halfSalt.fold(key)(s => concat(lit(s), key))) % 100L < 50L
@@ -232,9 +227,7 @@ object IndexFixtures {
     * corpus and every earlier pass, its internal duplicate structure
     * kept — gated into an index prebuilt once. */
   def dedupGateOnly(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fx, pass, rows) = gateOnlyBatch(spark, sfDir, "dedup_gate_only")
-    val batch = frame(Dedup, spark, rows)
-      .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1g" + pass))
+    val (fx, batch) = gateOnlyBatch(spark, sfDir, "dedup_gate_only", "g")
     DedupIndexOps.gateAndIngest(spark, fx.dir, batch)
   }
 
@@ -242,21 +235,24 @@ object IndexFixtures {
     * [[graft.streaming.StreamingOps.dedupIngestGateStream]], tokens
     * suffixed `s<pass>` so the two twins' appends stay content-disjoint. */
   def dedupGateStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (fx, pass, rows) = gateOnlyBatch(spark, sfDir, "dedup_gate_stream")
-    val batch = rows.map { case (id, text) => (id, text.replaceAll("(\\S+)", "$1s" + pass)) }
+    val (fx, batch) = gateOnlyBatch(spark, sfDir, "dedup_gate_stream", "s")
     import spark.implicits._
-    oneTrigger(spark, batch, Seq("doc_id", "text"))((df, ckpt, emit) =>
-      graft.streaming.StreamingOps.dedupIngestGateStream(df, fx.dir, ckpt, emit))
+    oneTrigger(spark, batch.as[(Long, String)].collect().toSeq, Seq("doc_id", "text"))(
+      (df, ckpt, emit) =>
+        graft.streaming.StreamingOps.dedupIngestGateStream(df, fx.dir, ckpt, emit))
   }
 
+  /** The bounded dedup batch of a gate-only shape as a local frame:
+    * pass-offset ids, every token suffixed `<tag><pass>`. */
   private def gateOnlyBatch(spark: SparkSession, sfDir: String,
-      shape: String): (Fixture, Long, Seq[(Long, String)]) = {
+      shape: String, tag: String): (Fixture, DataFrame) = {
     val t = Dedup.table(spark, sfDir)
     val fx = fixture(spark, shape, sfDir, t, prebuilt = true)(d =>
       Dedup.write(Dedup.corpusOf(t), d))
     val pass = fx.passes.incrementAndGet()
-    (fx, pass, fx.rows(t, Dedup.batch, Dedup).map { case (id, text) =>
-      (id + AppendIdBase * pass, text) })
+    (fx, fx.local(t, Dedup.batch, Dedup)
+      .withColumn("doc_id", col("doc_id") + AppendIdBase * pass)
+      .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1" + tag + pass)))
   }
 
   /** The maintenance alarm end to end: index trained on the stable md5
@@ -275,7 +271,8 @@ object IndexFixtures {
     val t = Ann.table(spark, sfDir)
     val fx = fixture(spark, "ann_serve_stream", sfDir, t, prebuilt = true)(d => Ann.write(t, d))
     import spark.implicits._
-    oneTrigger(spark, fx.rows(t, Ann.queries.get, Ann), Seq("vec_id", "embedding"))(
+    oneTrigger(spark, fx.local(t, Ann.queries.get, Ann).as[(Long, Seq[Float])].collect().toSeq,
+      Seq("vec_id", "embedding"))(
       (df, ckpt, emit) => graft.streaming.StreamingOps.annServeStream(df, fx.dir, ckpt, emit))
   }
 
@@ -292,14 +289,15 @@ object IndexFixtures {
   private final class Fixture(val listing: Seq[(String, Long, Long)], val dir: String) {
     var built = false
     val passes = new AtomicLong()
-    private var collected: Seq[_] = _
+    private var collected: DataFrame = _
 
-    /** The rows of `t` matching `pred`, collected once — bounded app
-      * input, not a scan inside every timed call. */
-    def rows[P](t: DataFrame, pred: Column, f: Family[P]): Seq[(Long, P)] = synchronized {
+    /** The (id, payload) rows of `t` matching `pred` as a local frame,
+      * collected once — bounded app input, not a scan inside every timed
+      * call. */
+    def local(t: DataFrame, pred: Column, f: Family): DataFrame = synchronized {
       if (collected == null)
-        collected = t.filter(pred).select(f.id, f.payload).as(f.rowEncoder).collect().toSeq
-      collected.asInstanceOf[Seq[(Long, P)]]
+        collected = graft.Caching.localFrame(t.filter(pred).select(f.id, f.payload))
+      collected
     }
   }
 
@@ -329,16 +327,12 @@ object IndexFixtures {
     }
   }
 
-  private def probe(f: Family[_], spark: SparkSession, t: DataFrame, fx: Fixture): DataFrame =
+  private def probe(f: Family, spark: SparkSession, t: DataFrame, fx: Fixture): DataFrame =
     f.probe.fold(queries(f, spark, t, fx))(p => t.filter(p))
 
-  private def queries[P](f: Family[P], spark: SparkSession, t: DataFrame,
+  private def queries(f: Family, spark: SparkSession, t: DataFrame,
       fx: Fixture): DataFrame =
-    f.queries.fold(spark.emptyDataFrame)(q => frame(f, spark, fx.rows(t, q, f)))
-
-  /** Driver rows as a local frame (a LocalRelation: no scan). */
-  private def frame[P](f: Family[P], spark: SparkSession, rows: Seq[(Long, P)]): DataFrame =
-    spark.createDataset(rows)(f.rowEncoder).toDF(f.id, f.payload)
+    f.queries.fold(spark.emptyDataFrame)(q => fx.local(t, q, f))
 
   /** Run one MemoryStream trigger through `start`, collecting every
     * emitted report into one local frame. A fresh checkpoint per call —
@@ -348,17 +342,12 @@ object IndexFixtures {
         org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
     implicit val sqlCtx = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val q = start(input.toDF().toDF(cols: _*), allocate("graft_stream_ck"), (rep, _) => {
-      val rows = rep.collect()
-      buf.synchronized { schema = rep.schema; buf ++= rows }
-    })
+    val reports = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val q = start(input.toDF().toDF(cols: _*), allocate("graft_stream_ck"),
+      (rep, _) => reports.add(graft.Caching.localFrame(rep)))
     try { input.addData(data); q.processAllAvailable() } finally q.stop()
-    require(schema != null, "the trigger must have emitted a report")
-    spark.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(
-        buf.toSeq).asJava), schema)
+    require(!reports.isEmpty, "the trigger must have emitted a report")
+    scala.jdk.CollectionConverters.IterableHasAsScala(reports).asScala.reduce(_ union _)
   }
 
   // ---- temp dirs --------------------------------------------------------

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caching
 import graft.sources.BulkOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -54,23 +55,19 @@ object AnnIndexOps {
     * a full rebuild. Nothing corpus-sized shuffles except the slim
     * (vec_id, dim, xq) stream into the two argmin aggregations. */
   def encodeAgainst(vectors: DataFrame, centroids: DataFrame, cb: DataFrame): DataFrame =
-    encodeWithError(vectors, centroids, cb)
+    encodeWithError(quantizedDims(vectors), centroids, cb)
       .select("center", "vec_id", "sub", "code")
 
-  /** [[encodeAgainst]] plus the per-subspace quantization error the
-    * argmin already computes (`err_q` = the winning code's residual
-    * distance) — the raw material of the drift monitor: summed per
-    * vector and censused per center it says how well the STORED
-    * quantizer still fits the data being coded. Same plan as
-    * [[encodeAgainst]] (Catalyst prunes `err_q` when unused). */
-  private[graft] def encodeWithError(
-      vectors: DataFrame, centroids: DataFrame, cb: DataFrame,
-      cacheDims: Boolean = true): DataFrame = {
-    // cached: read by the assignment and again by the residual projection
-    // (streaming monitors pass cacheDims=false — a per-micro-batch cache
-    // entry would accumulate forever, the servedTopK convention)
-    val q0 = quantizedDims(vectors)
-    val q = if (cacheDims) graft.Caching.maybeCache(q0) else q0
+  /** [[encodeAgainst]] over quantized dims `q` (vec_id, dim, xq), plus
+    * the per-subspace quantization error the argmin already computes
+    * (`err_q` = the winning code's residual distance) — the raw material
+    * of the drift monitor: summed per vector and censused per center it
+    * says how well the STORED quantizer still fits the data being coded.
+    * Same plan as [[encodeAgainst]] (Catalyst prunes `err_q` when
+    * unused). `q` is read twice, by the assignment and by the residual
+    * projection: the caller prepares it (cached for a corpus build, a
+    * local frame's dims for a bounded batch). */
+  private def encodeWithError(q: DataFrame, centroids: DataFrame, cb: DataFrame): DataFrame = {
     val assign = q.join(broadcast(centroids), Seq("dim"))
       .withColumn("d", col("xq") - col("centroid_q"))
       .groupBy("vec_id", "center")
@@ -142,7 +139,8 @@ object AnnIndexOps {
     val cb = PqOps.trainedResidualCodebook(embeddings, trainPct)
     // one encode feeds both the postings write and the train-time error
     // census (cached so the second write reads the materialization)
-    val coded = graft.Caching.maybeCache(encodeWithError(embeddings, cents, cb))
+    val coded = Caching.maybeCache(
+      encodeWithError(Caching.maybeCache(quantizedDims(embeddings)), cents, cb))
     BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids")
     BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook")
     BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
@@ -186,22 +184,26 @@ object AnnIndexOps {
     // of which invalidate), so the append can read them via the handles
     val cents = IndexLifecycle.servingHandle(spark, dir, "centroids")
     val cb = IndexLifecycle.servingHandle(spark, dir, "codebook")
-    val tables = Seq(
-      IndexLifecycle.GuardedTable("postings", col("sub") === 0, fresh =>
-        BulkOps.writePath(
-            appendBatch(
-              newVectors.join(broadcast(fresh), Seq("vec_id"), "left_semi"), cents, cb),
-            SaveMode.Append)
-          // direct partitioned append, NOT a delta segment: posting
-          // directories are the ~|centroids| coarse centers, so the
-          // per-directory write fan-out is bounded and small (measured
-          // flat at 100×) — a delta would buy nothing here
-          .partitionBy("center").save(s"$dir/postings"),
-        mutates = Seq("postings")))
-    knownIds match {
-      case Some(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "vec_id", ids, tables)
-      case None =>
-        IndexLifecycle.appendGuarded(spark, dir, "vec_id", newVectors.select("vec_id"), tables)
+    // the batch dims, cached for the encode's two reads; the entry ends
+    // with the guarded write
+    Caching.withCached(quantizedDims(newVectors)) { dims =>
+      val tables = Seq(
+        IndexLifecycle.GuardedTable("postings", col("sub") === 0, fresh =>
+          BulkOps.writePath(
+              encodeWithError(dims.join(broadcast(fresh), Seq("vec_id"), "left_semi"), cents, cb)
+                .select("center", "vec_id", "sub", "code"),
+              SaveMode.Append)
+            // direct partitioned append, NOT a delta segment: posting
+            // directories are the ~|centroids| coarse centers, so the
+            // per-directory write fan-out is bounded and small (measured
+            // flat at 100×) — a delta would buy nothing here
+            .partitionBy("center").save(s"$dir/postings"),
+          mutates = Seq("postings")))
+      knownIds match {
+        case Some(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "vec_id", ids, tables)
+        case None =>
+          IndexLifecycle.appendGuarded(spark, dir, "vec_id", newVectors.select("vec_id"), tables)
+      }
     }
   }
 
@@ -238,7 +240,8 @@ object AnnIndexOps {
     IndexLifecycle.rebuildTables(spark, dir, RebuildSet) {
       val cents = coarseCentroids(live)
       val cb = PqOps.trainedResidualCodebook(live, trainPct)
-      val coded = graft.Caching.maybeCache(encodeWithError(live, cents, cb))
+      val coded = Caching.maybeCache(
+        encodeWithError(Caching.maybeCache(quantizedDims(live)), cents, cb))
       BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids_new")
       BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook_new")
       BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
@@ -269,15 +272,22 @@ object AnnIndexOps {
     * rebuild. Read-only (no index mutation); the expensive side is one
     * encode of the BATCH, never a corpus re-scan. The write-then-serve
     * precedent this completes pairs derived-state writes with retention
-    * maintenance (reference: api/meta/TechnicalMeta.java:167-186). */
-  def quantizerDrift(spark: SparkSession, dir: String, batch: DataFrame,
-      cacheDims: Boolean = true): DataFrame = {
+    * maintenance (reference: api/meta/TechnicalMeta.java:167-186).
+    *
+    * BOUNDED-BATCH CONTRACT (the [[servedTopK]] posture): the batch's
+    * (vec_id, embedding) rows are collected once into a local frame
+    * ([[graft.Caching.localFrame]]) — driver memory ≈ rows × (dim × 4 +
+    * 8) B — and the encode reads their dims from it, so the call
+    * registers no cache entry and takes no checkpoint. The collect is
+    * the one eager action; the census is lazy. */
+  def quantizerDrift(spark: SparkSession, dir: String, batch: DataFrame): DataFrame = {
     val cents = IndexLifecycle.servingHandle(spark, dir, "centroids")
     val cb = IndexLifecycle.servingHandle(spark, dir, "codebook")
     val train = IndexLifecycle.servingHandle(spark, dir, "err_census")
       .select(col("center").cast("long").as("center"), col("n").as("n_train"),
         col("sum_err").cast("decimal(38,0)").as("sum_train"), col("max_err").as("max_train"))
-    val bc = errorCensus(encodeWithError(batch, cents, cb, cacheDims))
+    val bc = errorCensus(encodeWithError(
+        quantizedDims(Caching.localFrame(batch.select("vec_id", "embedding"))), cents, cb))
       .select(col("center"), col("n").as("n_batch"),
         col("sum_err").as("sum_batch"), col("max_err").as("max_batch"))
     // left from the stored census: every posting list reports, batchless
@@ -363,40 +373,38 @@ object AnnIndexOps {
     * per-probed-center residual LUT are built from the broadcast
     * centroid/codebook tables; the only big read is the probed posting
     * lists. Output = [[PqOps.ivfPqResidualTrainedTopK]]'s exactly:
-    * (qid, vec_id, adist_q, rnk). */
+    * (qid, vec_id, adist_q, rnk).
+    *
+    * BOUNDED-QUERY CONTRACT (the [[DedupIndexOps.servedDupes]] posture):
+    * the query side lives on the driver whoever calls, so the serve
+    * registers no cache entry and takes no checkpoint. Three eager
+    * collects ([[graft.Caching.localFrame]]) run per call: the
+    * (vec_id, embedding) queries (≈ |q| × (dim × 4 + 8) B), the probes
+    * (|q|·nprobe rows) and the LUT (|q|·nprobe·M·|codebook| rows of 5
+    * longs); the probed center set reads off the driver-held probes. The
+    * returned ranking is lazy. */
   def servedTopK(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int = 5, nprobe: Int = 2, cacheQueryDims: Boolean = true): DataFrame = {
+      k: Int = 5, nprobe: Int = 2): DataFrame = {
     val cents = IndexLifecycle.servingHandle(spark, dir, "centroids")
     val cb = IndexLifecycle.servingHandle(spark, dir, "codebook")
-    // cached: the query dims feed both the probe ranking and the LUT.
-    // Streaming serve passes cacheQueryDims=false — each micro-batch's
-    // plan is distinct and never reused, so a per-batch cache entry
-    // would accumulate forever; recomputing the bounded batch's dims
-    // twice is the cheaper trade there.
-    val qdRaw = quantizedDims(queries).withColumnRenamed("vec_id", "qid")
-    val qd = if (cacheQueryDims) graft.Caching.maybeCache(qdRaw) else qdRaw
-    // pin the two bounded probe-side frames (|q|·nprobe probes;
-    // |q|·nprobe·M·|codebook| LUT entries): each is re-referenced under
+    // the query dims feed both the probe ranking and the LUT
+    val qd = quantizedDims(Caching.localFrame(queries.select("vec_id", "embedding")))
+      .withColumnRenamed("vec_id", "qid")
+    // the two bounded probe-side frames (|q|·nprobe probes;
+    // |q|·nprobe·M·|codebook| LUT entries) are each re-referenced under
     // deep subplans (probes feeds the LUT and the posting fan-out), and
-    // the serve's cost at fixture scale is plan depth — ~17 tiny jobs
-    // plus ~0.6 s of AQE re-planning per serve, not data. Pinning
-    // truncates every downstream plan at a materialized bounded frame.
-    // Streaming serves (cacheQueryDims=false) get an eager
-    // localCheckpoint (GC-released, no per-trigger CacheManager entry —
-    // the servedDupes convention); bounded serves go through the cache
-    // lifecycle like the sibling qd frame.
-    val pin: DataFrame => DataFrame =
-      if (cacheQueryDims) graft.Caching.pinForConsistency
-      else df => df.localCheckpoint(true)
+    // the serve's cost at fixture scale is plan depth, not data: holding
+    // them on the driver truncates every downstream plan at a bounded
+    // local relation
     val dist = qd.join(broadcast(cents), Seq("dim"))
       .withColumn("d", col("xq") - col("centroid_q"))
       .groupBy("qid", "center")
       .agg(sum(col("d") * col("d")).as("dist2_q"))
     val wp = Window.partitionBy("qid").orderBy(col("dist2_q"), col("center"))
-    val probes = pin(dist.withColumn("rn", row_number().over(wp))
+    val probes = Caching.localFrame(dist.withColumn("rn", row_number().over(wp))
       .filter(col("rn") <= nprobe)
       .select(col("qid"), col("center")))
-    val lut = pin(qd
+    val lut = Caching.localFrame(qd
       .join(broadcast(probes), Seq("qid"))
       .join(broadcast(cents), Seq("center", "dim"))
       .withColumn("sub", expr(s"(dim - 1) div ${PqOps.SubDims}"))
@@ -406,15 +414,15 @@ object AnnIndexOps {
       .agg(sum(col("d") * col("d")).as("lut_q")))
     // STATIC partition pruning, guaranteed by construction (the
     // servedDupes convention): the probed center set is a bounded app
-    // materialization (≤ |q|·nprobe values, a local read off the pinned
-    // probes frame) — pushed as an In filter on the RAW partition
+    // materialization (≤ |q|·nprobe values, read off the driver-held
+    // probes with no job) — pushed as an In filter on the RAW partition
     // column, before the long cast, so it lands in the scan's
     // PartitionFilters and the read touches exactly the probed posting
     // directories. The optimizer's DPP heuristic used to do this; it
     // stopped firing once the probe side became a materialized bounded
     // relation, and by-construction pruning is the stronger claim anyway.
-    val probedCenters = probes.select("center").distinct()
-      .collect().map(_.getLong(0).toInt).toSeq
+    val probedCenters = probes.select("center")
+      .collect().map(_.getLong(0).toInt).distinct.toSeq
     val postings = IndexLifecycle.servingHandle(spark, dir, "postings")
       .filter(col("center").isin(probedCenters: _*))
       .withColumn("center", col("center").cast("long"))

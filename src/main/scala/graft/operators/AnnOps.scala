@@ -729,9 +729,9 @@ object PqOps {
       embeddings: DataFrame, cb: DataFrame, cbKeys: Seq[String],
       nQueries: Int, k: Int, nprobe: Int): DataFrame = {
     val corpus = AnnOps.ivfAssignmentsRanked(embeddings, 1).select("vec_id", "center")
-    // pinned bounded probe-side frames (the AnnIndexOps.servedTopK
-    // treatment): the probe set and the per-probed-center LUT are
-    // |q|-bounded, re-referenced under deep subplans, and the chain's
+    // pinned bounded probe-side frames: the probe set and the
+    // per-probed-center LUT are |q|-bounded, re-referenced under deep
+    // subplans, and the chain's
     // cost at fixture scale is plan depth — pinning truncates every
     // downstream plan at a materialized bounded frame
     val probes = graft.Caching.pinForConsistency(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caching
 import graft.sources.BulkOps
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -105,7 +106,7 @@ object DedupIndexOps {
     // single-writer from the FIRST table write of the build, not just
     // from the sidecar onward (writeIds renews the same lease)
     IndexLifecycle.acquireLease(spark, dir)
-    val wide = graft.Caching.maybeCache(
+    val wide = Caching.maybeCache(
       DedupOps.minhashWide(DedupOps.shinglePostings(docs), numPerms))
     // the doc count sizes both partition dials (one aggregate over the
     // cached build frame — build-time cost, paid once per index life).
@@ -198,13 +199,14 @@ object DedupIndexOps {
       knownIds: Option[Seq[Long]] = None): Unit = {
     val meta = readMetaFresh(spark, dir)
     // one batch signature pass feeds both table writes (each filtered
-    // to the protocol's fresh-id frame)
-    val wide = graft.Caching.maybeCache(DedupOps.batchMinhashWide(newDocs, meta.numPerms))
-    appendWide(spark, dir, knownIds.toLeft(newDocs.select("doc_id")), meta, fresh =>
-      wide.join(broadcast(fresh), Seq("doc_id"), "left_semi")
-        // one file per segment (a bounded batch's rows — the shuffle
-        // partitioning would write 32 shards of a few KB)
-        .repartition(1))
+    // to the protocol's fresh-id frame); its cache entry ends with them
+    Caching.withCached(DedupOps.batchMinhashWide(newDocs, meta.numPerms)) { wide =>
+      appendWide(spark, dir, knownIds.toLeft(newDocs.select("doc_id")), meta, fresh =>
+        wide.join(broadcast(fresh), Seq("doc_id"), "left_semi")
+          // one file per segment (a bounded batch's rows — the shuffle
+          // partitioning would write 32 shards of a few KB)
+          .repartition(1))
+    }
   }
 
   /** The table-write half of [[appendToIndex]] and [[gateAndIngest]]:
@@ -236,15 +238,6 @@ object DedupIndexOps {
     }
   }
 
-  /** `rows`, collected from `df`, as a LOCAL frame: a driver-resident
-    * relation that later plans read without recomputing `df`, holding no
-    * CacheManager entry and no executor blocks (so an executor loss can
-    * never fail a read of it). For bounded frames only. */
-  private def localFrame(df: DataFrame, rows: Array[Row]): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-
-  private def collectLocal(df: DataFrame): DataFrame = localFrame(df, df.collect())
-
   /** Dedup an arriving batch against the STORED index: returns
     * (doc_id, dup_of, est_e4) — batch docs whose estimated Jaccard
     * against some indexed doc reaches `thresholdE4`, with the stored
@@ -252,16 +245,19 @@ object DedupIndexOps {
     * (the [[DedupOps.incrNearDup]] contract: the index is the dedup
     * authority, the batch dedups against it).
     *
-    * BOUNDED-BATCH CONTRACT: `batch` is app input of ingest size. Its
-    * pb set and its candidate list are materialized once per serve; the
-    * candidate list is bounded by bucketCap × batch bands pairs, each
-    * carrying the batch doc's K minima. `cacheBatch = true` caches the
-    * batch signatures (read by the probe and the agreement join) and
-    * pins the candidate list with [[graft.Caching.pinForConsistency]].
-    * `cacheBatch = false` (the streaming posture) registers no cache
-    * entry: the candidate list is collected into a local frame on the
-    * driver (≈ pairs × (K+2) × 8 B), a local snapshot that an executor
-    * loss cannot take away — tasks over it re-run instead of failing.
+    * BOUNDED-BATCH CONTRACT: `batch` is app input of ingest size, and
+    * the serve keeps its batch side on the driver whoever calls it (the
+    * [[gateAndIngest]] posture, [[graft.Caching.localFrame]]). The batch
+    * signature frame (doc_id, mh0..mh{K-1}) is derived and collected once
+    * (driver memory ≈ rows × (K+1) × 8 B), and the candidate list —
+    * bounded by bucketCap × batch bands pairs, each carrying the batch
+    * doc's K minima — is collected too (≈ pairs × (K+2) × 8 B). So the
+    * serve registers no cache entry and takes no checkpoint; an executor
+    * loss re-runs tasks from the driver-held rows instead of failing a
+    * read. Three eager actions run
+    * per call: the batch signature collect, the batch's `pb` set and the
+    * candidate collect (whose `mb` set then reads off the driver rows);
+    * the returned agreement plan is lazy.
     *
     * Read shape at 100 TB — BOTH index reads are partition-pruned by
     * bounded app materializations (plan-gated):
@@ -283,26 +279,21 @@ object DedupIndexOps {
     * (deleted docs neither produce candidates nor inflate a bucket
     * toward the cap — not a stale-stats approximation). */
   def servedDupes(spark: SparkSession, dir: String, batch: DataFrame,
-      thresholdE4: Long = 5000L, bucketCap: Long = DedupOps.MaxBandBucket,
-      cacheBatch: Boolean = true): DataFrame = {
+      thresholdE4: Long = 5000L, bucketCap: Long = DedupOps.MaxBandBucket): DataFrame = {
     val meta = readMeta(spark, dir)
-    val wide0 = DedupOps.batchMinhashWide(batch, meta.numPerms)
-    if (cacheBatch)
-      serveCore(spark, dir, meta, graft.Caching.maybeCache(wide0), thresholdE4, bucketCap,
-        graft.Caching.pinForConsistency)
-    else serveCore(spark, dir, meta, wide0, thresholdE4, bucketCap, collectLocal)
+    serveCore(spark, dir, meta,
+      Caching.localFrame(DedupOps.batchMinhashWide(batch, meta.numPerms)), thresholdE4, bucketCap)
   }
 
   /** The serve shared by [[servedDupes]] and [[gateAndIngest]]: `wideB`
     * is the batch's signature frame (doc_id, mh0..mh{K-1}) at `meta`'s
-    * dials; `pin` materializes the bounded candidate pair list exactly
+    * dials, a local frame. The bounded candidate pair list is collected
     * once, because the agreement stage reads it twice (the mb partition
     * probe and the broadcast join) and each recompute would re-run the
-    * pruned sigs scan underneath it. Returns
-    * the lazy agreement plan (doc_id, dup_of, est_e4). */
+    * pruned sigs scan underneath it. Returns the lazy agreement plan
+    * (doc_id, dup_of, est_e4). */
   private def serveCore(spark: SparkSession, dir: String, meta: IndexMeta,
-      wideB: DataFrame, thresholdE4: Long, bucketCap: Long,
-      pin: DataFrame => DataFrame): DataFrame = {
+      wideB: DataFrame, thresholdE4: Long, bucketCap: Long): DataFrame = {
     // each banded batch row carries its doc's minima, so the candidate
     // pairs bring them to the agreement stage
     val bBanded = bandedWithPb(
@@ -337,7 +328,7 @@ object DedupIndexOps {
     // function of sig, so every (band, sig) group present is WHOLE and
     // its count equals the full-index count — the cap is exact
     val capped = DedupOps.capBuckets(pruned, Seq("band", "sig"), bucketCap)
-    val cand = pin(capped
+    val cand = Caching.localFrame(capped
       .join(broadcast(bBanded.select("band", "sig", "doc_id", "mh_new")), Seq("band", "sig"))
       // never match a doc to itself: in the incremental contract batch
       // and index are id-disjoint, but a crash-rerun batch (whose
@@ -350,7 +341,8 @@ object DedupIndexOps {
     // agreement estimate from the stored slim signatures: K rows per
     // candidate doc. The candidate docs' mb set (bounded by the capped
     // candidate count) prunes the mins read to their directories; the
-    // broadcast candidate list prunes rows within them.
+    // broadcast candidate list prunes rows within them. The mb set reads
+    // off the driver-held candidate rows (no job).
     val mbs = cand.select(pmod(col("dup_of"), lit(meta.minsParts.toLong)))
       .collect().map(_.getLong(0).toInt).distinct.toSeq
     IndexLifecycle.tableWithDelta(spark, dir, "mins")(df =>
@@ -418,7 +410,7 @@ object DedupIndexOps {
     * dups, the signable mask and the survivor append's two table
     * writes. The candidate pairs, the index dups and the report are
     * collected too, so the gate registers NO cache entry and takes no
-    * `localCheckpoint`: its intermediate frames are local snapshots on
+    * checkpoint: its intermediate frames are local snapshots on
     * the driver, and an executor loss re-runs the affected tasks from
     * them instead of failing the read.
     *
@@ -434,9 +426,9 @@ object DedupIndexOps {
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
     val wide0 = DedupOps.batchMinhashWide(docs, meta.numPerms)
     val wideRows = wide0.collect()
-    val wide = localFrame(wide0, wideRows)
+    val wide = Caching.localFrame(spark, wideRows.toSeq, wide0.schema)
     val idx = bestMatch(
-      serveCore(spark, dir, meta, wide, thresholdE4, bucketCap, collectLocal)
+      serveCore(spark, dir, meta, wide, thresholdE4, bucketCap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     val intra = bestMatch(batchDupes(
       wideRows.map(r => r.getLong(0) -> Array.tabulate(meta.numPerms)(k => r.getLong(k + 1))).toSeq,
@@ -450,11 +442,11 @@ object DedupIndexOps {
         .orElse(intra.get(id).map(m => ("dup_batch", Some(m))))
         .getOrElse((if (signable(id)) "ingested" else "unsignable", None))
     }
-    val report = spark.createDataFrame(java.util.Arrays.asList(ids.zip(verdicts).map {
+    val report = Caching.localFrame(spark, ids.toSeq.zip(verdicts).map {
       case (id, (verdict, m)) => Row(id, verdict,
         m.map(x => java.lang.Long.valueOf(x._1)).orNull,
         m.map(x => java.lang.Long.valueOf(x._2)).orNull)
-    }: _*), ReportSchema)
+    }, ReportSchema)
     // survivor append from the gate's OWN signature rows, filtered on the
     // driver to the protocol's fresh ids (a local frame — no re-shingling,
     // no broadcast join)

@@ -259,29 +259,30 @@ object RetrievalOps {
       knownIds: Option[Seq[Long]] = None): Unit = {
     import graft.sources.BulkOps
     // one delta index feeds both appends (cached; each write filters to
-    // the protocol's fresh-id frame)
-    val idx = graft.Caching.maybeCache(bm25Index(newDocs))
-    // direct single-directory appends, NOT delta segments: both tables
-    // are unpartitioned, so there is no per-directory write fan-out for
-    // a delta to avoid
-    val tables = Seq(
-      IndexLifecycle.GuardedTable("lens", lit(true), fresh =>
-        BulkOps.writePath(
-            idx.join(broadcast(fresh), Seq("doc_id"), "left_semi")
-              .groupBy("doc_id").agg(sum(col("tf")).as("len")),
-            org.apache.spark.sql.SaveMode.Append)
-          .save(s"$dir/lens"),
-        mutates = Seq("lens")),
-      IndexLifecycle.GuardedTable("postings", lit(true), fresh =>
-        BulkOps.writePath(
-            idx.join(broadcast(fresh), Seq("doc_id"), "left_semi"),
-            org.apache.spark.sql.SaveMode.Append)
-          .save(s"$dir/postings"),
-        mutates = Seq("postings")))
-    knownIds match {
-      case Some(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "doc_id", ids, tables)
-      case None =>
-        IndexLifecycle.appendGuarded(spark, dir, "doc_id", newDocs.select("doc_id"), tables)
+    // the protocol's fresh-id frame); its cache entry ends with them
+    graft.Caching.withCached(bm25Index(newDocs)) { idx =>
+      // direct single-directory appends, NOT delta segments: both tables
+      // are unpartitioned, so there is no per-directory write fan-out
+      // for a delta to avoid
+      val tables = Seq(
+        IndexLifecycle.GuardedTable("lens", lit(true), fresh =>
+          BulkOps.writePath(
+              idx.join(broadcast(fresh), Seq("doc_id"), "left_semi")
+                .groupBy("doc_id").agg(sum(col("tf")).as("len")),
+              org.apache.spark.sql.SaveMode.Append)
+            .save(s"$dir/lens"),
+          mutates = Seq("lens")),
+        IndexLifecycle.GuardedTable("postings", lit(true), fresh =>
+          BulkOps.writePath(
+              idx.join(broadcast(fresh), Seq("doc_id"), "left_semi"),
+              org.apache.spark.sql.SaveMode.Append)
+            .save(s"$dir/postings"),
+          mutates = Seq("postings")))
+      knownIds match {
+        case Some(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "doc_id", ids, tables)
+        case None =>
+          IndexLifecycle.appendGuarded(spark, dir, "doc_id", newDocs.select("doc_id"), tables)
+      }
     }
   }
 

@@ -658,11 +658,8 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // cacheQueryDims=false: each batch's serve plan is unique, so a
-        // cache entry per trigger would grow executor storage unboundedly
         emit(graft.operators.AnnIndexOps.servedTopK(
-          batch.sparkSession, indexDir, batch.toDF(), k, nprobe,
-          cacheQueryDims = false), batchId)
+          batch.sparkSession, indexDir, batch.toDF(), k, nprobe), batchId)
       }
       .start()
 
@@ -674,8 +671,7 @@ object StreamingOps {
     * continuous ingest gate that drops corpus-duplicates before they
     * land. Batching-invariant by construction (a doc's verdict depends
     * only on the index and its own text, never on its batch-mates — the
-    * StreamingSpec differential); cacheBatch=false so no per-trigger
-    * cache entries accumulate (the [[annServeStream]] convention). */
+    * StreamingSpec differential). */
   def dedupServeStream(
       docs: DataFrame, indexDir: String, checkpoint: String,
       emit: (DataFrame, Long) => Unit,
@@ -685,8 +681,7 @@ object StreamingOps {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         emit(graft.operators.DedupIndexOps.servedDupes(
-          batch.sparkSession, indexDir, batch.toDF(), thresholdE4,
-          cacheBatch = false), batchId)
+          batch.sparkSession, indexDir, batch.toDF(), thresholdE4), batchId)
       }
       .start()
 
@@ -707,8 +702,8 @@ object StreamingOps {
     * driver (the gateAndIngest contract): its signature frame is
     * collected once — driver memory ≈ rows × (K+1) × 8 B for K
     * permutations — and its intermediate frames are local snapshots, so
-    * a trigger registers no cache entry and takes no `localCheckpoint`;
-    * an executor loss re-runs tasks from the driver-held rows instead of
+    * a trigger registers no cache entry and takes no checkpoint; an
+    * executor loss re-runs tasks from the driver-held rows instead of
     * failing the trigger. */
   def dedupIngestGateStream(
       docs: DataFrame, indexDir: String, checkpoint: String,
@@ -740,7 +735,7 @@ object StreamingOps {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         emit(graft.operators.AnnIndexOps.quantizerDrift(
-          batch.sparkSession, indexDir, batch.toDF(), cacheDims = false), batchId)
+          batch.sparkSession, indexDir, batch.toDF()), batchId)
         graft.operators.AnnIndexOps.appendToIndex(
           batch.sparkSession, indexDir, batch.toDF())
       }
@@ -755,8 +750,7 @@ object StreamingOps {
     * a batch that drifts off the training manifold reports high
     * `drift_e4` in ITS OWN trigger, not at the next offline audit. Each
     * report depends only on the index and that batch's rows (per-batch
-    * census by design — drift is a property of the arriving data);
-    * cacheDims=false so no per-trigger cache entries accumulate. */
+    * census by design — drift is a property of the arriving data). */
   def annDriftStream(
       batches: DataFrame, indexDir: String, checkpoint: String,
       emit: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
@@ -765,7 +759,7 @@ object StreamingOps {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         emit(graft.operators.AnnIndexOps.quantizerDrift(
-          batch.sparkSession, indexDir, batch.toDF(), cacheDims = false), batchId)
+          batch.sparkSession, indexDir, batch.toDF()), batchId)
       }
       .start()
 

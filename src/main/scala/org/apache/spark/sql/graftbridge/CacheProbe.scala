@@ -3,8 +3,11 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.classic.ClassicConversions._
 
-/** Dev-tool seam: CacheManager is private[sql], but "is this plan still
-  * cached?" is the one question a bench-cache regression hunt needs. */
+/** Seam into the session's CacheManager, which is private[sql]: "does
+  * this plan have an entry?" lets [[graft.Caching]] register a plan only
+  * once (a repeated `cache()` logs a WARN per call) and lets an append
+  * release only the entry it registered; bench tools and specs read it
+  * and the entry count too. */
 object CacheProbe {
   def isCached(ds: Dataset[_]): Boolean = {
     val classic = castToImpl(ds)

@@ -233,6 +233,35 @@ class PlanQualitySpec extends SparkSpec {
     assert(!CacheProbe.isCached(postings), "release() left cached entries behind")
   }
 
+  test("a repeated cluster view registers once: no already-cached WARN, same entry count") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.graftbridge.CacheProbe
+    val warned = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("graft-cache-warn", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("already cached")) warned.incrementAndGet()
+    }
+    appender.start()
+    // on the root logger, where CacheManager's events arrive additively
+    val logger = LogManager.getRootLogger.asInstanceOf[Logger]
+    logger.addAppender(appender)
+    graft.Caching.release(spark)
+    try {
+      ClusterViews.regionMetrics(spark, sf)
+      val entries = CacheProbe.entries(spark)
+      ClusterViews.regionMetrics(spark, sf)
+      assert(warned.get == 0, "a second view call asked to cache an already cached plan")
+      assert(CacheProbe.entries(spark) == entries, "a second view call added a cache entry")
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+      graft.Caching.release(spark)
+    }
+  }
+
   test("bm25 filters the token stream to query terms BELOW the tf shuffle") {
     val plan = physical(SparkEntry.queries("bm25_topk")(spark, sf))
     // the IN-filter must sit under the (doc_id, token) aggregate exchange:

@@ -19,6 +19,28 @@ trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
+  /** `body`'s result and the executed plans (as text) of every action it
+    * ran — for operators whose eager, driver-local steps read tables the
+    * returned lazy plan no longer shows. */
+  def withActionPlans[A](body: => A): (A, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      // listener delivery is asynchronous: read the plans once they settle
+      var last = -1
+      while (plans.size != last) { last = plans.size; Thread.sleep(500) }
+      (out, scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Run `body` with the given SQL confs set, restoring priors after —
     * the shared-session analogue of Spark's own test helper. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {

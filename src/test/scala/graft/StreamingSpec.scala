@@ -240,26 +240,19 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("gate stream: ≤ 20 jobs a trigger, no cache entry or persisted RDD left over " +
-      "five triggers, verdicts equal the batch gate") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import graft.operators.DedupIndexOps
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val corpus = docs.filter(col("doc_id") >= 100)
-    val arriving = docs.filter(col("doc_id") < 100).select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
-    val batches = arriving.grouped((arriving.size + 4) / 5).toSeq
-    assert(batches.size == 5)
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_gate_guard_s").toString
-    val batchDir = java.nio.file.Files.createTempDirectory("graft_gate_guard_b").toString
-    DedupIndexOps.writeIndex(corpus, streamDir)
-    DedupIndexOps.writeIndex(corpus, batchDir)
-    def report(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3)))).toSet
-    val expected = batches.map(b => report(DedupIndexOps.gateAndIngest(spark, batchDir, b.toDF("doc_id", "text"))))
-
+  /** Feed `batches` to a MemoryStream-backed query, one trigger each, and
+    * return the Spark jobs each trigger ran (its emit included). Asserts
+    * the triggers left no CacheManager entry and no persisted RDD behind:
+    * a stored-index stream runs unbounded, so a per-trigger leftover
+    * grows without end. */
+  private def guardedTriggerJobs[T: org.apache.spark.sql.Encoder](
+      name: String, batches: Seq[Seq[T]], cols: Seq[String])(
+      start: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): Seq[Int] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[T]
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${name}_ck").toString
+    val q = start(input.toDF().toDF(cols: _*), ckpt)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -272,33 +265,156 @@ class StreamingSpec extends SparkSpec {
       while (now != last) { Thread.sleep(500); last = now; now = jobs.get() }
       now
     }
-    val input = MemoryStream[(Long, String)]
-    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, String, Option[Any], Option[Any])]]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_gate_guard_ck").toString
-    val q = StreamingOps.dedupIngestGateStream(input.toDF().toDF("doc_id", "text"), streamDir, ckpt,
-      (rep, bid) => got.synchronized { got(bid) = report(rep) })
     spark.sparkContext.addSparkListener(listener)
     try {
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
       val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
       val perTrigger = batches.map { b =>
         val j0 = settledJobs()
-        input.addData(b: _*)
+        input.addData(b)
         q.processAllAvailable()
         settledJobs() - j0
       }
-      info(s"jobs per trigger: $perTrigger")
-      assert(perTrigger.forall(_ <= 20), s"jobs per trigger: $perTrigger")
+      info(s"$name jobs per trigger: $perTrigger")
       assert(org.apache.spark.sql.graftbridge.CacheProbe.entries(spark) == entriesBefore,
-        "a gate trigger must register no CacheManager entry")
+        s"a $name trigger must register no CacheManager entry")
       assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rddsBefore),
-        "a gate trigger must leave no persisted RDD behind")
-      assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == expected,
-        "streamed verdicts must equal the batch gate over the same batches")
+        s"a $name trigger must leave no persisted RDD behind")
+      perTrigger
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       q.stop()
     }
+  }
+
+  /** `rows` cut into five consecutive trigger batches. */
+  private def fiveBatches[T](rows: Seq[T]): Seq[Seq[T]] = {
+    val batches = rows.grouped((rows.size + 4) / 5).toSeq
+    assert(batches.size == 5)
+    batches
+  }
+
+  test("gate stream: ≤ 20 jobs a trigger, no cache entry or persisted RDD left over " +
+      "five triggers, verdicts equal the batch gate") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.DedupIndexOps
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val corpus = docs.filter(col("doc_id") >= 100)
+    val batches = fiveBatches(docs.filter(col("doc_id") < 100).select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1))
+    val streamDir = java.nio.file.Files.createTempDirectory("graft_gate_guard_s").toString
+    val batchDir = java.nio.file.Files.createTempDirectory("graft_gate_guard_b").toString
+    DedupIndexOps.writeIndex(corpus, streamDir)
+    DedupIndexOps.writeIndex(corpus, batchDir)
+    def report(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3)))).toSet
+    val expected = batches.map(b => report(DedupIndexOps.gateAndIngest(spark, batchDir, b.toDF("doc_id", "text"))))
+
+    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, String, Option[Any], Option[Any])]]
+    val perTrigger = guardedTriggerJobs("gate", batches, Seq("doc_id", "text"))((df, ckpt) =>
+      StreamingOps.dedupIngestGateStream(df, streamDir, ckpt,
+        (rep, bid) => got.synchronized { got(bid) = report(rep) }))
+    assert(perTrigger.forall(_ <= 20), s"jobs per trigger: $perTrigger")
+    assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == expected,
+      "streamed verdicts must equal the batch gate over the same batches")
+  }
+
+  test("dedup serve stream: no cache entry or persisted RDD left over five triggers, " +
+      "reports equal the batch serve") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.DedupIndexOps
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_serve_guard").toString
+    DedupIndexOps.writeIndex(docs.filter(col("doc_id") >= 100), dir)
+    val arriving = docs.filter(col("doc_id") < 100).select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    def report(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    guardedTriggerJobs("dedup serve", fiveBatches(arriving), Seq("doc_id", "text"))((df, ckpt) =>
+      StreamingOps.dedupServeStream(df, dir, ckpt,
+        (rep, _) => got.synchronized { got ++= report(rep) }))
+    val batch = report(DedupIndexOps.servedDupes(spark, dir, arriving.toDF("doc_id", "text")))
+    assert(batch.nonEmpty, "fixture batch must collide with the corpus somewhere")
+    assert(got.synchronized(got.toSet) == batch,
+      "streamed dedup reports must equal the batch serve over the union")
+  }
+
+  test("ANN serve stream: no cache entry or persisted RDD left over five triggers, " +
+      "rankings equal the batch serve") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.AnnIndexOps
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_serve_guard").toString
+    AnnIndexOps.writeIndex(emb, dir)
+    val qvecs = emb.filter(col("vec_id") < 10).select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1)
+    def ranking(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Int)]
+    guardedTriggerJobs("ANN serve", fiveBatches(qvecs), Seq("vec_id", "embedding"))((df, ckpt) =>
+      StreamingOps.annServeStream(df, dir, ckpt,
+        (rep, _) => got.synchronized { got ++= ranking(rep) }))
+    assert(got.synchronized(got.toSet) ==
+      ranking(AnnIndexOps.servedTopK(spark, dir, qvecs.toDF("vec_id", "embedding"))),
+      "streamed rankings must equal the batch serve over the union")
+  }
+
+  /** (center, n_batch, drift_e4) of a drift report's batch-touched centers. */
+  private def driftReport(d: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+    d.filter(col("n_batch") > 0).collect()
+      .map(r => (r.getLong(0), r.getAs[Long]("n_batch"), r.getAs[Long]("drift_e4"))).toSet
+
+  test("ANN drift stream: no cache entry or persisted RDD left over five triggers, " +
+      "each report equals the batch census of its rows") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.AnnIndexOps
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft_drift_guard").toString
+    AnnIndexOps.writeIndex(emb.filter(col("vec_id") < 400), dir)
+    val batches = fiveBatches(emb.filter(col("vec_id") >= 400).select("vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1))
+    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Long)]]
+    guardedTriggerJobs("ANN drift", batches, Seq("vec_id", "embedding"))((df, ckpt) =>
+      StreamingOps.annDriftStream(df, dir, ckpt,
+        (rep, bid) => got.synchronized { got(bid) = driftReport(rep) }))
+    assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == batches.map(b =>
+      driftReport(AnnIndexOps.quantizerDrift(spark, dir, b.toDF("vec_id", "embedding")))),
+      "each streamed drift report must equal the batch census of the same rows")
+  }
+
+  test("ANN ingest stream: no cache entry or persisted RDD left over five triggers, " +
+      "drift reports and the grown postings equal the batch path") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.AnnIndexOps
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val streamDir = java.nio.file.Files.createTempDirectory("graft_ann_ingest_guard_s").toString
+    val batchDir = java.nio.file.Files.createTempDirectory("graft_ann_ingest_guard_b").toString
+    AnnIndexOps.writeIndex(emb.filter(col("vec_id") < 400), streamDir)
+    AnnIndexOps.writeIndex(emb.filter(col("vec_id") < 400), batchDir)
+    val batches = fiveBatches(emb.filter(col("vec_id") >= 400).select("vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.sortBy(_._1))
+    val expected = batches.map { b =>
+      val report = driftReport(AnnIndexOps.quantizerDrift(spark, batchDir, b.toDF("vec_id", "embedding")))
+      AnnIndexOps.appendToIndex(spark, batchDir, b.toDF("vec_id", "embedding"))
+      report
+    }
+    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Long)]]
+    guardedTriggerJobs("ANN ingest", batches, Seq("vec_id", "embedding"))((df, ckpt) =>
+      StreamingOps.annIngestStream(df, streamDir, ckpt,
+        (rep, bid) => got.synchronized { got(bid) = driftReport(rep) }))
+    assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == expected,
+      "each streamed drift report must equal the batch census of the same rows")
+    def postings(dir: String) = graft.sources.BulkOps.readPath(spark, s"$dir/postings")
+      .select(col("center").cast("long"), col("vec_id"), col("sub"), col("code"))
+      .collect().map(_.toSeq).toSet
+    assert(postings(streamDir) == postings(batchDir),
+      "the streamed appends must grow the postings exactly as the batch appends")
   }
 
   test("gate stream trigger replay: a mid-append crash replays to an exactly-once effect") {

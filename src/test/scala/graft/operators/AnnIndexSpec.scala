@@ -368,8 +368,10 @@ class AnnIndexSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       .toDF("vec_id", "embedding")
-    val served = AnnIndexOps.servedTopK(spark, dir, queries)
-    val plan = served.queryExecution.executedPlan.toString
+    // the serve's own reads: its eager steps (the queries, the probes,
+    // the LUT) and the returned ranking plan
+    val (served, eager) = withActionPlans(AnnIndexOps.servedTopK(spark, dir, queries))
+    val plan = (eager :+ served.queryExecution.executedPlan.toString).mkString("\n")
     assert(!plan.contains("embeddings.parquet"),
       s"served search must not scan the corpus vectors:\n$plan")
     assert(plan.contains("postings") && plan.contains("centroids") &&

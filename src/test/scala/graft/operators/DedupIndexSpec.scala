@@ -184,9 +184,11 @@ class DedupIndexSpec extends SparkSpec {
     // the batch arrives as app input (a local frame) — with the corpus
     // indexed, NOTHING in the serve plan may touch documents.parquet
     val twin = docs.filter(col("doc_id") === 100).select("text").head().getString(0)
-    val served = DedupIndexOps.servedDupes(spark, dir,
-      batchOf(Seq((900001L, twin), (900002L, "too short"))))
-    val plan = served.queryExecution.executedPlan.toString
+    // the serve's own reads: its eager steps (the batch signatures, the
+    // bucket set, the candidate list) and the returned agreement plan
+    val (served, eager) = withActionPlans(DedupIndexOps.servedDupes(spark, dir,
+      batchOf(Seq((900001L, twin), (900002L, "too short")))))
+    val plan = (eager :+ served.queryExecution.executedPlan.toString).mkString("\n")
     assert(!plan.contains("documents.parquet"),
       s"a served dedup must never re-shingle the corpus:\n$plan")
     assert(plan.contains("sigs") && plan.contains("mins"),
