@@ -63,12 +63,19 @@ object IndexFixtures {
     * and gate-only shapes. */
   private[graft] val ServeOnlyIdCap = 2000L
 
+  /** Most input rows one serve or drift call takes. Those entry points
+    * hold their batch side on the driver, so a corpus-proportional input
+    * is served in slices ([[inSlices]]): per dedup call ≈ SliceRows ×
+    * (K+1) × 8 B of signatures (≈ 2 MB at K = 12) plus its candidate
+    * pairs, per drift call ≈ SliceRows × (dim × 4 + 8) B of vectors. */
+  private[graft] val SliceRows = 20000
+
   /** One stored-index family.
     *
     * @param table     the fixture input table
     * @param corpus    the rows every build indexes; None: the whole table
-    * @param probe     the lazily read, corpus-proportional probe of the
-    *                  build-serve shapes; None: they serve `queries`
+    * @param probe     the corpus-proportional probe of the build-serve
+    *                  shapes, served in slices; None: they serve `queries`
     * @param queries   the bounded probe rows, collected once per fixture;
     *                  None: the serve answers its default query
     * @param batch     the bounded append batch, collected once per fixture
@@ -144,7 +151,7 @@ object IndexFixtures {
   def served(f: Family, spark: SparkSession, sfDir: String): DataFrame = {
     val t = f.table(spark, sfDir)
     val fx = fixture(spark, s"${f.name}_served", sfDir, t)(d => f.write(f.corpusOf(t), d))
-    f.serve(spark, fx.dir, probe(f, spark, t, fx))
+    serveProbe(f, spark, t, fx)
   }
 
   /** [[served]] against an index prebuilt once, probed with the bounded
@@ -169,7 +176,7 @@ object IndexFixtures {
       // returns the serve to fully pruned partitioned reads
       f.fold.foreach(_(spark, d))
     }
-    f.serve(spark, fx.dir, probe(f, spark, t, fx))
+    serveProbe(f, spark, t, fx)
   }
 
   /** The delete path end to end: build, tombstone the family's deleted
@@ -181,7 +188,7 @@ object IndexFixtures {
       f.write(corpus, d)
       f.delete(spark, d, corpus.filter(f.deleted).select(f.id))
     }
-    f.serve(spark, fx.dir, probe(f, spark, t, fx))
+    serveProbe(f, spark, t, fx)
   }
 
   /** Append the bounded batch under fresh pass-offset ids to an index
@@ -256,12 +263,24 @@ object IndexFixtures {
   }
 
   /** The maintenance alarm end to end: index trained on the stable md5
-    * half, the held-out half plays the appended batch,
-    * [[AnnIndexOps.quantizerDrift]] reports its error census. */
+    * half, the held-out half plays the appended batch, and
+    * [[AnnIndexOps.quantizerDrift]]'s two halves report its error census:
+    * the held-out half is censused in slices, and the slice censuses sum
+    * to the batch census the report reads. */
   def annDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val t = Ann.table(spark, sfDir)
     val fx = fixture(spark, "ann_drift", sfDir, t)(d => Ann.write(t.filter(half(Ann)), d))
-    AnnIndexOps.quantizerDrift(spark, fx.dir, t.filter(!half(Ann)))
+    driftInSlices(spark, fx.dir, t.filter(!half(Ann)).select(Ann.id, Ann.payload))
+  }
+
+  /** [[AnnIndexOps.quantizerDrift]] over `batch` censused in slices of at
+    * most `sliceRows` vectors, the slice censuses summed. */
+  private[graft] def driftInSlices(spark: SparkSession, dir: String, batch: DataFrame,
+      sliceRows: Int = SliceRows): DataFrame = {
+    val censuses = inSlices(spark, batch, sliceRows)(AnnIndexOps.batchCensus(spark, dir, _))
+    AnnIndexOps.driftReport(spark, dir, censuses.groupBy("center").agg(
+      sum("n_batch").as("n_batch"), sum("sum_batch").as("sum_batch"),
+      max("max_batch").as("max_batch")))
   }
 
   /** The streaming twin of [[serveOnly]] for ANN: one trigger of
@@ -327,8 +346,28 @@ object IndexFixtures {
     }
   }
 
-  private def probe(f: Family, spark: SparkSession, t: DataFrame, fx: Fixture): DataFrame =
-    f.probe.fold(queries(f, spark, t, fx))(p => t.filter(p))
+  /** The build-serve shapes' serve: the bounded queries in one call, or
+    * the corpus-proportional probe in slices. */
+  private def serveProbe(f: Family, spark: SparkSession, t: DataFrame, fx: Fixture): DataFrame =
+    f.probe.fold(f.serve(spark, fx.dir, queries(f, spark, t, fx)))(p =>
+      inSlices(spark, t.filter(p).select(f.id, f.payload))(f.serve(spark, fx.dir, _)))
+
+  /** `call` over `input` in slices of at most `sliceRows` rows, its
+    * answers collected into one local frame. Rows reach the driver one
+    * partition at a time (`toLocalIterator`), so it holds one slice and
+    * the answers, never the whole input. Equals one call over all of
+    * `input` when each answer row depends on one input row (the dedup
+    * serve; the drift census, once the slice censuses are summed). */
+  private[graft] def inSlices(spark: SparkSession, input: DataFrame,
+      sliceRows: Int = SliceRows)(call: DataFrame => DataFrame): DataFrame = {
+    val it = scala.jdk.CollectionConverters.IteratorHasAsScala(input.toLocalIterator()).asScala
+      .grouped(sliceRows)
+    val answers = (if (it.hasNext) it else Iterator(Seq.empty)).map { rows =>
+      val out = call(graft.Caching.localFrame(spark, rows.toSeq, input.schema))
+      (out.schema, out.collect().toSeq)
+    }.toVector
+    graft.Caching.localFrame(spark, answers.flatMap(_._2), answers.head._1)
+  }
 
   private def queries(f: Family, spark: SparkSession, t: DataFrame,
       fx: Fixture): DataFrame =

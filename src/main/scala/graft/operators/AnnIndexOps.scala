@@ -30,7 +30,8 @@ import org.apache.spark.sql.functions._
   * oracle claim (`ann_served` reuses the fresh-build chain's DuckDB SQL,
   * the bm25_ingest convention), and ingest is additive: encoding a new
   * batch against the stored quantizer appends rows identical to what a
-  * full re-encode would produce ([[appendBatch]] differential). */
+  * full re-encode would produce (the [[appendToIndex]] encode, pinned by
+  * an [[encodeAgainst]] differential). */
 object AnnIndexOps {
 
   /** The coarse quantizer, keyed for serving: (center, dim, centroid_q). */
@@ -116,13 +117,6 @@ object AnnIndexOps {
     val cb = PqOps.trainedResidualCodebook(embeddings, trainPct)
     (cents, cb, encodeAgainst(embeddings, cents, cb))
   }
-
-  /** Ingest path: encode a NEW batch against the STORED quantizer — the
-    * rows to append to `postings`. No re-training, no corpus re-scan;
-    * [[AnnOps.ivfAssignIncremental]]'s maintenance shape completed with
-    * the PQ codes. */
-  def appendBatch(newVectors: DataFrame, centroids: DataFrame, cb: DataFrame): DataFrame =
-    encodeAgainst(newVectors, centroids, cb)
 
   /** Write the index under `dir` through the bulk seam: `centroids` and
     * `codebook` as single small tables, `postings` PARTITIONED BY COARSE
@@ -279,17 +273,31 @@ object AnnIndexOps {
     * ([[graft.Caching.localFrame]]) — driver memory ≈ rows × (dim × 4 +
     * 8) B — and the encode reads their dims from it, so the call
     * registers no cache entry and takes no checkpoint. The collect is
-    * the one eager action; the census is lazy. */
-  def quantizerDrift(spark: SparkSession, dir: String, batch: DataFrame): DataFrame = {
+    * the one eager action; the census is lazy. A batch too large for the
+    * driver is censused in slices ([[batchCensus]]), whose summed
+    * censuses [[driftReport]] takes. */
+  def quantizerDrift(spark: SparkSession, dir: String, batch: DataFrame): DataFrame =
+    driftReport(spark, dir, batchCensus(spark, dir, batch))
+
+  /** The batch half of [[quantizerDrift]]: (center, n_batch, sum_batch,
+    * max_batch) over the batch's vectors coded against the stored
+    * quantizer. Each vector counts in one center, so the censuses of
+    * disjoint slices sum (n, sum) and max (max) to the whole batch's. */
+  private[graft] def batchCensus(spark: SparkSession, dir: String, batch: DataFrame): DataFrame = {
     val cents = IndexLifecycle.servingHandle(spark, dir, "centroids")
     val cb = IndexLifecycle.servingHandle(spark, dir, "codebook")
-    val train = IndexLifecycle.servingHandle(spark, dir, "err_census")
-      .select(col("center").cast("long").as("center"), col("n").as("n_train"),
-        col("sum_err").cast("decimal(38,0)").as("sum_train"), col("max_err").as("max_train"))
-    val bc = errorCensus(encodeWithError(
+    errorCensus(encodeWithError(
         quantizedDims(Caching.localFrame(batch.select("vec_id", "embedding"))), cents, cb))
       .select(col("center"), col("n").as("n_batch"),
         col("sum_err").as("sum_batch"), col("max_err").as("max_batch"))
+  }
+
+  /** The report half of [[quantizerDrift]]: the batch census `bc` against
+    * the stored train-time census. */
+  private[graft] def driftReport(spark: SparkSession, dir: String, bc: DataFrame): DataFrame = {
+    val train = IndexLifecycle.servingHandle(spark, dir, "err_census")
+      .select(col("center").cast("long").as("center"), col("n").as("n_train"),
+        col("sum_err").cast("decimal(38,0)").as("sum_train"), col("max_err").as("max_train"))
     // left from the stored census: every posting list reports, batchless
     // centers as n_batch = 0 (assignment can never invent a center that
     // is not in the stored centroid table)

@@ -21,7 +21,8 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `body`'s result and the executed plans (as text) of every action it
     * ran — for operators whose eager, driver-local steps read tables the
-    * returned lazy plan no longer shows. */
+    * returned lazy plan no longer shows. Listener delivery is
+    * asynchronous, so the bus is drained before the plans are read. */
   def withActionPlans[A](body: => A): (A, Seq[String]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -34,9 +35,7 @@ trait SparkSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val out = body
-      // listener delivery is asynchronous: read the plans once they settle
-      var last = -1
-      while (plans.size != last) { last = plans.size; Thread.sleep(500) }
+      org.apache.spark.sql.graftbridge.ListenerBusDrain(spark)
       (out, scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }

@@ -258,12 +258,10 @@ class StreamingSpec extends SparkSpec {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    // listener delivery is asynchronous: read the count once it settles
+    // listener delivery is asynchronous: read the count once the bus drains
     def settledJobs(): Int = {
-      var last = -1
-      var now = jobs.get()
-      while (now != last) { Thread.sleep(500); last = now; now = jobs.get() }
-      now
+      org.apache.spark.sql.graftbridge.ListenerBusDrain(spark)
+      jobs.get()
     }
     spark.sparkContext.addSparkListener(listener)
     try {

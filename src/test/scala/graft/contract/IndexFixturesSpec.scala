@@ -1,7 +1,7 @@
 package graft.contract
 
 import graft.SparkSpec
-import graft.operators.{DedupIndexOps, PqOps}
+import graft.operators.{AnnIndexOps, DedupIndexOps, PqOps}
 import graft.sources.Tables
 import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
@@ -20,6 +20,26 @@ class IndexFixturesSpec extends SparkSpec {
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
     Files.copy(part, dir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("a sliced serve or drift census equals one call over the whole input") {
+    withSQLConf(graft.Caching.EnabledKey -> "false") {
+      val docs = Tables.documents(spark, sf)
+      val dedupDir = Files.createTempDirectory("graft_slices_dedup").toString
+      DedupIndexOps.writeIndex(docs.filter(!IndexFixtures.batchPred), dedupDir)
+      val probe = docs.filter(IndexFixtures.batchPred).select("doc_id", "text")
+      val whole = DedupIndexOps.servedDupes(spark, dedupDir, probe)
+      assert(probe.count() > 7 && !whole.isEmpty, "the probe must span slices and find dups")
+      assert(sameRows(whole, IndexFixtures.inSlices(spark, probe, sliceRows = 7)(
+        DedupIndexOps.servedDupes(spark, dedupDir, _))))
+
+      val emb = Tables.embeddings(spark, sf)
+      val annDir = Files.createTempDirectory("graft_slices_ann").toString
+      AnnIndexOps.writeIndex(emb.filter(col("vec_id") < 400), annDir)
+      val batch = emb.filter(col("vec_id") >= 400).select("vec_id", "embedding")
+      assert(sameRows(AnnIndexOps.quantizerDrift(spark, annDir, batch),
+        IndexFixtures.driftInSlices(spark, annDir, batch, sliceRows = 13)))
+    }
   }
 
   test("serve-only fixtures rebuild when their input is rewritten in place") {

@@ -25,7 +25,7 @@ class AnnIndexSpec extends SparkSpec {
     val old = emb.filter(col("vec_id") < 400)
     val batch = emb.filter(col("vec_id") >= 400)
     val (cents, cb, postOld) = AnnIndexOps.buildIndex(old)
-    val together = postOld.unionByName(AnnIndexOps.appendBatch(batch, cents, cb))
+    val together = postOld.unionByName(AnnIndexOps.encodeAgainst(batch, cents, cb))
     val rebuilt = AnnIndexOps.encodeAgainst(emb, cents, cb)
     assert(together.exceptAll(rebuilt).count() == 0 &&
       rebuilt.exceptAll(together).count() == 0,
@@ -371,6 +371,7 @@ class AnnIndexSpec extends SparkSpec {
     // the serve's own reads: its eager steps (the queries, the probes,
     // the LUT) and the returned ranking plan
     val (served, eager) = withActionPlans(AnnIndexOps.servedTopK(spark, dir, queries))
+    assert(eager.size >= 3, s"expected the serve's three eager collects, saw ${eager.size}")
     val plan = (eager :+ served.queryExecution.executedPlan.toString).mkString("\n")
     assert(!plan.contains("embeddings.parquet"),
       s"served search must not scan the corpus vectors:\n$plan")

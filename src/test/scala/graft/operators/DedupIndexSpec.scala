@@ -188,6 +188,7 @@ class DedupIndexSpec extends SparkSpec {
     // bucket set, the candidate list) and the returned agreement plan
     val (served, eager) = withActionPlans(DedupIndexOps.servedDupes(spark, dir,
       batchOf(Seq((900001L, twin), (900002L, "too short")))))
+    assert(eager.size >= 3, s"expected the serve's three eager actions, saw ${eager.size}")
     val plan = (eager :+ served.queryExecution.executedPlan.toString).mkString("\n")
     assert(!plan.contains("documents.parquet"),
       s"a served dedup must never re-shingle the corpus:\n$plan")
