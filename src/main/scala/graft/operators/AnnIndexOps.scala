@@ -131,18 +131,18 @@ object AnnIndexOps {
     IndexLifecycle.acquireLease(embeddings.sparkSession, dir)
     val cents = coarseCentroids(embeddings)
     val cb = PqOps.trainedResidualCodebook(embeddings, trainPct)
-    // one encode feeds both the postings write and the train-time error
-    // census (cached so the second write reads the materialization)
-    val coded = Caching.maybeCache(
-      encodeWithError(Caching.maybeCache(quantizedDims(embeddings)), cents, cb))
     BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids")
     BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook")
-    BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
-      .partitionBy("center").save(s"$dir/postings")
-    // the drift monitor's baseline: what "fits the quantizer" looked
-    // like at train time, per posting list
-    BulkOps.writePath(errorCensus(coded), SaveMode.Overwrite)
-      .save(s"$dir/err_census")
+    // one encode feeds both the postings write and the train-time error
+    // census (cached so the second write reads the materialization)
+    encoded(embeddings, cents, cb) { coded =>
+      BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
+        .partitionBy("center").save(s"$dir/postings")
+      // the drift monitor's baseline: what "fits the quantizer" looked
+      // like at train time, per posting list
+      BulkOps.writePath(errorCensus(coded), SaveMode.Overwrite)
+        .save(s"$dir/err_census")
+    }
     // the membership sidecar ([[IndexLifecycle]]): every indexed vec_id,
     // the append-idempotence guard's pruned probe target
     val spark = embeddings.sparkSession
@@ -153,6 +153,16 @@ object AnnIndexOps {
     if (BulkOps.fileExists(spark, s"$dir/tombstones"))
       BulkOps.deletePath(spark, s"$dir/tombstones")
   }
+
+  /** `body` over the corpus encoded with its per-subspace error: the
+    * quantized dims and the encode each cached while `body` reads them
+    * ([[graft.Caching.withCached]]), their entries dropped after it, so
+    * a build leaves no entry of its own behind. */
+  private def encoded[T](vectors: DataFrame, cents: DataFrame, cb: DataFrame)(
+      body: DataFrame => T): T =
+    Caching.withCached(quantizedDims(vectors)) { dims =>
+      Caching.withCached(encodeWithError(dims, cents, cb))(body)
+    }
 
   /** Ingest INTO the stored index: encode the batch against the stored
     * quantizer and APPEND the rows to the partitioned postings table —
@@ -234,14 +244,14 @@ object AnnIndexOps {
     IndexLifecycle.rebuildTables(spark, dir, RebuildSet) {
       val cents = coarseCentroids(live)
       val cb = PqOps.trainedResidualCodebook(live, trainPct)
-      val coded = Caching.maybeCache(
-        encodeWithError(Caching.maybeCache(quantizedDims(live)), cents, cb))
       BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids_new")
       BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook_new")
-      BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
-        .partitionBy("center").save(s"$dir/postings_new")
-      BulkOps.writePath(errorCensus(coded), SaveMode.Overwrite)
-        .save(s"$dir/err_census_new")
+      encoded(live, cents, cb) { coded =>
+        BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
+          .partitionBy("center").save(s"$dir/postings_new")
+        BulkOps.writePath(errorCensus(coded), SaveMode.Overwrite)
+          .save(s"$dir/err_census_new")
+      }
       // the sidecar pair stages through a scratch dir: writeIds owns the
       // (ids, ids_meta) layout, and the staged copies swap in atomically
       // with the rest
@@ -336,8 +346,9 @@ object AnnIndexOps {
 
   private[graft] def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] =
     // file-based (a fold consumes exactly its journaled tombstone FILES,
-    // which can leave a file-less dir no reader could infer schema from)
-    IndexLifecycle.flatLogOpt(spark, dir, "tombstones").map(_.select("vec_id"))
+    // which can leave a file-less dir), read on the driver at the fixed
+    // log schema
+    IndexLifecycle.flatLogOpt(spark, dir, "tombstones", "vec_id")
 
   /** Major compaction of the postings table (and the ids sidecar):
     * physically drop tombstoned rows and clear the tombstone log. The

@@ -47,6 +47,9 @@ import org.apache.spark.sql.functions._
   *     sidecar and append protocol (idempotence under redelivery,
   *     crash-safe torn-append healing) — shared with the ANN and BM25
   *     indexes.
+  *   - `<table>_delta`, `tombstones`, `base_mask`: appended segments and
+  *     the two delete logs, consumed by the tiered fold
+  *     ([[compactIndex]]; the IndexLifecycle "Folds" section).
   *
   * Serve semantics: candidates collide on a stored (band, sig) bucket
   * (buckets over `bucketCap` members dropped whole — the
@@ -89,8 +92,9 @@ object DedupIndexOps {
       .withColumn("mb", pmod(col("doc_id"), lit(meta.minsParts.toLong)))
 
   /** Write the signature index for `docs` under `dir`: one corpus
-    * aggregation feeds both artifacts (the wide minima frame is cached —
-    * the banded and slim writes are its only two consumers). Docs
+    * aggregation feeds both artifacts (the wide minima frame is cached
+    * while the count and the banded and slim writes read it, and its
+    * entry is dropped after them, [[graft.Caching.withCached]]). Docs
     * shorter than a shingle (< 3 tokens) have no signature and are
     * absent, exactly as they are invisible to [[DedupOps.minhashLsh]] —
     * they still COMMIT to the ids sidecar (the index is the authority on
@@ -106,27 +110,31 @@ object DedupIndexOps {
     // single-writer from the FIRST table write of the build, not just
     // from the sidecar onward (writeIds renews the same lease)
     IndexLifecycle.acquireLease(spark, dir)
-    val wide = Caching.maybeCache(
-      DedupOps.minhashWide(DedupOps.shinglePostings(docs), numPerms))
-    // the doc count sizes both partition dials (one aggregate over the
-    // cached build frame — build-time cost, paid once per index life).
-    // A partitioned write of zero rows produces a directory no reader
-    // can infer a schema from — an empty corpus is "no index", refused
-    // loudly rather than materialized unreadably.
-    val n = wide.count()
-    require(n > 0,
-      s"writeIndex: no signable docs (every doc < 3 tokens?) — refusing to write an empty index at $dir")
-    val bands = numPerms / bandSize
-    val meta = IndexMeta(numPerms, bandSize,
-      IndexLifecycle.sizedParts(n * bands, SigRowsPerPart, 32, 4096),
-      IndexLifecycle.sizedParts(n * numPerms, MinRowsPerPart, 16, 4096))
-    // mins first (the torn-order contract), each clustered by its
-    // partition value before the write so file count tracks directory
-    // count instead of tasks × directories
-    BulkOps.writePath(slimWithMb(wide, meta).repartition(col("mb")), SaveMode.Overwrite)
-      .partitionBy("mb").save(s"$dir/mins")
-    BulkOps.writePath(bandedWithPb(wide, meta).repartition(col("pb")), SaveMode.Overwrite)
-      .partitionBy("pb").save(s"$dir/sigs")
+    // the wide minima frame feeds the count and both table writes; its
+    // cache entry ends with them
+    val meta = Caching.withCached(
+        DedupOps.minhashWide(DedupOps.shinglePostings(docs), numPerms)) { wide =>
+      // the doc count sizes both partition dials (one aggregate over the
+      // cached build frame — build-time cost, paid once per index life).
+      // A partitioned write of zero rows produces a directory no reader
+      // can infer a schema from — an empty corpus is "no index", refused
+      // loudly rather than materialized unreadably.
+      val n = wide.count()
+      require(n > 0,
+        s"writeIndex: no signable docs (every doc < 3 tokens?) — refusing to write an empty index at $dir")
+      val bands = numPerms / bandSize
+      val meta = IndexMeta(numPerms, bandSize,
+        IndexLifecycle.sizedParts(n * bands, SigRowsPerPart, 32, 4096),
+        IndexLifecycle.sizedParts(n * numPerms, MinRowsPerPart, 16, 4096))
+      // mins first (the torn-order contract), each clustered by its
+      // partition value before the write so file count tracks directory
+      // count instead of tasks × directories
+      BulkOps.writePath(slimWithMb(wide, meta).repartition(col("mb")), SaveMode.Overwrite)
+        .partitionBy("mb").save(s"$dir/mins")
+      BulkOps.writePath(bandedWithPb(wide, meta).repartition(col("pb")), SaveMode.Overwrite)
+        .partitionBy("pb").save(s"$dir/sigs")
+      meta
+    }
     import spark.implicits._
     BulkOps.writePath(
         Seq((numPerms.toLong, bandSize.toLong, meta.bucketParts.toLong, meta.minsParts.toLong))
@@ -155,9 +163,11 @@ object DedupIndexOps {
   // DEPLOY.md).
   private[operators] val metaMemo = new java.util.concurrent.ConcurrentHashMap[String, IndexMeta]()
 
+  private val MetaSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "num_perms BIGINT, band_size BIGINT, bucket_parts BIGINT, mins_parts BIGINT")
+
   private def loadMeta(spark: SparkSession, dir: String): IndexMeta = {
-    val r = BulkOps.readPath(spark, s"$dir/meta")
-      .select("num_perms", "band_size", "bucket_parts", "mins_parts").head()
+    val r = BulkOps.readPath(spark, s"$dir/meta", Some(MetaSchema)).head()
     IndexMeta(r.getLong(0).toInt, r.getLong(1).toInt,
       r.getLong(2).toInt, r.getLong(3).toInt)
   }
@@ -192,9 +202,10 @@ object DedupIndexOps {
     * that didn't catches up. `mins` writes before `sigs`, so the only
     * observable torn state is mins-without-sigs, which no serve can see.
     * The index is the authority on ids: a redelivered id with DIFFERENT
-    * text is still skipped, and a tombstoned id stays skipped until
-    * [[compactIndex]] physically drops it — re-ingesting a deleted doc
-    * requires compacting first. */
+    * text is still skipped, and a tombstoned id stays skipped until a
+    * [[compactIndex]] fold consumes its tombstone (a minor fold masks its
+    * base rows, a major one drops them) — re-ingesting a deleted doc
+    * requires folding first. */
   def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
       knownIds: Option[Seq[Long]] = None): Unit = {
     val meta = readMetaFresh(spark, dir)
@@ -254,10 +265,11 @@ object DedupIndexOps {
     * doc's K minima — is collected too (≈ pairs × (K+2) × 8 B). So the
     * serve registers no cache entry and takes no checkpoint; an executor
     * loss re-runs tasks from the driver-held rows instead of failing a
-    * read. Three eager actions run
-    * per call: the batch signature collect, the batch's `pb` set and the
-    * candidate collect (whose `mb` set then reads off the driver rows);
-    * the returned agreement plan is lazy.
+    * read. Two eager actions run per call: the batch signature collect
+    * and the candidate collect; the batch's `pb` set and the candidates'
+    * `mb` set read off the driver rows, and both id logs are read on the
+    * driver ([[IndexLifecycle.serveMasks]]), with no job. The returned
+    * agreement plan is lazy.
     *
     * Read shape at 100 TB — BOTH index reads are partition-pruned by
     * bounded app materializations (plan-gated):
@@ -273,17 +285,35 @@ object DedupIndexOps {
     *     the corpus's.
     * The corpus is never re-shingled, its text never read.
     *
-    * Tombstone mask ([[deleteFromIndex]] log, if any) lands on the
-    * PRUNED sigs read — above the partition pruning, below the bucket
-    * recount, so a masked serve is EXACTLY the survivor-index answer
-    * (deleted docs neither produce candidates nor inflate a bucket
-    * toward the cap — not a stale-stats approximation). */
+    * Delete masks ([[deleteFromIndex]] tombstones, and the `base_mask`
+    * of minor-folded deletes on base rows) land on each side of the
+    * PRUNED sigs and mins reads — above the partition pruning, below the
+    * bucket recount, so a masked serve is EXACTLY the survivor-index
+    * answer (deleted docs neither produce candidates nor inflate a
+    * bucket toward the cap — not a stale-stats approximation — and a
+    * deleted-then-re-ingested doc agrees through its new minima only). */
   def servedDupes(spark: SparkSession, dir: String, batch: DataFrame,
       thresholdE4: Long = 5000L, bucketCap: Long = DedupOps.MaxBandBucket): DataFrame = {
     val meta = readMeta(spark, dir)
-    serveCore(spark, dir, meta,
-      Caching.localFrame(DedupOps.batchMinhashWide(batch, meta.numPerms)), thresholdE4, bucketCap)
+    val wide = DedupOps.batchMinhashWide(batch, meta.numPerms)
+    val rows = wide.collect().toSeq
+    serveCore(spark, dir, meta, Caching.localFrame(spark, rows, wide.schema),
+      batchBuckets(rows, meta), thresholdE4, bucketCap)
   }
+
+  /** The `sigs` buckets (`pb`) of batch signature rows (doc_id,
+    * mh0..mh{K-1}), computed on the driver by [[bandedWithPb]]'s rule:
+    * pb = crc32(band sig string) mod bucket_parts, the sig string the
+    * band's minima joined by commas. */
+  private[operators] def batchBuckets(rows: Seq[Row], meta: IndexMeta): Seq[Int] =
+    rows.flatMap { r =>
+      (0 until meta.numPerms / meta.bandSize).map { b =>
+        val sig = (0 until meta.bandSize).map(i => r.getLong(1 + b * meta.bandSize + i)).mkString(",")
+        val crc = new java.util.zip.CRC32
+        crc.update(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        (crc.getValue % meta.bucketParts).toInt
+      }
+    }.distinct
 
   /** The serve shared by [[servedDupes]] and [[gateAndIngest]]: `wideB`
     * is the batch's signature frame (doc_id, mh0..mh{K-1}) at `meta`'s
@@ -293,7 +323,7 @@ object DedupIndexOps {
     * pruned sigs scan underneath it. Returns the lazy agreement plan
     * (doc_id, dup_of, est_e4). */
   private def serveCore(spark: SparkSession, dir: String, meta: IndexMeta,
-      wideB: DataFrame, thresholdE4: Long, bucketCap: Long): DataFrame = {
+      wideB: DataFrame, pbs: Seq[Int], thresholdE4: Long, bucketCap: Long): DataFrame = {
     // each banded batch row carries its doc's minima, so the candidate
     // pairs bring them to the agreement stage
     val bBanded = bandedWithPb(
@@ -301,20 +331,20 @@ object DedupIndexOps {
       meta, carry = Seq("mh_new"))
 
     // STATIC partition pruning, guaranteed by construction: the batch's
-    // pb set is a bounded app materialization (deduplicated on the
-    // driver — no aggregation job) — pushed as an In filter on the RAW
-    // partition column (before any cast, so it reaches the scan's
-    // PartitionFilters; plan-gated), rather than left to the optimizer's
-    // DPP cost heuristic. An empty batch prunes everything.
-    val pbs = bBanded.select("pb").collect().map(_.getLong(0).toInt).distinct.toSeq
-    // Base ∪ delta: appended batches live in `sigs_delta` segments until
-    // compaction folds them; the same pb filter prunes the base's
-    // directories and the delta's row groups (pb is a data column there)
-    val stored0 = IndexLifecycle.tableWithDelta(spark, dir, "sigs")(df =>
+    // pb set (`pbs`, computed from the driver-held batch rows — no job)
+    // is pushed as an In filter on the RAW partition column (before any
+    // cast, so it reaches the scan's PartitionFilters; plan-gated),
+    // rather than left to the optimizer's DPP cost heuristic. An empty
+    // batch prunes everything.
+    // Base ∪ delta: appended batches live in `sigs_delta` segments; the
+    // same pb filter prunes the base's directories and the delta's row
+    // groups (pb is a data column there). The masks (both id logs, read
+    // once on the driver) drop deleted docs from each side: they neither
+    // produce candidates nor inflate a bucket toward the cap
+    val masks = IndexLifecycle.serveMasks(spark, dir, "doc_id")
+    val stored = IndexLifecycle.tableWithDelta(spark, dir, "sigs", masks)(df =>
       df.filter(col("pb").isin(pbs: _*)).select("band", "sig", "doc_id"))
-    val storedMasked = tombstonesOpt(spark, dir)
-      .fold(stored0)(t => stored0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    val stored = storedMasked.select(col("band"), col("sig"), col("doc_id").as("dup_of"))
+      .select(col("band"), col("sig"), col("doc_id").as("dup_of"))
 
     // probe: the batch bucket keys, broadcast into a SEMI-join — a key
     // shared by several batch docs must not multiply the stored rows
@@ -345,9 +375,9 @@ object DedupIndexOps {
     // off the driver-held candidate rows (no job).
     val mbs = cand.select(pmod(col("dup_of"), lit(meta.minsParts.toLong)))
       .collect().map(_.getLong(0).toInt).distinct.toSeq
-    IndexLifecycle.tableWithDelta(spark, dir, "mins")(df =>
-      df.filter(col("mb").isin(mbs: _*))
-        .select(col("doc_id").as("dup_of"), col("k"), col("mh").as("mh_old")))
+    IndexLifecycle.tableWithDelta(spark, dir, "mins", masks)(df =>
+      df.filter(col("mb").isin(mbs: _*)).select("doc_id", "k", "mh"))
+      .select(col("doc_id").as("dup_of"), col("k"), col("mh").as("mh_old"))
       .join(broadcast(cand), Seq("dup_of"))
       .groupBy("doc_id", "dup_of")
       .agg(sum(when(col("mh_old") === element_at(col("mh_new"), col("k").cast("int") + 1), 1L)
@@ -428,7 +458,7 @@ object DedupIndexOps {
     val wideRows = wide0.collect()
     val wide = Caching.localFrame(spark, wideRows.toSeq, wide0.schema)
     val idx = bestMatch(
-      serveCore(spark, dir, meta, wide, thresholdE4, bucketCap)
+      serveCore(spark, dir, meta, wide, batchBuckets(wideRows.toSeq, meta), thresholdE4, bucketCap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     val intra = bestMatch(batchDupes(
       wideRows.map(r => r.getLong(0) -> Array.tabulate(meta.numPerms)(k => r.getLong(k + 1))).toSeq,
@@ -459,28 +489,49 @@ object DedupIndexOps {
 
   /** Delete documents from the stored index — the HBase-delete shape
     * shared with [[AnnIndexOps.deleteFromIndex]]: an O(|ids|) tombstone
-    * append, a serve-time broadcast mask, physical removal at the next
-    * [[compactIndex]]. */
+    * append, a serve-time broadcast mask, delta rows dropped at the next
+    * [[compactIndex]] and base rows at the next major fold. */
   def deleteFromIndex(spark: SparkSession, dir: String, ids: DataFrame): Unit =
     BulkOps.writePath(ids.select(col("doc_id").cast("long")), SaveMode.Append)
       .save(s"$dir/tombstones")
 
-  private def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] =
-    // file-based (a fold consumes exactly its journaled tombstone FILES,
-    // which can leave a file-less dir no reader could infer schema from)
-    IndexLifecycle.flatLogOpt(spark, dir, "tombstones").map(_.select("doc_id"))
+  /** The dedup tables' fold spec: (name, partition column, normalizer). */
+  private val FoldTables: Seq[(String, Seq[String], DataFrame => DataFrame)] = Seq(
+    ("mins", Seq("mb"), df => df.withColumn("mb", col("mb").cast("long"))),
+    ("sigs", Seq("pb"), df => df.withColumn("pb", col("pb").cast("long"))))
 
-  /** Major compaction: rewrite `mins` and `sigs` (each keeping its
-    * partitioning, so pruned serves are unchanged after the swap) and
-    * the ids sidecar minus the tombstoned docs, swap each in crash-safely
-    * ([[IndexLifecycle.swapCompacted]] — rename aside, rename in, every
-    * step checked), clear the log. Serve results are identical before
-    * and after (mask and drop remove the same rows — the differential
-    * DedupIndexSpec pins). Returns false on no-op. */
+  /** Fold the index — the TIERED fold ([[IndexLifecycle.foldTiered]]).
+    * By default the MINOR fold runs: each table's delta segments
+    * (`mins_delta`, `sigs_delta`, `ids_delta`) merge into one flat
+    * segment minus the tombstoned docs, and the consumed tombstone files
+    * move, by rename, into the `base_mask` log, which masks base rows
+    * only — O(delta) work; the partitioned base tables and their open
+    * serving handles are untouched. The MAJOR fold ([[majorCompactIndex]])
+    * runs instead once the delta holds as many ids as the base (so a
+    * serve reads at most 2× the base: read amplification ≤ 2) or the
+    * mask logs name a fifth of the base's ids; it rewrites `mins`, `sigs`
+    * and the ids sidecar minus every masked doc and purges both logs.
+    * The choice reads stored row counts and parquet footers on the driver
+    * (no Spark job). Either fold serves identically before and after
+    * (the DedupIndexSpec differential), makes a deleted doc re-ingestable
+    * (the sidecar probe skips masked base ids), and is crash-safe under
+    * the `fold_commit` journal: a crash before it discards the staged
+    * copies, one after it rolls forward at the next fold, and appends
+    * refuse while it is pending. A fold that would empty the index is
+    * refused. Returns false on no-op. */
   def compactIndex(spark: SparkSession, dir: String): Boolean = {
     readMetaFresh(spark, dir) // re-prime the dial memo while we hold the mutation
-    IndexLifecycle.compactTables(spark, dir, "doc_id", Seq(
-      ("mins", Seq("mb"), df => df.withColumn("mb", col("mb").cast("long"))),
-      ("sigs", Seq("pb"), df => df.withColumn("pb", col("pb").cast("long")))))
+    IndexLifecycle.foldTiered(spark, dir, "doc_id", FoldTables)
+  }
+
+  /** The MAJOR fold by name, whatever the size rule says: rewrite `mins`
+    * and `sigs` (each keeping its partitioning, so pruned serves are
+    * unchanged after the swap) and the ids sidecar minus every masked doc
+    * (tombstones and base mask), swap each in crash-safely
+    * ([[IndexLifecycle.swapCompacted]] — rename aside, rename in, every
+    * step checked), purge both logs. Returns false on no-op. */
+  def majorCompactIndex(spark: SparkSession, dir: String): Boolean = {
+    readMetaFresh(spark, dir)
+    IndexLifecycle.compactTables(spark, dir, "doc_id", FoldTables)
   }
 }

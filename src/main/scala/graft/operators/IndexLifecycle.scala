@@ -1,9 +1,10 @@
 package graft.operators
 
+import graft.Caching
 import graft.sources.BulkOps
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The ONE stored-index lifecycle shared by all three persisted indexes
   * ([[DedupIndexOps]] MinHash signatures, [[AnnIndexOps]] IVFADC
@@ -81,6 +82,44 @@ import org.apache.spark.sql.types.StructType
   * Steady state (no crash evidence) the protocol costs one pruned
   * sidecar probe, one O(batch) marker write and one O(batch) sidecar
   * append per batch — nothing corpus-sized.
+  *
+  * ## Folds: minor and major (the HBase compaction split)
+  *
+  * Deletes append tombstone files (`tombstones`, lock-free); appends
+  * land as delta segments. A fold consumes both, in one of two kinds:
+  *
+  *   - MINOR ([[minorFold]], the dedup index's default): each table's
+  *     delta segments merge into one flat segment minus the tombstoned
+  *     ids, and the consumed tombstone files move, by rename, into the
+  *     `base_mask` log. O(delta): the partitioned base tables, and the
+  *     serving handles open on them, are untouched.
+  *   - MAJOR ([[compactTables]]; ANN and BM25 always, their appends
+  *     write the base directly): every table is rewritten as base minus
+  *     `tombstones ∪ base_mask` plus delta minus `tombstones`, swapped
+  *     in, and both logs are purged.
+  *
+  * `base_mask` semantics: it masks BASE rows only. Every base-side read
+  * ([[tableWithDelta]]'s base side, the sidecar probe [[committedOf]])
+  * drops `tombstones ∪ base_mask` ids; every delta-side read drops
+  * `tombstones` only. So a doc deleted, minor-folded and re-ingested
+  * serves its new rows exactly once, and its id is re-ingestable from
+  * the fold that consumed its tombstone.
+  *
+  * Which fold runs ([[foldTiered]]): the major one once the sidecar
+  * delta holds [[MajorDeltaRatio]] × the base's ids — so a serve reads at
+  * most 2× the base (read amplification ≤ 2) — or the mask logs hold
+  * [[MajorMaskShare]] of them; else the minor one. The rule reads the
+  * base's stored row count and parquet footers on the driver: no job.
+  *
+  * Crash windows: both folds stage their output beside the live files,
+  * then write the `fold_commit` journal — the point of no return. A
+  * crash before it discards the staged copies at the next fold; a crash
+  * after it rolls forward there ([[recoverFold]]): consumed segments
+  * are deleted before merged ones move in, so a serve in the window can
+  * only under-report the freshest appends, never count a row twice.
+  * Appends refuse while a journal is pending. Each window has a
+  * `maybeCrash` step and a named crash spec (IndexLifecycleSpec,
+  * DedupIndexSpec).
   *
   * Reference analogue: the write-then-verify-then-swap discipline of
   * api/common/HBaseStaticHelper.java:41-78 (replaceTable with backup),
@@ -353,29 +392,104 @@ object IndexLifecycle {
   /** Base ∪ delta view of a stored table for SERVES: appends land as
     * small unpartitioned segments under `<table>_delta` (one directory
     * — no per-batch file fan-out across the partitioned tree, no
-    * small-files explosion at an ingest cadence), and compaction folds
-    * them into the base. `view` applies the serve's own pruning
-    * projection to EACH side (the base side's partition-column filters
-    * prune directories; the delta side's same filters prune row groups
-    * of what is at most a few batches of rows between folds). The
-    * existence check re-runs per serve because mutations create/delete
-    * the delta dir; both handles stay open-once. */
-  def tableWithDelta(spark: SparkSession, dir: String, table: String)(
+    * small-files explosion at an ingest cadence), and folds merge them
+    * (minor) or fold them into the base (major). `view` applies the
+    * serve's own pruning projection to EACH side (the base side's
+    * partition-column filters prune directories; the delta side's same
+    * filters prune row groups of what is at most the base's size of
+    * rows — the major-fold rule) and must keep the id column: `masks`
+    * then drops `tombstones ∪ base_mask` ids from the base side and
+    * `tombstones` ids from the delta side, so a doc deleted, minor-folded
+    * and re-ingested serves its new rows exactly once. The existence
+    * check re-runs per serve because mutations create/delete the delta
+    * dir; both handles stay open-once. */
+  def tableWithDelta(spark: SparkSession, dir: String, table: String, masks: Masks)(
       view: DataFrame => DataFrame): DataFrame = {
-    val base = view(servingHandle(spark, dir, table))
+    val base = masks.onBase(view(servingHandle(spark, dir, table)))
     // presence = data files, not the directory: a fold deletes exactly
     // the segment files it journaled, which can leave a file-less dir
     // no reader could infer a schema from
     if (listFlatDir(spark, s"$dir/${table}_delta").isEmpty) base
-    else base.unionByName(view(servingHandle(spark, dir, s"${table}_delta")))
+    else base.unionByName(masks.onDelta(view(servingHandle(spark, dir, s"${table}_delta"))))
   }
 
-  /** The rows of a flat side log (tombstones, a delta) as Some(df), or
-    * None when it holds no data files — file-based, so a dir emptied by
-    * a file-level fold never breaks schema inference. */
-  def flatLogOpt(spark: SparkSession, dir: String, table: String): Option[DataFrame] = {
-    val files = listFlatDir(spark, s"$dir/$table")
-    if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
+  // ---- id logs: tombstones and the base mask ----------------------------
+
+  /** The id log a minor fold moves consumed tombstone files into: it
+    * masks BASE rows only (their delta rows are already dropped), until
+    * the next major fold purges both. */
+  val BaseMask = "base_mask"
+
+  /** The fixed schema of every id log (`tombstones`, `base_mask`). */
+  private def idLogSchema(idCol: String): StructType =
+    new StructType().add(idCol, LongType)
+
+  /** The ids held by `files` of an id log, read on the driver: directly
+    * (no Spark job) under the default seam, else one read at the fixed
+    * log schema. */
+  private def idsIn(spark: SparkSession, files: Seq[String], idCol: String): Seq[Long] =
+    if (files.isEmpty) Seq.empty
+    else BulkOps.readIdsDirect(spark, files, idCol).getOrElse(
+      spark.read.schema(idLogSchema(idCol)).parquet(files: _*)
+        .filter(col(idCol).isNotNull).collect().map(_.getLong(0)).toSeq)
+
+  private def logIds(spark: SparkSession, dir: String, log: String, idCol: String): Seq[Long] =
+    idsIn(spark, listFlatDir(spark, s"$dir/$log"), idCol)
+
+  /** `ids` as a driver-local one-column frame, None when empty. */
+  private def idFrame(spark: SparkSession, ids: Seq[Long], idCol: String): Option[DataFrame] =
+    if (ids.isEmpty) None
+    else Some(Caching.localFrame(spark, ids.distinct.map(Row(_)), idLogSchema(idCol)))
+
+  /** The ids of a flat id log (`tombstones`) as a driver-local frame of
+    * one LONG column `idCol`, or None when it holds no data files —
+    * file-based, so a dir emptied by a file-level fold reads as empty. */
+  def flatLogOpt(spark: SparkSession, dir: String, log: String, idCol: String): Option[DataFrame] =
+    idFrame(spark, logIds(spark, dir, log, idCol), idCol)
+
+  /** A serve's id masks, read once per serve by [[serveMasks]]: the base
+    * side drops `tombstones ∪ base_mask`, the delta side `tombstones`.
+    * Tombstones drop through a broadcast anti-join of their local frame;
+    * the base mask, bounded by the major-fold rule to [[MajorMaskShare]]
+    * of the base's ids, through an In-set filter on the scan, which
+    * costs no broadcast job. */
+  final class Masks private[IndexLifecycle] (idCol: String,
+      tomb: Option[DataFrame], baseMask: Seq[Long]) {
+    def onBase(df: DataFrame): DataFrame =
+      onDelta(if (baseMask.isEmpty) df else df.filter(!col(idCol).isInCollection(baseMask)))
+    def onDelta(df: DataFrame): DataFrame =
+      tomb.fold(df)(ids => df.join(broadcast(ids), Seq(idCol), "left_anti"))
+  }
+
+  /** Read both id logs of `dir` once, on the driver — tombstones first:
+    * a concurrent minor fold moves files from it into the base mask, so
+    * this order sees every moved file at least once. */
+  def serveMasks(spark: SparkSession, dir: String, idCol: String): Masks =
+    new Masks(idCol, idFrame(spark, logIds(spark, dir, "tombstones", idCol), idCol),
+      logIds(spark, dir, BaseMask, idCol).distinct)
+
+  // ---- base row counts ----------------------------------------------------
+
+  /** A partitioned base's row count, written beside its data files as
+    * `_rows` (parquet readers skip `_` files) by the write that produced
+    * it, so it moves with the table through every swap rename. The
+    * fold choice reads the sidecar's count instead of counting rows. */
+  private def writeRowCount(spark: SparkSession, table: String, n: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$table/_rows")
+    val out = hadoopFs(spark, p).create(p, true)
+    try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  private def readRowCount(spark: SparkSession, table: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(s"$table/_rows")
+    val f = hadoopFs(spark, p)
+    if (!f.exists(p)) None
+    else scala.util.Try {
+      val in = f.open(p)
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+      finally in.close()
+    }.toOption
   }
 
   /** Drop every handle under `dir` — called by every mutation path (and
@@ -408,6 +522,7 @@ object IndexLifecycle {
     val parts = sizedParts(expectedN, IdsRowsPerPart, IdsMinParts, IdsMaxParts)
     BulkOps.writePath(withIb(ids, idCol, parts).repartition(col("ib")), SaveMode.Overwrite)
       .partitionBy("ib").save(s"$dir/ids")
+    writeRowCount(spark, s"$dir/ids", expectedN)
     import spark.implicits._
     BulkOps.writePath(Seq(parts.toLong).toDF("id_parts"), SaveMode.Overwrite)
       .save(s"$dir/ids_meta")
@@ -415,10 +530,11 @@ object IndexLifecycle {
     invalidateHandles(dir)
     if (BulkOps.fileExists(spark, s"$dir/pending"))
       BulkOps.deletePath(spark, s"$dir/pending")
-    // a fresh build supersedes any delta segments from the dir's past
-    // life (their rows belong to the replaced index)
-    if (BulkOps.fileExists(spark, s"$dir/ids_delta"))
-      BulkOps.deletePath(spark, s"$dir/ids_delta")
+    // a fresh build supersedes any delta segments and base mask from the
+    // dir's past life (their rows belong to the replaced index)
+    Seq("ids_delta", BaseMask).foreach { d =>
+      if (BulkOps.fileExists(spark, s"$dir/$d")) BulkOps.deletePath(spark, s"$dir/$d")
+    }
   }
 
   /** The ids of `candidates` already committed to the index — the
@@ -438,31 +554,38 @@ object IndexLifecycle {
     val ids = candidates.select(col(idCol).cast("long").as(idCol))
       .distinct().collect().map(_.getLong(0)).toIndexedSeq
     import spark.implicits._
-    committedOf(spark, dir, idCol, ids, parts).toSeq.toDF(idCol)
+    committedOf(spark, dir, idCol, ids, parts, logIds(spark, dir, BaseMask, idCol).toSet)
+      .toSeq.toDF(idCol)
   }
 
   /** The driver-resident probe behind [[committedIds]]: which of `ids`
     * (bounded app input) are committed. ONE Spark job — the candidate
-    * set's ib buckets and [min, max] range compute locally. */
+    * set's ib buckets and [min, max] range compute locally. Base rows
+    * of `baseMask` ids (the minor-folded deletes) do not count, so a
+    * deleted doc becomes re-ingestable at the fold that consumes its
+    * tombstone, minor or major; a tombstoned id not yet folded stays
+    * committed (its rows are still in the index, masked). */
   private def committedOf(spark: SparkSession, dir: String, idCol: String,
-      ids: Seq[Long], parts: Int): Set[Long] = {
+      ids: Seq[Long], parts: Int, baseMask: Set[Long]): Set[Long] = {
     if (ids.isEmpty) return Set.empty
-    val files = {
-      val l = idsListing(spark, dir, parts)
-      val ibs = ids.map(i => math.floorMod(i, parts.toLong)).distinct
-      // base files of the batch's own buckets + EVERY delta segment
-      // (each is one batch's worth of ids — small until the next fold)
-      ibs.sorted.flatMap(ib => l.files.getOrElse(ib, Nil)) ++ l.delta
-    }
-    if (files.isEmpty) return Set.empty
+    val l = idsListing(spark, dir, parts)
+    // base files of the batch's own buckets + EVERY delta segment (each
+    // is one batch's worth of ids, or one merged segment, until a fold)
+    val baseFiles = ids.map(i => math.floorMod(i, parts.toLong)).distinct.sorted
+      .flatMap(ib => l.files.getOrElse(ib, Nil))
+    val masked = ids.filter(baseMask)
+    def read(files: Seq[String]): Option[DataFrame] =
+      if (files.isEmpty) None
+      else Some(spark.read.schema(idLogSchema(idCol)).parquet(files: _*))
+    val all =
+      if (masked.isEmpty) read(baseFiles ++ l.delta)
+      else (read(baseFiles).map(_.filter(!col(idCol).isInCollection(masked))) ++
+        read(l.delta)).reduceOption(_ unionByName _)
     import spark.implicits._
-    spark.read
-      .schema(new org.apache.spark.sql.types.StructType()
-        .add(idCol, org.apache.spark.sql.types.LongType))
-      .parquet(files: _*)
+    all.fold(Set.empty[Long])(_
       .filter(col(idCol).between(lit(ids.min), lit(ids.max)))
       .join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_semi")
-      .collect().map(_.getLong(0)).toSet
+      .collect().map(_.getLong(0)).toSet)
   }
 
   /** [[committedIds]] at the freshly-read stored dial — the public
@@ -552,17 +675,21 @@ object IndexLifecycle {
     val markers =
       if (BulkOps.fileExists(spark, s"$dir/pending")) listChildren(spark, s"$dir/pending")
       else Seq.empty
+    // base rows of minor-folded deletes are not committed (read once, on
+    // the driver — no job under the default seam)
+    val baseMask = logIds(spark, dir, BaseMask, idCol).toSet
     val unresolved: Seq[(String, Set[Long])] = markers.flatMap { m =>
       val pids = BulkOps.readPath(spark, m)
         .select(col(idCol).cast("long").as(idCol))
         .collect().map(_.getLong(0)).toIndexedSeq
-      val open = pids.toSet -- committedOf(spark, dir, idCol, pids, parts)
+      val open = pids.toSet -- committedOf(spark, dir, idCol, pids, parts, baseMask)
       if (open.isEmpty) { BulkOps.deletePath(spark, m); None } else Some((m, open))
     }
     val suspectPool: Set[Long] = unresolved.flatMap(_._2).toSet
 
     // step 2: classify — committed ids skip everything
-    val toCommitSeq = batchSeq.filterNot(committedOf(spark, dir, idCol, batchSeq, parts))
+    val toCommitSeq =
+      batchSeq.filterNot(committedOf(spark, dir, idCol, batchSeq, parts, baseMask))
     if (toCommitSeq.isEmpty) return
     val toCommit = toCommitSeq.toDF(idCol)
     val suspects: Option[Set[Long]] =
@@ -592,8 +719,11 @@ object IndexLifecycle {
             // the presence check must see delta segments too — a crashed
             // append's rows land there, not in the partitioned base
             val sDf = s.toSeq.toDF(idCol)
+            // a masked base row is a deleted generation of the id, not
+            // this append's row
             val baseIds = BulkOps.readPath(spark, s"$dir/${t.name}")
               .filter(t.oneRowPred).select(col(idCol).cast("long").as(idCol))
+              .filter(!col(idCol).isInCollection(s.intersect(baseMask).toSeq))
             val deltaPath = s"$dir/${t.name}_delta"
             val allIds =
               if (!BulkOps.fileExists(spark, deltaPath)) baseIds
@@ -652,39 +782,223 @@ object IndexLifecycle {
     else fs.listStatus(p).toSeq.map(_.getPath.toString)
   }
 
-  /** The SHARED delete-then-compact driver behind all three stored
-    * indexes — now also the DELTA FOLD (appends land as small
-    * unpartitioned `<table>_delta` segments; this is where they merge
-    * into the partitioned base). Runs when a tombstone log OR any delta
-    * segment exists: rewrite each table as base ∪ delta minus the
-    * tombstoned `idCol` rows BESIDE the live copy (preserving its
+  // ---- folds: minor (O(delta)) and major (full rewrite) -----------------
+
+  /** Major-fold rule, delta side: a fold rewrites the base once the
+    * sidecar delta holds this many ids per base id — past it a serve
+    * would read more delta than base, so serve read amplification stays
+    * ≤ 1 + this (2×). */
+  val MajorDeltaRatio = 1.0
+
+  /** Major-fold rule, mask side: a fold rewrites the base once the mask
+    * logs (tombstones ∪ base_mask) hold this share of the base's id
+    * count — the dead rows every serve reads and anti-joins away. The
+    * count is an upper bound (a mask id may name a delta-only doc, or
+    * repeat), so the rule errs toward the full rewrite. */
+  val MajorMaskShare = 0.2
+
+  /** The tables a fold covers: the index's own plus the ids sidecar, as
+    * (name, partition columns, read normalizer). */
+  private def withSidecar(spark: SparkSession, dir: String,
+      tables: Seq[(String, Seq[String], DataFrame => DataFrame)])
+      : Seq[(String, Seq[String], DataFrame => DataFrame)] =
+    if (BulkOps.fileExists(spark, s"$dir/ids"))
+      tables :+ (("ids", Seq("ib"), (df: DataFrame) =>
+        df.withColumn("ib", col("ib").cast("long"))))
+    else tables
+
+  /** Every fold's preamble: the lease, then roll a crashed fold forward
+    * (its journal decides whether its output committed), then legacy
+    * per-table swap recovery. */
+  private def foldPreamble(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
+    acquireLease(spark, dir)
+    recoverFold(spark, dir, names)
+    names.foreach(t => recoverSwap(spark, s"$dir/$t"))
+  }
+
+  /** The TIERED fold behind the dedup index's `compactIndex` — the HBase
+    * minor/major compaction split. By default it runs the MINOR fold
+    * ([[minorFold]]: O(delta), the partitioned base and its open serving
+    * handles untouched); it runs the MAJOR fold ([[compactTables]]: the
+    * full rewrite that also purges both mask logs) when a size rule read
+    * off file metadata says it pays: the sidecar delta reached
+    * [[MajorDeltaRatio]] × the base's ids, or the mask logs reached
+    * [[MajorMaskShare]] of them. The rule reads the base's stored row
+    * count (`ids/_rows`) and the delta and mask files' parquet footers
+    * on the driver — no Spark job. A base with no stored count (written
+    * before the count existed) or a non-parquet seam takes the major
+    * fold, which writes the count. A fold that would empty the index is
+    * refused: the masks of an all-deleted base name every base id, so it
+    * always takes the major path, which refuses. Returns false on no-op. */
+  private[operators] def foldTiered(spark: SparkSession, dir: String, idCol: String,
+      tables: Seq[(String, Seq[String], DataFrame => DataFrame)]): Boolean = {
+    val names = withSidecar(spark, dir, tables).map(_._1)
+    foldPreamble(spark, dir, names)
+    val rows = (files: Seq[String]) => BulkOps.footerRows(spark, files)
+    val major = (readRowCount(spark, s"$dir/ids"),
+        rows(listFlatDir(spark, s"$dir/ids_delta")),
+        rows(listFlatDir(spark, s"$dir/tombstones") ++ listFlatDir(spark, s"$dir/$BaseMask"))) match {
+      case (Some(base), Some(delta), Some(masked)) =>
+        delta >= MajorDeltaRatio * base || masked >= MajorMaskShare * base
+      case _ => true
+    }
+    if (major) compactTables(spark, dir, idCol, tables)
+    else minorFold(spark, dir, idCol, names)
+  }
+
+  /** Read the flat segment `files` of `path`: at `schema`, else at the
+    * schema a serving handle remembers for the path (segments add files,
+    * never columns), else inferred once and remembered. */
+  private def readSegments(spark: SparkSession, path: String, files: Seq[String],
+      schema: Option[StructType] = None): DataFrame = {
+    val r = schema.orElse(Option(handleSchemas.get(path)))
+      .fold(spark.read)(spark.read.schema).parquet(files: _*)
+    handleSchemas.putIfAbsent(path, r.schema)
+    r
+  }
+
+  /** `df` written by `write`, returning its row count, taken from the
+    * write's own observed metric (no extra job). */
+  private def countedWrite(df: DataFrame, name: String)(write: DataFrame => Unit): Long = {
+    val obs = Observation(name)
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    // no metric: adaptive execution replaced the observed subtree by an
+    // empty relation once its stage produced no rows
+    obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+  }
+
+  private val JournalSchema = StructType.fromDDL("log STRING, file STRING")
+
+  /** Write a fold's `fold_commit` journal. Under the default seam it is
+    * ONE parquet file written beside and renamed into place by the
+    * driver (no job), so it exists only once whole: a crash mid-write
+    * leaves no journal, never an empty one that recovery would read as
+    * "roll forward, nothing consumed". */
+  private def writeJournal(spark: SparkSession, dir: String, rows: Seq[(String, String)]): Unit =
+    if (!BulkOps.writeFileDirect(spark, s"$dir/fold_commit",
+        "optional binary log (STRING); optional binary file (STRING);", rows)(
+        (g, r) => g.append("log", r._1).append("file", r._2))) {
+      import spark.implicits._
+      BulkOps.writePath(rows.toDF("log", "file"), SaveMode.Overwrite).save(s"$dir/fold_commit")
+    }
+
+  /** The MINOR fold: per table, merge the delta segments into ONE flat
+    * segment minus the tombstoned ids, and move the consumed tombstone
+    * files, by rename, into the [[BaseMask]] log, which masks base rows
+    * only. The partitioned base tables are untouched, so their open
+    * serving handles stay valid. Crash discipline, the [[compactTables]]
+    * journal's: each merged segment is staged as `<t>_delta_fold`, then
+    * the `fold_commit` journal (marked `minor`) names the consumed
+    * segment and tombstone files — before it a crash discards the staged
+    * copies, after it recovery completes the fold ([[finishMinor]]).
+    * Late files (a lock-free tombstone, a post-takeover segment) are not
+    * in the journal and survive. The caller ran [[foldPreamble]].
+    * Returns false on no-op: no tombstone, at most one segment a table. */
+  private def minorFold(spark: SparkSession, dir: String, idCol: String,
+      names: Seq[String]): Boolean = {
+    val segs = names.map(t => t -> listFlatDir(spark, s"$dir/${t}_delta")).toMap
+    val tombFiles = listFlatDir(spark, s"$dir/tombstones")
+    if (tombFiles.isEmpty && segs.values.forall(_.size <= 1)) return false
+    val tomb = idsIn(spark, tombFiles, idCol)
+    val merging = names.filter(t => segs(t).size > 1 || (segs(t).nonEmpty && tomb.nonEmpty))
+    merging.foreach { t =>
+      val staged = s"$dir/${t}_delta_fold"
+      // one file per merged segment; an all-deleted delta merges to none.
+      // The sidecar's id segments merge on the driver (no job), the
+      // append protocol's own direct write
+      val direct = t == "ids" && BulkOps.readIdsDirect(spark, segs(t), idCol).exists { ids =>
+        val kept = ids.filterNot(tomb.toSet)
+        kept.isEmpty || BulkOps.writeIdsDirect(spark, staged, idCol, kept)
+      }
+      if (!direct) {
+        val schema = if (t == "ids") Some(idLogSchema(idCol)) else None
+        val kept = readSegments(spark, s"$dir/${t}_delta", segs(t), schema)
+          .filter(!col(idCol).isInCollection(tomb))
+        val n = countedWrite(kept, s"fold_minor_$t")(df =>
+          BulkOps.writePath(df.coalesce(1), SaveMode.Overwrite).save(staged))
+        if (n == 0) BulkOps.deletePath(spark, staged)
+      }
+    }
+    maybeCrash("fold_minor_stage")
+    val consumed = ("minor", "") +:
+      (merging.flatMap(t => segs(t).map(f => (s"${t}_delta", f))) ++
+        tombFiles.map(f => ("tombstones", f)))
+    writeJournal(spark, dir, consumed)
+    maybeCrash("fold_minor_commit")
+    finishMinor(spark, dir, names, consumed)
+    // only the delta side changed: drop its handles and refresh the
+    // sidecar's delta inventory; the base handles stay open
+    names.foreach(t => handles.remove(s"$dir/${t}_delta"))
+    Option(idsListingMemo.get(dir)).foreach(l =>
+      idsListingMemo.put(dir, l.copy(delta = listFlatDir(spark, s"$dir/ids_delta"))))
+    true
+  }
+
+  /** The committed half of a minor fold, idempotent (the forward path and
+    * recovery both run it): per table, delete the consumed segments
+    * FIRST and then move the merged segment in — a crash window can only
+    * under-report the freshest appends, never double-count a row — and
+    * last move the consumed tombstones into [[BaseMask]]: by then every
+    * delta row they named is gone, so the base-only mask they become
+    * hides nothing the delta serves. */
+  private def finishMinor(spark: SparkSession, dir: String, names: Seq[String],
+      consumed: Seq[(String, String)]): Unit = {
+    names.foreach { t =>
+      consumed.collect { case (l, f) if l == s"${t}_delta" => f }.foreach(deleteFile(spark, _))
+      moveFiles(spark, s"$dir/${t}_delta_fold", s"$dir/${t}_delta",
+        listFlatDir(spark, s"$dir/${t}_delta_fold"))
+      if (BulkOps.fileExists(spark, s"$dir/${t}_delta_fold"))
+        BulkOps.deletePath(spark, s"$dir/${t}_delta_fold")
+      dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
+      maybeCrash(s"fold_minor_delta_$t")
+    }
+    moveFiles(spark, s"$dir/tombstones", s"$dir/$BaseMask",
+      consumed.collect { case ("tombstones", f) => f })
+    maybeCrash("fold_minor_mask")
+    dropLogDirIfEmpty(spark, s"$dir/tombstones")
+    BulkOps.deletePath(spark, s"$dir/fold_commit")
+  }
+
+  /** Rename each still-present file of `files` into `to`, keeping its
+    * name; every rename is checked. */
+  private def moveFiles(spark: SparkSession, from: String, to: String, files: Seq[String]): Unit = {
+    val target = new org.apache.hadoop.fs.Path(to)
+    val f = hadoopFs(spark, target)
+    files.map(new org.apache.hadoop.fs.Path(_)).filter(f.exists).foreach { p =>
+      f.mkdirs(target)
+      require(f.rename(p, new org.apache.hadoop.fs.Path(target, p.getName)),
+        s"fold aborted: could not move $p from $from into $to — rerun to recover")
+    }
+  }
+
+  /** The MAJOR fold, the SHARED delete-then-compact driver behind all
+    * three stored indexes: the ANN and BM25 `compactIndex` (their appends
+    * write the base directly, so they always fold this way) and the
+    * dedup index's tiered fold when a full rewrite pays. Runs when a
+    * tombstone, base-mask or delta file exists: rewrite each table as
+    * (base minus `tombstones ∪ base_mask` ids) ∪ (delta minus
+    * `tombstones` ids) BESIDE the live copy (preserving its
     * partitioning), journal the fold (`fold_commit` — the roll-FORWARD
     * point, the [[rebuildTables]] discipline: fold moves rows BETWEEN
     * tables, so per-table recovery alone cannot decide whether a delta
     * was consumed), then per table delete its delta and checked-swap the
-    * compacted copy in. The ids SIDECAR folds with the data tables (a
-    * tombstoned id leaves the sidecar exactly when its rows leave the
-    * index, so re-ingesting a deleted doc becomes possible after
-    * compaction — the documented contract). Returns false on no-op.
-    * A compaction that would empty a table is refused: a partitioned
-    * write of zero rows produces a directory no reader can infer a
-    * schema from — deleting EVERYTHING is "drop the index", not a
-    * maintenance operation.
+    * compacted copy in, then delete the consumed tombstone and base-mask
+    * files. The ids SIDECAR folds with the data tables (a tombstoned id
+    * leaves the sidecar exactly when its rows leave the index) and its
+    * compacted copy records its row count (`_rows`, read by
+    * [[foldTiered]]). Returns false on no-op.
+    * A compaction that would empty a table is refused before the
+    * journal, its staged copies deleted: a partitioned write of zero rows
+    * produces a directory no reader can infer a schema from — deleting
+    * EVERYTHING is "drop the index", not a maintenance operation. The
+    * row count comes from each write's own observed metric, not a job.
     * `tables` = (name, partition columns, read normalizer). */
   private[operators] def compactTables(
       spark: SparkSession, dir: String, idCol: String,
       tables: Seq[(String, Seq[String], DataFrame => DataFrame)]): Boolean = {
-    acquireLease(spark, dir)
-    val withIds: Seq[(String, Seq[String], DataFrame => DataFrame)] =
-      if (BulkOps.fileExists(spark, s"$dir/ids"))
-        tables :+ (("ids", Seq("ib"), (df: DataFrame) =>
-          df.withColumn("ib", col("ib").cast("long"))))
-      else tables
+    val withIds = withSidecar(spark, dir, tables)
     val names = withIds.map(_._1)
-    // roll a crashed fold forward FIRST (its journal decides whether the
-    // compacted copies committed), then legacy per-table swap recovery
-    recoverFold(spark, dir, names)
-    withIds.foreach { case (t, _, _) => recoverSwap(spark, s"$dir/$t") }
+    foldPreamble(spark, dir, names)
     // the CONSUMED FILES, listed eagerly: tombstone appends are
     // lock-free by design, so a tombstone (or, after a crash + lease
     // takeover, a delta segment) arriving later must SURVIVE this fold —
@@ -693,45 +1007,54 @@ object IndexLifecycle {
     val segs: Map[String, Seq[String]] =
       names.map(t => t -> listFlatDir(spark, s"$dir/${t}_delta")).toMap
     val tombFiles = listFlatDir(spark, s"$dir/tombstones")
-    if (tombFiles.isEmpty && segs.values.forall(_.isEmpty)) false
+    val maskFiles = listFlatDir(spark, s"$dir/$BaseMask")
+    if (tombFiles.isEmpty && maskFiles.isEmpty && segs.values.forall(_.isEmpty)) false
     else {
-      val tomb =
-        if (tombFiles.isEmpty) None
-        else Some(spark.read.parquet(tombFiles: _*).select(idCol))
+      val masks = new Masks(idCol, idFrame(spark, idsIn(spark, tombFiles, idCol), idCol),
+        idsIn(spark, maskFiles, idCol).distinct)
       lazy val idParts = readIdParts(spark, dir)
-      withIds.foreach { case (t, partCols, normalize) =>
-        val base = normalize(BulkOps.readPath(spark, s"$dir/$t"))
+      withIds.zipWithIndex.foreach { case ((t, partCols, normalize), i) =>
+        // at a known schema where there is one (no inference job): the
+        // sidecar's is fixed, a served table's its handle remembers
+        val known =
+          if (t == "ids") Some(idLogSchema(idCol).add("ib", LongType))
+          else Option(handleSchemas.get(s"$dir/$t"))
+        val base = masks.onBase(normalize(BulkOps.readPath(spark, s"$dir/$t", known)))
         val full =
           if (segs(t).isEmpty) base
           else {
-            val d0 = spark.read.parquet(segs(t): _*)
+            val d0 = readSegments(spark, s"$dir/${t}_delta", segs(t),
+              if (t == "ids") Some(idLogSchema(idCol)) else None)
             // the ids delta is flat (idCol only) — bucket it at the
             // stored dial before it joins the partitioned base
             val d = if (t == "ids")
               d0.withColumn("ib", pmod(col(idCol).cast("long"), lit(idParts.toLong)))
             else d0
-            base.unionByName(normalize(d))
+            base.unionByName(masks.onDelta(normalize(d)))
           }
-        val keep = tomb.fold(full)(tb => full.join(broadcast(tb), Seq(idCol), "left_anti"))
-        require(!keep.isEmpty,
-          s"compaction would empty $dir/$t — drop the index instead")
         // clustered by the partition columns first (the writeIndex /
         // writeIds discipline): one file per directory, so the file
         // count tracks the directory count instead of growing by one
         // read task's worth per directory every fold
-        if (partCols.isEmpty) BulkOps.writePath(keep, SaveMode.Overwrite).save(s"$dir/${t}_compact")
-        else BulkOps.writePath(keep.repartition(partCols.map(col): _*), SaveMode.Overwrite)
-          .partitionBy(partCols: _*).save(s"$dir/${t}_compact")
+        val n = countedWrite(full, s"fold_major_$t") { keep =>
+          if (partCols.isEmpty) BulkOps.writePath(keep, SaveMode.Overwrite).save(s"$dir/${t}_compact")
+          else BulkOps.writePath(keep.repartition(partCols.map(col): _*), SaveMode.Overwrite)
+            .partitionBy(partCols: _*).save(s"$dir/${t}_compact")
+        }
+        if (n == 0) {
+          withIds.take(i + 1).foreach { case (s, _, _) =>
+            BulkOps.deletePath(spark, s"$dir/${s}_compact") }
+          throw new IllegalArgumentException(
+            s"compaction would empty $dir/$t — drop the index instead")
+        }
+        if (t == "ids") writeRowCount(spark, s"$dir/ids_compact", n)
       }
       // the fold journal — the point of no return: from here, recovery
       // COMPLETES every remaining file deletion and swap; before it,
       // stale _compact copies discard (the live base+delta are intact)
-      BulkOps.writePath(
-          { import spark.implicits._
-            (segs.toSeq.flatMap { case (t, fs) => fs.map(f => (t, f)) } ++
-              tombFiles.map(f => ("tombstones", f))).toDF("log", "file") },
-          SaveMode.Overwrite)
-        .save(s"$dir/fold_commit")
+      writeJournal(spark, dir,
+        segs.toSeq.flatMap { case (t, fs) => fs.map(f => (t, f)) } ++
+          tombFiles.map(f => ("tombstones", f)) ++ maskFiles.map(f => (BaseMask, f)))
       maybeCrash("fold_commit")
       withIds.foreach { case (t, _, _) =>
         // consumed segments first: their rows live in the compacted
@@ -747,6 +1070,9 @@ object IndexLifecycle {
       }
       tombFiles.foreach(f => deleteFile(spark, f))
       dropLogDirIfEmpty(spark, s"$dir/tombstones")
+      maybeCrash("fold_tombstones")
+      maskFiles.foreach(f => deleteFile(spark, f))
+      dropLogDirIfEmpty(spark, s"$dir/$BaseMask")
       BulkOps.deletePath(spark, s"$dir/fold_commit")
       invalidateHandles(dir)
       true
@@ -778,30 +1104,39 @@ object IndexLifecycle {
     }
   }
 
-  /** [[compactTables]]'s crash recovery: with a `fold_commit` journal
-    * present the compacted copies are the committed truth — delete
-    * exactly the journaled consumed files and complete every remaining
-    * swap (roll forward); without one, leftover `_compact` copies beside
-    * a live table are a fold that never committed and discard via the
-    * legacy [[recoverSwap]] (base + deltas are intact — nothing lost).
-    * Files appended AFTER the journal (late tombstones; post-takeover
-    * delta segments) are not in it and survive untouched. */
+  /** The folds' crash recovery. With a `fold_commit` journal present the
+    * fold committed: a MINOR journal completes through [[finishMinor]]
+    * (consumed segments deleted, merged segments moved in, consumed
+    * tombstones moved into the base mask); a MAJOR one deletes exactly
+    * the journaled consumed files and completes every remaining swap
+    * (roll forward). Without one, leftover staged copies (`_compact`
+    * beside a live table, `<t>_delta_fold`) are a fold that never
+    * committed and are discarded (base + deltas + logs are intact —
+    * nothing lost). Files appended AFTER the journal (late tombstones;
+    * post-takeover delta segments) are not in it and survive untouched. */
   private[operators] def recoverFold(
       spark: SparkSession, dir: String, tables: Seq[String]): Unit =
     if (BulkOps.fileExists(spark, s"$dir/fold_commit")) {
-      val consumed = BulkOps.readPath(spark, s"$dir/fold_commit")
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      consumed.foreach { case (_, f) => deleteFile(spark, f) }
-      tables.foreach { t =>
-        dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
-        if (BulkOps.fileExists(spark, s"$dir/$t") &&
-            BulkOps.fileExists(spark, s"$dir/${t}_compact"))
-          swapCompacted(spark, s"$dir/$t")
-        else recoverSwap(spark, s"$dir/$t")
+      val consumed = BulkOps.readPath(spark, s"$dir/fold_commit", Some(JournalSchema))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      if (consumed.exists(_._1 == "minor")) finishMinor(spark, dir, tables, consumed)
+      else {
+        consumed.foreach { case (_, f) => deleteFile(spark, f) }
+        tables.foreach { t =>
+          dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
+          if (BulkOps.fileExists(spark, s"$dir/$t") &&
+              BulkOps.fileExists(spark, s"$dir/${t}_compact"))
+            swapCompacted(spark, s"$dir/$t")
+          else recoverSwap(spark, s"$dir/$t")
+        }
+        dropLogDirIfEmpty(spark, s"$dir/tombstones")
+        dropLogDirIfEmpty(spark, s"$dir/$BaseMask")
+        BulkOps.deletePath(spark, s"$dir/fold_commit")
       }
-      dropLogDirIfEmpty(spark, s"$dir/tombstones")
-      BulkOps.deletePath(spark, s"$dir/fold_commit")
       invalidateHandles(dir)
+    } else tables.foreach { t =>
+      if (BulkOps.fileExists(spark, s"$dir/${t}_delta_fold"))
+        BulkOps.deletePath(spark, s"$dir/${t}_delta_fold")
     }
 
   /** Crash-safe swap of `<table>_compact` into `<table>`: the live table
@@ -822,17 +1157,19 @@ object IndexLifecycle {
     * table is missing, complete the swap (compacted copy present) or
     * roll back (old copy present); stale leftovers beside a LIVE table
     * are superseded copies and are dropped so the next swap's renames
-    * cannot silently no-op against an existing destination. */
+    * cannot silently no-op against an existing destination. A table with
+    * nothing to recover keeps its serving handle. */
   private[operators] def recoverSwap(spark: SparkSession, table: String): Unit = {
+    val live = BulkOps.fileExists(spark, table)
+    val old = BulkOps.fileExists(spark, s"${table}_old")
+    val cmp = BulkOps.fileExists(spark, s"${table}_compact")
+    if (live && !old && !cmp) return
     handles.remove(table)
     handleSchemas.remove(table)
     // a recovered ids swap changed the sidecar's files outside
     // appendGuarded's refresh path — drop its inventory
     if (table.endsWith("/ids"))
       idsListingMemo.remove(table.stripSuffix("/ids"))
-    val live = BulkOps.fileExists(spark, table)
-    val old = BulkOps.fileExists(spark, s"${table}_old")
-    val cmp = BulkOps.fileExists(spark, s"${table}_compact")
     if (!live) {
       if (cmp) require(BulkOps.renamePath(spark, s"${table}_compact", table),
         s"could not complete the crashed swap of $table")

@@ -298,8 +298,9 @@ object RetrievalOps {
 
   private def bm25TombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] =
     // file-based (a fold consumes exactly its journaled tombstone FILES,
-    // which can leave a file-less dir no reader could infer schema from)
-    IndexLifecycle.flatLogOpt(spark, dir, "tombstones").map(_.select("doc_id"))
+    // which can leave a file-less dir), read on the driver at the fixed
+    // log schema
+    IndexLifecycle.flatLogOpt(spark, dir, "tombstones", "doc_id")
 
   /** Major compaction of the BM25 index: rewrite postings, lens and the
     * ids sidecar minus the tombstoned docs (written beside, swapped by

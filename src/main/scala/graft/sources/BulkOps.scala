@@ -187,20 +187,26 @@ object BulkOps {
     * The file lands under a unique part name beside any existing
     * segments, i.e. exactly `SaveMode.Append` directory semantics. */
   private[graft] def writeIdsDirect(spark: SparkSession, dir: String,
-      idCol: String, ids: Seq[Long]): Boolean = {
-    if (Tables.sourceFormat(spark) != "parquet" || Tables.sourceOptions(spark).nonEmpty)
-      return false
+      idCol: String, ids: Seq[Long]): Boolean =
+    writeFileDirect(spark, s"$dir/part-00000-${java.util.UUID.randomUUID()}.snappy.parquet",
+      s"optional int64 $idCol;", ids)((g, id) => g.append(idCol, id))
+
+  /** The one-file parquet write behind [[writeIdsDirect]], at `file`:
+    * `fields` are the message body of the file schema, `fill` appends
+    * one row's fields to a record. False (nothing written) outside the
+    * default seam configuration. */
+  private[graft] def writeFileDirect[T](spark: SparkSession, file: String, fields: String,
+      rows: Seq[T])(fill: (org.apache.parquet.example.data.Group, T) => Unit): Boolean = {
+    if (!directParquet(spark)) return false
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
-    // `optional`, matching Spark's own parquet writer exactly: seam
+    // `optional` fields, matching Spark's own parquet writer exactly: seam
     // writes into the same delta directories emit optional int64, and a
     // mixed required/optional column across segments breaks mergeSchema
     // and stricter readers (values are non-null either way)
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      s"message spark_schema { optional int64 $idCol; }")
-    val uuid = java.util.UUID.randomUUID()
-    val file = new org.apache.hadoop.fs.Path(
-      s"$dir/part-00000-$uuid.snappy.parquet")
+      s"message spark_schema { $fields }")
+    val target = new org.apache.hadoop.fs.Path(file)
     // write to a dot-prefixed temp name (invisible to parquet directory
     // readers) and RENAME into place after close — atomic on local FS
     // and HDFS. A crash mid-write then leaves only an ignored temp file,
@@ -208,8 +214,7 @@ object BulkOps {
     // that would make every later marker resolution or sidecar read
     // throw — the same "commit by rename" guarantee the old Spark write
     // had via FileOutputCommitter.
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dir/.part-00000-$uuid.snappy.parquet.tmp")
+    val tmp = new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}.tmp")
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
       .withConf(conf)
@@ -218,15 +223,56 @@ object BulkOps {
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
     val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-    try ids.foreach { id => writer.write(groups.newGroup().append(idCol, id)) }
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      fill(g, r)
+      writer.write(g)
+    }
     finally writer.close()
     val fs = tmp.getFileSystem(conf)
-    if (!fs.rename(tmp, file)) {
+    if (!fs.rename(tmp, target)) {
       fs.delete(tmp, false)
-      throw new java.io.IOException(s"writeIdsDirect: rename $tmp -> $file failed")
+      throw new java.io.IOException(s"writeFileDirect: rename $tmp -> $target failed")
     }
     true
   }
+
+  /** DRIVER-side read of bounded id logs (the index tombstone and
+    * base-mask logs) — the read twin of [[writeIdsDirect]]: the files
+    * are read through parquet-hadoop directly, so a serve's masks cost
+    * no Spark job. None outside the default seam configuration (the
+    * caller reads through Spark instead). Null ids are skipped. */
+  private[graft] def readIdsDirect(spark: SparkSession, files: Seq[String],
+      idCol: String): Option[Seq[Long]] = {
+    if (!directParquet(spark)) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    Some(files.flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          new org.apache.hadoop.fs.Path(f))
+        .withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .filter(_.getFieldRepetitionCount(idCol) > 0)
+        .map(_.getLong(idCol, 0)).toVector
+      finally reader.close()
+    })
+  }
+
+  /** The summed row counts of parquet `files`, read off their footers on
+    * the driver (no Spark job); None outside the default seam
+    * configuration. */
+  private[graft] def footerRows(spark: SparkSession, files: Seq[String]): Option[Long] = {
+    if (!directParquet(spark)) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    Some(files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try r.getRecordCount finally r.close()
+    }.sum)
+  }
+
+  private def directParquet(spark: SparkSession): Boolean =
+    Tables.sourceFormat(spark) == "parquet" && Tables.sourceOptions(spark).isEmpty
 
   private[graft] def deletePath(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)

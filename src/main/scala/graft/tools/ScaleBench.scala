@@ -144,7 +144,11 @@ object ScaleBench {
     "avi_frames",
     // video near-dup: per-sampled-frame pHash + the frame-aligned
     // banded pair join — the minhash-LSH class with a frame dimension
-    "video_near_dups")
+    "video_near_dups",
+    // the tiered dedup-index fold: a FIXED delta over a growing index,
+    // folded minor and major (two rows, [[foldTimes]]); the minor fold
+    // is O(delta), so near-flat is its claim
+    "dedup_fold")
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -247,10 +251,7 @@ object ScaleBench {
     }
     val (fLo, dLo) = dirs.head
     val (fHi, dHi) = dirs.last
-    val rows = Families.filter(n => wanted.forall(_.contains(n))).map { name =>
-      val t1 = timeOne(name, base)
-      val tLo = timeOne(name, dLo)
-      val tHi = timeOne(name, dHi)
+    def row(name: String, t1: Double, tLo: Double, tHi: Double): String = {
       // exponent between the two scaled points (both past the overhead
       // floor); guard the log against sub-resolution times
       val exp = math.log(math.max(tHi, 1e-3) / math.max(tLo, 1e-3)) /
@@ -259,7 +260,54 @@ object ScaleBench {
         f"${fHi}x=$tHi%7.2fs exp=$exp%5.2f")
       f"""{"family":"$name","t_base":$t1%.2f,"t_x$fLo":$tLo%.2f,"t_x$fHi":$tHi%.2f,"exponent":$exp%.2f}"""
     }
+    val rows = Families.filter(n => wanted.forall(_.contains(n))).flatMap {
+      case "dedup_fold" =>
+        val Seq(t1, tLo, tHi) = Seq(base, dLo, dHi).map(d => foldTimes(spark, d, s"$outRoot/fold"))
+        Seq(row("dedup_fold_minor", t1._1, tLo._1, tHi._1),
+          row("dedup_fold_major", t1._2, tLo._2, tHi._2))
+      case name => Seq(row(name, timeOne(name, base), timeOne(name, dLo), timeOne(name, dHi)))
+    }
     println(rows.mkString("[", ",", "]"))
     spark.stop()
+  }
+
+  /** (minor, major) fold seconds over the dedup index of `sfDir`'s corpus
+    * (the 90% bucket the contract fixtures index): each pass
+    * hardlink-resets a working copy from one prebuilt index, appends a
+    * FIXED delta — the bounded ~200-doc batch twice, under fresh ids and
+    * token suffixes — tombstones 10 corpus docs, and times one fold:
+    * [[DedupIndexOps.compactIndex]] (which must take the minor fold) or
+    * [[DedupIndexOps.majorCompactIndex]]. Min of 2 passes each. */
+  private def foldTimes(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      scratch: String): (Double, Double) = {
+    import graft.contract.IndexFixtures
+    import graft.operators.{DedupIndexOps, IndexLifecycle}
+    import spark.implicits._
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val pristine = s"$scratch/pristine"
+    val work = s"$scratch/work"
+    DedupIndexOps.writeIndex(docs.filter(!IndexFixtures.batchPred), pristine)
+    val batch = graft.Caching.localFrame(docs.filter(IndexFixtures.batchPred &&
+      col("doc_id") < IndexFixtures.ServeOnlyIdCap).select("doc_id", "text"))
+    val dead = docs.filter(!IndexFixtures.batchPred).select("doc_id").limit(10)
+      .collect().map(_.getLong(0)).toSeq
+    def pass(fold: String => Boolean): Double = {
+      IndexFixtures.resetFromPristine(spark, pristine, work)
+      Seq(1L, 2L).foreach(p => DedupIndexOps.appendToIndex(spark, work, batch
+        .withColumn("doc_id", col("doc_id") + IndexFixtures.AppendIdBase * p)
+        .withColumn("text", regexp_replace(col("text"), "(\\S+)", "$1f" + p))))
+      DedupIndexOps.deleteFromIndex(spark, work, dead.toDF("doc_id"))
+      val t0 = System.nanoTime()
+      require(fold(work), s"the fold over $work must run")
+      (System.nanoTime() - t0) / 1e9
+    }
+    def minor(d: String): Boolean = {
+      val ran = DedupIndexOps.compactIndex(spark, d)
+      require(graft.sources.BulkOps.fileExists(spark, s"$d/${IndexLifecycle.BaseMask}"),
+        s"the fixed delta must take the minor fold at $sfDir")
+      ran
+    }
+    def major(d: String): Boolean = DedupIndexOps.majorCompactIndex(spark, d)
+    (math.min(pass(minor), pass(minor)), math.min(pass(major), pass(major)))
   }
 }

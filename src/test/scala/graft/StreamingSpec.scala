@@ -246,7 +246,8 @@ class StreamingSpec extends SparkSpec {
     * a stored-index stream runs unbounded, so a per-trigger leftover
     * grows without end. */
   private def guardedTriggerJobs[T: org.apache.spark.sql.Encoder](
-      name: String, batches: Seq[Seq[T]], cols: Seq[String])(
+      name: String, batches: Seq[Seq[T]], cols: Seq[String],
+      between: Int => Unit = _ => ())(
       start: (org.apache.spark.sql.DataFrame, String) =>
         org.apache.spark.sql.streaming.StreamingQuery): Seq[Int] = {
     implicit val sqlCtx = spark.sqlContext
@@ -267,7 +268,8 @@ class StreamingSpec extends SparkSpec {
     try {
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
       val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
-      val perTrigger = batches.map { b =>
+      val perTrigger = batches.zipWithIndex.map { case (b, i) =>
+        between(i) // maintenance before trigger i, outside its count
         val j0 = settledJobs()
         input.addData(b)
         q.processAllAvailable()
@@ -316,6 +318,43 @@ class StreamingSpec extends SparkSpec {
     assert(perTrigger.forall(_ <= 20), s"jobs per trigger: $perTrigger")
     assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == expected,
       "streamed verdicts must equal the batch gate over the same batches")
+  }
+
+  test("gate stream with a delete and compactIndex between triggers: ≤ 20 jobs a trigger, " +
+      "no cache entry or persisted RDD left over, verdicts equal the batch gate") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.DedupIndexOps
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val corpus = docs.filter(col("doc_id") >= 100)
+    val corpusIds = corpus.select("doc_id").collect().map(_.getLong(0)).sorted
+    val batches = fiveBatches(docs.filter(col("doc_id") < 100).select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1))
+    val streamDir = java.nio.file.Files.createTempDirectory("graft_gate_fold_s").toString
+    val batchDir = java.nio.file.Files.createTempDirectory("graft_gate_fold_b").toString
+    DedupIndexOps.writeIndex(corpus, streamDir)
+    DedupIndexOps.writeIndex(corpus, batchDir)
+    // before each later trigger: delete three corpus docs and the
+    // previous batch's first doc, then fold
+    def maintain(dir: String, i: Int): Unit = if (i > 0) {
+      val dead = corpusIds.slice(3 * i, 3 * i + 3).toSeq :+ batches(i - 1).head._1
+      DedupIndexOps.deleteFromIndex(spark, dir, dead.toDF("doc_id"))
+      assert(DedupIndexOps.compactIndex(spark, dir), s"fold before trigger $i must run")
+    }
+    def report(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3)))).toSet
+    val expected = batches.zipWithIndex.map { case (b, i) =>
+      maintain(batchDir, i)
+      report(DedupIndexOps.gateAndIngest(spark, batchDir, b.toDF("doc_id", "text")))
+    }
+    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, String, Option[Any], Option[Any])]]
+    val perTrigger = guardedTriggerJobs("gate+fold", batches, Seq("doc_id", "text"),
+        between = maintain(streamDir, _))((df, ckpt) =>
+      StreamingOps.dedupIngestGateStream(df, streamDir, ckpt,
+        (rep, bid) => got.synchronized { got(bid) = report(rep) }))
+    assert(perTrigger.forall(_ <= 20), s"jobs per trigger: $perTrigger")
+    assert(got.synchronized(got.toSeq.sortBy(_._1).map(_._2)) == expected,
+      "streamed verdicts must equal the batch gate over the same batches and folds")
   }
 
   test("dedup serve stream: no cache entry or persisted RDD left over five triggers, " +

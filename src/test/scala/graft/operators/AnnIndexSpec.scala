@@ -394,4 +394,21 @@ class AnnIndexSpec extends SparkSpec {
     val fresh = PqOps.ivfPqResidualTrainedTopK(emb)
     assert(served.exceptAll(fresh).count() == 0 && fresh.exceptAll(served).count() == 0)
   }
+
+  test("an index build or rebuild leaves the session's CacheManager entry count as it found it") {
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") >= 100)
+    // the quantizer fit's entries are shared operator entries (every
+    // sibling query over the corpus reuses them, released by
+    // Caching.release): register them first, so the count isolates the
+    // build's own dims and encode
+    AnnIndexOps.coarseCentroids(emb).count()
+    PqOps.trainedResidualCodebook(emb).count()
+    val probe = org.apache.spark.sql.graftbridge.CacheProbe
+    val before = probe.entries(spark)
+    val dir = Files.createTempDirectory("graft_annidx_entries").toString
+    AnnIndexOps.writeIndex(emb, dir)
+    assert(probe.entries(spark) == before, "writeIndex must release its dims and encode entries")
+    AnnIndexOps.rebuildIndex(spark, dir, emb)
+    assert(probe.entries(spark) == before, "rebuildIndex must release its dims and encode entries")
+  }
 }
