@@ -9,6 +9,14 @@ import org.apache.spark.sql.SparkSession
   * splitting, partition coalescing), shuffle partitions matched to
   * parallelism rather than the 200 default, UTC so results are
   * oracle-comparable.
+  *
+  * It also sizes Spark's generated-class cache to graft's working set
+  * (see [[CodegenCacheEntries]]). `spark.sql.codegen.cache.maxEntries` is
+  * a STATIC conf read once per JVM, when Spark's `CodeGenerator` object
+  * initializes on the first query plan compiled: it takes effect only if
+  * the first session of the JVM is built with it. A later session's
+  * value, or a `spark.conf.set` at runtime, cannot resize the cache. A
+  * caller's own `.config` on the returned builder overrides the value.
   */
 object GraftSession {
 
@@ -25,6 +33,18 @@ object GraftSession {
     * these gates runs. Ships with Spark 4 (rocksdbjni bundled). */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Bound of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark default 100). One admin
+    * sweep alone compiles about 270 distinct classes, so at 100 the LRU
+    * evicts each class before the next sweep asks for it again and every
+    * sweep recompiles all of them in Janino. The largest in-repo working
+    * set, the 258 contract queries at sf0.01 in one session, compiles
+    * about 3,200 (local mode keys the driver's and the executor's copy of
+    * a class apart); the bound holds that with 2x headroom, so a second
+    * pass recompiles only the ~260 classes whose code differs per pass. A
+    * held class costs metaspace: about 25 MB for that whole working set. */
+  val CodegenCacheEntries = 8000
 
   def builder(
       master: String = "local[32]",
@@ -45,6 +65,8 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // static, read once per JVM: see CodegenCacheEntries
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // test fixtures carry nanosecond parquet timestamps, which Spark 4
       // otherwise refuses to read; Tables.events converts back to micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

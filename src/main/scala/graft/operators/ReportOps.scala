@@ -48,20 +48,24 @@ object ReportOps {
   /** O-36: snapshot stats (`api/report/reports/SnapshotsReport.java:26-55`):
     * per-table snapshot counts with havingCount >= 5, and age >= 10 days
     * relative to the newest snapshot (deterministic "now"). Snapshots are
-    * derived one-per-order: table `t<o_orderkey%16>`, created o_orderdate. */
+    * derived one-per-order: table `t<o_orderkey%16>`, created o_orderdate.
+    * The input is scanned once, into snapshot counts per (table, day);
+    * "now" is the newest day of that aggregate. The global window that
+    * takes it runs in one partition of at most 16 rows per distinct order
+    * date, a size set by the date range, not by the row count; that
+    * partition already satisfies the per-table aggregate above it. */
   def snapshotStats(orders: DataFrame): DataFrame = {
-    val snaps = orders.select(
-      concat(lit("t"), (col("o_orderkey") % 16).cast("string")).as("table_name"),
-      col("o_orderdate").as("created"))
-    // scalar "now" via broadcast cross join — NOT a whole-table window,
-    // which would force every row into one partition at scale
-    val now = snaps.agg(max(col("created")).as("now_ts"))
-    snaps
-      .crossJoin(broadcast(now))
+    val days = orders
+      .groupBy(
+        concat(lit("t"), (col("o_orderkey") % 16).cast("string")).as("table_name"),
+        col("o_orderdate").as("created"))
+      .agg(count(lit(1)).as("n"))
+    days
+      .withColumn("now_ts", max(col("created")).over(Window.partitionBy()))
       .groupBy("table_name")
       .agg(
-        count(lit(1)).as("n_snapshots"),
-        sum(when(datediff(col("now_ts"), col("created")) >= 10, 1L).otherwise(0L)).as("n_old"))
+        sum(col("n")).as("n_snapshots"),
+        sum(when(datediff(col("now_ts"), col("created")) >= 10, col("n")).otherwise(0L)).as("n_old"))
       .filter(col("n_snapshots") >= 5)
   }
 

@@ -4,11 +4,14 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.cluster.ClusterViews
 import graft.reporters.ClusterState
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graftbridge.ListenerBusDrain
 
 /** One admin sweep (the benchmark's `perfbench.AdminSweep.Tools` over one
   * snapshot, then `Caching.release`) in the three caching postures. The
@@ -16,7 +19,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * distributed as before with the broadcast threshold at -1 or caching
   * off; the tools must not throw and must answer the same rows in all
   * three, and by default the single-view window and aggregate tools must
-  * run without a hash shuffle. */
+  * run without a hash shuffle; the reporters read `orders` in one scan,
+  * with the views cached or not. A second sweep over the same snapshot
+  * must find its generated classes in Spark's codegen cache
+  * (`GraftSession.CodegenCacheEntries`) instead of recompiling them. */
 class AdminSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val tools = perfbench.AdminSweep.Tools
@@ -28,23 +34,25 @@ class AdminSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * with the views held as one cached partition. */
   private val measuredJobs = 62
 
-  private case class Sweep(rows: Map[String, Seq[String]], plans: Map[String, DataFrame], jobs: Int)
+  /** Generated classes a repeated default-posture sweep may compile
+    * again. Measured at sf0.001 on `local[4]`: 4 with the cache sized by
+    * `GraftSession`, 273 at Spark's default bound of 100. */
+  private val maxRecompiles = 25
+
+  private case class Sweep(rows: Map[String, Seq[String]], plans: Map[String, DataFrame], jobs: Int,
+      compiles: Long)
+
+  private def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def sweep(): Sweep = {
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    // listener delivery is asynchronous: read the count once it settles
-    def settledJobs(): Int = {
-      var last = -1
-      var now = jobs.get()
-      while (now != last) { Thread.sleep(500); last = now; now = jobs.get() }
-      now
-    }
     Caching.release(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
+      val compiledBefore = compiled()
       val state = ClusterState.fromSf(spark, sf)
       val topo = ClusterViews.topology(spark, sf)
       val out = tools.map { t =>
@@ -55,8 +63,11 @@ class AdminSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       val thrown = out.collect { case (name, scala.util.Failure(e)) => s"$name: $e" }
       assert(thrown.isEmpty, s"tools threw: ${thrown.mkString("; ")}")
-      val n = settledJobs()
-      Sweep(out.map(o => o._1 -> o._2.get._1).toMap, out.map(o => o._1 -> o._2.get._2).toMap, n)
+      val compiles = compiled() - compiledBefore
+      // listener delivery is asynchronous: count once the bus is drained
+      ListenerBusDrain(spark)
+      Sweep(out.map(o => o._1 -> o._2.get._1).toMap, out.map(o => o._1 -> o._2.get._2).toMap,
+        jobs.get(), compiles)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       Caching.release(spark)
@@ -67,6 +78,13 @@ class AdminSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     collect(df.queryExecution.executedPlan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
     }
+
+  /** Parquet scans of the fixture table `table` in `df`'s executed plan
+    * (a reused exchange or query stage is not counted again). */
+  private def scans(df: DataFrame, table: String): Int =
+    collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => s
+    }.size
 
   test("admin sweep: same rows with the views as one partition, distributed or uncached; " +
       "single-view tools run without a hash shuffle") {
@@ -85,9 +103,23 @@ class AdminSweepSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(hashShuffles(distributed.plans(t)).nonEmpty,
         s"$t: distributed views must keep their hash shuffle")
     }
+    for ((posture, run) <- Seq("default" -> default, "uncached" -> uncached)) {
+      val n = scans(run.plans("reporters_run_all"), "orders")
+      assert(n == 1, s"$posture: reporters_run_all scans orders $n times")
+    }
     info(s"jobs per sweep: default ${default.jobs}, threshold -1 ${distributed.jobs}, " +
       s"uncached ${uncached.jobs}")
     assert(default.jobs <= measuredJobs * 11 / 10,
       s"a default sweep ran ${default.jobs} jobs, measured $measuredJobs")
+  }
+
+  test("a repeated sweep over the same snapshot reuses its generated classes") {
+    val first = sweep()
+    val second = sweep()
+    assert(second.rows == first.rows, "a repeated sweep answers other rows")
+    info(s"generated classes compiled: first sweep ${first.compiles}, repeat ${second.compiles}")
+    assert(second.compiles <= maxRecompiles,
+      s"a repeated sweep compiled ${second.compiles} generated classes, at most $maxRecompiles " +
+        "expected: Spark's codegen cache no longer holds one sweep's working set")
   }
 }

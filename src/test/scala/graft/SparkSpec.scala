@@ -22,8 +22,11 @@ trait SparkSpec extends AnyFunSuite {
   /** `body`'s result and the executed plans (as text) of every action it
     * ran — for operators whose eager, driver-local steps read tables the
     * returned lazy plan no longer shows. Listener delivery is
-    * asynchronous, so the bus is drained before the plans are read. */
+    * asynchronous, so the bus is drained before the listener is added
+    * (an action the caller ran just before must not be counted) and again
+    * before the plans are read. */
   def withActionPlans[A](body: => A): (A, Seq[String]) = {
+    org.apache.spark.sql.graftbridge.ListenerBusDrain(spark)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
