@@ -123,35 +123,38 @@ object AnnIndexOps {
     * CENTER — each posting list is its own directory, so a probed search
     * reads only the probed lists (partition pruning is the 100-TB read
     * pattern; a 1000-executor scan touches nprobe·|q| directories, not
-    * the corpus). */
+    * the corpus). A fresh build starts with
+    * [[IndexLifecycle.beginBuild]]: the lease, then every artifact of the
+    * dir's past life deleted. */
   def writeIndex(embeddings: DataFrame, dir: String,
       trainPct: Option[Int] = None): Unit = {
-    // single-writer from the FIRST table write of the build (writeIds
-    // renews the same lease)
-    IndexLifecycle.acquireLease(embeddings.sparkSession, dir)
-    val cents = coarseCentroids(embeddings)
-    val cb = PqOps.trainedResidualCodebook(embeddings, trainPct)
-    BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids")
-    BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook")
+    IndexLifecycle.beginBuild(embeddings.sparkSession, dir)
+    writeArtifacts(embeddings, dir, trainPct, "")
+  }
+
+  /** The five artifacts of `vectors` under `dir`, each table written at
+    * `<table><suffix>` — the live names for a build, the staged ones
+    * ([[IndexLifecycle.Staged]]) for a rebuild. */
+  private def writeArtifacts(vectors: DataFrame, dir: String, trainPct: Option[Int],
+      suffix: String): Unit = {
+    val cents = coarseCentroids(vectors)
+    val cb = PqOps.trainedResidualCodebook(vectors, trainPct)
+    BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids$suffix")
+    BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook$suffix")
     // one encode feeds both the postings write and the train-time error
     // census (cached so the second write reads the materialization)
-    encoded(embeddings, cents, cb) { coded =>
+    encoded(vectors, cents, cb) { coded =>
       BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
-        .partitionBy("center").save(s"$dir/postings")
+        .partitionBy("center").save(s"$dir/postings$suffix")
       // the drift monitor's baseline: what "fits the quantizer" looked
       // like at train time, per posting list
       BulkOps.writePath(errorCensus(coded), SaveMode.Overwrite)
-        .save(s"$dir/err_census")
+        .save(s"$dir/err_census$suffix")
     }
     // the membership sidecar ([[IndexLifecycle]]): every indexed vec_id,
     // the append-idempotence guard's pruned probe target
-    val spark = embeddings.sparkSession
-    IndexLifecycle.writeIds(spark, dir, "vec_id",
-      embeddings.select("vec_id"), embeddings.count())
-    // a FRESH build invalidates any delete log from the dir's past life
-    // (the scratch-dir reuse path would otherwise mask live rows)
-    if (BulkOps.fileExists(spark, s"$dir/tombstones"))
-      BulkOps.deletePath(spark, s"$dir/tombstones")
+    IndexLifecycle.writeIds(vectors.sparkSession, dir, "vec_id",
+      vectors.select("vec_id"), vectors.count(), suffix)
   }
 
   /** `body` over the corpus encoded with its per-subspace error: the
@@ -211,59 +214,41 @@ object AnnIndexOps {
     }
   }
 
-  /** The drift REMEDY — retrain-and-swap, closing the maintenance loop
-    * that [[quantizerDrift]] opens: when the alarm fires, the stored
-    * index holds only CODES, so the fix is a fresh quantizer trained on
-    * the CURRENT corpus (the caller supplies it — the index cannot
-    * reconstruct vectors from codes), a full re-encode, and a crash-safe
-    * swap of all five artifacts via [[IndexLifecycle.rebuildTables]].
-    * Unlike compaction (row-identical rewrite, any old/new table mix
-    * serves the same answer), a rebuild's tables are only consistent
-    * TOGETHER — postings coded against the new codebook are garbage
-    * under the old centroids — so the swap is journaled (`rebuild_commit`
-    * marker) and rolls FORWARD on crash: before the marker the live
-    * index never changed; after it, recovery completes every remaining
-    * swap. Post-conditions: serving ≡ a fresh [[writeIndex]] over the
-    * surviving corpus (the differential AnnIndexSpec pins), the
-    * err_census baseline resets (so `drift_e4` returns to ~10⁴ for
-    * in-distribution batches — the round-trip test), tombstoned ids are
-    * consumed (the rebuild encodes survivors only, like a compaction),
-    * and the ids sidecar is rewritten from the corpus.
-    * Reference analogue: the rebuild-then-swap discipline of
-    * api/common/HBaseStaticHelper.java:41-78 (replaceTable with
-    * backup). */
   /** Every artifact a [[rebuildIndex]] replaces — the consistency unit
     * of the retrain-and-swap journal. */
   private val RebuildSet =
     Seq("centroids", "codebook", "postings", "err_census", "ids", "ids_meta")
 
+  /** The drift REMEDY — retrain-and-swap, closing the maintenance loop
+    * that [[quantizerDrift]] opens: when the alarm fires, the stored
+    * index holds only CODES, so the fix is a fresh quantizer trained on
+    * the CURRENT corpus (the caller supplies it — the index cannot
+    * reconstruct vectors from codes), a full re-encode, and a crash-safe
+    * swap of all six artifacts through the major fold's commit
+    * ([[IndexLifecycle.rebuildTables]]): each is staged as
+    * `<table>_compact`, one `fold_commit` journal names them, then the
+    * checked swaps run. Unlike compaction (row-identical rewrite, any
+    * old/new table mix serves the same answer), a rebuild's tables are
+    * only consistent TOGETHER — postings coded against the new codebook
+    * are garbage under the old centroids — so a crash rolls FORWARD:
+    * before the journal the live index never changed; after it, the next
+    * [[compactIndex]] or rebuild completes every remaining swap. A
+    * crashed fold's journal is recovered first, so it can never swap its
+    * copies over the rebuilt tables. Post-conditions: serving ≡ a fresh
+    * [[writeIndex]] over the surviving corpus (the differential
+    * AnnIndexSpec pins), the err_census baseline resets (so `drift_e4`
+    * returns to ~10⁴ for in-distribution batches — the round-trip test),
+    * the corpus minus the tombstoned ids the journal consumes is encoded
+    * (like a compaction), and the ids sidecar is rewritten from it.
+    * Reference analogue: the rebuild-then-swap discipline of
+    * api/common/HBaseStaticHelper.java:41-78 (replaceTable with
+    * backup). */
   def rebuildIndex(spark: SparkSession, dir: String, corpus: DataFrame,
-      trainPct: Option[Int] = None): Unit = {
-    val live = tombstonesOpt(spark, dir)
-      .fold(corpus)(t => corpus.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    IndexLifecycle.rebuildTables(spark, dir, RebuildSet) {
-      val cents = coarseCentroids(live)
-      val cb = PqOps.trainedResidualCodebook(live, trainPct)
-      BulkOps.writePath(cents, SaveMode.Overwrite).save(s"$dir/centroids_new")
-      BulkOps.writePath(cb, SaveMode.Overwrite).save(s"$dir/codebook_new")
-      encoded(live, cents, cb) { coded =>
-        BulkOps.writePath(coded.select("center", "vec_id", "sub", "code"), SaveMode.Overwrite)
-          .partitionBy("center").save(s"$dir/postings_new")
-        BulkOps.writePath(errorCensus(coded), SaveMode.Overwrite)
-          .save(s"$dir/err_census_new")
-      }
-      // the sidecar pair stages through a scratch dir: writeIds owns the
-      // (ids, ids_meta) layout, and the staged copies swap in atomically
-      // with the rest
-      IndexLifecycle.writeIds(spark, s"$dir/rebuild_stage", "vec_id",
-        live.select("vec_id"), live.count())
-      require(BulkOps.renamePath(spark, s"$dir/rebuild_stage/ids", s"$dir/ids_new") &&
-        BulkOps.renamePath(spark, s"$dir/rebuild_stage/ids_meta", s"$dir/ids_meta_new"),
-        s"rebuild: could not stage the ids sidecar under $dir")
-      BulkOps.deletePath(spark, s"$dir/rebuild_stage")
+      trainPct: Option[Int] = None): Unit =
+    IndexLifecycle.rebuildTables(spark, dir, "vec_id", RebuildSet) { tomb =>
+      val live = tomb.fold(corpus)(t => corpus.join(broadcast(t), Seq("vec_id"), "left_anti"))
+      writeArtifacts(live, dir, trainPct, IndexLifecycle.Staged)
     }
-    IndexLifecycle.clearMemos()
-  }
 
   /** Quantizer-drift monitor — the maintenance alarm for an append-only
     * stored index: batches ingested via [[appendToIndex]] are coded
@@ -363,17 +348,15 @@ object AnnIndexOps {
     * compact. The stored train-time `err_census` is deliberately
     * untouched: it is the QUANTIZER's baseline, not a row census —
     * resetting it is [[rebuildIndex]]'s job. Machinery shared across all
-    * three stored indexes: [[IndexLifecycle.compactTables]]. */
-  def compactIndex(spark: SparkSession, dir: String): Boolean = {
-    // a crashed REBUILD recovers first (roll forward past its commit
-    // marker, or discard its staged copies) — compaction must never run
-    // against a half-swapped quantizer set
-    IndexLifecycle.recoverRebuild(spark, dir, RebuildSet)
+    * three stored indexes: [[IndexLifecycle.compactTables]], whose
+    * preamble first recovers a crashed fold or rebuild from its journal
+    * (roll forward past it, or discard the staged copies), so compaction
+    * never runs against a half-swapped quantizer set. */
+  def compactIndex(spark: SparkSession, dir: String): Boolean =
     IndexLifecycle.compactTables(spark, dir, "vec_id", Seq(
       ("postings", Seq("center"), df =>
         df.withColumn("center", col("center").cast("long"))
           .select("center", "vec_id", "sub", "code"))))
-  }
 
   /** Read the stored artifacts back. The partition column comes back as
     * the discovery-inferred integer type — normalized to the written
@@ -441,7 +424,7 @@ object AnnIndexOps {
     // stopped firing once the probe side became a materialized bounded
     // relation, and by-construction pruning is the stronger claim anyway.
     val probedCenters = probes.select("center")
-      .collect().map(_.getLong(0).toInt).distinct.toSeq
+      .collect().map(_.getLong(0)).distinct.toSeq
     val postings = IndexLifecycle.servingHandle(spark, dir, "postings")
       .filter(col("center").isin(probedCenters: _*))
       .withColumn("center", col("center").cast("long"))

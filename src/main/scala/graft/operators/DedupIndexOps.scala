@@ -99,17 +99,15 @@ object DedupIndexOps {
     * absent, exactly as they are invisible to [[DedupOps.minhashLsh]] —
     * they still COMMIT to the ids sidecar (the index is the authority on
     * ids), so a redelivered sub-shingle doc is skipped, not retried.
-    * A fresh build invalidates any tombstone log and pending protocol
-    * state from the dir's past life (the [[AnnIndexOps.writeIndex]]
-    * discipline). */
+    * A fresh build starts with [[IndexLifecycle.beginBuild]]: the lease,
+    * then every artifact of the dir's past life deleted (journal, staged
+    * copies, deltas, id logs, pending markers). */
   def writeIndex(docs: DataFrame, dir: String,
       numPerms: Int = DedupOps.MinhashK, bandSize: Int = DedupOps.BandSize): Unit = {
     require(numPerms > 0 && bandSize > 0 && numPerms % bandSize == 0,
       s"numPerms ($numPerms) must be a positive multiple of bandSize ($bandSize)")
     val spark = docs.sparkSession
-    // single-writer from the FIRST table write of the build, not just
-    // from the sidecar onward (writeIds renews the same lease)
-    IndexLifecycle.acquireLease(spark, dir)
+    IndexLifecycle.beginBuild(spark, dir)
     // the wide minima frame feeds the count and both table writes; its
     // cache entry ends with them
     val meta = Caching.withCached(
@@ -142,17 +140,10 @@ object DedupIndexOps {
         SaveMode.Overwrite)
       .save(s"$dir/meta")
     metaMemo.put(dir, meta)
-    // a fresh build supersedes delta segments from the dir's past life
-    Seq("mins_delta", "sigs_delta").foreach { d =>
-      if (BulkOps.fileExists(spark, s"$dir/$d"))
-        BulkOps.deletePath(spark, s"$dir/$d")
-    }
     // the sidecar commits EVERY doc id (unsignable docs too — the index
     // is the authority on ids, so their redelivery skips), so its dial
     // sizes from the FULL doc count, not the signable count
     IndexLifecycle.writeIds(spark, dir, "doc_id", docs.select("doc_id"), docs.count())
-    if (BulkOps.fileExists(spark, s"$dir/tombstones"))
-      BulkOps.deletePath(spark, s"$dir/tombstones")
   }
 
   // the dial row per index dir, read once per JVM for SERVES; mutation
@@ -168,8 +159,8 @@ object DedupIndexOps {
 
   private def loadMeta(spark: SparkSession, dir: String): IndexMeta = {
     val r = BulkOps.readPath(spark, s"$dir/meta", Some(MetaSchema)).head()
-    IndexMeta(r.getLong(0).toInt, r.getLong(1).toInt,
-      r.getLong(2).toInt, r.getLong(3).toInt)
+    val dial = (i: Int) => Math.toIntExact(r.getLong(i))
+    IndexMeta(dial(0), dial(1), dial(2), dial(3))
   }
 
   private def readMetaFresh(spark: SparkSession, dir: String): IndexMeta = {
@@ -374,7 +365,7 @@ object DedupIndexOps {
     // broadcast candidate list prunes rows within them. The mb set reads
     // off the driver-held candidate rows (no job).
     val mbs = cand.select(pmod(col("dup_of"), lit(meta.minsParts.toLong)))
-      .collect().map(_.getLong(0).toInt).distinct.toSeq
+      .collect().map(_.getLong(0)).distinct.toSeq
     IndexLifecycle.tableWithDelta(spark, dir, "mins", masks)(df =>
       df.filter(col("mb").isin(mbs: _*)).select("doc_id", "k", "mh"))
       .select(col("doc_id").as("dup_of"), col("k"), col("mh").as("mh_old"))
@@ -527,9 +518,10 @@ object DedupIndexOps {
   /** The MAJOR fold by name, whatever the size rule says: rewrite `mins`
     * and `sigs` (each keeping its partitioning, so pruned serves are
     * unchanged after the swap) and the ids sidecar minus every masked doc
-    * (tombstones and base mask), swap each in crash-safely
-    * ([[IndexLifecycle.swapCompacted]] — rename aside, rename in, every
-    * step checked), purge both logs. Returns false on no-op. */
+    * (tombstones and base mask), swap each in crash-safely through the
+    * journaled commit every rewrite shares ([[IndexLifecycle.compactTables]]
+    * — rename aside, rename in, every step checked), purge both logs.
+    * Returns false on no-op. */
   def majorCompactIndex(spark: SparkSession, dir: String): Boolean = {
     readMetaFresh(spark, dir)
     IndexLifecycle.compactTables(spark, dir, "doc_id", FoldTables)

@@ -111,15 +111,20 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * [[MajorMaskShare]] of them; else the minor one. The rule reads the
   * base's stored row count and parquet footers on the driver: no job.
   *
-  * Crash windows: both folds stage their output beside the live files,
-  * then write the `fold_commit` journal — the point of no return. A
-  * crash before it discards the staged copies at the next fold; a crash
-  * after it rolls forward there ([[recoverFold]]): consumed segments
-  * are deleted before merged ones move in, so a serve in the window can
-  * only under-report the freshest appends, never count a row twice.
-  * Appends refuse while a journal is pending. Each window has a
-  * `maybeCrash` step and a named crash spec (IndexLifecycleSpec,
-  * DedupIndexSpec).
+  * Crash windows: every multi-table rewrite (the minor fold, the major
+  * fold and the ANN rebuild) stages its output beside the live files
+  * (`<t>_compact`, a minor fold `<t>_delta_fold`), then writes ONE
+  * driver-written `fold_commit` journal that names the staged tables and
+  * the consumed files: the point of no return. A crash before it leaves
+  * staged copies the next fold or rebuild discards; a crash after it
+  * rolls forward there ([[recoverFold]], which reads the tables from the
+  * journal). Consumed segments are deleted before merged ones move in,
+  * so a serve in the window can only under-report the freshest appends,
+  * never count a row twice. Appends refuse while a journal is pending,
+  * and a fresh build ([[beginBuild]]) deletes it with every other
+  * artifact of the dir's past life. Each window has a `maybeCrash` step
+  * and a named crash spec (IndexLifecycleSpec, DedupIndexSpec,
+  * AnnIndexSpec).
   *
   * Reference analogue: the write-then-verify-then-swap discipline of
   * api/common/HBaseStaticHelper.java:41-78 (replaceTable with backup),
@@ -159,30 +164,22 @@ object IndexLifecycle {
   val IdsMinParts = 16
   val IdsMaxParts = 4096
 
-  // id_parts per sidecar dir, memoized for the day someone adds a pure
-  // probe path; every MUTATION re-reads the stored row at entry
-  // ([[appendGuarded]]) and re-primes, so a dir rewritten at a different
-  // dial by another process cannot corrupt an append (the dedup
-  // meta-dial discipline, regression-tested in IndexLifecycleSpec).
-  private val idsMetaMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   private val IdsMetaSchema = StructType.fromDDL("id_parts BIGINT")
 
-  private def readIdParts(spark: SparkSession, dir: String): Int = {
-    val n = BulkOps.readPath(spark, s"$dir/ids_meta", Some(IdsMetaSchema))
-      .select("id_parts").head().getLong(0).toInt
-    idsMetaMemo.put(dir, n)
-    n
-  }
+  /** The sidecar's stored `id_parts` dial, read fresh: every mutation
+    * re-reads it at entry, so a dir rewritten at a different dial by
+    * another process cannot corrupt an append (regression-tested in
+    * IndexLifecycleSpec). */
+  private def readIdParts(spark: SparkSession, dir: String): Int =
+    Math.toIntExact(BulkOps.readPath(spark, s"$dir/ids_meta", Some(IdsMetaSchema))
+      .select("id_parts").head().getLong(0))
 
   /** Drop every per-JVM per-dir memo of the stored indexes: the dedup
-    * `meta` dials, the sidecar `ids_meta` dials, the sidecar file
-    * listings and the serving handles. A long-lived process whose index
-    * dirs another process rewrote out-of-band calls this before serving
-    * from them again (DEPLOY.md). */
+    * `meta` dials, the sidecar file listings and the serving handles. A
+    * long-lived process whose index dirs another process rewrote
+    * out-of-band calls this before serving from them again (DEPLOY.md). */
   def clearMemos(): Unit = {
     DedupIndexOps.metaMemo.clear()
-    idsMetaMemo.clear()
     idsListingMemo.clear()
     handles.clear()
     handleSchemas.clear()
@@ -308,8 +305,9 @@ object IndexLifecycle {
   }
 
   /** Acquire or renew `dir`'s single-writer mutation lease — the FIRST
-    * step of every mutation entry point ([[writeIds]]/[[appendGuarded]]/
-    * [[compactTables]]/[[rebuildTables]] and each index's `writeIndex`).
+    * step of every mutation entry point: [[beginBuild]] (each index's
+    * `writeIndex`), [[appendGuarded]], the folds ([[foldTiered]],
+    * [[compactTables]]) and [[rebuildTables]].
     * Two concurrent appenders could both classify an id as fresh and
     * double-write its rows, so the second writer must refuse LOUDLY —
     * this enforces what used to be a trust-based deployment contract.
@@ -507,34 +505,51 @@ object IndexLifecycle {
     ids.select(col(idCol).cast("long").as(idCol))
       .withColumn("ib", pmod(col(idCol), lit(parts.toLong)))
 
-  /** (Re)create the sidecar for a FRESH build: every id of the initial
-    * corpus is committed by construction. Also resets the protocol state
-    * (pending markers) from the dir's past life. `expectedN` sizes the
-    * partition dial. */
+  /** The staged-copy suffix of every multi-table rewrite: a fold or a
+    * rebuild writes `<t>_compact` beside the live `<t>` and swaps it in
+    * after its journal ([[commitRewrite]]). */
+  private[operators] val Staged = "_compact"
+
+  /** Artifacts of a dir's past life that a fresh build deletes: the
+    * journal, id logs and pending markers by name, staged and aside
+    * copies and delta segments by suffix. */
+  private val PastLife = Set("fold_commit", "tombstones", BaseMask, "pending")
+  private val PastLifeSuffixes = Seq(Staged, "_old", "_delta", "_delta_fold")
+
+  /** The first step of every FRESH build (each index's `writeIndex`):
+    * take the lease, then delete every artifact of the dir's past life
+    * ([[PastLife]]): their rows and journals belong to the index the
+    * build replaces, so a stale journal can never swap old tables over
+    * the new index, nor a stale log mask its rows. */
+  def beginBuild(spark: SparkSession, dir: String): Unit = {
+    acquireLease(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val f = hadoopFs(spark, p)
+    f.listStatus(p).map(_.getPath)
+      .filter(c => PastLife(c.getName) || PastLifeSuffixes.exists(c.getName.endsWith))
+      .foreach(f.delete(_, true))
+    invalidateHandles(dir)
+  }
+
+  /** Write the sidecar of a fresh corpus: every id is committed by
+    * construction. `expectedN` sizes the partition dial. A build runs
+    * [[beginBuild]] first; a rebuild writes the [[Staged]] pair
+    * (`suffix`). */
   def writeIds(spark: SparkSession, dir: String, idCol: String,
-      ids: DataFrame, expectedN: Long): Unit = {
+      ids: DataFrame, expectedN: Long, suffix: String = ""): Unit = {
     // a partitioned write of zero rows produces a directory no reader
     // can infer a schema from — an empty corpus is "no index", refused
     // loudly here so every index family inherits the guard
     require(expectedN > 0,
       s"writeIds: empty id set — refusing to write an unreadable sidecar at $dir")
-    acquireLease(spark, dir)
     val parts = sizedParts(expectedN, IdsRowsPerPart, IdsMinParts, IdsMaxParts)
     BulkOps.writePath(withIb(ids, idCol, parts).repartition(col("ib")), SaveMode.Overwrite)
-      .partitionBy("ib").save(s"$dir/ids")
-    writeRowCount(spark, s"$dir/ids", expectedN)
+      .partitionBy("ib").save(s"$dir/ids$suffix")
+    writeRowCount(spark, s"$dir/ids$suffix", expectedN)
     import spark.implicits._
     BulkOps.writePath(Seq(parts.toLong).toDF("id_parts"), SaveMode.Overwrite)
-      .save(s"$dir/ids_meta")
-    idsMetaMemo.put(dir, parts)
+      .save(s"$dir/ids_meta$suffix")
     invalidateHandles(dir)
-    if (BulkOps.fileExists(spark, s"$dir/pending"))
-      BulkOps.deletePath(spark, s"$dir/pending")
-    // a fresh build supersedes any delta segments and base mask from the
-    // dir's past life (their rows belong to the replaced index)
-    Seq("ids_delta", BaseMask).foreach { d =>
-      if (BulkOps.fileExists(spark, s"$dir/$d")) BulkOps.deletePath(spark, s"$dir/$d")
-    }
   }
 
   /** The ids of `candidates` already committed to the index — the
@@ -654,8 +669,7 @@ object IndexLifecycle {
     // will consume exactly the files the journal names, so new segments
     // must not land beside them — refuse until a compact/rebuild entry
     // point has rolled the journal forward (the rebuild serve contract)
-    require(!BulkOps.fileExists(spark, s"$dir/fold_commit") &&
-        !BulkOps.fileExists(spark, s"$dir/rebuild_commit"),
+    require(!BulkOps.fileExists(spark, s"$dir/fold_commit"),
       s"a crashed maintenance operation left its journal under $dir — run the " +
         "index's compact/rebuild entry point to recover before appending")
     acquireLease(spark, dir)
@@ -807,13 +821,11 @@ object IndexLifecycle {
         df.withColumn("ib", col("ib").cast("long"))))
     else tables
 
-  /** Every fold's preamble: the lease, then roll a crashed fold forward
-    * (its journal decides whether its output committed), then legacy
-    * per-table swap recovery. */
-  private def foldPreamble(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
+  /** Every fold's preamble: the lease, then crash recovery
+    * ([[recoverFold]]). */
+  private def foldPreamble(spark: SparkSession, dir: String): Unit = {
     acquireLease(spark, dir)
-    recoverFold(spark, dir, names)
-    names.foreach(t => recoverSwap(spark, s"$dir/$t"))
+    recoverFold(spark, dir)
   }
 
   /** The TIERED fold behind the dedup index's `compactIndex` — the HBase
@@ -832,8 +844,7 @@ object IndexLifecycle {
     * always takes the major path, which refuses. Returns false on no-op. */
   private[operators] def foldTiered(spark: SparkSession, dir: String, idCol: String,
       tables: Seq[(String, Seq[String], DataFrame => DataFrame)]): Boolean = {
-    val names = withSidecar(spark, dir, tables).map(_._1)
-    foldPreamble(spark, dir, names)
+    foldPreamble(spark, dir)
     val rows = (files: Seq[String]) => BulkOps.footerRows(spark, files)
     val major = (readRowCount(spark, s"$dir/ids"),
         rows(listFlatDir(spark, s"$dir/ids_delta")),
@@ -842,8 +853,8 @@ object IndexLifecycle {
         delta >= MajorDeltaRatio * base || masked >= MajorMaskShare * base
       case _ => true
     }
-    if (major) compactTables(spark, dir, idCol, tables)
-    else minorFold(spark, dir, idCol, names)
+    if (major) majorFold(spark, dir, idCol, tables)
+    else minorFold(spark, dir, idCol, withSidecar(spark, dir, tables).map(_._1))
   }
 
   /** Read the flat segment `files` of `path`: at `schema`, else at the
@@ -867,14 +878,33 @@ object IndexLifecycle {
     obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
   }
 
+  /** The `fold_commit` journal: (log, file) rows. `("table", t)` names a
+    * staged table, `("minor", "")` marks a minor fold, and every other
+    * row is a consumed file under its log dir (`<t>_delta`,
+    * `tombstones`, `base_mask`). */
   private val JournalSchema = StructType.fromDDL("log STRING, file STRING")
+  private type Journal = Seq[(String, String)]
+
+  private def journalTables(j: Journal): Seq[String] = j.collect { case ("table", t) => t }
+  private def journalFiles(j: Journal, log: String): Seq[String] =
+    j.collect { case (l, f) if l == log => f }
+
+  /** The files a rewrite of `tables` consumes, listed eagerly: each
+    * table's delta segments and both id logs. Tombstone appends are
+    * lock-free by design, so a tombstone (or, after a crash and a lease
+    * takeover, a delta segment) arriving later must SURVIVE the rewrite:
+    * the journal names exactly these files, and both the forward path
+    * and recovery delete exactly these, never a whole directory. */
+  private def consumedBy(spark: SparkSession, dir: String, tables: Seq[String]): Journal =
+    (tables.map(t => s"${t}_delta") ++ Seq("tombstones", BaseMask))
+      .flatMap(l => listFlatDir(spark, s"$dir/$l").map(f => (l, f)))
 
   /** Write a fold's `fold_commit` journal. Under the default seam it is
     * ONE parquet file written beside and renamed into place by the
     * driver (no job), so it exists only once whole: a crash mid-write
     * leaves no journal, never an empty one that recovery would read as
     * "roll forward, nothing consumed". */
-  private def writeJournal(spark: SparkSession, dir: String, rows: Seq[(String, String)]): Unit =
+  private def writeJournal(spark: SparkSession, dir: String, rows: Journal): Unit =
     if (!BulkOps.writeFileDirect(spark, s"$dir/fold_commit",
         "optional binary log (STRING); optional binary file (STRING);", rows)(
         (g, r) => g.append("log", r._1).append("file", r._2))) {
@@ -886,14 +916,15 @@ object IndexLifecycle {
     * segment minus the tombstoned ids, and move the consumed tombstone
     * files, by rename, into the [[BaseMask]] log, which masks base rows
     * only. The partitioned base tables are untouched, so their open
-    * serving handles stay valid. Crash discipline, the [[compactTables]]
-    * journal's: each merged segment is staged as `<t>_delta_fold`, then
-    * the `fold_commit` journal (marked `minor`) names the consumed
-    * segment and tombstone files — before it a crash discards the staged
-    * copies, after it recovery completes the fold ([[finishMinor]]).
-    * Late files (a lock-free tombstone, a post-takeover segment) are not
-    * in the journal and survive. The caller ran [[foldPreamble]].
-    * Returns false on no-op: no tombstone, at most one segment a table. */
+    * serving handles stay valid. Crash discipline, the major fold's
+    * journal: each merged segment is staged as `<t>_delta_fold`, then
+    * the `fold_commit` journal (marked `minor`) names the merged tables
+    * and the consumed segment and tombstone files — before it a crash
+    * discards the staged copies, after it recovery completes the fold
+    * ([[finishMinor]]). Late files (a lock-free tombstone, a
+    * post-takeover segment) are not in the journal and survive. The
+    * caller ran [[foldPreamble]]. Returns false on no-op: no tombstone,
+    * at most one segment a table. */
   private def minorFold(spark: SparkSession, dir: String, idCol: String,
       names: Seq[String]): Boolean = {
     val segs = names.map(t => t -> listFlatDir(spark, s"$dir/${t}_delta")).toMap
@@ -920,12 +951,12 @@ object IndexLifecycle {
       }
     }
     maybeCrash("fold_minor_stage")
-    val consumed = ("minor", "") +:
-      (merging.flatMap(t => segs(t).map(f => (s"${t}_delta", f))) ++
-        tombFiles.map(f => ("tombstones", f)))
-    writeJournal(spark, dir, consumed)
+    val journal = ("minor", "") +: (merging.map(t => ("table", t)) ++
+      merging.flatMap(t => segs(t).map(f => (s"${t}_delta", f))) ++
+      tombFiles.map(f => ("tombstones", f)))
+    writeJournal(spark, dir, journal)
     maybeCrash("fold_minor_commit")
-    finishMinor(spark, dir, names, consumed)
+    finishMinor(spark, dir, journal)
     // only the delta side changed: drop its handles and refresh the
     // sidecar's delta inventory; the base handles stay open
     names.foreach(t => handles.remove(s"$dir/${t}_delta"))
@@ -935,16 +966,15 @@ object IndexLifecycle {
   }
 
   /** The committed half of a minor fold, idempotent (the forward path and
-    * recovery both run it): per table, delete the consumed segments
-    * FIRST and then move the merged segment in — a crash window can only
-    * under-report the freshest appends, never double-count a row — and
-    * last move the consumed tombstones into [[BaseMask]]: by then every
-    * delta row they named is gone, so the base-only mask they become
-    * hides nothing the delta serves. */
-  private def finishMinor(spark: SparkSession, dir: String, names: Seq[String],
-      consumed: Seq[(String, String)]): Unit = {
-    names.foreach { t =>
-      consumed.collect { case (l, f) if l == s"${t}_delta" => f }.foreach(deleteFile(spark, _))
+    * recovery both run it): per journaled table, delete the consumed
+    * segments FIRST and then move the merged segment in — a crash window
+    * can only under-report the freshest appends, never double-count a
+    * row — and last move the consumed tombstones into [[BaseMask]]: by
+    * then every delta row they named is gone, so the base-only mask they
+    * become hides nothing the delta serves. */
+  private def finishMinor(spark: SparkSession, dir: String, journal: Journal): Unit = {
+    journalTables(journal).foreach { t =>
+      journalFiles(journal, s"${t}_delta").foreach(deleteFile(spark, _))
       moveFiles(spark, s"$dir/${t}_delta_fold", s"$dir/${t}_delta",
         listFlatDir(spark, s"$dir/${t}_delta_fold"))
       if (BulkOps.fileExists(spark, s"$dir/${t}_delta_fold"))
@@ -952,8 +982,7 @@ object IndexLifecycle {
       dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
       maybeCrash(s"fold_minor_delta_$t")
     }
-    moveFiles(spark, s"$dir/tombstones", s"$dir/$BaseMask",
-      consumed.collect { case ("tombstones", f) => f })
+    moveFiles(spark, s"$dir/tombstones", s"$dir/$BaseMask", journalFiles(journal, "tombstones"))
     maybeCrash("fold_minor_mask")
     dropLogDirIfEmpty(spark, s"$dir/tombstones")
     BulkOps.deletePath(spark, s"$dir/fold_commit")
@@ -975,18 +1004,14 @@ object IndexLifecycle {
     * three stored indexes: the ANN and BM25 `compactIndex` (their appends
     * write the base directly, so they always fold this way) and the
     * dedup index's tiered fold when a full rewrite pays. Runs when a
-    * tombstone, base-mask or delta file exists: rewrite each table as
+    * tombstone, base-mask or delta file exists: stage each table as
     * (base minus `tombstones ∪ base_mask` ids) ∪ (delta minus
-    * `tombstones` ids) BESIDE the live copy (preserving its
-    * partitioning), journal the fold (`fold_commit` — the roll-FORWARD
-    * point, the [[rebuildTables]] discipline: fold moves rows BETWEEN
-    * tables, so per-table recovery alone cannot decide whether a delta
-    * was consumed), then per table delete its delta and checked-swap the
-    * compacted copy in, then delete the consumed tombstone and base-mask
-    * files. The ids SIDECAR folds with the data tables (a tombstoned id
-    * leaves the sidecar exactly when its rows leave the index) and its
-    * compacted copy records its row count (`_rows`, read by
-    * [[foldTiered]]). Returns false on no-op.
+    * `tombstones` ids) in `<t>_compact`, keeping its partitioning, then
+    * commit through the journaled swap every rewrite shares
+    * ([[commitRewrite]]). The ids SIDECAR folds with the data tables (a
+    * tombstoned id leaves the sidecar exactly when its rows leave the
+    * index) and its compacted copy records its row count (`_rows`, read
+    * by [[foldTiered]]). Returns false on no-op.
     * A compaction that would empty a table is refused before the
     * journal, its staged copies deleted: a partitioned write of zero rows
     * produces a directory no reader can infer a schema from — deleting
@@ -996,87 +1021,133 @@ object IndexLifecycle {
   private[operators] def compactTables(
       spark: SparkSession, dir: String, idCol: String,
       tables: Seq[(String, Seq[String], DataFrame => DataFrame)]): Boolean = {
+    foldPreamble(spark, dir)
+    majorFold(spark, dir, idCol, tables)
+  }
+
+  /** [[compactTables]] after its preamble. */
+  private def majorFold(spark: SparkSession, dir: String, idCol: String,
+      tables: Seq[(String, Seq[String], DataFrame => DataFrame)]): Boolean = {
     val withIds = withSidecar(spark, dir, tables)
     val names = withIds.map(_._1)
-    foldPreamble(spark, dir, names)
-    // the CONSUMED FILES, listed eagerly: tombstone appends are
-    // lock-free by design, so a tombstone (or, after a crash + lease
-    // takeover, a delta segment) arriving later must SURVIVE this fold —
-    // the journal names exactly these files and both the normal path and
-    // recovery delete exactly these, never a whole directory
-    val segs: Map[String, Seq[String]] =
-      names.map(t => t -> listFlatDir(spark, s"$dir/${t}_delta")).toMap
-    val tombFiles = listFlatDir(spark, s"$dir/tombstones")
-    val maskFiles = listFlatDir(spark, s"$dir/$BaseMask")
-    if (tombFiles.isEmpty && maskFiles.isEmpty && segs.values.forall(_.isEmpty)) false
-    else {
-      val masks = new Masks(idCol, idFrame(spark, idsIn(spark, tombFiles, idCol), idCol),
-        idsIn(spark, maskFiles, idCol).distinct)
-      lazy val idParts = readIdParts(spark, dir)
-      withIds.zipWithIndex.foreach { case ((t, partCols, normalize), i) =>
-        // at a known schema where there is one (no inference job): the
-        // sidecar's is fixed, a served table's its handle remembers
-        val known =
-          if (t == "ids") Some(idLogSchema(idCol).add("ib", LongType))
-          else Option(handleSchemas.get(s"$dir/$t"))
-        val base = masks.onBase(normalize(BulkOps.readPath(spark, s"$dir/$t", known)))
-        val full =
-          if (segs(t).isEmpty) base
-          else {
-            val d0 = readSegments(spark, s"$dir/${t}_delta", segs(t),
-              if (t == "ids") Some(idLogSchema(idCol)) else None)
-            // the ids delta is flat (idCol only) — bucket it at the
-            // stored dial before it joins the partitioned base
-            val d = if (t == "ids")
-              d0.withColumn("ib", pmod(col(idCol).cast("long"), lit(idParts.toLong)))
-            else d0
-            base.unionByName(masks.onDelta(normalize(d)))
-          }
-        // clustered by the partition columns first (the writeIndex /
-        // writeIds discipline): one file per directory, so the file
-        // count tracks the directory count instead of growing by one
-        // read task's worth per directory every fold
-        val n = countedWrite(full, s"fold_major_$t") { keep =>
-          if (partCols.isEmpty) BulkOps.writePath(keep, SaveMode.Overwrite).save(s"$dir/${t}_compact")
-          else BulkOps.writePath(keep.repartition(partCols.map(col): _*), SaveMode.Overwrite)
-            .partitionBy(partCols: _*).save(s"$dir/${t}_compact")
+    val consumed = consumedBy(spark, dir, names)
+    if (consumed.isEmpty) return false
+    val masks = new Masks(idCol,
+      idFrame(spark, idsIn(spark, journalFiles(consumed, "tombstones"), idCol), idCol),
+      idsIn(spark, journalFiles(consumed, BaseMask), idCol).distinct)
+    lazy val idParts = readIdParts(spark, dir)
+    withIds.zipWithIndex.foreach { case ((t, partCols, normalize), i) =>
+      // at a known schema where there is one (no inference job): the
+      // sidecar's is fixed, a served table's its handle remembers
+      val known =
+        if (t == "ids") Some(idLogSchema(idCol).add("ib", LongType))
+        else Option(handleSchemas.get(s"$dir/$t"))
+      val base = masks.onBase(normalize(BulkOps.readPath(spark, s"$dir/$t", known)))
+      val segs = journalFiles(consumed, s"${t}_delta")
+      val full =
+        if (segs.isEmpty) base
+        else {
+          val d0 = readSegments(spark, s"$dir/${t}_delta", segs,
+            if (t == "ids") Some(idLogSchema(idCol)) else None)
+          // the ids delta is flat (idCol only) — bucket it at the
+          // stored dial before it joins the partitioned base
+          val d = if (t == "ids")
+            d0.withColumn("ib", pmod(col(idCol).cast("long"), lit(idParts.toLong)))
+          else d0
+          base.unionByName(masks.onDelta(normalize(d)))
         }
-        if (n == 0) {
-          withIds.take(i + 1).foreach { case (s, _, _) =>
-            BulkOps.deletePath(spark, s"$dir/${s}_compact") }
-          throw new IllegalArgumentException(
-            s"compaction would empty $dir/$t — drop the index instead")
-        }
-        if (t == "ids") writeRowCount(spark, s"$dir/ids_compact", n)
+      // clustered by the partition columns first (the writeIndex /
+      // writeIds discipline): one file per directory, so the file
+      // count tracks the directory count instead of growing by one
+      // read task's worth per directory every fold
+      val n = countedWrite(full, s"fold_major_$t") { keep =>
+        if (partCols.isEmpty) BulkOps.writePath(keep, SaveMode.Overwrite).save(s"$dir/$t$Staged")
+        else BulkOps.writePath(keep.repartition(partCols.map(col): _*), SaveMode.Overwrite)
+          .partitionBy(partCols: _*).save(s"$dir/$t$Staged")
       }
-      // the fold journal — the point of no return: from here, recovery
-      // COMPLETES every remaining file deletion and swap; before it,
-      // stale _compact copies discard (the live base+delta are intact)
-      writeJournal(spark, dir,
-        segs.toSeq.flatMap { case (t, fs) => fs.map(f => (t, f)) } ++
-          tombFiles.map(f => ("tombstones", f)) ++ maskFiles.map(f => (BaseMask, f)))
-      maybeCrash("fold_commit")
-      withIds.foreach { case (t, _, _) =>
-        // consumed segments first: their rows live in the compacted
-        // copy, so a crash window can only UNDER-report the freshest
-        // appends to in-flight serves — never double-count rows, which
-        // would corrupt the signature-agreement estimates; recovery
-        // closes the window at the next lifecycle entry point
-        segs(t).foreach(f => deleteFile(spark, f))
-        dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
-        maybeCrash(s"fold_delta_$t")
-        swapCompacted(spark, s"$dir/$t")
-        maybeCrash(s"fold_swap_$t")
+      if (n == 0) {
+        withIds.take(i + 1).foreach { case (s, _, _) =>
+          BulkOps.deletePath(spark, s"$dir/$s$Staged") }
+        throw new IllegalArgumentException(
+          s"compaction would empty $dir/$t — drop the index instead")
       }
-      tombFiles.foreach(f => deleteFile(spark, f))
-      dropLogDirIfEmpty(spark, s"$dir/tombstones")
-      maybeCrash("fold_tombstones")
-      maskFiles.foreach(f => deleteFile(spark, f))
-      dropLogDirIfEmpty(spark, s"$dir/$BaseMask")
-      BulkOps.deletePath(spark, s"$dir/fold_commit")
-      invalidateHandles(dir)
-      true
+      if (t == "ids") writeRowCount(spark, s"$dir/ids$Staged", n)
     }
+    commitRewrite(spark, dir, names, consumed)
+    true
+  }
+
+  /** Replace a SET of tables that are only consistent together (a
+    * retrained quantizer plus postings coded against it) — the drift
+    * remedy's retrain-and-swap, through the major fold's commit: the
+    * lease and recovery, the consumed files listed, `stage` writes every
+    * `<t>_compact` from the corpus minus its argument, then
+    * [[commitRewrite]]. The argument (None when empty) holds the ids of
+    * the tombstones present at the call — a crashed fold's journal
+    * consumes its files at recovery, but the caller's corpus still holds
+    * those ids — and of every tombstone file the journal consumes, so no
+    * consumed delete goes unapplied (a lock-free tombstone arriving after
+    * the listing survives). The staged tables replace everything the
+    * consumed files held: the delta segments of the replaced tables are
+    * rows of the dead index generation (no appends can land meanwhile:
+    * they wait for the lease and refuse while the journal is present).
+    * A crash before the journal leaves the live index as it was; one
+    * after it rolls forward to all-new tables at the next fold or
+    * rebuild, never to a mix of old and new. Between a mid-swap crash and
+    * that recovery, serves FAIL LOUDLY (renamed-away table paths) rather
+    * than answer from a mixed quantizer state. */
+  private[operators] def rebuildTables(
+      spark: SparkSession, dir: String, idCol: String, tables: Seq[String])(
+      stage: Option[DataFrame] => Unit): Unit = {
+    acquireLease(spark, dir)
+    val issued = logIds(spark, dir, "tombstones", idCol)
+    recoverFold(spark, dir)
+    val consumed = consumedBy(spark, dir, tables)
+    stage(idFrame(spark, issued ++ idsIn(spark, journalFiles(consumed, "tombstones"), idCol), idCol))
+    tables.foreach(t => require(BulkOps.fileExists(spark, s"$dir/$t$Staged"),
+      s"rebuild stage must write $dir/$t$Staged"))
+    commitRewrite(spark, dir, tables, consumed)
+  }
+
+  /** The commit every multi-table rewrite shares: with each of `tables`
+    * staged as `<t>_compact`, write the `fold_commit` journal naming them
+    * and the `consumed` files — the point of no return: from here,
+    * recovery COMPLETES every remaining deletion and swap; before it, the
+    * staged copies discard (the live tables and logs are intact) — then
+    * finish ([[finishMajor]]). */
+  private def commitRewrite(spark: SparkSession, dir: String, tables: Seq[String],
+      consumed: Journal): Unit = {
+    maybeCrash("fold_stage")
+    val journal = tables.map(t => ("table", t)) ++ consumed
+    writeJournal(spark, dir, journal)
+    maybeCrash("fold_commit")
+    finishMajor(spark, dir, journal)
+  }
+
+  /** The committed half of a major fold or rebuild, idempotent (the
+    * forward path and recovery both run it): per journaled table, delete
+    * its consumed segments FIRST — their rows live in the staged copy, so
+    * a crash window can only UNDER-report the freshest appends to
+    * in-flight serves, never double-count rows — then checked-swap the
+    * staged copy in; last delete the consumed tombstone and base-mask
+    * files and the journal. */
+  private def finishMajor(spark: SparkSession, dir: String, journal: Journal): Unit = {
+    journalTables(journal).foreach { t =>
+      journalFiles(journal, s"${t}_delta").foreach(deleteFile(spark, _))
+      dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
+      maybeCrash(s"fold_delta_$t")
+      if (BulkOps.fileExists(spark, s"$dir/$t") && BulkOps.fileExists(spark, s"$dir/$t$Staged"))
+        swapCompacted(spark, s"$dir/$t")
+      else recoverSwap(spark, s"$dir/$t")
+      maybeCrash(s"fold_swap_$t")
+    }
+    Seq("tombstones", BaseMask).foreach { log =>
+      journalFiles(journal, log).foreach(deleteFile(spark, _))
+      dropLogDirIfEmpty(spark, s"$dir/$log")
+      if (log == "tombstones") maybeCrash("fold_tombstones")
+    }
+    BulkOps.deletePath(spark, s"$dir/fold_commit")
+    invalidateHandles(dir)
   }
 
   private def deleteFile(spark: SparkSession, file: String): Unit = {
@@ -1104,39 +1175,30 @@ object IndexLifecycle {
     }
   }
 
-  /** The folds' crash recovery. With a `fold_commit` journal present the
-    * fold committed: a MINOR journal completes through [[finishMinor]]
-    * (consumed segments deleted, merged segments moved in, consumed
-    * tombstones moved into the base mask); a MAJOR one deletes exactly
-    * the journaled consumed files and completes every remaining swap
-    * (roll forward). Without one, leftover staged copies (`_compact`
-    * beside a live table, `<t>_delta_fold`) are a fold that never
-    * committed and are discarded (base + deltas + logs are intact —
-    * nothing lost). Files appended AFTER the journal (late tombstones;
-    * post-takeover delta segments) are not in it and survive untouched. */
-  private[operators] def recoverFold(
-      spark: SparkSession, dir: String, tables: Seq[String]): Unit =
+  /** The crash recovery of every rewrite. With a `fold_commit` journal
+    * present the rewrite committed: a MINOR journal completes through
+    * [[finishMinor]], any other through [[finishMajor]] (roll forward),
+    * each over the tables the journal names. Without one, leftover copies
+    * beside the tables (`<t>_compact`, `<t>_old`, `<t>_delta_fold`) are a
+    * rewrite that never committed: staged copies are discarded, and a
+    * table missing after a crashed swap is restored ([[recoverSwap]]) —
+    * base, deltas and logs are intact, nothing is lost. Files appended
+    * AFTER a journal (late tombstones; post-takeover delta segments) are
+    * not in it and survive untouched. */
+  private def recoverFold(spark: SparkSession, dir: String): Unit =
     if (BulkOps.fileExists(spark, s"$dir/fold_commit")) {
-      val consumed = BulkOps.readPath(spark, s"$dir/fold_commit", Some(JournalSchema))
+      val journal = BulkOps.readPath(spark, s"$dir/fold_commit", Some(JournalSchema))
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      if (consumed.exists(_._1 == "minor")) finishMinor(spark, dir, tables, consumed)
-      else {
-        consumed.foreach { case (_, f) => deleteFile(spark, f) }
-        tables.foreach { t =>
-          dropLogDirIfEmpty(spark, s"$dir/${t}_delta")
-          if (BulkOps.fileExists(spark, s"$dir/$t") &&
-              BulkOps.fileExists(spark, s"$dir/${t}_compact"))
-            swapCompacted(spark, s"$dir/$t")
-          else recoverSwap(spark, s"$dir/$t")
-        }
-        dropLogDirIfEmpty(spark, s"$dir/tombstones")
-        dropLogDirIfEmpty(spark, s"$dir/$BaseMask")
-        BulkOps.deletePath(spark, s"$dir/fold_commit")
-      }
+      if (journal.exists(_._1 == "minor")) finishMinor(spark, dir, journal)
+      else finishMajor(spark, dir, journal)
       invalidateHandles(dir)
-    } else tables.foreach { t =>
-      if (BulkOps.fileExists(spark, s"$dir/${t}_delta_fold"))
-        BulkOps.deletePath(spark, s"$dir/${t}_delta_fold")
+    } else {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      hadoopFs(spark, p).listStatus(p).map(_.getPath.getName).foreach { n =>
+        if (n.endsWith("_delta_fold")) BulkOps.deletePath(spark, s"$dir/$n")
+        else Seq(Staged, "_old").find(n.endsWith)
+          .foreach(sfx => recoverSwap(spark, s"$dir/${n.stripSuffix(sfx)}"))
+      }
     }
 
   /** Crash-safe swap of `<table>_compact` into `<table>`: the live table
@@ -1144,25 +1206,25 @@ object IndexLifecycle {
     * every rename result is CHECKED — a failed step aborts loudly before
     * anything (tombstone logs included) is cleaned, because acting on an
     * un-swapped compaction would silently resurrect deleted rows. */
-  private[operators] def swapCompacted(spark: SparkSession, table: String): Unit = {
+  private def swapCompacted(spark: SparkSession, table: String): Unit = {
     require(BulkOps.renamePath(spark, table, s"${table}_old"),
       s"compaction aborted: could not move $table aside")
-    require(BulkOps.renamePath(spark, s"${table}_compact", table),
+    require(BulkOps.renamePath(spark, s"$table$Staged", table),
       s"compaction aborted mid-swap: $table is at ${table}_old, " +
-        s"the compacted copy at ${table}_compact — rerun to recover")
+        s"the compacted copy at $table$Staged — rerun to recover")
     BulkOps.deletePath(spark, s"${table}_old")
   }
 
-  /** Recovery preamble for [[swapCompacted]]'s crash window: if the live
-    * table is missing, complete the swap (compacted copy present) or
-    * roll back (old copy present); stale leftovers beside a LIVE table
-    * are superseded copies and are dropped so the next swap's renames
-    * cannot silently no-op against an existing destination. A table with
+  /** Recovery for [[swapCompacted]]'s crash window: if the live table is
+    * missing, complete the swap (compacted copy present) or roll back
+    * (old copy present); stale leftovers beside a LIVE table are
+    * superseded copies and are dropped so the next swap's renames cannot
+    * silently no-op against an existing destination. A table with
     * nothing to recover keeps its serving handle. */
   private[operators] def recoverSwap(spark: SparkSession, table: String): Unit = {
     val live = BulkOps.fileExists(spark, table)
     val old = BulkOps.fileExists(spark, s"${table}_old")
-    val cmp = BulkOps.fileExists(spark, s"${table}_compact")
+    val cmp = BulkOps.fileExists(spark, s"$table$Staged")
     if (live && !old && !cmp) return
     handles.remove(table)
     handleSchemas.remove(table)
@@ -1171,7 +1233,7 @@ object IndexLifecycle {
     if (table.endsWith("/ids"))
       idsListingMemo.remove(table.stripSuffix("/ids"))
     if (!live) {
-      if (cmp) require(BulkOps.renamePath(spark, s"${table}_compact", table),
+      if (cmp) require(BulkOps.renamePath(spark, s"$table$Staged", table),
         s"could not complete the crashed swap of $table")
       else if (old) require(BulkOps.renamePath(spark, s"${table}_old", table),
         s"could not roll back the crashed swap of $table")
@@ -1180,125 +1242,8 @@ object IndexLifecycle {
     if (BulkOps.fileExists(spark, table)) {
       if (old && BulkOps.fileExists(spark, s"${table}_old"))
         BulkOps.deletePath(spark, s"${table}_old")
-      if (cmp && BulkOps.fileExists(spark, s"${table}_compact"))
-        BulkOps.deletePath(spark, s"${table}_compact")
-    }
-  }
-
-  // ---- multi-table REBUILD (retrain-and-swap — the drift remedy) ----
-
-  /** Atomically replace a SET of tables that are only consistent
-    * together (a retrained quantizer plus postings coded against it):
-    * every replacement is staged as `<t>_new` first, then a
-    * `rebuild_commit` marker makes the swap roll-FORWARD on crash —
-    * unlike per-table compaction (same rows, any mix of old/new tables
-    * serves identically), a rebuild mid-swap mix would serve codes
-    * against the wrong codebook, so recovery must land all-new, never
-    * some-of-each.
-    *
-    *   1. [[recoverRebuild]] preamble (finish or discard a crashed one).
-    *   2. `stage` writes every `<t>_new` (live tables untouched).
-    *   3. write the `rebuild_commit` marker — the point of no return.
-    *   4. per table: rename live aside, rename `_new` in, drop aside.
-    *   5. drop the tombstone log (`postRebuild` semantics: the rebuild
-    *      consumed it) and the marker.
-    *
-    * Crash before 3: next preamble discards the stale `_new` copies —
-    * the live index never changed. Crash after 3: next preamble
-    * completes every remaining swap from the surviving `_new` copies.
-    * Between a mid-swap crash and that recovery, serves FAIL LOUDLY
-    * (renamed-away table paths) rather than answer from a mixed
-    * quantizer state — run any lifecycle entry point (compact/rebuild)
-    * to recover before serving. */
-  private[operators] def rebuildTables(
-      spark: SparkSession, dir: String, tables: Seq[String])(stage: => Unit): Unit = {
-    acquireLease(spark, dir)
-    recoverRebuild(spark, dir, tables)
-    // tombstone files consumed by THIS rebuild, listed before the stage:
-    // deletes are lock-free appends, so a tombstone arriving later must
-    // survive (it re-applies idempotently at the next compaction) — the
-    // journal names exactly these files and only these delete post-swap
-    val tombFiles = listFlatDir(spark, s"$dir/tombstones")
-    stage
-    tables.foreach(t => require(BulkOps.fileExists(spark, s"$dir/${t}_new"),
-      s"rebuild stage must write $dir/${t}_new"))
-    maybeCrash("rebuild_stage")
-    BulkOps.writePath(
-        { import spark.implicits._
-          (Seq(("tables", tables.mkString(","))) ++
-            tombFiles.map(f => ("tombstones", f))).toDF("log", "file") },
-        SaveMode.Overwrite)
-      .save(s"$dir/rebuild_commit")
-    maybeCrash("rebuild_commit")
-    tables.foreach { t =>
-      swapInNew(spark, s"$dir/$t")
-      maybeCrash(s"rebuild_$t")
-    }
-    // the rebuild re-derived everything from the CURRENT corpus: delta
-    // segments of the replaced tables are superseded rows of a dead
-    // index generation — drop them (no new ones can exist: appends held
-    // the lease out during the rebuild and refuse while the journal is
-    // present), and consume exactly the journaled tombstone files (a
-    // late lock-free tombstone survives for the next compaction)
-    tables.foreach { t =>
-      if (BulkOps.fileExists(spark, s"$dir/${t}_delta"))
-        BulkOps.deletePath(spark, s"$dir/${t}_delta")
-    }
-    tombFiles.foreach(f => deleteFile(spark, f))
-    BulkOps.deletePath(spark, s"$dir/rebuild_commit")
-    invalidateHandles(dir)
-  }
-
-  private def swapInNew(spark: SparkSession, table: String): Unit = {
-    // idempotent under roll-forward: a table already swapped (live
-    // present, no _new) is left alone
-    if (BulkOps.fileExists(spark, s"${table}_new")) {
-      if (BulkOps.fileExists(spark, table)) {
-        require(BulkOps.renamePath(spark, table, s"${table}_aside"),
-          s"rebuild aborted: could not move $table aside")
-      }
-      require(BulkOps.renamePath(spark, s"${table}_new", table),
-        s"rebuild aborted mid-swap of $table — rerun to recover")
-      BulkOps.deletePath(spark, s"${table}_aside")
-    } else if (BulkOps.fileExists(spark, s"${table}_aside")) {
-      if (BulkOps.fileExists(spark, table))
-        // crashed between the in-rename and the aside-delete: the new
-        // copy is live, the aside copy is superseded — drop it
-        BulkOps.deletePath(spark, s"${table}_aside")
-      else
-        // live and _new both missing with an aside copy present can
-        // only mean a half-run rename pair — restore the only copy
-        require(BulkOps.renamePath(spark, s"${table}_aside", table),
-          s"could not roll back the crashed rebuild swap of $table")
-    }
-  }
-
-  /** [[rebuildTables]]'s crash recovery: with a `rebuild_commit` marker
-    * present, complete every remaining swap (roll forward) and consume
-    * the tombstone log; without one, discard stale `<t>_new` leftovers
-    * (the rebuild never committed — the live index is the truth). */
-  private[operators] def recoverRebuild(
-      spark: SparkSession, dir: String, tables: Seq[String]): Unit = {
-    if (BulkOps.fileExists(spark, s"$dir/rebuild_commit")) {
-      val consumedTombs = BulkOps.readPath(spark, s"$dir/rebuild_commit")
-        .filter(col("log") === "tombstones")
-        .select("file").collect().map(_.getString(0))
-      tables.foreach(t => swapInNew(spark, s"$dir/$t"))
-      tables.foreach { t =>
-        if (BulkOps.fileExists(spark, s"$dir/${t}_delta"))
-          BulkOps.deletePath(spark, s"$dir/${t}_delta")
-      }
-      consumedTombs.foreach(f => deleteFile(spark, f))
-      BulkOps.deletePath(spark, s"$dir/rebuild_commit")
-      invalidateHandles(dir)
-    } else {
-      tables.foreach { t =>
-        if (BulkOps.fileExists(spark, s"$dir/${t}_new"))
-          BulkOps.deletePath(spark, s"$dir/${t}_new")
-        if (BulkOps.fileExists(spark, s"$dir/${t}_aside") &&
-            BulkOps.fileExists(spark, s"$dir/$t"))
-          BulkOps.deletePath(spark, s"$dir/${t}_aside")
-      }
+      if (cmp && BulkOps.fileExists(spark, s"$table$Staged"))
+        BulkOps.deletePath(spark, s"$table$Staged")
     }
   }
 }

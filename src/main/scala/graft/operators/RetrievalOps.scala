@@ -186,11 +186,10 @@ object RetrievalOps {
     * [[graft.operators.AnnIndexOps.writeIndex]] twin: full-vocab
     * postings plus the derived doc-length table (at 100 TB the lengths
     * are index metadata you store once, not a per-query Σ tf re-roll of
-    * the full postings). */
+    * the full postings). A fresh build starts with
+    * [[IndexLifecycle.beginBuild]]. */
   def bm25WriteIndex(docs: DataFrame, dir: String): Unit = {
-    // single-writer from the FIRST table write of the build (writeIds
-    // renews the same lease)
-    IndexLifecycle.acquireLease(docs.sparkSession, dir)
+    IndexLifecycle.beginBuild(docs.sparkSession, dir)
     val idx = graft.Caching.maybeCache(bm25Index(docs, spread = true))
     val lens = graft.Caching.maybeCache(
       idx.groupBy("doc_id").agg(sum(col("tf")).as("len")))
@@ -205,9 +204,6 @@ object RetrievalOps {
     // retrying forever.
     IndexLifecycle.writeIds(docs.sparkSession, dir, "doc_id",
       docs.select("doc_id"), docs.count())
-    // a fresh build invalidates any delete log from the dir's past life
-    if (graft.sources.BulkOps.fileExists(docs.sparkSession, s"$dir/tombstones"))
-      graft.sources.BulkOps.deletePath(docs.sparkSession, s"$dir/tombstones")
   }
 
   /** Serve BM25 from the STORED index: postings pruned to the query

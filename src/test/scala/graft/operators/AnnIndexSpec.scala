@@ -295,22 +295,22 @@ class AnnIndexSpec extends SparkSpec {
     val d1 = Files.createTempDirectory("graft_annidx_rbcrash1").toString
     AnnIndexOps.writeIndex(emb.filter(half), d1)
     val expect1 = serve(d1).collect().toSet
-    IndexLifecycle.crashAt = Some("rebuild_stage")
+    IndexLifecycle.crashAt = Some("fold_stage")
     try intercept[IllegalStateException] {
       AnnIndexOps.rebuildIndex(spark, d1, union)
     } finally IndexLifecycle.crashAt = None
     assert(serve(d1).collect().toSet == expect1,
       "a crash before the commit marker must leave the live index untouched")
-    AnnIndexOps.compactIndex(spark, d1) // any lifecycle op — discards stale _new copies
-    assert(!graft.sources.BulkOps.fileExists(spark, s"$d1/postings_new"),
+    AnnIndexOps.compactIndex(spark, d1) // any lifecycle op — discards stale _compact copies
+    assert(!graft.sources.BulkOps.fileExists(spark, s"$d1/postings_compact"),
       "recovery must discard the uncommitted staged tables")
     assert(serve(d1).collect().toSet == expect1)
 
     // after the marker (mid-swap or before any swap): recovery must land
     // ALL-new (a mixed old/new quantizer state is the failure mode this
     // journal exists to exclude) — the next lifecycle entry point rolls
-    // forward from the surviving _new copies
-    Seq("rebuild_commit", "rebuild_codebook").foreach { step =>
+    // forward from the surviving _compact copies
+    Seq("fold_commit", "fold_swap_codebook").foreach { step =>
       val d2 = Files.createTempDirectory(s"graft_annidx_rbcrash_$step").toString
       AnnIndexOps.writeIndex(emb.filter(half), d2)
       IndexLifecycle.crashAt = Some(step)
@@ -322,6 +322,62 @@ class AnnIndexSpec extends SparkSpec {
       assert(c.exceptAll(b).count() == 0 && b.exceptAll(c).count() == 0,
         s"crash at '$step': recovery must complete the rebuild and serve the fresh-build answer")
     }
+  }
+
+  /** `dir` after a build or rebuild over `corpus`: it serves what a
+    * fresh build of `corpus` serves, commits exactly its ids, accepts an
+    * append, and a following compaction changes nothing. */
+  private def assertOwnsCorpus(dir: String, corpus: org.apache.spark.sql.DataFrame): Unit = {
+    val s = spark
+    import s.implicits._
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+      .toDF("vec_id", "embedding")
+    val ids = corpus.select("vec_id").collect().map(_.getLong(0)).toSet
+    val ref = Files.createTempDirectory("graft_annidx_ownref").toString
+    AnnIndexOps.writeIndex(corpus, ref)
+    val expect = AnnIndexOps.servedTopK(spark, ref, queries).collect().toSet
+    def state() = (AnnIndexOps.servedTopK(spark, dir, queries).collect().toSet,
+      IndexLifecycle.committedProbe(spark, dir, "vec_id", emb.select("vec_id"))
+        .collect().map(_.getLong(0)).toSet,
+      graft.sources.BulkOps.readPath(spark, s"$dir/postings")
+        .select("vec_id").distinct().collect().map(_.getLong(0)).toSet)
+    assert(state() == ((expect, ids, ids)),
+      "the index must serve, commit and hold exactly the new corpus")
+    // a redelivery is accepted (no journal left to refuse it) and appends nothing
+    AnnIndexOps.appendToIndex(spark, dir, corpus.filter(col("vec_id") < 100))
+    AnnIndexOps.compactIndex(spark, dir)
+    assert(state() == ((expect, ids, ids)), "the following compaction must change nothing")
+  }
+
+  test("a fresh build over a rebuild's stale journal serves, commits and compacts only the new corpus") {
+    val emb = Tables.embeddings(spark, sf)
+    val dir = Files.createTempDirectory("graft_annidx_stale_rebuild").toString
+    AnnIndexOps.writeIndex(emb, dir)
+    IndexLifecycle.crashAt = Some("fold_commit")
+    try intercept[IllegalStateException] {
+      AnnIndexOps.rebuildIndex(spark, dir, emb.filter(col("vec_id") % 2 === 0))
+    } finally IndexLifecycle.crashAt = None
+    val odd = emb.filter(col("vec_id") % 2 === 1)
+    AnnIndexOps.writeIndex(odd, dir)
+    assertOwnsCorpus(dir, odd)
+  }
+
+  test("a rebuild over a fold's stale journal serves, commits and compacts only the rebuilt corpus") {
+    val emb = Tables.embeddings(spark, sf)
+    val dir = Files.createTempDirectory("graft_annidx_stale_fold").toString
+    AnnIndexOps.writeIndex(emb.filter(col("vec_id") < 400), dir)
+    val dead = col("vec_id").isin(13L, 23L, 33L)
+    AnnIndexOps.deleteFromIndex(spark, dir, emb.filter(dead).select("vec_id"))
+    IndexLifecycle.crashAt = Some("fold_commit")
+    try intercept[IllegalStateException] {
+      AnnIndexOps.compactIndex(spark, dir)
+    } finally IndexLifecycle.crashAt = None
+    // the rebuild applies the three pending deletes to the whole corpus
+    AnnIndexOps.rebuildIndex(spark, dir, emb)
+    assertOwnsCorpus(dir, emb.filter(!dead))
   }
 
   test("drift monitor: in-distribution batch reads ~1.0, a shifted batch reads high") {

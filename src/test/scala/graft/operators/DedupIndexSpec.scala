@@ -432,6 +432,33 @@ class DedupIndexSpec extends SparkSpec {
       liveIds -- more)
   }
 
+  test("a fresh build over a major fold's stale journal serves, commits and folds only the new corpus") {
+    val batch = docs.filter(col("doc_id") < 100)
+    val (dir, _) = minorFoldFixture("stale_fold_journal")
+    IndexLifecycle.crashAt = Some("fold_commit")
+    try intercept[IllegalStateException] {
+      DedupIndexOps.majorCompactIndex(spark, dir)
+    } finally IndexLifecycle.crashAt = None
+    assert(graft.sources.BulkOps.fileExists(spark, s"$dir/fold_commit"))
+    // another corpus built into the same dir: the crashed fold's journal
+    // and staged copies belong to the index this build replaces
+    val corpus = docs.filter(col("doc_id") >= 100 && col("doc_id") % 3 === 0)
+    val ids = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
+    DedupIndexOps.writeIndex(corpus, dir)
+    val ref = tmp("stale_fold_ref")
+    DedupIndexOps.writeIndex(corpus, ref)
+    val allIds = docs.select("doc_id").collect().map(_.getLong(0)).toSet
+    val expect = served(DedupIndexOps.servedDupes(spark, ref, batch))
+    assert(served(DedupIndexOps.servedDupes(spark, dir, batch)) == expect,
+      "the new build must serve exactly a fresh build of its corpus")
+    assert(committed(dir, allIds) == ids, "the sidecar must commit exactly the new corpus")
+    // a redelivery is accepted (no journal left to refuse it) and appends nothing
+    DedupIndexOps.appendToIndex(spark, dir, corpus.filter(col("doc_id") < 200))
+    assert(!DedupIndexOps.compactIndex(spark, dir), "nothing of the old index is left to fold")
+    assert(served(DedupIndexOps.servedDupes(spark, dir, batch)) == expect &&
+      committed(dir, allIds) == ids, "the following fold must change nothing")
+  }
+
   test("a fold that would empty the index is refused before its journal, no staged copy left") {
     val rows = (0L until 30L).map(i => (i, s"alpha$i beta$i gamma$i delta$i epsilon$i"))
     val dir = tmp("empty_fold")

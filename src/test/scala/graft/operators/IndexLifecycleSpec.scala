@@ -17,6 +17,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft_lifecycle").toString
+    IndexLifecycle.beginBuild(spark, dir)
     val initial = (0L until n).toDF("id")
     BulkOps.writePath(initial.withColumn("v", col("id") * 10), SaveMode.Overwrite)
       .save(s"$dir/rows")
@@ -33,7 +34,7 @@ class IndexLifecycleSpec extends SparkSpec {
       "rewrite at a different dial cannot double-write committed ids") {
     val s = spark
     import s.implicits._
-    val dir = freshIndex(40) // sizedParts clamps to the 16-dir floor; memo now holds 16
+    val dir = freshIndex(40) // sizedParts clamps to the 16-dir floor
     // another process rebuilds the sidecar at dial 32 (no memo update —
     // that is the point: this JVM's memo is now stale)
     val rebuilt = (0L until 40L).toDF("id")
@@ -111,7 +112,7 @@ class IndexLifecycleSpec extends SparkSpec {
   test("two interleaved writers: the second refuses loudly while the lease is live") {
     val s = spark
     import s.implicits._
-    val dir = freshIndex(40) // writeIds took the lease for this JVM's owner
+    val dir = freshIndex(40) // beginBuild took the lease for this JVM's owner
     // a second process arrives mid-lease: its append must refuse, and
     // must refuse BEFORE touching any table
     IndexLifecycle.ownerOverride = Some("intruder@9999#beef")
