@@ -27,7 +27,22 @@ object GraftCatalog {
     * surface: a pure-SQL user composes `SELECT ... FROM fluency_scores
     * WHERE ...` and the filter/projection push into the operator's lazy
     * plan like any other view. Covers the newer operator families; the
-    * older packs are reachable through [[registerViews]]' base model. */
+    * older packs are reachable through [[registerViews]]' base model.
+    *
+    * Registration is NOT free, and not every view is a plan:
+    *   - each source table read resolves its parquet schema (a small
+    *     job each);
+    *   - `neardup_recall`, `neardup_recall_s` and `table_profile` run
+    *     their independent pipelines HERE, concurrently, through
+    *     [[graft.operators.Par.materializeConcurrently]], and register
+    *     `localCheckpoint` SNAPSHOTS: a read after executor loss fails
+    *     rather than recomputes — re-register to recover. Most of the
+    *     registration's jobs are theirs; a lazy union was measured slower
+    *     for `neardup_recall_s`, so they stay eager;
+    *   - `curation_funnel` runs [[graft.operators.GraphOps.dedupClusters]]'
+    *     label-propagation rounds here (checkpointed: reliable when the
+    *     session has a checkpoint directory, local otherwise).
+    * Every other view is a lazy plan. */
   def registerOperatorViews(spark: SparkSession, sfDir: String): Unit = {
     val docs = Tables.documents(spark, sfDir)
     val embs = Tables.embeddings(spark, sfDir)
@@ -180,9 +195,9 @@ object GraftCatalog {
     graft.operators.CurationOps.ppsSample(docs)
       .createOrReplaceTempView("pps_sample")
     // NOT here: the stored-index serve chains (dedup_served, ann_served,
-    // bm25_served) — every view in this catalog registers LAZILY (a plan,
-    // no jobs), while a served chain eagerly builds and writes its index
-    // at call time. SQL users register those ad hoc:
+    // bm25_served) — a served chain builds and WRITES its index at call
+    // time, a side effect no view registration should have. SQL users
+    // register those ad hoc:
     //   IndexFixtures.served(IndexFixtures.Dedup, spark, dir).createOrReplaceTempView(...)
   }
 }

@@ -97,7 +97,7 @@ object IndexFixtures {
       val halfSalt: Option[String],
       val deleted: Column,
       val write: (DataFrame, String) => Unit,
-      val append: (SparkSession, String, DataFrame, Option[Seq[Long]]) => Unit,
+      val append: (SparkSession, String, DataFrame) => Unit,
       val delete: (SparkSession, String, DataFrame) => Unit,
       val fold: Option[(SparkSession, String) => Boolean],
       val serve: (SparkSession, String, DataFrame) => DataFrame) {
@@ -112,7 +112,7 @@ object IndexFixtures {
     halfSalt = Some("ing|"),
     deleted = col("doc_id") % 10 === 3,
     write = (docs, dir) => DedupIndexOps.writeIndex(docs, dir),
-    append = (s, dir, docs, ids) => DedupIndexOps.appendToIndex(s, dir, docs, ids),
+    append = DedupIndexOps.appendToIndex,
     delete = DedupIndexOps.deleteFromIndex,
     fold = Some(DedupIndexOps.compactIndex),
     serve = (s, dir, batch) => DedupIndexOps.servedDupes(s, dir, batch))
@@ -171,7 +171,7 @@ object IndexFixtures {
     val corpus = f.corpusOf(t)
     val fx = fixture(spark, s"${f.name}_ingest", sfDir, t) { d =>
       f.write(corpus.filter(half(f)), d)
-      f.append(spark, d, corpus.filter(!half(f)), None)
+      f.append(spark, d, corpus.filter(!half(f)))
       // the production cadence after a bulk append is a fold, which
       // returns the serve to fully pruned partitioned reads
       f.fold.foreach(_(spark, d))
@@ -201,7 +201,7 @@ object IndexFixtures {
       f.write(f.corpusOf(t), d))
     val offset = AppendIdBase * fx.passes.incrementAndGet()
     val batch = fx.local(t, f.batch, f).withColumn(f.id, col(f.id) + offset)
-    f.append(spark, fx.dir, batch, Some(batch.select(f.id).collect().map(_.getLong(0)).toSeq))
+    f.append(spark, fx.dir, batch)
     IndexLifecycle.committedProbe(spark, fx.dir, f.id, batch.select(f.id))
       .select((col(f.id) % AppendIdBase).as(f.id))
   }

@@ -185,8 +185,7 @@ object AnnIndexOps {
     * projection on every append. After a crash, the suspect ids — and
     * only those — check the sub=0 slice. A tombstoned vec_id stays
     * skipped (and masked) until [[compactIndex]] drops it physically. */
-  def appendToIndex(spark: SparkSession, dir: String, newVectors: DataFrame,
-      knownIds: Option[Seq[Long]] = None): Unit = {
+  def appendToIndex(spark: SparkSession, dir: String, newVectors: DataFrame): Unit = {
     // the quantizer tables are immutable between builds/rebuilds (both
     // of which invalidate), so the append can read them via the handles
     val cents = IndexLifecycle.servingHandle(spark, dir, "centroids")
@@ -206,11 +205,7 @@ object AnnIndexOps {
             // flat at 100×) — a delta would buy nothing here
             .partitionBy("center").save(s"$dir/postings"),
           mutates = Seq("postings")))
-      knownIds match {
-        case Some(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "vec_id", ids, tables)
-        case None =>
-          IndexLifecycle.appendGuarded(spark, dir, "vec_id", newVectors.select("vec_id"), tables)
-      }
+      IndexLifecycle.appendGuarded(spark, dir, "vec_id", newVectors.select("vec_id"), tables)
     }
   }
 

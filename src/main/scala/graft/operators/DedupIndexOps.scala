@@ -197,13 +197,12 @@ object DedupIndexOps {
     * [[compactIndex]] fold consumes its tombstone (a minor fold masks its
     * base rows, a major one drops them) — re-ingesting a deleted doc
     * requires folding first. */
-  def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
-      knownIds: Option[Seq[Long]] = None): Unit = {
+  def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame): Unit = {
     val meta = readMetaFresh(spark, dir)
     // one batch signature pass feeds both table writes (each filtered
     // to the protocol's fresh-id frame); its cache entry ends with them
     Caching.withCached(DedupOps.batchMinhashWide(newDocs, meta.numPerms)) { wide =>
-      appendWide(spark, dir, knownIds.toLeft(newDocs.select("doc_id")), meta, fresh =>
+      appendWide(spark, dir, newDocs.select("doc_id"), meta, fresh =>
         wide.join(broadcast(fresh), Seq("doc_id"), "left_semi")
           // one file per segment (a bounded batch's rows — the shuffle
           // partitioning would write 32 shards of a few KB)
@@ -216,7 +215,7 @@ object DedupIndexOps {
     * signature rows at `meta`'s dials, in ONE partition (one file per
     * delta segment). */
   private def appendWide(spark: SparkSession, dir: String,
-      batchIds: Either[Seq[Long], DataFrame], meta: IndexMeta,
+      batchIds: DataFrame, meta: IndexMeta,
       freshWide: DataFrame => DataFrame): Unit = {
     // appends land as DELTA SEGMENTS (one small file set per batch into
     // `<table>_delta`), NOT as a per-batch fan-out into the partitioned
@@ -234,10 +233,7 @@ object DedupIndexOps {
         BulkOps.writePath(bandedWithPb(freshWide(fresh), meta), SaveMode.Append)
           .save(s"$dir/sigs_delta"),
         mutates = Seq("sigs_delta")))
-    batchIds match {
-      case Left(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "doc_id", ids, tables)
-      case Right(df) => IndexLifecycle.appendGuarded(spark, dir, "doc_id", df, tables)
-    }
+    IndexLifecycle.appendGuarded(spark, dir, "doc_id", batchIds, tables)
   }
 
   /** Dedup an arriving batch against the STORED index: returns
@@ -469,10 +465,9 @@ object DedupIndexOps {
         m.map(x => java.lang.Long.valueOf(x._2)).orNull)
     }, ReportSchema)
     // survivor append from the gate's OWN signature rows, filtered on the
-    // driver to the protocol's fresh ids (a local frame — no re-shingling,
-    // no broadcast join)
-    appendWide(spark, dir,
-      Left(ids.zip(verdicts).collect { case (id, ("ingested", _)) => id }.toSeq), meta,
+    // driver to the protocol's fresh ids (local frames — no re-shingling,
+    // no broadcast join, and the survivor ids collect with no job)
+    appendWide(spark, dir, report.filter(col("verdict") === "ingested").select("doc_id"), meta,
       fresh => wide.filter(col("doc_id").isInCollection(fresh.collect().map(_.getLong(0))))
         .coalesce(1))
     report

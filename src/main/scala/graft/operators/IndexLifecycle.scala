@@ -645,24 +645,16 @@ object IndexLifecycle {
     * live writer refuses loudly instead of corrupting counts;
     * concurrent SERVES are safe throughout. */
   def appendGuarded(spark: SparkSession, dir: String, idCol: String,
-      batchIds0: DataFrame, tables: Seq[GuardedTable]): Unit =
+      batchIds: DataFrame, tables: Seq[GuardedTable]): Unit = {
     // the batch id set is BOUNDED app input (an ingest batch), so the
-    // protocol state lives DRIVER-RESIDENT: collect once, and every
+    // protocol state lives DRIVER-RESIDENT: collect once (a local-frame
+    // batch collects with no Spark job) and de-duplicate here, and every
     // downstream use (classification, marker, sidecar segment, the
     // per-table broadcast semi-joins) works from the same local set —
     // deterministic across its many reads with no checkpoint, and each
     // protocol step costs exactly one Spark job
-    appendGuardedSeq(spark, dir, idCol,
-      batchIds0.select(col(idCol).cast("long").as(idCol))
-        .distinct().collect().map(_.getLong(0)).toIndexedSeq,
-      tables)
-
-  /** [[appendGuarded]] for callers whose batch ids are ALREADY
-    * driver-resident (the fixture/streaming chains assemble their
-    * batches from local rows): same protocol, minus the one Spark job
-    * that collected an id set the caller was holding all along. */
-  private[graft] def appendGuardedSeq(spark: SparkSession, dir: String, idCol: String,
-      batchIds1: Seq[Long], tables: Seq[GuardedTable]): Unit = {
+    val batchSeq = batchIds.select(col(idCol).cast("long"))
+      .collect().map(_.getLong(0)).distinct.toIndexedSeq
     require(BulkOps.fileExists(spark, s"$dir/ids"),
       s"no ids sidecar under $dir — appends require an index written by this lifecycle")
     // a crashed fold/rebuild left its roll-forward journal: recovery
@@ -682,7 +674,6 @@ object IndexLifecycle {
     // legally change it mid-append).
     val parts = readIdParts(spark, dir)
     import spark.implicits._
-    val batchSeq = batchIds1.distinct.toIndexedSeq
     if (batchSeq.isEmpty) return
 
     // step 1: resolve old markers; leftovers are the suspect pool

@@ -5,41 +5,46 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** REAL baseline-JPEG pixel decode — the closure of the one codec seam
-  * [[PngCodecOps]] left open: PNG got a real zlib decode in round 11 and
-  * its scaladoc documented JPEG's entropy-coded DCT data as the
-  * remaining honest boundary. This operator closes it for the
-  * grayscale baseline-sequential profile: a full marker walk
-  * (SOI/APPn/COM/DQT/SOF0/DHT/SOS/EOI), a REAL Huffman entropy decode
-  * (canonical tables rebuilt from the file's own DHT segments per the
-  * standard's Annex F decode procedure, MSB-first bit reader with
-  * 0xFF00 byte-unstuffing), DC prediction, run-length AC decode
-  * (EOB/ZRL), zigzag inverse, dequantization, and a separable IDCT —
-  * all through `mapPartitions` (the [[PngCodecOps]] argument verbatim:
-  * a bit-level stateful entropy stream does not belong in an expression
-  * tree; a per-partition loop over plain JVM code is the canonical
+/** REAL JPEG pixel decode — the closure of the one codec seam
+  * [[PngCodecOps]] left open (JPEG's entropy-coded DCT data), through
+  * `mapPartitions` (the [[PngCodecOps]] argument verbatim: a bit-level
+  * stateful entropy stream does not belong in an expression tree; a
+  * per-partition loop over plain JVM code is the canonical
   * batched-decode shape, scan-local, pure map parallelism at 100 TB).
   *
-  * Honest scope, stated: baseline sequential, 8-bit — single-component
+  * ONE codec path in each direction:
+  *   - decode: one marker walk (SOI/APPn/COM/DQT/DHT/DRI/SOF0/SOF2/SOS/
+  *     EOI) and one scan decoder. Every scan decodes into per-block
+  *     zigzag coefficient buffers over the padded MCU grid: REAL
+  *     Huffman entropy decode (canonical tables rebuilt from the file's
+  *     own DHT segments per Annex F, MSB-first bit reader with 0xFF00
+  *     unstuffing), DC prediction, run-length AC (ZRL, general EOB
+  *     runs), successive approximation (point-transformed first scans,
+  *     one-bit DC refinements, the G.1.2.3 AC correction procedure) and
+  *     restart intervals (byte-aligned RSTn consumption, predictors and
+  *     EOB runs reset). A SEQUENTIAL (SOF0) frame is the one-scan case —
+  *     one interleaved DC+AC scan of every component, the band 0..63 at
+  *     Al = 0 — and reconstructs as soon as that scan completes, so a
+  *     file that lacks only its EOI still decodes; a PROGRESSIVE (SOF2)
+  *     frame accumulates any number of DC/AC band scans and
+  *     reconstructs at EOI. One reconstruction serves both: dequant,
+  *     separable IDCT, nearest-neighbor chroma upsampling and the JFIF
+  *     YCbCr→RGB conversion.
+  *   - encode: one frame writer (SOI, APP0, DQT, SOFn, DHT, DRI, then a
+  *     scan script, EOI). Baseline is the single sequential scan; the
+  *     spectral-selection progressive script is one DC scan plus one
+  *     1..63 AC scan per component; the successive-approximation script
+  *     is libjpeg's `jpeg_simple_progression` shape.
+  *
+  * Honest scope, stated: 8-bit Huffman DCT — single-component
   * grayscale, 3-component 4:4:4 color, and 3-component 4:2:0
-  * CHROMA-SUBSAMPLED color (the common camera layout: Y at 2×2, chroma
-  * at 1×1, four-luma-block MCUs, nearest-neighbor chroma upsampling) —
-  * with RESTART INTERVALS (DRI/RSTn: byte-aligned marker consumption,
-  * DC predictors reset per interval). PROGRESSIVE (SOF2) decodes the
-  * FULL real-world scope (round 13): SPECTRAL SELECTION (any number of
-  * DC/AC band scans accumulating coefficients per block, general
-  * EOBRUN runs, per-scan restart intervals) AND SUCCESSIVE
-  * APPROXIMATION (point-transformed first scans, one-bit DC
-  * refinements, the G.1.2.3 AC correction procedure), over the same
-  * gray / 4:4:4 / 4:2:0 grids as the baseline path — the exact
-  * feature set libjpeg's standard progression emits, proven by
-  * decoding ImageIO-WRITTEN progressive files in the spec.
-  * Reconstruction runs once at EOI; arithmetic coding, 16-bit quant
-  * tables and other sampling grids return
-  * 'corrupt' rather than pretending — the same explicit-boundary
-  * discipline as [[MultimodalOps]]'s header walks, now moved one real
-  * layer deeper. Per-component quant/Huffman selectors and DC
-  * predictors throughout; the JFIF YCbCr→RGB conversion at the end.
+  * CHROMA-SUBSAMPLED color (Y at 2×2, chroma at 1×1, the common camera
+  * layout) — the feature set libjpeg's standard progression emits,
+  * proven by decoding ImageIO-WRITTEN progressive files in the spec.
+  * Arithmetic coding, extended/lossless frames, 16-bit quant tables and
+  * other sampling grids return 'corrupt' rather than pretending — the
+  * same explicit-boundary discipline as [[MultimodalOps]]'s header
+  * walks, one real layer deeper.
   *
   * Correctness is pinned twice, the [[PngCodecOps]] convention:
   *   - the ORACLE fixtures are block-constant rasters (one value per
@@ -95,7 +100,7 @@ object JpegCodecOps {
     case _ => ((docId * 29 + bx * 3 + by * 19) % 256).toInt
   }
 
-  // ---- encoder (fixture-side; a real baseline JFIF writer) -----------
+  // ---- shared tables and frame geometry -------------------------------
 
   private val ZigZag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -107,6 +112,66 @@ object JpegCodecOps {
     * block-constant fixtures), AC steps 16. */
   private[operators] val QuantZig: Array[Int] =
     Array.tabulate(64)(i => if (i == 0) 8 else 16)
+
+  // cos((2x+1)uπ/16) with the C(u) normalizer folded in — shared by the
+  // separable FDCT (encoder) and IDCT (decoder); computed once per JVM
+  private[operators] val CosT: Array[Array[Double]] = Array.tabulate(8, 8)((x, u) =>
+    (if (u == 0) 1.0 / math.sqrt(2) else 1.0) *
+      math.cos((2 * x + 1) * u * math.Pi / 16))
+
+  /** A frame's block geometry (A.1.1, A.2): each component's plane at
+    * its own resolution, the padded MCU-multiple block grid that
+    * interleaved scans cover (blocks in raster order — the index of
+    * every coefficient buffer), and the component's own ceil grid that
+    * single-component scans cover (padded-only blocks carry no visible
+    * pixels). The writer, the decoder and the reconstruction all walk
+    * blocks through it. */
+  private final class Frame(val w: Int, val h: Int, val hs: Array[Int], val vs: Array[Int]) {
+    val ncomp: Int = hs.length
+    val hMax: Int = hs.max
+    val vMax: Int = vs.max
+    val pw: Array[Int] = Array.tabulate(ncomp)(c => (w * hs(c) + hMax - 1) / hMax)
+    val ph: Array[Int] = Array.tabulate(ncomp)(c => (h * vs(c) + vMax - 1) / vMax)
+    val mcusX: Int = (w + 8 * hMax - 1) / (8 * hMax)
+    val mcusY: Int = (h + 8 * vMax - 1) / (8 * vMax)
+    val bW: Array[Int] = Array.tabulate(ncomp)(c => mcusX * hs(c))
+    val bH: Array[Int] = Array.tabulate(ncomp)(c => mcusY * vs(c))
+    val cBW: Array[Int] = Array.tabulate(ncomp)(c => (pw(c) + 7) / 8)
+    val cBH: Array[Int] = Array.tabulate(ncomp)(c => (ph(c) + 7) / 8)
+
+    /** Visit one scan's blocks in coding order: MCU-interleaved when the
+      * scan carries several components, the component's own grid (one
+      * block per MCU) when it carries one. `restart(n)` runs before
+      * every restart interval but the first, with its RSTn number;
+      * `block(i, bi)` gets the scan-component index and the block's
+      * index into the padded grid. */
+    def walk(comps: Array[Int], interval: Int)(restart: Int => Unit)(
+        block: (Int, Int) => Unit): Unit = {
+      var mcu = 0
+      def nextMcu(): Unit = {
+        if (interval > 0 && mcu > 0 && mcu % interval == 0) restart((mcu / interval - 1) % 8)
+        mcu += 1
+      }
+      if (comps.length > 1)
+        for (my <- 0 until mcusY; mx <- 0 until mcusX) {
+          nextMcu()
+          for (i <- comps.indices) {
+            val c = comps(i)
+            for (v <- 0 until vs(c); hh <- 0 until hs(c))
+              block(i, (my * vs(c) + v) * bW(c) + mx * hs(c) + hh)
+          }
+        }
+      else {
+        val c = comps(0)
+        for (by <- 0 until cBH(c); bx <- 0 until cBW(c)) {
+          nextMcu()
+          block(0, by * bW(c) + bx)
+        }
+      }
+    }
+  }
+
+  // ---- encoder (fixture-side; a real JFIF writer) ---------------------
 
   // canonical Huffman tables the encoder writes into DHT:
   // DC: 12 category symbols, all code length 5 (codes 00000..01011 —
@@ -190,6 +255,11 @@ object JpegCodecOps {
     if (t > 0) bw.put(if (v >= 0) v else v + (1 << t) - 1, t)
   }
 
+  private def putAc(bw: BitWriter, symbol: Int): Unit = {
+    val (code, len) = AcCodes(symbol)
+    bw.put(code, len)
+  }
+
   private def seg(marker: Int, payload: Array[Byte]): Array[Byte] =
     Array(0xFF.toByte, marker.toByte,
       (((payload.length + 2) >> 8) & 0xff).toByte,
@@ -199,18 +269,10 @@ object JpegCodecOps {
     Array(((tc << 4) | th).toByte) ++
       (1 to 16).map(l => bits(l).toByte).toArray ++ vals.map(_.toByte)
 
-  // cos((2x+1)uπ/16) with the C(u) normalizer folded in — shared by the
-  // separable FDCT (encoder) and IDCT (decoder); computed once per JVM
-  private[operators] val CosT: Array[Array[Double]] = Array.tabulate(8, 8)((x, u) =>
-    (if (u == 0) 1.0 / math.sqrt(2) else 1.0) *
-      math.cos((2 * x + 1) * u * math.Pi / 16))
-
-  /** One block's forward DCT + quantize + entropy encode; returns the
-    * new DC predictor. Separable transform over the precomputed basis
-    * (2·8³ multiplies per block — a per-element cos() here dominated
-    * the whole fixture encode). */
-  /** Forward DCT + quantize of one 8×8 sample block, zigzag order —
-    * shared by the baseline block encoder and the progressive scans. */
+  /** Forward DCT + quantize of one 8×8 sample block, zigzag order.
+    * Separable transform over the precomputed basis (2·8³ multiplies
+    * per block — a per-element cos() here dominated the whole fixture
+    * encode). */
   private def quantizedBlock(s: Array[Array[Int]]): Array[Int] = {
     val coef = new Array[Int](64)
     val tmp = new Array[Double](64)
@@ -231,8 +293,7 @@ object JpegCodecOps {
       math.round(coef(ZigZag(i)).toDouble / QuantZig(i)).toInt)
   }
 
-  /** The DC half of a block's entropy encode: category + amplitude of
-    * the prediction diff. */
+  /** A first scan's DC: category + amplitude of the prediction diff. */
   private def encodeDcDiff(bw: BitWriter, dc: Int, pred: Int): Unit = {
     val diff = dc - pred
     val (dcode, dlen) = DcCodes(category(diff))
@@ -240,100 +301,129 @@ object JpegCodecOps {
     putAmplitude(bw, diff)
   }
 
-  /** The AC half: run-length of zeros + category, EOB/ZRL (in a
-    * progressive AC-first scan the EOB symbol means EOBRUN = 1 — same
-    * bits, so baseline and progressive share this). */
-  private def encodeAcRun(bw: BitWriter, zz: Array[Int]): Unit = {
-    var k = 1
+  /** A first scan's AC band ss..se of one block at point transform Al:
+    * magnitudes |v| >> Al (zeros are whatever vanishes at this
+    * precision) as zero runs + category + amplitude, ZRL per 16 zeros,
+    * EOB when the band ends in zeros — in a progressive scan that EOB
+    * is EOBRUN = 1, the same bits, so the sequential and progressive
+    * scans share this. */
+  private def encodeAcFirst(bw: BitWriter, zz: Array[Int], ss: Int, se: Int, al: Int): Unit = {
     var run = 0
-    while (k < 64) {
-      if (zz(k) == 0) run += 1
+    var k = ss
+    while (k <= se) {
+      val t = math.abs(zz(k)) >> al
+      if (t == 0) run += 1
       else {
-        while (run > 15) { val (c, l) = AcCodes(0xF0); bw.put(c, l); run -= 16 }
-        val t = category(zz(k))
-        val (c, l) = AcCodes((run << 4) | t)
-        bw.put(c, l)
-        putAmplitude(bw, zz(k))
+        while (run > 15) { putAc(bw, 0xF0); run -= 16 }
+        putAc(bw, (run << 4) | category(t))
+        putAmplitude(bw, if (zz(k) < 0) -t else t)
         run = 0
       }
       k += 1
     }
-    if (run > 0) { val (c, l) = AcCodes(0x00); bw.put(c, l) }
+    if (run > 0) putAc(bw, 0x00)
   }
 
-  /** One block's forward DCT + quantize + entropy encode; returns the
-    * new DC predictor. Separable transform over the precomputed basis
-    * (2·8³ multiplies per block — a per-element cos() here dominated
-    * the whole fixture encode). */
-  private def encodeBlock(bw: BitWriter, s: Array[Array[Int]], pred: Int): Int = {
-    val zz = quantizedBlock(s)
-    encodeDcDiff(bw, zz(0), pred)
-    encodeAcRun(bw, zz)
-    zz(0)
-  }
-
-  /** Encode 8-bit component PLANES as a baseline JFIF file: forward DCT
-    * per 8×8 block (edge pixels replicated), 4:4:4 interleaved MCUs
-    * (one block per component, each with its own DC predictor),
-    * Huffman-encoded with the object's canonical tables. `ncomp` 1 =
-    * grayscale, 3 = YCbCr (JFIF semantics — `comp(c, x, y)` supplies
-    * the c-th COMPONENT value, already in YCbCr for color). A REAL,
-    * ImageIO-readable JPEG. */
-  private[operators] def encodeJpegPlanar(
-      w: Int, h: Int, ncomp: Int, comp: (Int, Int, Int) => Int): Array[Byte] =
-    encodeJpegSampled(w, h,
-      (0 until ncomp).map(c => (((x: Int, y: Int) => comp(c, x, y)), 1, 1)))
-
-  /** The general baseline writer: per-component PLANES at their own
-    * resolution with (Hi, Vi) sampling factors — 4:4:4 is all (1,1),
-    * 4:2:0 is Y (2,2) + chroma (1,1) at half resolution — interleaved
-    * per MCU in sampling order, optional restart intervals (DRI + RSTn
-    * every `restartInterval` MCUs, DC predictors reset, entropy stream
-    * byte-aligned around each marker). */
-  private[operators] def encodeJpegSampled(
-      w: Int, h: Int, comps: Seq[((Int, Int) => Int, Int, Int)],
-      restartInterval: Int = 0): Array[Byte] = {
-    val ncomp = comps.size
-    require(ncomp == 1 || ncomp == 3)
-    val hMax = comps.map(_._2).max
-    val vMax = comps.map(_._3).max
-    // component plane dims (A.1.1: ceil of the sampled fraction)
-    def pw(c: Int): Int = (w * comps(c)._2 + hMax - 1) / hMax
-    def ph(c: Int): Int = (h * comps(c)._3 + vMax - 1) / vMax
-    val bw = new BitWriter
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    val pred = new Array[Int](ncomp)
-    var mcu = 0
-    for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bw.marker(0xD0 + ((mcu / restartInterval - 1) % 8))
-        java.util.Arrays.fill(pred, 0)
-      }
-      for (c <- 0 until ncomp) {
-        val (plane, hi, vi) = comps(c)
-        for (v <- 0 until vi; hh <- 0 until hi) {
-          val bx = (mx * hi + hh) * 8
-          val by = (my * vi + v) * 8
-          val s = Array.tabulate(8, 8)((y, x) =>
-            plane(math.min(bx + x, pw(c) - 1), math.min(by + y, ph(c) - 1)) - 128)
-          pred(c) = encodeBlock(bw, s, pred(c))
+  /** An AC refinement band of one block (G.1.2.3): runs count the
+    * coefficients that are zero at THIS precision too, newly-nonzero
+    * ones are (run, 1) symbols with a sign bit, and every
+    * nonzero-history coefficient contributes a buffered correction bit
+    * (flushed after the next symbol + sign, in position order — the
+    * order the decoder consumes them). The block flushes at an EOB
+    * (EOBRUN = 1) only when positions remain past the last
+    * newly-nonzero coefficient — an EOB after the band is exhausted
+    * would desync the decoder, which stops reading symbols at Se. */
+  private def encodeAcRefine(bw: BitWriter, zz: Array[Int], ss: Int, se: Int, al: Int): Unit = {
+    var run = 0
+    val corr = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def flush(): Unit = { corr.foreach(b => bw.put(b, 1)); corr.clear() }
+    var k = ss
+    while (k <= se) {
+      val t = math.abs(zz(k)) >> al
+      if (t == 0) run += 1
+      else {
+        // drain pending ZRLs at ANY nonzero coefficient — before
+        // buffering its correction bit — so every buffered bit's
+        // position stays within ≤15 zeros of the last flush point
+        // (the decoder's ZRL walk spans exactly 16 zero-history
+        // positions; a bit buffered further out would desync)
+        while (run > 15) { putAc(bw, 0xF0); flush(); run -= 16 }
+        if (t > 1) corr += (t & 1) // history nonzero: correction bit
+        else { // t == 1 ⇒ history zero: newly nonzero at this precision
+          putAc(bw, (run << 4) | 1)
+          putAmplitude(bw, if (zz(k) < 0) -1 else 1) // the sign bit
+          flush()
+          run = 0
         }
       }
-      mcu += 1
+      k += 1
+    }
+    if (run > 0 || corr.nonEmpty) { putAc(bw, 0x00); flush() }
+  }
+
+  /** One scan of a frame: the components it carries (frame indices),
+    * its spectral band Ss..Se and its successive-approximation bit
+    * positions Ah (0 = a first scan) and Al. */
+  private final case class Scan(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int)
+
+  /** The one frame writer: component PLANES at their own resolution
+    * with (Hi, Vi) sampling factors (4:4:4 is all (1,1), 4:2:0 is Y
+    * (2,2) + chroma (1,1) at half resolution), forward DCT + quantize
+    * once per block of the padded grid (edge samples replicated), then
+    * SOI, APP0, DQT, `sof`, the two DHT tables, DRI when
+    * `restartInterval` > 0 (RSTn every that many MCUs of EVERY scan,
+    * DC predictors reset, entropy stream byte-aligned around each
+    * marker), each scan of `scans` as SOS + entropy bytes, and EOI.
+    * `ncomp` 1 = grayscale, 3 = YCbCr (JFIF semantics). */
+  private def encodeFrame(w: Int, h: Int, comps: Seq[((Int, Int) => Int, Int, Int)],
+      restartInterval: Int, sof: Int, scans: Seq[Scan]): Array[Byte] = {
+    val ncomp = comps.size
+    require(ncomp == 1 || ncomp == 3)
+    val f = new Frame(w, h, comps.map(_._2).toArray, comps.map(_._3).toArray)
+    val coefs: Array[Array[Array[Int]]] = Array.tabulate(ncomp) { c =>
+      val plane = comps(c)._1
+      Array.tabulate(f.bW(c) * f.bH(c)) { bi =>
+        val bx = (bi % f.bW(c)) * 8; val by = (bi / f.bW(c)) * 8
+        quantizedBlock(Array.tabulate(8, 8)((y, x) =>
+          plane(math.min(bx + x, f.pw(c) - 1), math.min(by + y, f.ph(c) - 1)) - 128))
+      }
+    }
+    def entropy(s: Scan): Array[Byte] = {
+      val bw = new BitWriter
+      val pred = new Array[Int](s.comps.size)
+      f.walk(s.comps.toArray, restartInterval) { n =>
+        bw.marker(0xD0 + n)
+        java.util.Arrays.fill(pred, 0)
+      } { (i, bi) =>
+        val zz = coefs(s.comps(i))(bi)
+        if (s.ss == 0) {
+          // DC of the POINT-TRANSFORMED value (arithmetic shift — two's
+          // complement carries the refinement bit of negative values)
+          val dc = zz(0) >> s.al
+          if (s.ah == 0) { encodeDcDiff(bw, dc, pred(i)); pred(i) = dc }
+          else bw.put(dc & 1, 1)
+        }
+        if (s.se > 0) {
+          val from = math.max(s.ss, 1)
+          if (s.ah == 0) encodeAcFirst(bw, zz, from, s.se, s.al)
+          else encodeAcRefine(bw, zz, from, s.se, s.al)
+        }
+      }
+      bw.finish()
     }
     val app0 = "JFIF".getBytes("US-ASCII") ++
       Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
     val dqt = Array(0x00.toByte) ++ QuantZig.map(_.toByte)
-    val sof0 = Array[Byte](8,
+    val sofPayload = Array[Byte](8,
       ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
       ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
       ncomp.toByte) ++
       (0 until ncomp).flatMap(c => Seq((c + 1).toByte,
         ((comps(c)._2 << 4) | comps(c)._3).toByte, 0.toByte)).toArray
-    val sos = Array[Byte](ncomp.toByte) ++
-      (1 to ncomp).flatMap(id => Seq(id.toByte, 0x00.toByte)).toArray ++
-      Array[Byte](0, 63, 0)
+    def sos(s: Scan): Array[Byte] =
+      Array[Byte](s.comps.size.toByte) ++
+        s.comps.flatMap(c => Seq((c + 1).toByte, 0x00.toByte)).toArray ++
+        Array[Byte](s.ss.toByte, s.se.toByte, (((s.ah << 4) | s.al) & 0xff).toByte)
     val dri: Array[Byte] =
       if (restartInterval > 0)
         seg(0xDD, Array(((restartInterval >> 8) & 0xff).toByte,
@@ -342,14 +432,32 @@ object JpegCodecOps {
     Array(0xFF.toByte, 0xD8.toByte) ++ // SOI
       seg(0xE0, app0) ++
       seg(0xDB, dqt) ++
-      seg(0xC0, sof0) ++
+      seg(sof, sofPayload) ++
       seg(0xC4, dhtPayload(0, 0, DcBits, DcVals)) ++
       seg(0xC4, dhtPayload(1, 0, AcBits, AcVals)) ++
       dri ++
-      seg(0xDA, sos) ++
-      bw.finish() ++
+      scans.flatMap(s => seg(0xDA, sos(s)) ++ entropy(s)).toArray ++
       Array(0xFF.toByte, 0xD9.toByte) // EOI
   }
+
+  /** Encode 8-bit component PLANES as a baseline JFIF file, all at
+    * (1, 1) sampling. `ncomp` 1 = grayscale, 3 = YCbCr (`comp(c, x, y)`
+    * supplies the c-th COMPONENT value, already in YCbCr for color). A
+    * REAL, ImageIO-readable JPEG. */
+  private[operators] def encodeJpegPlanar(
+      w: Int, h: Int, ncomp: Int, comp: (Int, Int, Int) => Int): Array[Byte] =
+    encodeJpegSampled(w, h, planes(ncomp, comp))
+
+  private def planes(ncomp: Int, comp: (Int, Int, Int) => Int): Seq[((Int, Int) => Int, Int, Int)] =
+    (0 until ncomp).map(c => (((x: Int, y: Int) => comp(c, x, y)), 1, 1))
+
+  /** The general baseline writer: one sequential scan of every
+    * component over the full band, interleaved per MCU in sampling
+    * order, optional restart intervals. */
+  private[operators] def encodeJpegSampled(
+      w: Int, h: Int, comps: Seq[((Int, Int) => Int, Int, Int)],
+      restartInterval: Int = 0): Array[Byte] =
+    encodeFrame(w, h, comps, restartInterval, 0xC0, Seq(Scan(comps.indices, 0, 63, 0, 0)))
 
   /** The 4:2:0 face: a full-resolution luma plane and HALF-resolution
     * chroma planes (the common camera layout). */
@@ -377,265 +485,52 @@ object JpegCodecOps {
     })
 
   /** Encode component PLANES as a PROGRESSIVE (SOF2) JFIF file using
-    * SPECTRAL SELECTION only (Ah = Al = 0 in every scan — no
-    * successive-approximation passes): scan 1 carries every component's
-    * DC coefficients interleaved, then one non-interleaved AC scan per
-    * component covering the full 1..63 band (G.1 scan rules: an AC scan
-    * holds exactly one component). All components at (1, 1) sampling
-    * (gray / 4:4:4 — the progressive decode scope). Each block's EOB is
-    * written as the plain EOB symbol (EOBRUN = 1 — spec-valid; the
-    * DECODER handles general EOBRUN runs, which other encoders emit).
-    * A REAL, ImageIO-readable progressive JPEG. */
+    * SPECTRAL SELECTION only (Ah = Al = 0 in every scan): one DC scan of
+    * every component interleaved, then one non-interleaved AC scan per
+    * component over the full 1..63 band (G.1 scan rules: an AC scan
+    * holds exactly one component). All components at (1, 1) sampling.
+    * Each block's EOB is the plain EOB symbol (EOBRUN = 1 — spec-valid;
+    * the DECODER handles general EOBRUN runs, which other encoders
+    * emit). A REAL, ImageIO-readable progressive JPEG. */
   private[operators] def encodeJpegProgressive(
-      w: Int, h: Int, ncomp: Int, comp: (Int, Int, Int) => Int): Array[Byte] = {
-    require(ncomp == 1 || ncomp == 3)
-    val bX = (w + 7) / 8
-    val bY = (h + 7) / 8
-    def quantZz(c: Int, bx: Int, by: Int): Array[Int] = {
-      val s = Array.tabulate(8, 8)((y, x) =>
-        comp(c, math.min(bx * 8 + x, w - 1), math.min(by * 8 + y, h - 1)) - 128)
-      quantizedBlock(s)
-    }
-    // scan 1: DC, all components interleaved (at (1,1) sampling one MCU
-    // is one block per component)
-    val dcBw = new BitWriter
-    val pred = new Array[Int](ncomp)
-    for (by <- 0 until bY; bx <- 0 until bX; c <- 0 until ncomp) {
-      val zz = quantZz(c, bx, by)
-      encodeDcDiff(dcBw, zz(0), pred(c))
-      pred(c) = zz(0)
-    }
-    // AC scans: one per component, full band, blocks in raster order
-    val acScanBits = (0 until ncomp).map { c =>
-      val abw = new BitWriter
-      for (by <- 0 until bY; bx <- 0 until bX)
-        encodeAcRun(abw, quantZz(c, bx, by))
-      abw.finish()
-    }
-    val app0 = "JFIF".getBytes("US-ASCII") ++
-      Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
-    val dqt = Array(0x00.toByte) ++ QuantZig.map(_.toByte)
-    val sof2 = Array[Byte](8,
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      ncomp.toByte) ++
-      (0 until ncomp).flatMap(c =>
-        Seq((c + 1).toByte, 0x11.toByte, 0.toByte)).toArray
-    val dcSos = Array[Byte](ncomp.toByte) ++
-      (1 to ncomp).flatMap(id => Seq(id.toByte, 0x00.toByte)).toArray ++
-      Array[Byte](0, 0, 0) // Ss = 0, Se = 0, AhAl = 0
-    def acSos(c: Int) = Array[Byte](1, (c + 1).toByte, 0x00.toByte, 1, 63, 0)
-    Array(0xFF.toByte, 0xD8.toByte) ++
-      seg(0xE0, app0) ++
-      seg(0xDB, dqt) ++
-      seg(0xC2, sof2) ++
-      seg(0xC4, dhtPayload(0, 0, DcBits, DcVals)) ++
-      seg(0xC4, dhtPayload(1, 0, AcBits, AcVals)) ++
-      seg(0xDA, dcSos) ++ dcBw.finish() ++
-      (0 until ncomp).flatMap(c => seg(0xDA, acSos(c)) ++ acScanBits(c)).toArray ++
-      Array(0xFF.toByte, 0xD9.toByte)
-  }
+      w: Int, h: Int, ncomp: Int, comp: (Int, Int, Int) => Int): Array[Byte] =
+    encodeFrame(w, h, planes(ncomp, comp), 0, 0xC2,
+      Scan(0 until ncomp, 0, 0, 0, 0) +: (0 until ncomp).map(c => Scan(Seq(c), 1, 63, 0, 0)))
 
   /** Encode component PLANES as a SUCCESSIVE-APPROXIMATION progressive
     * (SOF2) JFIF file — the profile real-world progressive files
     * actually use (libjpeg's `jpeg_simple_progression` shape): a DC
     * first scan at point transform Al = 1, per-component AC first scans
     * over split bands (1..5, 6..63) at Al = 1, then the matching AC
-    * REFINEMENT scans (Ah = 1, Al = 0 — newly-nonzero coefficients as
-    * (run, 1) symbols with sign bits, correction bits for every
-    * passed-over nonzero-history coefficient, per G.1.2.3) and a DC
-    * refinement scan (one appended bit per block). Arbitrary sampling
-    * grids within the decode scope (gray / 4:4:4 / 4:2:0); optional
-    * restart intervals in EVERY scan (per-scan RSTn numbering, MCU =
-    * one block in non-interleaved scans). Each AC-refine block flushes
-    * its correction buffer at an EOB (EOBRUN = 1) only when positions
-    * remain past the last newly-nonzero coefficient — an EOB after the
-    * band is exhausted would desync the decoder, which stops reading
-    * symbols at Se. A REAL, ImageIO-readable progressive JPEG. */
+    * REFINEMENT scans (Ah = 1, Al = 0) and a DC refinement scan (one
+    * appended bit per block). Any sampling grid within the decode
+    * scope; optional restart intervals in EVERY scan (per-scan RSTn
+    * numbering, MCU = one block in non-interleaved scans). A REAL,
+    * ImageIO-readable progressive JPEG. */
   private[operators] def encodeJpegProgressiveSA(
       w: Int, h: Int, comps: Seq[((Int, Int) => Int, Int, Int)],
       restartInterval: Int = 0): Array[Byte] = {
-    val ncomp = comps.size
-    require(ncomp == 1 || ncomp == 3)
-    val hMax = comps.map(_._2).max
-    val vMax = comps.map(_._3).max
-    def pw(c: Int): Int = (w * comps(c)._2 + hMax - 1) / hMax
-    def ph(c: Int): Int = (h * comps(c)._3 + vMax - 1) / vMax
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    // padded (MCU-multiple) block grid per component — interleaved DC
-    // scans cover it; non-interleaved AC scans cover only the
-    // component's own ceil grid (A.2.2/G.1), indexed into the same rows
-    def bW(c: Int): Int = mcusX * comps(c)._2
-    def bH(c: Int): Int = mcusY * comps(c)._3
-    def cBW(c: Int): Int = (pw(c) + 7) / 8
-    def cBH(c: Int): Int = (ph(c) + 7) / 8
-    // forward DCT + quantize once, padded grid, zigzag order
-    val coefs: Array[Array[Array[Int]]] = Array.tabulate(ncomp) { c =>
-      val plane = comps(c)._1
-      Array.tabulate(bW(c) * bH(c)) { bi =>
-        val bx = (bi % bW(c)) * 8; val by = (bi / bW(c)) * 8
-        quantizedBlock(Array.tabulate(8, 8)((y, x) =>
-          plane(math.min(bx + x, pw(c) - 1), math.min(by + y, ph(c) - 1)) - 128))
-      }
-    }
-    def restartIfDue(bw2: BitWriter, mcu: Int): Unit =
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0)
-        bw2.marker(0xD0 + ((mcu / restartInterval - 1) % 8))
-    // DC first scan: all components interleaved, diffs of the
-    // POINT-TRANSFORMED values (arithmetic shift — two's complement
-    // carries the refinement bit of negative values correctly)
-    def dcFirstScan(al: Int): Array[Byte] = {
-      val bw2 = new BitWriter
-      val pred = new Array[Int](ncomp)
-      var mcu = 0
-      for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bw2.marker(0xD0 + ((mcu / restartInterval - 1) % 8))
-          java.util.Arrays.fill(pred, 0)
-        }
-        for (c <- 0 until ncomp; v <- 0 until comps(c)._3; hh <- 0 until comps(c)._2) {
-          val bi = (my * comps(c)._3 + v) * bW(c) + mx * comps(c)._2 + hh
-          val dc = coefs(c)(bi)(0) >> al
-          encodeDcDiff(bw2, dc, pred(c))
-          pred(c) = dc
-        }
-        mcu += 1
-      }
-      bw2.finish()
-    }
-    // DC refinement: one raw bit per block, interleaved MCU order
-    def dcRefineScan(al: Int): Array[Byte] = {
-      val bw2 = new BitWriter
-      var mcu = 0
-      for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-        restartIfDue(bw2, mcu)
-        for (c <- 0 until ncomp; v <- 0 until comps(c)._3; hh <- 0 until comps(c)._2) {
-          val bi = (my * comps(c)._3 + v) * bW(c) + mx * comps(c)._2 + hh
-          bw2.put((coefs(c)(bi)(0) >> al) & 1, 1)
-        }
-        mcu += 1
-      }
-      bw2.finish()
-    }
-    // AC first scan at point transform Al: magnitudes |v| >> Al, zeros
-    // are whatever vanishes at this precision; EOBRUN = 1 per block
-    def acFirstScan(c: Int, ss: Int, se: Int, al: Int): Array[Byte] = {
-      val bw2 = new BitWriter
-      var mcu = 0
-      for (by <- 0 until cBH(c); bx <- 0 until cBW(c)) {
-        restartIfDue(bw2, mcu)
-        val zz = coefs(c)(by * bW(c) + bx)
-        var run = 0
-        var k = ss
-        while (k <= se) {
-          val t = math.abs(zz(k)) >> al
-          if (t == 0) run += 1
-          else {
-            while (run > 15) { val (zc, zl) = AcCodes(0xF0); bw2.put(zc, zl); run -= 16 }
-            val cat = category(t)
-            val (cc2, l2) = AcCodes((run << 4) | cat)
-            bw2.put(cc2, l2)
-            putAmplitude(bw2, if (zz(k) < 0) -t else t)
-            run = 0
-          }
-          k += 1
-        }
-        if (run > 0) { val (ec, el) = AcCodes(0x00); bw2.put(ec, el) }
-        mcu += 1
-      }
-      bw2.finish()
-    }
-    // AC refinement (G.1.2.3): run counts coefficients that are zero at
-    // THIS precision too; nonzero-history coefficients contribute
-    // buffered correction bits (flushed after the next symbol + sign,
-    // in position order — the order the decoder consumes them)
-    def acRefineScan(c: Int, ss: Int, se: Int, al: Int): Array[Byte] = {
-      val bw2 = new BitWriter
-      var mcu = 0
-      for (by <- 0 until cBH(c); bx <- 0 until cBW(c)) {
-        restartIfDue(bw2, mcu)
-        val zz = coefs(c)(by * bW(c) + bx)
-        var run = 0
-        val corr = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def flush(): Unit = { corr.foreach(b => bw2.put(b, 1)); corr.clear() }
-        var k = ss
-        while (k <= se) {
-          val a = math.abs(zz(k))
-          val t = a >> al
-          if (t == 0) run += 1
-          else {
-            // drain pending ZRLs at ANY nonzero coefficient — before
-            // buffering its correction bit — so every buffered bit's
-            // position stays within ≤15 zeros of the last flush point
-            // (the decoder's ZRL walk spans exactly 16 zero-history
-            // positions; a bit buffered further out would desync)
-            while (run > 15) {
-              val (zc, zl) = AcCodes(0xF0); bw2.put(zc, zl); flush(); run -= 16
-            }
-            if (t > 1) corr += (t & 1) // history nonzero: correction bit
-            else { // t == 1 ⇒ history zero: newly nonzero at this precision
-              val (cc2, l2) = AcCodes((run << 4) | 1)
-              bw2.put(cc2, l2)
-              putAmplitude(bw2, if (zz(k) < 0) -1 else 1) // the sign bit
-              flush()
-              run = 0
-            }
-          }
-          k += 1
-        }
-        if (run > 0 || corr.nonEmpty) {
-          val (ec, el) = AcCodes(0x00); bw2.put(ec, el); flush()
-        }
-        mcu += 1
-      }
-      bw2.finish()
-    }
-    val app0 = "JFIF".getBytes("US-ASCII") ++
-      Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
-    val dqt = Array(0x00.toByte) ++ QuantZig.map(_.toByte)
-    val sof2 = Array[Byte](8,
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      ncomp.toByte) ++
-      (0 until ncomp).flatMap(c => Seq((c + 1).toByte,
-        ((comps(c)._2 << 4) | comps(c)._3).toByte, 0.toByte)).toArray
-    def sosHdr(ids: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Array[Byte] =
-      Array[Byte](ids.size.toByte) ++
-        ids.flatMap(id => Seq(id.toByte, 0x00.toByte)).toArray ++
-        Array[Byte](ss.toByte, se.toByte, (((ah << 4) | al) & 0xff).toByte)
-    val dri: Array[Byte] =
-      if (restartInterval > 0)
-        seg(0xDD, Array(((restartInterval >> 8) & 0xff).toByte,
-          (restartInterval & 0xff).toByte))
-      else Array.empty
-    val allIds = (1 to ncomp).toSeq
-    Array(0xFF.toByte, 0xD8.toByte) ++
-      seg(0xE0, app0) ++
-      seg(0xDB, dqt) ++
-      seg(0xC2, sof2) ++
-      seg(0xC4, dhtPayload(0, 0, DcBits, DcVals)) ++
-      seg(0xC4, dhtPayload(1, 0, AcBits, AcVals)) ++
-      dri ++
-      seg(0xDA, sosHdr(allIds, 0, 0, 0, 1)) ++ dcFirstScan(1) ++
-      (0 until ncomp).flatMap(c =>
-        seg(0xDA, sosHdr(Seq(c + 1), 1, 5, 0, 1)) ++ acFirstScan(c, 1, 5, 1) ++
-          seg(0xDA, sosHdr(Seq(c + 1), 6, 63, 0, 1)) ++ acFirstScan(c, 6, 63, 1)).toArray ++
-      (0 until ncomp).flatMap(c =>
-        seg(0xDA, sosHdr(Seq(c + 1), 1, 5, 1, 0)) ++ acRefineScan(c, 1, 5, 0) ++
-          seg(0xDA, sosHdr(Seq(c + 1), 6, 63, 1, 0)) ++ acRefineScan(c, 6, 63, 0)).toArray ++
-      seg(0xDA, sosHdr(allIds, 0, 0, 1, 0)) ++ dcRefineScan(0) ++
-      Array(0xFF.toByte, 0xD9.toByte)
+    val bands = Seq((1, 5), (6, 63))
+    def acScans(ah: Int, al: Int): Seq[Scan] =
+      for (c <- comps.indices; (ss, se) <- bands) yield Scan(Seq(c), ss, se, ah, al)
+    encodeFrame(w, h, comps, restartInterval, 0xC2,
+      Seq(Scan(comps.indices, 0, 0, 0, 1)) ++ acScans(0, 1) ++ acScans(1, 0) ++
+        Seq(Scan(comps.indices, 0, 0, 1, 0)))
   }
+
+  /** The fixtures' corrupt twist: doc_id % 7 == 3 loses its last 12
+    * bytes, truncating it mid-entropy-stream (the
+    * [[PngCodecOps.encodePng]] twist). */
+  private def truncatedTwist(docId: Long, whole: Array[Byte]): Array[Byte] =
+    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
 
   /** The progressive ORACLE fixture: the SAME block-constant formula
     * (and dims and corrupt twist) as [[encodeFixture]], through the
     * SOF2 spectral-selection pipeline — same oracle BY DESIGN. */
   private[operators] def encodeProgressiveFixture(docId: Long): Array[Byte] = {
     val (w, h) = fixtureDims(docId)
-    val whole = encodeJpegProgressive(w, h, 1,
-      (_, x, y) => fixtureSample(docId, x / 8, y / 8))
-    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
+    truncatedTwist(docId, encodeJpegProgressive(w, h, 1,
+      (_, x, y) => fixtureSample(docId, x / 8, y / 8)))
   }
 
   /** The SUCCESSIVE-APPROXIMATION progressive oracle fixture: the same
@@ -649,10 +544,9 @@ object JpegCodecOps {
     * 2-MCU restart cadence across ALL scans; same corrupt twist. */
   private[operators] def encodeProgressiveSAFixture(docId: Long): Array[Byte] = {
     val (w, h) = fixtureDims(docId)
-    val whole = encodeJpegProgressiveSA(w, h,
+    truncatedTwist(docId, encodeJpegProgressiveSA(w, h,
       Seq(((((x: Int, y: Int) => fixtureSample(docId, x / 8, y / 8))), 1, 1)),
-      fixtureRestart(docId))
-    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
+      fixtureRestart(docId)))
   }
 
   /** The SUBSAMPLED-progressive oracle fixture: the 4:2:0 macroblock
@@ -664,12 +558,11 @@ object JpegCodecOps {
     * DESIGN — only the scan structure differs, which is the claim. */
   private[operators] def encodeProg420Fixture(docId: Long): Array[Byte] = {
     val (w, h) = fixtureDims420(docId)
-    val whole = encodeJpegProgressiveSA(w, h, Seq(
+    truncatedTwist(docId, encodeJpegProgressiveSA(w, h, Seq(
       (((x: Int, y: Int) => fixtureYcc(docId, 0, x / 8, y / 8)), 2, 2),
       (((x2: Int, y2: Int) => fixtureYcc(docId, 1, x2 / 8, y2 / 8)), 1, 1),
       (((x2: Int, y2: Int) => fixtureYcc(docId, 2, x2 / 8, y2 / 8)), 1, 1)),
-      fixtureRestart(docId))
-    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
+      fixtureRestart(docId)))
   }
 
   /** The block-constant ORACLE fixture for a doc (lossless by
@@ -677,16 +570,15 @@ object JpegCodecOps {
     * mid-entropy-stream (the [[PngCodecOps.encodePng]] corrupt twist). */
   private[operators] def encodeFixture(docId: Long): Array[Byte] = {
     val (w, h) = fixtureDims(docId)
-    val whole = encodeJpeg(w, h, (x, y) => fixtureSample(docId, x / 8, y / 8))
-    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
+    truncatedTwist(docId, encodeJpeg(w, h, (x, y) => fixtureSample(docId, x / 8, y / 8)))
   }
 
   /** The COLOR oracle fixture: block-constant YCbCr planes through the
     * 4:4:4 interleaved encoder; same corrupt twist. */
   private[operators] def encodeColorFixture(docId: Long): Array[Byte] = {
     val (w, h) = fixtureDims(docId)
-    val whole = encodeJpegPlanar(w, h, 3, (c, x, y) => fixtureYcc(docId, c, x / 8, y / 8))
-    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
+    truncatedTwist(docId,
+      encodeJpegPlanar(w, h, 3, (c, x, y) => fixtureYcc(docId, c, x / 8, y / 8)))
   }
 
   /** Larger dims for the 4:2:0 fixture — several MCUs per image, so the
@@ -708,15 +600,14 @@ object JpegCodecOps {
     * same corrupt twist. */
   private[operators] def encode420Fixture(docId: Long): Array[Byte] = {
     val (w, h) = fixtureDims420(docId)
-    val whole = encodeJpeg420(w, h,
+    truncatedTwist(docId, encodeJpeg420(w, h,
       (x, y) => fixtureYcc(docId, 0, x / 8, y / 8),
       (x2, y2) => fixtureYcc(docId, 1, x2 / 8, y2 / 8),
       (x2, y2) => fixtureYcc(docId, 2, x2 / 8, y2 / 8),
-      fixtureRestart(docId))
-    if (docId % 7 == 3) whole.take(whole.length - math.min(whole.length, 12)) else whole
+      fixtureRestart(docId)))
   }
 
-  // ---- decoder (any grayscale baseline-sequential 8-bit JPEG) --------
+  // ---- decoder (8-bit Huffman DCT, sequential and progressive) -------
 
   private final class HuffTable(bits: Array[Int], vals: Array[Int]) {
     // Annex F decode tables: MINCODE/MAXCODE/VALPTR per code length
@@ -739,8 +630,9 @@ object JpegCodecOps {
   }
 
   /** MSB-first entropy-segment reader with 0xFF byte-unstuffing; a
-    * marker (0xFF followed by non-zero) or end of data raises — decode
-    * treats that as corrupt unless the scan is already complete. */
+    * marker (0xFF followed by non-zero), end of data or malformed scan
+    * data raises — decode treats that as corrupt unless the scan is
+    * already complete. */
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
     private var acc = 0
     private var nbits = 0
@@ -780,10 +672,96 @@ object JpegCodecOps {
         throw new java.io.EOFException
       pos += 2
     }
+    /** An EOB run's length in blocks after the current one: 2^r − 1
+      * plus r appended bits (G.1.2.2). */
+    def eobRun(r: Int): Int = (1 << r) - 1 + (if (r > 0) bits(r) else 0)
   }
 
   private def extend(v: Int, t: Int): Int =
     if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
+
+  /** One block's AC band ss..se in a first scan: run/size symbols, ZRL,
+    * and EOB runs; decoded magnitudes shifted up by the point transform
+    * Al. `eobrun` is the run left from earlier blocks (a positive one
+    * covers this block whole); returns the run left after it. The
+    * sequential scan is the band 1..63 at Al = 0. */
+  private def decodeAcFirst(br: BitReader, t: HuffTable, zz: Array[Int],
+      ss: Int, se: Int, al: Int, eobrun: Int): Int = {
+    if (eobrun > 0) return eobrun - 1
+    var run = 0
+    var k = ss
+    while (k <= se) {
+      val rs = br.decode(t)
+      val r = rs >> 4
+      val s = rs & 15
+      if (s == 0) {
+        if (r == 15) k += 16 // ZRL
+        else { run = br.eobRun(r); k = se + 1 }
+      } else {
+        k += r
+        if (k > se) throw new java.io.EOFException // a run past the band
+        zz(k) = extend(br.bits(s), s) << al
+        k += 1
+      }
+    }
+    run
+  }
+
+  /** One block's AC band in a REFINEMENT scan (G.1.2.3): newly-nonzero
+    * coefficients arrive as (run, 1) symbols with a sign bit; every
+    * nonzero-history coefficient passed over contributes one correction
+    * bit (moving its magnitude up by 2^Al when set); an EOB run refines
+    * the rest of the band in this block and `eobrun` more whole
+    * blocks. Returns the run left after this block. */
+  private def decodeAcRefine(br: BitReader, t: HuffTable, zz: Array[Int],
+      ss: Int, se: Int, al: Int, eobrun: Int): Int = {
+    val p1 = 1 << al
+    def refine(k: Int): Unit =
+      if (br.bit() != 0 && (zz(k) & p1) == 0)
+        zz(k) += (if (zz(k) >= 0) p1 else -p1)
+    var run = eobrun - 1
+    var k = ss
+    if (eobrun == 0) {
+      run = 0
+      var eob = false
+      while (k <= se && !eob) {
+        val rs = br.decode(t)
+        var r = rs >> 4
+        val s = rs & 15
+        var newval = 0
+        if (s == 0) {
+          // EOB run (0 MORE whole blocks for r = 0 — the current
+          // block's tail is still refined below); r == 15 is ZRL: skip
+          // 16 zero-history positions
+          if (r < 15) { run = br.eobRun(r); eob = true }
+        } else {
+          if (s != 1) throw new java.io.EOFException // refinement magnitudes are ±1
+          newval = if (br.bit() != 0) p1 else -p1
+        }
+        if (!eob) {
+          // advance past r zero-history positions, refining
+          // nonzero-history coefficients along the way
+          var placed = false
+          while (k <= se && !placed) {
+            if (zz(k) != 0) refine(k)
+            else if (r == 0) {
+              if (newval != 0) zz(k) = newval
+              placed = true
+            } else r -= 1
+            k += 1
+          }
+          if (newval != 0 && !placed) throw new java.io.EOFException // ran off the band
+        }
+      }
+    }
+    // the band's tail under an EOB run: correction bits for its
+    // nonzero coefficients
+    while (k <= se) {
+      if (zz(k) != 0) refine(k)
+      k += 1
+    }
+    run
+  }
 
   /** `channels` 1 = grayscale (samples = gray), 3 = color (samples =
     * interleaved RGB after the JFIF YCbCr conversion). */
@@ -803,258 +781,32 @@ object JpegCodecOps {
   }
 
   /** Full decode or None (malformed anywhere; unsupported profiles —
-    * extended/lossless/arithmetic scans, 16-bit quant tables, sampling
+    * extended/lossless/arithmetic frames, 16-bit quant tables, sampling
     * grids other than gray / 4:4:4 / 4:2:0 — are honestly None, never
-    * a wrong answer). Never throws. SOF2 streams take the
-    * [[decodeProgressive]] multi-scan path (spectral selection AND
-    * successive approximation). */
+    * a wrong answer). Never throws.
+    *
+    * One marker walk for both frame types. Each SOS decodes into the
+    * per-block coefficient buffers: DC scans interleave over MCUs when
+    * Ns > 1 and walk the component's own block grid when Ns = 1; AC
+    * scans are always single-component (G.1). First scans (Ah = 0)
+    * store point-transformed coefficients shifted back up by Al;
+    * refinement scans (Ah > 0) append one DC bit per block or run the
+    * AC correction procedure. Scan components resolve against the
+    * frame's ids; restart intervals are honored per scan and tables are
+    * re-definable between scans. A sequential frame allows exactly its
+    * one scan — every component, the band 0..63, no approximation — and
+    * reconstructs when it completes; a progressive frame reconstructs
+    * at EOI. */
   private[operators] def decodeJpeg(bytes: Array[Byte]): Option[Decoded] =
     try {
       if (bytes.length < 4 || (bytes(0) & 0xff) != 0xFF || (bytes(1) & 0xff) != 0xD8)
         return None
       var pos = 2
-      var w = 0; var h = 0
-      var ncomp = 0
       var restart = 0
-      val compQuant = new Array[Int](3)
-      val compH = new Array[Int](3)
-      val compV = new Array[Int](3)
-      val compDc = new Array[Int](3)
-      val compAc = new Array[Int](3)
-      val dcTables = new Array[HuffTable](4)
-      val acTables = new Array[HuffTable](4)
-      val quants = new Array[Array[Int]](4)
-      var scanStart = -1
-      def u16(o: Int): Int = ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-      while (scanStart < 0) {
-        // skip fill bytes, expect a marker
-        if (pos + 2 > bytes.length) return None
-        if ((bytes(pos) & 0xff) != 0xFF) return None
-        var m = bytes(pos + 1) & 0xff
-        while (m == 0xFF) { pos += 1; if (pos + 2 > bytes.length) return None; m = bytes(pos + 1) & 0xff }
-        pos += 2
-        m match {
-          case 0xD9 => return None // EOI before any scan
-          case 0xC0 => // baseline SOF
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (pos + len > bytes.length || len < 8) return None
-            val precision = bytes(pos + 2) & 0xff
-            h = u16(pos + 3); w = u16(pos + 5)
-            ncomp = bytes(pos + 7) & 0xff
-            // honest scope: 8-bit; 1 component (gray), 3 at 4:4:4, or 3
-            // at 4:2:0 (Y 2×2 + chroma 1×1 — the common camera layout,
-            // nearest-neighbor upsampled). Other sampling grids refuse.
-            if (precision != 8 || (ncomp != 1 && ncomp != 3)) return None
-            if (len < 8 + 3 * ncomp) return None
-            for (c <- 0 until ncomp) {
-              val sampling = bytes(pos + 9 + 3 * c) & 0xff
-              compH(c) = (sampling >> 4) & 0x0f
-              compV(c) = sampling & 0x0f
-              compQuant(c) = bytes(pos + 10 + 3 * c) & 0xff
-              if (compQuant(c) > 3) return None
-            }
-            val layoutOk =
-              (ncomp == 1 && compH(0) == 1 && compV(0) == 1) ||
-                (ncomp == 3 && (0 until 3).forall(c => compH(c) == 1 && compV(c) == 1)) ||
-                (ncomp == 3 && compH(0) == 2 && compV(0) == 2 &&
-                  (1 until 3).forall(c => compH(c) == 1 && compV(c) == 1))
-            if (!layoutOk) return None
-            if (w < 1 || h < 1 || w.toLong * h * ncomp > MaxSamples) return None
-            pos += len
-          case 0xC2 =>
-            // progressive DCT: its own multi-scan walk (spectral
-            // selection AND successive approximation, gray/4:4:4/4:2:0)
-            return decodeProgressive(bytes)
-          case 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
-               0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-            return None // extended/lossless/arithmetic: out of scope
-          case 0xC4 => // DHT (possibly several tables in one segment)
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            // len counts its own two bytes: < 2 is spec-invalid, and
-            // advancing by it would loop forever on a crafted stream
-            if (len < 2 || pos + len > bytes.length) return None
-            var o = pos + 2
-            while (o < pos + len) {
-              if (o + 17 > pos + len) return None
-              val tc = (bytes(o) >> 4) & 0x0f
-              val th = bytes(o) & 0x0f
-              if (tc > 1 || th > 3) return None
-              val bits = new Array[Int](17)
-              var total = 0
-              for (l <- 1 to 16) { bits(l) = bytes(o + l) & 0xff; total += bits(l) }
-              if (o + 17 + total > pos + len || total > 256) return None
-              val vals = Array.tabulate(total)(i => bytes(o + 17 + i) & 0xff)
-              val t = new HuffTable(bits, vals)
-              if (tc == 0) dcTables(th) = t else acTables(th) = t
-              o += 17 + total
-            }
-            pos += len
-          case 0xDB => // DQT (possibly several tables)
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (len < 2 || pos + len > bytes.length) return None
-            var o = pos + 2
-            while (o < pos + len) {
-              val pq = (bytes(o) >> 4) & 0x0f
-              val tq = bytes(o) & 0x0f
-              if (pq != 0 || tq > 3) return None // 16-bit tables out of scope
-              if (o + 65 > pos + len) return None
-              quants(tq) = Array.tabulate(64)(i => bytes(o + 1 + i) & 0xff)
-              o += 65
-            }
-            pos += len
-          case 0xDD => // DRI: restart interval in MCUs
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (pos + len > bytes.length || len < 4) return None
-            restart = u16(pos + 2)
-            pos += len
-          case 0xDA => // SOS
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (pos + len > bytes.length || len < 6 + 2 * ncomp) return None
-            val ns = bytes(pos + 2) & 0xff
-            if (ns != ncomp || ncomp == 0) return None
-            for (c <- 0 until ncomp) {
-              compDc(c) = (bytes(pos + 4 + 2 * c) >> 4) & 0x0f
-              compAc(c) = bytes(pos + 4 + 2 * c) & 0x0f
-            }
-            val ss = bytes(pos + 3 + 2 * ncomp) & 0xff
-            val se = bytes(pos + 4 + 2 * ncomp) & 0xff
-            if (ss != 0 || se != 63) return None
-            scanStart = pos + len
-          case x if x >= 0xE0 && x <= 0xEF || x == 0xFE => // APPn / COM
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (len < 2 || pos + len > bytes.length) return None
-            pos += len
-          case _ => return None
-        }
-      }
-      if (w == 0) return None
-      val quant = Array.tabulate(ncomp)(c => quants(compQuant(c)))
-      val dcT = Array.tabulate(ncomp)(c => dcTables(compDc(c)))
-      val acT = Array.tabulate(ncomp)(c => acTables(compAc(c)))
-      if (quant.exists(_ == null) || dcT.exists(_ == null) || acT.exists(_ == null))
-        return None
-
-      val hMax = (0 until ncomp).map(compH).max
-      val vMax = (0 until ncomp).map(compV).max
-      // component planes at their OWN resolution (A.1.1), cropped later
-      val pw = Array.tabulate(ncomp)(c => (w * compH(c) + hMax - 1) / hMax)
-      val ph = Array.tabulate(ncomp)(c => (h * compV(c) + vMax - 1) / vMax)
-      val planes = Array.tabulate(ncomp)(c => new Array[Int](pw(c) * ph(c)))
-      val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-      val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-      val br = new BitReader(bytes, scanStart)
-      val pred = new Array[Int](ncomp)
-      val zz = new Array[Int](64)
-      val blk = new Array[Double](64)
-      val cosT = CosT // the shared separable basis
-      var mcu = 0
-      for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-        if (restart > 0 && mcu > 0 && mcu % restart == 0) {
-          br.expectRestart((mcu / restart - 1) % 8)
-          java.util.Arrays.fill(pred, 0)
-        }
-        for (c <- 0 until ncomp; v <- 0 until compV(c); hh <- 0 until compH(c)) {
-          java.util.Arrays.fill(zz, 0)
-          val t = br.decode(dcT(c))
-          pred(c) += extend(br.bits(t), t)
-          zz(0) = pred(c)
-          var k = 1
-          var eob = false
-          while (k < 64 && !eob) {
-            val rs = br.decode(acT(c))
-            if (rs == 0x00) eob = true
-            else if (rs == 0xF0) k += 16
-            else {
-              k += (rs >> 4)
-              if (k > 63) return None
-              zz(k) = extend(br.bits(rs & 15), rs & 15)
-              k += 1
-            }
-          }
-          // dequant + inverse zigzag into natural order
-          java.util.Arrays.fill(blk, 0.0)
-          var i = 0
-          while (i < 64) { blk(ZigZag(i)) = zz(i).toDouble * quant(c)(i); i += 1 }
-          // separable IDCT: rows (over v) then columns (over u)
-          val tmp = new Array[Double](64)
-          for (u <- 0 until 8; x <- 0 until 8) {
-            var acc = 0.0
-            var vv = 0
-            while (vv < 8) { acc += blk(u * 8 + vv) * cosT(x)(vv); vv += 1 }
-            tmp(u * 8 + x) = acc
-          }
-          val baseX = (mx * compH(c) + hh) * 8
-          val baseY = (my * compV(c) + v) * 8
-          for (x <- 0 until 8; y <- 0 until 8) {
-            var acc = 0.0
-            var u = 0
-            while (u < 8) { acc += tmp(u * 8 + x) * cosT(y)(u); u += 1 }
-            val px = math.round(acc / 4 + 128).toInt
-            val cx = baseX + x; val cy = baseY + y
-            if (cx < pw(c) && cy < ph(c))
-              planes(c)(cy * pw(c) + cx) = math.max(0, math.min(255, px))
-          }
-        }
-        mcu += 1
-      }
-      if (ncomp == 1) Some(Decoded(w, h, 1, planes(0)))
-      else {
-        // JFIF 3-component = YCbCr: upsample chroma to full resolution
-        // (nearest-neighbor — the sampled coordinate per A.1.1) and
-        // interleave as RGB
-        val out = new Array[Int](w * h * 3)
-        def sample(c: Int, x: Int, y: Int): Int =
-          planes(c)((y * compV(c) / vMax) * pw(c) + (x * compH(c) / hMax))
-        var j = 0
-        while (j < w * h) {
-          val x = j % w; val y = j / w
-          val yv = sample(0, x, y); val cb = sample(1, x, y); val cr = sample(2, x, y)
-          out(3 * j) = ycc(0, yv, cb, cr)
-          out(3 * j + 1) = ycc(1, yv, cb, cr)
-          out(3 * j + 2) = ycc(2, yv, cb, cr)
-          j += 1
-        }
-        Some(Decoded(w, h, 3, out))
-      }
-    } catch { case _: Exception => None }
-
-  /** PROGRESSIVE (SOF2) decode — spectral selection AND successive
-    * approximation, over the same sampling grids as the baseline path
-    * (gray / 4:4:4 / 4:2:0). DC scans interleave over MCUs when Ns > 1
-    * and walk the component's own block grid when Ns = 1; AC scans are
-    * always single-component (G.1). First scans (Ah = 0) store
-    * point-transformed coefficients shifted back up by Al; refinement
-    * scans (Ah > 0) append one DC bit per block or run the G.1.2.3 AC
-    * correction procedure (newly-nonzero ±1·2^Al coefficients,
-    * correction bits for every passed-over nonzero-history
-    * coefficient, EOB runs refining the rest of the band). Restart
-    * intervals honored per scan, tables re-definable between scans.
-    * Coefficients ACCUMULATE across scans into per-block zigzag
-    * buffers; reconstruction (dequant + IDCT + upsampling + the JFIF
-    * YCbCr conversion) runs once at EOI. Never throws — malformed
-    * anywhere is None. */
-  private def decodeProgressive(bytes: Array[Byte]): Option[Decoded] =
-    try {
-      if (bytes.length < 4 || (bytes(0) & 0xff) != 0xFF || (bytes(1) & 0xff) != 0xD8)
-        return None
-      var pos = 2
-      var w = 0; var h = 0
-      var ncomp = 0
-      var restart = 0
+      var frame: Frame = null
+      var progressive = false
       val compId = new Array[Int](3)
       val compQuant = new Array[Int](3)
-      val compH = new Array[Int](3)
-      val compV = new Array[Int](3)
-      var pw: Array[Int] = null; var ph: Array[Int] = null
-      var bW: Array[Int] = null; var bH: Array[Int] = null
-      var cBW: Array[Int] = null; var cBH: Array[Int] = null
-      var mcusX = 0; var mcusY = 0
       val dcTables = new Array[HuffTable](4)
       val acTables = new Array[HuffTable](4)
       val quants = new Array[Array[Int]](4)
@@ -1062,286 +814,144 @@ object JpegCodecOps {
       // (MCU-multiple) grid, each a 64-coef zigzag buffer
       var coef: Array[Array[Array[Int]]] = null
       def u16(o: Int): Int = ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
+      def reconstructed: Option[Decoded] =
+        reconstruct(frame, coef, Array.tabulate(frame.ncomp)(c => quants(compQuant(c))))
       while (true) {
+        // skip fill bytes, expect a marker
         if (pos + 2 > bytes.length) return None
         if ((bytes(pos) & 0xff) != 0xFF) return None
         var m = bytes(pos + 1) & 0xff
         while (m == 0xFF) { pos += 1; if (pos + 2 > bytes.length) return None; m = bytes(pos + 1) & 0xff }
         pos += 2
+        // EOI: a progressive frame reconstructs what its scans
+        // accumulated; a sequential frame never finished its one scan
+        if (m == 0xD9) return if (frame == null || !progressive) None else reconstructed
+        // every other marker heads a segment whose length counts its
+        // own two bytes: < 2 is spec-invalid, and advancing by it would
+        // loop forever on a crafted stream
+        if (pos + 2 > bytes.length) return None
+        val at = pos
+        val len = u16(at)
+        if (len < 2 || at + len > bytes.length) return None
+        pos = at + len
         m match {
-          case 0xD9 => // EOI: reconstruct from the accumulated coefficients
-            if (coef == null || w == 0) return None
-            return reconstructProgressive(w, h, ncomp, compH, compV,
-              pw, ph, bW, cBW, cBH, coef,
-              (0 until ncomp).map(c => quants(compQuant(c))).toArray)
-          case 0xC2 => // SOF2
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (pos + len > bytes.length || len < 8) return None
-            val precision = bytes(pos + 2) & 0xff
-            h = u16(pos + 3); w = u16(pos + 5)
-            ncomp = bytes(pos + 7) & 0xff
-            if (precision != 8 || (ncomp != 1 && ncomp != 3)) return None
-            if (len < 8 + 3 * ncomp) return None
+          case 0xC0 | 0xC2 => // SOF0 baseline / SOF2 progressive
+            if (frame != null && progressive != (m == 0xC2)) return None // a second frame type
+            progressive = m == 0xC2
+            if (len < 8) return None
+            val precision = bytes(at + 2) & 0xff
+            val h = u16(at + 3); val w = u16(at + 5)
+            val ncomp = bytes(at + 7) & 0xff
+            if (precision != 8 || (ncomp != 1 && ncomp != 3) || len < 8 + 3 * ncomp) return None
+            val hs = new Array[Int](ncomp); val vs = new Array[Int](ncomp)
             for (c <- 0 until ncomp) {
-              compId(c) = bytes(pos + 8 + 3 * c) & 0xff
-              val sampling = bytes(pos + 9 + 3 * c) & 0xff
-              compH(c) = (sampling >> 4) & 0x0f
-              compV(c) = sampling & 0x0f
-              compQuant(c) = bytes(pos + 10 + 3 * c) & 0xff
+              compId(c) = bytes(at + 8 + 3 * c) & 0xff
+              val sampling = bytes(at + 9 + 3 * c) & 0xff
+              hs(c) = (sampling >> 4) & 0x0f
+              vs(c) = sampling & 0x0f
+              compQuant(c) = bytes(at + 10 + 3 * c) & 0xff
               if (compQuant(c) > 3) return None
             }
-            // the baseline path's grids: gray, 4:4:4, 4:2:0
-            val layoutOk =
-              (ncomp == 1 && compH(0) == 1 && compV(0) == 1) ||
-                (ncomp == 3 && (0 until 3).forall(c => compH(c) == 1 && compV(c) == 1)) ||
-                (ncomp == 3 && compH(0) == 2 && compV(0) == 2 &&
-                  (1 until 3).forall(c => compH(c) == 1 && compV(c) == 1))
+            // honest scope: gray, 4:4:4, or 4:2:0 (Y 2×2 + chroma 1×1,
+            // nearest-neighbor upsampled). Other sampling grids refuse.
+            val layoutOk = hs.indices.forall(c => hs(c) == 1 && vs(c) == 1) ||
+              (ncomp == 3 && hs(0) == 2 && vs(0) == 2 &&
+                (1 until 3).forall(c => hs(c) == 1 && vs(c) == 1))
             if (!layoutOk) return None
             if (w < 1 || h < 1 || w.toLong * h * ncomp > MaxSamples) return None
-            val hMax = (0 until ncomp).map(compH).max
-            val vMax = (0 until ncomp).map(compV).max
-            pw = Array.tabulate(ncomp)(c => (w * compH(c) + hMax - 1) / hMax)
-            ph = Array.tabulate(ncomp)(c => (h * compV(c) + vMax - 1) / vMax)
-            mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-            mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-            bW = Array.tabulate(ncomp)(c => mcusX * compH(c))
-            bH = Array.tabulate(ncomp)(c => mcusY * compV(c))
-            cBW = Array.tabulate(ncomp)(c => (pw(c) + 7) / 8)
-            cBH = Array.tabulate(ncomp)(c => (ph(c) + 7) / 8)
-            if ((0 until ncomp).map(c => bW(c).toLong * bH(c) * 64).sum > MaxSamples * 8)
+            frame = new Frame(w, h, hs, vs)
+            val f = frame
+            if ((0 until ncomp).map(c => f.bW(c).toLong * f.bH(c) * 64).sum > MaxSamples * 8)
               return None
-            coef = Array.tabulate(ncomp)(c => Array.fill(bW(c) * bH(c))(new Array[Int](64)))
-            pos += len
-          case 0xC0 | 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
+            coef = Array.tabulate(ncomp)(c => Array.fill(f.bW(c) * f.bH(c))(new Array[Int](64)))
+          case 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
                0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-            return None // a second frame type mid-stream: malformed
-          case 0xC4 =>
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (len < 2 || pos + len > bytes.length) return None
-            var o = pos + 2
-            while (o < pos + len) {
-              if (o + 17 > pos + len) return None
+            return None // extended/lossless/arithmetic: out of scope
+          case 0xC4 => // DHT (possibly several tables in one segment)
+            var o = at + 2
+            while (o < at + len) {
+              if (o + 17 > at + len) return None
               val tc = (bytes(o) >> 4) & 0x0f
               val th = bytes(o) & 0x0f
               if (tc > 1 || th > 3) return None
               val bits = new Array[Int](17)
               var total = 0
               for (l <- 1 to 16) { bits(l) = bytes(o + l) & 0xff; total += bits(l) }
-              if (o + 17 + total > pos + len || total > 256) return None
+              if (o + 17 + total > at + len || total > 256) return None
               val vals = Array.tabulate(total)(i => bytes(o + 17 + i) & 0xff)
               val t = new HuffTable(bits, vals)
               if (tc == 0) dcTables(th) = t else acTables(th) = t
               o += 17 + total
             }
-            pos += len
-          case 0xDB =>
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (len < 2 || pos + len > bytes.length) return None
-            var o = pos + 2
-            while (o < pos + len) {
+          case 0xDB => // DQT (possibly several tables)
+            var o = at + 2
+            while (o < at + len) {
               val pq = (bytes(o) >> 4) & 0x0f
               val tq = bytes(o) & 0x0f
-              if (pq != 0 || tq > 3) return None
-              if (o + 65 > pos + len) return None
+              if (pq != 0 || tq > 3) return None // 16-bit tables out of scope
+              if (o + 65 > at + len) return None
               quants(tq) = Array.tabulate(64)(i => bytes(o + 1 + i) & 0xff)
               o += 65
             }
-            pos += len
-          case 0xDD =>
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (pos + len > bytes.length || len < 4) return None
-            restart = u16(pos + 2)
-            pos += len
-          case 0xDA => // one scan of the progression
-            if (coef == null) return None
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (pos + len > bytes.length || len < 6) return None
-            val ns = bytes(pos + 2) & 0xff
-            if (ns < 1 || ns > ncomp || len < 6 + 2 * ns) return None
-            // scan components resolve against the FRAME's ids
+          case 0xDD => // DRI: restart interval in MCUs
+            if (len < 4) return None
+            restart = u16(at + 2)
+          case 0xDA => // SOS: one scan
+            if (frame == null || len < 6) return None
+            val f = frame
+            val ns = bytes(at + 2) & 0xff
+            if (ns < 1 || ns > f.ncomp || len < 6 + 2 * ns) return None
             val scanComp = new Array[Int](ns)
             val scanDc = new Array[Int](ns)
             val scanAc = new Array[Int](ns)
             for (i <- 0 until ns) {
-              val id = bytes(pos + 3 + 2 * i) & 0xff
-              val c = (0 until ncomp).find(compId(_) == id).getOrElse(return None)
-              scanComp(i) = c
-              scanDc(i) = (bytes(pos + 4 + 2 * i) >> 4) & 0x0f
-              scanAc(i) = bytes(pos + 4 + 2 * i) & 0x0f
+              val id = bytes(at + 3 + 2 * i) & 0xff
+              scanComp(i) = (0 until f.ncomp).find(compId(_) == id).getOrElse(return None)
+              scanDc(i) = (bytes(at + 4 + 2 * i) >> 4) & 0x0f
+              scanAc(i) = bytes(at + 4 + 2 * i) & 0x0f
             }
-            val ss = bytes(pos + 3 + 2 * ns) & 0xff
-            val se = bytes(pos + 4 + 2 * ns) & 0xff
-            val ahal = bytes(pos + 5 + 2 * ns) & 0xff
+            val ss = bytes(at + 3 + 2 * ns) & 0xff
+            val se = bytes(at + 4 + 2 * ns) & 0xff
+            val ahal = bytes(at + 5 + 2 * ns) & 0xff
             val ah = (ahal >> 4) & 0x0f
             val al = ahal & 0x0f
-            if (al > 13 || ah > 13) return None
-            val br = new BitReader(bytes, pos + len)
-            if (ss == 0) {
-              // DC scan: interleaved MCU walk when Ns > 1,
-              // the component's own block grid when Ns = 1 (A.2)
-              if (se != 0) return None
-              val dcT = scanDc.map(i => dcTables(i))
-              if (ah == 0 && dcT.exists(_ == null)) return None
-              val pred = new Array[Int](ns)
-              // one block of one scan component: first scans accumulate
-              // point-transformed prediction; refinements append a bit
-              def dcBlock(i: Int, bi: Int): Unit =
+            val scanOk =
+              if (!progressive) ns == f.ncomp && ss == 0 && se == 63 && ahal == 0
+              else if (ss == 0) se == 0 && al <= 13 && ah <= 13
+              else ns == 1 && se >= ss && se <= 63 && al <= 13 && ah <= 13
+            if (!scanOk) return None
+            // a DC scan resolves its DC selectors, a band past 0 its AC
+            // selectors; first scans need the DC tables themselves
+            val dcT = if (ss == 0) scanDc.map(t => dcTables(t)) else null
+            val acT = if (se > 0) scanAc.map(t => acTables(t)) else null
+            if ((ss == 0 && ah == 0 && dcT.contains(null)) || (se > 0 && acT.contains(null)))
+              return None
+            val br = new BitReader(bytes, pos)
+            val pred = new Array[Int](ns)
+            var eobrun = 0
+            f.walk(scanComp, restart) { n =>
+              br.expectRestart(n)
+              java.util.Arrays.fill(pred, 0)
+              eobrun = 0
+            } { (i, bi) =>
+              val zz = coef(scanComp(i))(bi)
+              if (ss == 0) {
                 if (ah == 0) {
                   val t = br.decode(dcT(i))
                   pred(i) += extend(br.bits(t), t)
-                  coef(scanComp(i))(bi)(0) = pred(i) << al
-                } else if (br.bit() != 0)
-                  coef(scanComp(i))(bi)(0) |= (1 << al)
-              var mcu = 0
-              if (ns > 1) {
-                for (my <- 0 until mcusY; mx <- 0 until mcusX) {
-                  if (restart > 0 && mcu > 0 && mcu % restart == 0) {
-                    br.expectRestart((mcu / restart - 1) % 8)
-                    java.util.Arrays.fill(pred, 0)
-                  }
-                  for (i <- 0 until ns) {
-                    val c = scanComp(i)
-                    for (v <- 0 until compV(c); hh <- 0 until compH(c))
-                      dcBlock(i, (my * compV(c) + v) * bW(c) + mx * compH(c) + hh)
-                  }
-                  mcu += 1
-                }
-              } else {
-                val c = scanComp(0)
-                for (by <- 0 until cBH(c); bx <- 0 until cBW(c)) {
-                  if (restart > 0 && mcu > 0 && mcu % restart == 0) {
-                    br.expectRestart((mcu / restart - 1) % 8)
-                    java.util.Arrays.fill(pred, 0)
-                  }
-                  dcBlock(0, by * bW(c) + bx)
-                  mcu += 1
-                }
+                  zz(0) = pred(i) << al
+                } else if (br.bit() != 0) zz(0) |= (1 << al)
               }
-            } else if (ah == 0) {
-              // AC first scan: one component (G.1), EOBRUN semantics,
-              // decoded magnitudes shifted up by the point transform
-              if (ns != 1 || se < ss || se > 63) return None
-              val acT = acTables(scanAc(0))
-              if (acT == null) return None
-              val cc = scanComp(0)
-              var eobrun = 0
-              var mcu = 0
-              for (by <- 0 until cBH(cc); bx <- 0 until cBW(cc)) {
-                if (restart > 0 && mcu > 0 && mcu % restart == 0) {
-                  br.expectRestart((mcu / restart - 1) % 8)
-                  eobrun = 0
-                }
-                val zz = coef(cc)(by * bW(cc) + bx)
-                if (eobrun > 0) eobrun -= 1
-                else {
-                  var k = ss
-                  while (k <= se) {
-                    val rs = br.decode(acT)
-                    val r = rs >> 4
-                    val sA = rs & 15
-                    if (sA == 0) {
-                      if (r == 15) k += 16 // ZRL
-                      else {
-                        // EOB run: 2^r blocks (this one + eobrun more),
-                        // plus r appended magnitude bits
-                        eobrun = (1 << r) - 1
-                        if (r > 0) eobrun += br.bits(r)
-                        k = se + 1
-                      }
-                    } else {
-                      k += r
-                      if (k > se) return None
-                      zz(k) = extend(br.bits(sA), sA) << al
-                      k += 1
-                    }
-                  }
-                }
-                mcu += 1
-              }
-            } else {
-              // AC REFINEMENT scan (G.1.2.3): newly-nonzero
-              // coefficients arrive as (run, 1) symbols with a sign
-              // bit; every nonzero-history coefficient passed over
-              // contributes one correction bit (moving its magnitude
-              // up by 2^Al when set); an EOB run refines the rest of
-              // the band in this block and `eobrun` more whole blocks
-              if (ns != 1 || se < ss || se > 63) return None
-              val acT = acTables(scanAc(0))
-              if (acT == null) return None
-              val cc = scanComp(0)
-              val p1 = 1 << al
-              def refineOne(zz: Array[Int], k: Int): Unit =
-                if (br.bit() != 0 && (zz(k) & p1) == 0)
-                  zz(k) += (if (zz(k) >= 0) p1 else -p1)
-              var eobrun = 0
-              var mcu = 0
-              for (by <- 0 until cBH(cc); bx <- 0 until cBW(cc)) {
-                if (restart > 0 && mcu > 0 && mcu % restart == 0) {
-                  br.expectRestart((mcu / restart - 1) % 8)
-                  eobrun = 0
-                }
-                val zz = coef(cc)(by * bW(cc) + bx)
-                var k = ss
-                if (eobrun > 0) {
-                  // a running EOB covers this whole block: correction
-                  // bits for every nonzero coefficient of the band
-                  while (k <= se) {
-                    if (zz(k) != 0) refineOne(zz, k)
-                    k += 1
-                  }
-                  eobrun -= 1
-                } else {
-                  var eob = false
-                  while (k <= se && !eob) {
-                    val rs = br.decode(acT)
-                    var r = rs >> 4
-                    val sA = rs & 15
-                    var newval = 0
-                    if (sA == 0) {
-                      if (r < 15) { // EOB run begins (0 MORE whole blocks
-                        // for r = 0 — the CURRENT block's tail is still
-                        // refined below, unconditionally)
-                        eobrun = (1 << r) - 1
-                        if (r > 0) eobrun += br.bits(r)
-                        eob = true
-                      }
-                      // r == 15: ZRL — skip 16 zero-history positions
-                    } else {
-                      if (sA != 1) return None // refinement magnitudes are ±1
-                      newval = if (br.bit() != 0) p1 else -p1
-                    }
-                    if (!eob) {
-                      // advance past r zero-history positions, refining
-                      // nonzero-history coefficients along the way
-                      var placed = false
-                      while (k <= se && !placed) {
-                        if (zz(k) != 0) refineOne(zz, k)
-                        else if (r == 0) {
-                          if (newval != 0) zz(k) = newval
-                          placed = true
-                        } else r -= 1
-                        k += 1
-                      }
-                      if (newval != 0 && !placed) return None // ran off the band
-                    }
-                  }
-                  if (eob) {
-                    // the current block's remaining band: correction
-                    // bits for its nonzero coefficients
-                    while (k <= se) {
-                      if (zz(k) != 0) refineOne(zz, k)
-                      k += 1
-                    }
-                  }
-                }
-                mcu += 1
+              if (se > 0) {
+                val from = math.max(ss, 1)
+                eobrun =
+                  if (ah == 0) decodeAcFirst(br, acT(i), zz, from, se, al, eobrun)
+                  else decodeAcRefine(br, acT(i), zz, from, se, al, eobrun)
+                // EOB runs past the block are progressive-only (G.1.2.2)
+                if (eobrun > 0 && !progressive) return None
               }
             }
+            if (!progressive) return reconstructed
             // the scan's entropy bytes end here — resync to the next
             // marker (skip pad bits and 0xFF fill bytes)
             pos = br.pos
@@ -1349,40 +959,30 @@ object JpegCodecOps {
                 !((bytes(pos) & 0xff) == 0xFF && (bytes(pos + 1) & 0xff) != 0x00))
               pos += 1
             if (pos + 1 >= bytes.length) return None
-          case x if x >= 0xE0 && x <= 0xEF || x == 0xFE =>
-            if (pos + 2 > bytes.length) return None
-            val len = u16(pos)
-            if (len < 2 || pos + len > bytes.length) return None
-            pos += len
+          case x if x >= 0xE0 && x <= 0xEF || x == 0xFE => // APPn / COM
           case _ => return None
         }
       }
       None // unreachable
     } catch { case _: Exception => None }
 
-  /** Dequant + IDCT + plane assembly + upsampling for the progressive
-    * path — the baseline reconstruction over accumulated SAMPLED
-    * component planes (blocks of the component's own ceil grid, indexed
-    * into the padded coefficient rows; padded-only blocks carry no
-    * visible pixels). */
-  private def reconstructProgressive(w: Int, h: Int, ncomp: Int,
-      compH: Array[Int], compV: Array[Int],
-      pw: Array[Int], ph: Array[Int], bW: Array[Int],
-      cBW: Array[Int], cBH: Array[Int],
-      coef: Array[Array[Array[Int]]],
+  /** Dequant + IDCT of every block of each component's own grid into
+    * its plane (cropped to the plane), then — for color — chroma
+    * upsampled to full resolution (nearest-neighbor: the sampled
+    * coordinate per A.1.1) and interleaved as RGB through the JFIF
+    * conversion. The one reconstruction of both frame types. */
+  private def reconstruct(f: Frame, coef: Array[Array[Array[Int]]],
       quant: Array[Array[Int]]): Option[Decoded] = {
     if (quant.exists(_ == null)) return None
-    val hMax = (0 until ncomp).map(compH).max
-    val vMax = (0 until ncomp).map(compV).max
-    val planes = Array.tabulate(ncomp)(c => new Array[Int](pw(c) * ph(c)))
+    val planes = Array.tabulate(f.ncomp)(c => new Array[Int](f.pw(c) * f.ph(c)))
     val blk = new Array[Double](64)
+    val tmp = new Array[Double](64)
     val cosT = CosT
-    for (c <- 0 until ncomp; by <- 0 until cBH(c); bx <- 0 until cBW(c)) {
-      val zz = coef(c)(by * bW(c) + bx)
-      java.util.Arrays.fill(blk, 0.0)
+    for (c <- 0 until f.ncomp; by <- 0 until f.cBH(c); bx <- 0 until f.cBW(c)) {
+      val zz = coef(c)(by * f.bW(c) + bx)
       var i = 0
       while (i < 64) { blk(ZigZag(i)) = zz(i).toDouble * quant(c)(i); i += 1 }
-      val tmp = new Array[Double](64)
+      // separable IDCT: rows (over v) then columns (over u)
       for (u <- 0 until 8; x <- 0 until 8) {
         var acc = 0.0
         var vv = 0
@@ -1395,42 +995,43 @@ object JpegCodecOps {
         while (u < 8) { acc += tmp(u * 8 + x) * cosT(y)(u); u += 1 }
         val px = math.round(acc / 4 + 128).toInt
         val cx = bx * 8 + x; val cy = by * 8 + y
-        if (cx < pw(c) && cy < ph(c))
-          planes(c)(cy * pw(c) + cx) = math.max(0, math.min(255, px))
+        if (cx < f.pw(c) && cy < f.ph(c))
+          planes(c)(cy * f.pw(c) + cx) = math.max(0, math.min(255, px))
       }
     }
-    if (ncomp == 1) Some(Decoded(w, h, 1, planes(0)))
+    if (f.ncomp == 1) Some(Decoded(f.w, f.h, 1, planes(0)))
     else {
-      // upsample chroma to full resolution (nearest-neighbor, A.1.1)
-      // and interleave as RGB — the baseline path verbatim
-      val out = new Array[Int](w * h * 3)
+      val out = new Array[Int](f.w * f.h * 3)
       def sample(c: Int, x: Int, y: Int): Int =
-        planes(c)((y * compV(c) / vMax) * pw(c) + (x * compH(c) / hMax))
+        planes(c)((y * f.vs(c) / f.vMax) * f.pw(c) + (x * f.hs(c) / f.hMax))
       var j = 0
-      while (j < w * h) {
-        val x = j % w; val y = j / w
+      while (j < f.w * f.h) {
+        val x = j % f.w; val y = j / f.w
         val yv = sample(0, x, y); val cb = sample(1, x, y); val cr = sample(2, x, y)
         out(3 * j) = ycc(0, yv, cb, cr)
         out(3 * j + 1) = ycc(1, yv, cb, cr)
         out(3 * j + 2) = ycc(2, yv, cb, cr)
         j += 1
       }
-      Some(Decoded(w, h, 3, out))
+      Some(Decoded(f.w, f.h, 3, out))
     }
   }
 
   // ---- operators ------------------------------------------------------
 
-  /** (doc_id, media) table of real baseline JPEGs, one per fixture doc —
-    * the DCT sibling of [[PngCodecOps.pngMediaTable]];
-    * doc_id % 7 == 3 truncated mid-entropy-stream. */
-  def jpegMediaTable(docs: DataFrame): DataFrame = {
+  /** (doc_id, media) with one `encode(doc_id)` fixture file per doc. */
+  private def fixtureMedia(docs: DataFrame, encode: Long => Array[Byte]): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     Par.spread(docs.select(col("doc_id"))).as[Long]
-      .mapPartitions(_.map(id => (id, encodeFixture(id))))
+      .mapPartitions(_.map(id => (id, encode(id))))
       .toDF("doc_id", "media")
   }
+
+  /** (doc_id, media) table of real baseline JPEGs, one per fixture doc —
+    * the DCT sibling of [[PngCodecOps.pngMediaTable]];
+    * doc_id % 7 == 3 truncated mid-entropy-stream. */
+  def jpegMediaTable(docs: DataFrame): DataFrame = fixtureMedia(docs, encodeFixture)
 
   // public for codegen: see WavCodecOps.WavPcmStats
   case class JpegStats(
@@ -1478,37 +1079,19 @@ object JpegCodecOps {
     * rasters through the SOF2 spectral-selection pipeline (interleaved
     * DC scan + per-component AC band scans), decoded by the multi-scan
     * coefficient-accumulation path — same oracle BY DESIGN. */
-  def jpegPixelsProg(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    jpegDecodeStats(
-      Par.spread(docs.select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => (id, encodeProgressiveFixture(id))))
-        .toDF("doc_id", "media"))
-  }
+  def jpegPixelsProg(docs: DataFrame): DataFrame =
+    jpegDecodeStats(fixtureMedia(docs, encodeProgressiveFixture))
 
   /** The SUCCESSIVE-APPROXIMATION twin of [[jpegPixelsProg]]: the same
     * block-constant rasters through the SA script (point-transformed
     * first scans + refinement scans, restart cadence on every third
     * doc), decoded by the G.1.2 refinement path — same oracle BY
     * DESIGN. */
-  def jpegPixelsProgSa(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    jpegDecodeStats(
-      Par.spread(docs.select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => (id, encodeProgressiveSAFixture(id))))
-        .toDF("doc_id", "media"))
-  }
+  def jpegPixelsProgSa(docs: DataFrame): DataFrame =
+    jpegDecodeStats(fixtureMedia(docs, encodeProgressiveSAFixture))
 
   /** (doc_id, media) table of real 4:4:4 COLOR baseline JPEGs. */
-  def jpegRgbMediaTable(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    Par.spread(docs.select(col("doc_id"))).as[Long]
-      .mapPartitions(_.map(id => (id, encodeColorFixture(id))))
-      .toDF("doc_id", "media")
-  }
+  def jpegRgbMediaTable(docs: DataFrame): DataFrame = fixtureMedia(docs, encodeColorFixture)
 
   // public for codegen: see WavCodecOps.WavPcmStats
   case class JpegRgbStats(
@@ -1559,28 +1142,16 @@ object JpegCodecOps {
     * restart intervals on every third doc — generate → decode →
     * upsample → convert, stats out (same output contract as the 4:4:4
     * twin). */
-  def jpegPixels420(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    jpegRgbDecodeStats(
-      Par.spread(docs.select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => (id, encode420Fixture(id))))
-        .toDF("doc_id", "media"))
-  }
+  def jpegPixels420(docs: DataFrame): DataFrame =
+    jpegRgbDecodeStats(fixtureMedia(docs, encode420Fixture))
 
   /** The SUBSAMPLED-PROGRESSIVE chain: the 4:2:0 macroblock fixtures
     * through the SA progressive script — interleaved four-luma DC
     * MCUs, per-component AC scans over each component's own grid,
     * refinements, restart cadence — sharing `jpeg_pixels_420`'s
     * oracle BY DESIGN. */
-  def jpegPixelsProg420(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    jpegRgbDecodeStats(
-      Par.spread(docs.select(col("doc_id"))).as[Long]
-        .mapPartitions(_.map(id => (id, encodeProg420Fixture(id))))
-        .toDF("doc_id", "media"))
-  }
+  def jpegPixelsProg420(docs: DataFrame): DataFrame =
+    jpegRgbDecodeStats(fixtureMedia(docs, encodeProg420Fixture))
 }
 
 object JpegPack extends QueryPack {

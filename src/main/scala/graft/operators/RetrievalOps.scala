@@ -251,8 +251,7 @@ object RetrievalOps {
     * which perturbs only the corpus scalars it honestly belongs to —
     * the reverse order would inflate a term's df with a doc the length
     * join cannot score. */
-  def bm25AppendDocs(spark: SparkSession, dir: String, newDocs: DataFrame,
-      knownIds: Option[Seq[Long]] = None): Unit = {
+  def bm25AppendDocs(spark: SparkSession, dir: String, newDocs: DataFrame): Unit = {
     import graft.sources.BulkOps
     // one delta index feeds both appends (cached; each write filters to
     // the protocol's fresh-id frame); its cache entry ends with them
@@ -274,11 +273,7 @@ object RetrievalOps {
               org.apache.spark.sql.SaveMode.Append)
             .save(s"$dir/postings"),
           mutates = Seq("postings")))
-      knownIds match {
-        case Some(ids) => IndexLifecycle.appendGuardedSeq(spark, dir, "doc_id", ids, tables)
-        case None =>
-          IndexLifecycle.appendGuarded(spark, dir, "doc_id", newDocs.select("doc_id"), tables)
-      }
+      IndexLifecycle.appendGuarded(spark, dir, "doc_id", newDocs.select("doc_id"), tables)
     }
   }
 

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.operators.CompactionOps
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming re-expression of the reference's continuous loops
   * (SURVEY.md §2.9). Each transform takes a (possibly streaming)
@@ -18,6 +18,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * store, not an LRU map.
   */
 object StreamingOps {
+
+  /** The append-mode `foreachBatch` sink every stream below starts:
+    * `body` gets each micro-batch and its id, and `checkpoint` makes the
+    * query restartable. */
+  private def foreachBatchSink(input: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => body(batch, batchId) }
+      .start()
 
   /** O-54 infinite compactor: metric snapshots → weighted candidates →
     * per-region dedup within the no-recompact window. Input needs
@@ -81,29 +92,25 @@ object StreamingOps {
       checkpoint: String,
       maxPerServer: Int = 15,
       maxCompactionQueue: Int = 11,
-      maxFlushQueue: Int = 31): org.apache.spark.sql.streaming.StreamingQuery = {
+      maxFlushQueue: Int = 31): StreamingQuery = {
     val worst = queueDepths
       .groupBy("server")
       .agg(
         max(col("compaction_queue")).as("compaction_queue"),
         max(col("flush_queue")).as("flush_queue"))
-    candidates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val byServer = org.apache.spark.sql.expressions.Window
-          .partitionBy("server").orderBy(col("weight").desc, col("region_id"))
-        val admitted = batch
-          .join(worst, Seq("server"), "left")
-          .filter(
-            coalesce(col("compaction_queue"), lit(0)) <= maxCompactionQueue &&
-              coalesce(col("flush_queue"), lit(0)) <= maxFlushQueue)
-          .withColumn("__rk", row_number().over(byServer))
-          .filter(col("__rk") <= maxPerServer)
-          .drop("__rk", "compaction_queue", "flush_queue")
-        emit(admitted, batchId)
-      }
-      .start()
+    foreachBatchSink(candidates, checkpoint) { (batch, batchId) =>
+      val byServer = org.apache.spark.sql.expressions.Window
+        .partitionBy("server").orderBy(col("weight").desc, col("region_id"))
+      val admitted = batch
+        .join(worst, Seq("server"), "left")
+        .filter(
+          coalesce(col("compaction_queue"), lit(0)) <= maxCompactionQueue &&
+            coalesce(col("flush_queue"), lit(0)) <= maxFlushQueue)
+        .withColumn("__rk", row_number().over(byServer))
+        .filter(col("__rk") <= maxPerServer)
+        .drop("__rk", "compaction_queue", "flush_queue")
+      emit(admitted, batchId)
+    }
   }
 
   /** O-57 topology snapshotter as a stream: each micro-batch of placement
@@ -117,14 +124,10 @@ object StreamingOps {
   def topologySnapshotStream(
       observations: DataFrame,
       destPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    observations.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.BulkOps.writeTopologySnapshotBatch(batch.toDF(), destPath, batchId)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    foreachBatchSink(observations, checkpoint) { (batch, batchId) =>
+      graft.sources.BulkOps.writeTopologySnapshotBatch(batch, destPath, batchId)
+    }
 
   /** Streaming sessionization: the events_sessions batch query under a
     * watermark — session_window state is bounded by event time. */
@@ -653,15 +656,11 @@ object StreamingOps {
   def annServeStream(
       queries: DataFrame, indexDir: String, checkpoint: String,
       emit: (DataFrame, Long) => Unit,
-      k: Int = 5, nprobe: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        emit(graft.operators.AnnIndexOps.servedTopK(
-          batch.sparkSession, indexDir, batch.toDF(), k, nprobe), batchId)
-      }
-      .start()
+      k: Int = 5, nprobe: Int = 2): StreamingQuery =
+    foreachBatchSink(queries, checkpoint) { (batch, batchId) =>
+      emit(graft.operators.AnnIndexOps.servedTopK(
+        batch.sparkSession, indexDir, batch, k, nprobe), batchId)
+    }
 
   /** Online ingest-dedup from the STORED signature index — the dedup
     * face of [[annServeStream]]: every arriving micro-batch of documents
@@ -675,15 +674,11 @@ object StreamingOps {
   def dedupServeStream(
       docs: DataFrame, indexDir: String, checkpoint: String,
       emit: (DataFrame, Long) => Unit,
-      thresholdE4: Long = 5000L): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        emit(graft.operators.DedupIndexOps.servedDupes(
-          batch.sparkSession, indexDir, batch.toDF(), thresholdE4), batchId)
-      }
-      .start()
+      thresholdE4: Long = 5000L): StreamingQuery =
+    foreachBatchSink(docs, checkpoint) { (batch, batchId) =>
+      emit(graft.operators.DedupIndexOps.servedDupes(
+        batch.sparkSession, indexDir, batch, thresholdE4), batchId)
+    }
 
   /** The gate-and-ingest composition as a CONTINUOUS pipeline
     * ([[graft.operators.DedupIndexOps.gateAndIngest]] per trigger): each
@@ -708,15 +703,11 @@ object StreamingOps {
   def dedupIngestGateStream(
       docs: DataFrame, indexDir: String, checkpoint: String,
       emit: (DataFrame, Long) => Unit,
-      thresholdE4: Long = 5000L): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        emit(graft.operators.DedupIndexOps.gateAndIngest(
-          batch.sparkSession, indexDir, batch.toDF(), thresholdE4), batchId)
-      }
-      .start()
+      thresholdE4: Long = 5000L): StreamingQuery =
+    foreachBatchSink(docs, checkpoint) { (batch, batchId) =>
+      emit(graft.operators.DedupIndexOps.gateAndIngest(
+        batch.sparkSession, indexDir, batch, thresholdE4), batchId)
+    }
 
   /** Vector ingest INTO the stored ANN index as a continuous pipeline —
     * [[annDriftStream]]'s monitor and [[graft.operators.AnnIndexOps
@@ -729,17 +720,13 @@ object StreamingOps {
     * append skips already-indexed vec_ids. */
   def annIngestStream(
       vectors: DataFrame, indexDir: String, checkpoint: String,
-      emit: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        emit(graft.operators.AnnIndexOps.quantizerDrift(
-          batch.sparkSession, indexDir, batch.toDF()), batchId)
-        graft.operators.AnnIndexOps.appendToIndex(
-          batch.sparkSession, indexDir, batch.toDF())
-      }
-      .start()
+      emit: (DataFrame, Long) => Unit): StreamingQuery =
+    foreachBatchSink(vectors, checkpoint) { (batch, batchId) =>
+      emit(graft.operators.AnnIndexOps.quantizerDrift(
+        batch.sparkSession, indexDir, batch), batchId)
+      graft.operators.AnnIndexOps.appendToIndex(
+        batch.sparkSession, indexDir, batch)
+    }
 
   /** Continuous quantizer-drift monitoring — the streaming face of
     * [[graft.operators.AnnIndexOps.quantizerDrift]]: every micro-batch
@@ -753,15 +740,11 @@ object StreamingOps {
     * census by design — drift is a property of the arriving data). */
   def annDriftStream(
       batches: DataFrame, indexDir: String, checkpoint: String,
-      emit: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        emit(graft.operators.AnnIndexOps.quantizerDrift(
-          batch.sparkSession, indexDir, batch.toDF()), batchId)
-      }
-      .start()
+      emit: (DataFrame, Long) => Unit): StreamingQuery =
+    foreachBatchSink(batches, checkpoint) { (batch, batchId) =>
+      emit(graft.operators.AnnIndexOps.quantizerDrift(
+        batch.sparkSession, indexDir, batch), batchId)
+    }
 
   def cmsFreqStream(docs: DataFrame,
       depth: Int = graft.operators.SketchOps.CmsDepth,

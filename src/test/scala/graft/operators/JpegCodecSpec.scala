@@ -446,6 +446,122 @@ class JpegCodecSpec extends SparkSpec {
     assert(zeroed > 0, "the fixture must contain at least one length-bearing segment")
   }
 
+  // ---- pinned codec digests -------------------------------------------
+  // md5 of every fixture encoder's bytes over doc ids 0-699, of the
+  // decoder's result on those files, and of the decoder's result on
+  // every truncation of one file per shape. The constants were computed
+  // on the codec with separate baseline and progressive decoders and
+  // three frame writers; they stay fixed through any refactor of the
+  // codec. An encoder changed ON PURPOSE changes them: regenerate by
+  // running this test and copying the "got" values from its failure.
+
+  private def md5(feed: java.io.DataOutputStream => Unit): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val out = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(java.io.OutputStream.nullOutputStream(), md))
+    feed(out)
+    out.flush()
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** The decoder's whole result — dims, channels and every sample, or a
+    * None marker — into the digest. */
+  private def putDecoded(out: java.io.DataOutputStream, bytes: Array[Byte]): Unit =
+    JpegCodecOps.decodeJpeg(bytes) match {
+      case None => out.writeInt(-1)
+      case Some(d) =>
+        out.writeInt(d.width); out.writeInt(d.height); out.writeInt(d.channels)
+        out.writeInt(d.samples.length); d.samples.foreach(out.writeInt)
+    }
+
+  /** (name, encoder, is an AVI container) for every fixture encoder. */
+  private val fixtureEncoders: Seq[(String, Long => Array[Byte], Boolean)] = Seq(
+    ("gray", JpegCodecOps.encodeFixture _, false),
+    ("color", JpegCodecOps.encodeColorFixture _, false),
+    ("420", JpegCodecOps.encode420Fixture _, false),
+    ("prog", JpegCodecOps.encodeProgressiveFixture _, false),
+    ("prog_sa", JpegCodecOps.encodeProgressiveSAFixture _, false),
+    ("prog_420", JpegCodecOps.encodeProg420Fixture _, false),
+    ("avi", AviCodecOps.encodeAviFixture _, true),
+    ("video", AviCodecOps.encodeVideoFixture _, true))
+
+  private def assertPinned(pinned: Map[String, String], got: Map[String, String]): Unit = {
+    val off = pinned.keys.toSeq.sorted.filter(k => got(k) != pinned(k))
+    assert(off.isEmpty && got.keySet == pinned.keySet,
+      "digests moved: " + off.map(k => s"$k pinned ${pinned(k)} got ${got(k)}").mkString("; ") +
+        s" (all got: ${got.toSeq.sorted.map { case (k, v) => s"""\"$k\" -> \"$v\"""" }.mkString(", ")})")
+  }
+
+  test("pinned digests: fixture bytes and their decodes over doc ids 0-699") {
+    val ids = 0L until 700L
+    val bytesGot = fixtureEncoders.map { case (name, enc, _) =>
+      s"bytes $name" -> md5(out => ids.foreach { id =>
+        val b = enc(id); out.writeInt(b.length); out.write(b)
+      })
+    }.toMap
+    val decodeGot = fixtureEncoders.map { case (name, enc, avi) =>
+      s"decode $name" -> md5(out => ids.foreach { id =>
+        val b = enc(id)
+        if (!avi) putDecoded(out, b)
+        else AviCodecOps.parseAvi(b) match {
+          case None => out.writeInt(-2)
+          case Some(p) => (0 until p.nFrames).foreach { i =>
+            val (off, len) = p.frames(i)
+            putDecoded(out, java.util.Arrays.copyOfRange(b, off, off + len))
+          }
+        }
+      })
+    }.toMap
+    assertPinned(Map(
+      "bytes gray" -> "f8697baad2eb623c11b43515cd45c06d",
+      "bytes color" -> "6adef07e0eee2acc304ebe7b271b5f25",
+      "bytes 420" -> "945060d89d98497b7eb2ce29ae004829",
+      "bytes prog" -> "5b2dd15292f09bda603e7115ab7a55cf",
+      "bytes prog_sa" -> "a0f6b5ce3fb20fb56c8569f3900e9adc",
+      "bytes prog_420" -> "d9bb2231bf97b6baa3d5ebfb558732e9",
+      "bytes avi" -> "700f2f631c8b9f85b2cea32da41acc3d",
+      "bytes video" -> "892a6bd1114e7cb907be7b8193b071a9",
+      // the gray twins share one raster, as do the 4:2:0 twins
+      "decode gray" -> "eaac822fb49b821e05c66323017af9bc",
+      "decode color" -> "9d9485f488da900be18f7001f5925c76",
+      "decode 420" -> "6a13b8550482868e785cfb5667f32566",
+      "decode prog" -> "eaac822fb49b821e05c66323017af9bc",
+      "decode prog_sa" -> "eaac822fb49b821e05c66323017af9bc",
+      "decode prog_420" -> "6a13b8550482868e785cfb5667f32566",
+      "decode avi" -> "d51b1d2871beef7feb85a1e62ab88c0c",
+      "decode video" -> "f5806a8ee5a5058b7524c02c468526c6"), bytesGot ++ decodeGot)
+  }
+
+  test("pinned digests: the decode of every truncation of one file per shape") {
+    def textured(x: Int, y: Int): Int = (x * 17 + y * 29 + x * y) % 256
+    val shapes: Seq[(String, Array[Byte])] =
+      fixtureEncoders.filterNot(_._3).map { case (name, enc, _) => name -> enc(37L) } ++ Seq(
+        "textured_rgb" -> JpegCodecOps.encodeJpegRgb(21, 13,
+          (x, y) => (textured(x, y), textured(y, x), (x * 7 + y * 3) % 256)),
+        "textured_420_restart" -> JpegCodecOps.encodeJpeg420(29, 19,
+          textured, (x, y) => (x * 9 + y * 5) % 256, (x, y) => (x * 3 + y * 11) % 256,
+          restartInterval = 1),
+        "textured_prog_color" -> JpegCodecOps.encodeJpegProgressive(19, 11, 3,
+          (c, x, y) => if (c == 0) textured(x, y) else (x * (c + 3) + y) % 256),
+        "textured_sa_420_restart" -> JpegCodecOps.encodeJpegProgressiveSA(29, 19, Seq(
+          (textured _, 2, 2), (((x: Int, y: Int) => (x * 9 + y * 5) % 256), 1, 1),
+          (((x: Int, y: Int) => (x * 3 + y * 11) % 256), 1, 1)), restartInterval = 2))
+    val got = shapes.map { case (name, whole) =>
+      name -> md5(out => (0 to whole.length).foreach(n => putDecoded(out, whole.take(n))))
+    }.toMap
+    assertPinned(Map(
+      "gray" -> "345a4827276ae64ad964faa948ba9abd",
+      "color" -> "21e91422212e0385532c44b7282b0ec2",
+      "420" -> "2c2bba064da1dc98f346ffe4aada5fa0",
+      "prog" -> "8e1c30f5c633aaeec4a86840083afa3d",
+      "prog_sa" -> "faf0c82e747ad04d705807ee17046080",
+      "prog_420" -> "9bf72c4d3c275f7fcaeee10d7e1723ff",
+      "textured_rgb" -> "f08f5a39113f2955267fcf269af850e0",
+      "textured_420_restart" -> "77f701b9c0b3a9a9580a01695ed3fcf2",
+      "textured_prog_color" -> "5434db122e89e5977015273b2b697d82",
+      "textured_sa_420_restart" -> "9d09e4afb2afb3b15a4601f278cf3c83"), got)
+  }
+
   test("fixture chain: truncated docs degrade to corrupt rows; stats match the formula") {
     val s = spark
     import s.implicits._
